@@ -40,6 +40,33 @@ package graft
   * rather than silently absent from the totals.
   */
 object Bench {
+  // suite-JVM drag telemetry: per-query cost crept 1.15→1.42 s/q over
+  // rounds r8→r10 while one JVM executed an ever-growing suite —
+  // publish the JVM-level costs so the drag is visible in the artifact
+  // instead of masking operator regressions. `codegen_compiles` counts
+  // Janino compiles (generated-class cache misses; a warm pass that adds
+  // to it is recompiling evicted classes), `codegen_ms` their summed time.
+  def jvmTelemetry: String = {
+    import scala.jdk.CollectionConverters._
+    import java.lang.management.ManagementFactory
+    val gcMs = ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+    val jitMs =
+      Option(ManagementFactory.getCompilationMXBean).map(_.getTotalCompilationTime).getOrElse(-1L)
+    def poolMb(name: String): Long = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName.contains(name))
+      .map(_.getUsage.getUsed)
+      .sum / (1 << 20)
+    val heapMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / (1 << 20)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val snap = compiles.getSnapshot
+    // the histogram's reservoir keeps at most 1028 samples: the sum is
+    // exact below that and scaled up to the full count above it
+    val codegenMs =
+      if (snap.size == 0) 0L else snap.getValues.sum * compiles.getCount / snap.size
+    s""""jvm":{"gc_ms":$gcMs,"jit_ms":$jitMs,"code_cache_mb":${poolMb("CodeHeap")},"heap_mb":$heapMb,""" +
+      s""""metaspace_mb":${poolMb("Metaspace")},"codegen_compiles":${compiles.getCount},"codegen_ms":$codegenMs}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC").flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(1500.0)
@@ -60,23 +87,6 @@ object Bench {
     def loadavg: Double = {
       val v = java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
       math.round(v * 100) / 100.0
-    }
-    // suite-JVM drag telemetry (r10 verdict task 6): per-query cost crept
-    // 1.15→1.42 s/q r8→r10 purely from executing an ever-growing suite 3×
-    // in one JVM — publish the JVM-level costs so the drag is visible in
-    // the artifact instead of masking operator regressions
-    def jvmTelemetry: String = {
-      import scala.jdk.CollectionConverters._
-      import java.lang.management.ManagementFactory
-      val gcMs = ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-      val jitMs =
-        Option(ManagementFactory.getCompilationMXBean).map(_.getTotalCompilationTime).getOrElse(-1L)
-      val codeCacheMb = ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getName.contains("CodeHeap"))
-        .map(_.getUsage.getUsed)
-        .sum / (1 << 20)
-      val heapMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / (1 << 20)
-      s""""jvm":{"gc_ms":$gcMs,"jit_ms":$jitMs,"code_cache_mb":$codeCacheMb,"heap_mb":$heapMb}"""
     }
     // best-known per-query seconds; the shutdown hook and the streaming
     // partial emitter read this concurrently, so it must be consistent at

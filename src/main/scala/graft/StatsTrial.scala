@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Default-on trial for the stats-fed optimizer rules (r10, verdict task
   * 6): run EVERY gate query on an extension-built session
   * (`spark.sql.extensions=graft.plans.GraftExtensions`) with
@@ -23,21 +21,7 @@ import org.apache.spark.sql.SparkSession
 object StatsTrial {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession
-      .builder()
-      .appName("graft-stats-trial")
-      .master(s"local[${Graft.defaultCores}]")
-      .config("spark.sql.shuffle.partitions", Graft.defaultCores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-stats-trial")
     graft.sources.JoinStats.ensure(spark, sfDir)
 
     def hashOf(df: org.apache.spark.sql.DataFrame): String = {

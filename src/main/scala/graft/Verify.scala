@@ -37,6 +37,9 @@ object Verify {
       .filter(kv => only.forall(_.contains(kv._1)))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // JVM and codegen totals for the whole run (the generated-class census
+    // that sizes Graft.CodegenCacheEntries reads codegen_compiles here)
+    System.err.println(s"[verify] {${Bench.jvmTelemetry}}")
     spark.stop()
   }
 }

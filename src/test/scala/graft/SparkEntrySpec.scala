@@ -19,12 +19,18 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("every query runs at sf0.001 with stable schema") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, d)
-      val n = df.count()
-      assert(n >= 0L, name)
-      assert(df.schema.fieldNames.nonEmpty, name)
+    // every query is smoke-tested and every failure reported in one
+    // assertion (sorted), rather than stopping at the first in map order
+    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      scala.util.Try {
+        val df = fn(spark, d)
+        if (df.count() < 0L) Some("negative count")
+        else if (df.schema.fieldNames.isEmpty) Some("empty schema")
+        else None
+      }.fold(e => Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).takeWhile(_ != '\n')}"), identity)
+        .map(why => s"$name: $why")
     }
+    assert(failures.isEmpty, s"${failures.size} queries failed:\n${failures.mkString("\n")}")
   }
 
   test("spot values at sf0.001") {
