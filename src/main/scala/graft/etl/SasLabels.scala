@@ -56,9 +56,9 @@ object SasLabels {
 
   /** Where [[graft.Verify]] materializes the parsed dims as parquet so the
     * driver's DuckDB oracle can join against them (the labels file itself is
-    * SAS source text DuckDB can't read). Fixed absolute path: the oracle SQL
-    * strings are static. */
-  val dimsDumpDir = "/root/repo/spark-warehouse/graft_dims"
+    * SAS source text DuckDB can't read). A fixed path under the fixture
+    * root: the oracle SQL strings name it. */
+  val dimsDumpDir = s"${graft.sources.Fixture.root}/graft_dims"
 
   /** Parse the labels file and write each dim under `outDir/<name>`. */
   def dump(spark: SparkSession, labelsPath: String, outDir: String = dimsDumpDir): Unit = {

@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.sources.Fixture
+
 /** Punycode / IDN decoder (x206) — the hostname face of URL
   * canonicalization (x58 normalizes structure; internationalized hosts
   * additionally hide their identity behind RFC 3492 "xn--" ACE labels,
@@ -129,7 +131,7 @@ object Punycode {
   * rows are load-bearing). Host Z: label "w{Z}" + (3 + Z%4) palette
   * chars at indices (Z*7 + j*3) % 8, + ".example.com". */
 object IdnFixture {
-  val dir = "/root/repo/spark-warehouse/graft_idn"
+  val dir = Fixture.dir("graft_idn")
   val payloadPath = s"$dir/hosts"
 
   /** Latin-1, Greek, Cyrillic, Devanagari, Hiragana, CJK — BMP spread. All
@@ -151,15 +153,11 @@ object IdnFixture {
 
   def asciiHost(z: Long): String = java.net.IDN.toASCII(unicodeHost(z))
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 300L)
-        .map(z => (z, asciiHost(z)))
-        .toDF("host_id", "ascii_host")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 300L)
+      .map(z => (z, asciiHost(z)))
+      .toDF("host_id", "ascii_host")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Graft.table
+import graft.sources.Fixture
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1725,9 +1726,8 @@ object Advanced {
     // one semi-join count against a snapshot read — erasure verification
     // costs reads, never rewrites.
     "x145_erasure_audit" -> ((s, d) => {
-      graft.sources.CowEvo.ensure(s, d)
       import s.implicits._
-      val root = graft.sources.CowEvo.dir
+      val root = graft.sources.CowEvo.ensure(s, d)
       val stripe = graft.sources.CowTable
         .read(s, 1, root)
         .where(expr(graft.sources.CowEvo.DelFilter)) // the single source of truth for the erased stripe
@@ -2180,7 +2180,7 @@ object Advanced {
     // proves the sink+reader pair is value-preserving (quoting, null
     // encoding, double formatting round-trip exactly).
     "q39_csv_roundtrip" -> ((s, d) => {
-      val out = "/root/repo/spark-warehouse/graft_csv_rt"
+      val out = Fixture.scratch("graft_csv_rt")
       val agg = table(s, d, "orders")
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
@@ -2199,7 +2199,7 @@ object Advanced {
     // Emitted as basename + length + md5-over-hex (hex is uppercase in
     // both engines; the mtime column is machine state, never emitted).
     "q73_binary_source" -> ((s, _) => {
-      BinFixture.ensure(s)
+      BinFixture.ensure()
       s.read
         .format("binaryFile")
         .load(s"${BinFixture.dir}/*.bin")
@@ -2217,7 +2217,7 @@ object Advanced {
     // surface NULL cents. The operational shape of every long-lived lake
     // table (columns accrete; readers must span old and new files).
     "q72_schema_evolution" -> ((s, d) => {
-      val out = "/root/repo/spark-warehouse/graft_evolve"
+      val out = Fixture.scratch("graft_evolve")
       val o = table(s, d, "orders")
       o.where(year(col("o_orderdate")) < 1996)
         .groupBy("o_orderpriority")
@@ -2251,7 +2251,7 @@ object Advanced {
     // explicit split. The oracle recomputes the aggregate from the source
     // tables, so the round-trip must preserve every character.
     "q69_text_roundtrip" -> ((s, d) => {
-      val out = "/root/repo/spark-warehouse/graft_text_rt"
+      val out = Fixture.scratch("graft_text_rt")
       val lines = table(s, d, "customer")
         .join(broadcast(table(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
         .groupBy("n_name")
@@ -2273,7 +2273,7 @@ object Advanced {
     // write ORC, read it back; the oracle computes the same aggregate from
     // the source table, so the round-trip must preserve every value bit.
     "q44_orc_roundtrip" -> ((s, d) => {
-      val out = "/root/repo/spark-warehouse/graft_orc_rt"
+      val out = Fixture.scratch("graft_orc_rt")
       table(s, d, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"), sum("l_quantity").as("qty"))
@@ -2282,7 +2282,7 @@ object Advanced {
       s.read.orc(out).orderBy("l_returnflag", "l_linestatus")
     }),
     "q40_jsonl_roundtrip" -> ((s, d) => {
-      val out = "/root/repo/spark-warehouse/graft_jsonl_rt"
+      val out = Fixture.scratch("graft_jsonl_rt")
       val agg = table(s, d, "customer")
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"), round(avg("c_acctbal"), 2).as("avg_bal"))
@@ -2367,7 +2367,7 @@ object Advanced {
     // fixture exercises every RLE command incl. the >255 length-nibble
     // forms and stored-raw (incompressible) rows.
     "etl_sas7bdat_rle" -> ((s, _) => {
-      graft.sources.SasFixture.ensureRle(s)
+      graft.sources.SasFixture.ensure(s)
       graft.sources.Sas7bdat.read(s, graft.sources.SasFixture.sasRlePath)
         .groupBy("tag")
         .agg(
@@ -2380,8 +2380,8 @@ object Advanced {
         .orderBy("tag")
     }),
 
-    // S7 catalog round-trip in the gated surface: write a managed table
-    // through the session catalog (saveAsTable → warehouse-dir parquet +
+    // S7 catalog round-trip in the gated surface: write a table through
+    // the session catalog (saveAsTable → parquet at an explicit location +
     // catalog entry), then read it back BY NAME via spark.table and query
     // it. The catalog implementation behind the identical API surface is a
     // deployment knob (in-memory here; enableHiveSupport + a metastore on a
@@ -2389,18 +2389,19 @@ object Advanced {
     // contract, which this query proves end-to-end inside the oracle gate.
     "q37_catalog_roundtrip" -> ((s, d) => {
       val tbl = "graft_cat_region_summary"
-      // drop both the catalog entry AND any orphaned warehouse directory a
-      // previous session left behind (the in-memory catalog forgets tables
-      // across sessions but their managed locations persist — CTAS then
-      // refuses the non-empty location)
+      // the table's files live in this process's scratch dir, so a
+      // concurrent JVM's round trip never rewrites them mid-read; drop
+      // both the catalog entry AND any files an earlier session left there
+      // (the in-memory catalog forgets tables across sessions, the files
+      // persist)
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), tbl)
+      val loc = new org.apache.hadoop.fs.Path(Fixture.scratch(tbl))
       loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
       table(s, d, "nation")
         .join(broadcast(table(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name")
         .agg(count(lit(1)).as("n_nations"), round(avg(length(col("n_name"))), 2).as("avg_comment_len"))
-        .write.mode("overwrite").saveAsTable(tbl)
+        .write.mode("overwrite").option("path", loc.toString).saveAsTable(tbl)
       s.table(tbl).orderBy("r_name")
     }),
 
@@ -2936,12 +2937,12 @@ object Advanced {
     // rebuilt from the same md5 CM formula JoinStats persisted, the salt
     // advice replayed, and the plan census as pinned literals.
     "x273_stats_skew_join" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT skey, cents
-        |  FROM '/root/repo/spark-warehouse/graft_skewfix/sf0.01/skewfact.parquet/*.parquet'),
+        |  FROM '${Fixture.root}/graft_skewfix/sf0.01/skewfact.parquet/*.parquet'),
         |dm AS (
         |  SELECT skey, sname
-        |  FROM '/root/repo/spark-warehouse/graft_skewfix/sf0.01/skewdim.parquet/*.parquet'),
+        |  FROM '${Fixture.root}/graft_skewfix/sf0.01/skewdim.parquet/*.parquet'),
         |j AS (
         |  SELECT sname, count(*) AS n_items, CAST(sum(cents) AS BIGINT) AS value_cents
         |  FROM f JOIN dm USING (skey) GROUP BY 1),
@@ -2977,12 +2978,12 @@ object Advanced {
     // rules on → broadcast (no salt); hints off → salted; both off →
     // plain.
     "x309_session_salt" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT skey, cents
-        |  FROM '/root/repo/spark-warehouse/graft_skewfix/sf0.01/skewfact.parquet/*.parquet'),
+        |  FROM '${Fixture.root}/graft_skewfix/sf0.01/skewfact.parquet/*.parquet'),
         |dm AS (
         |  SELECT skey, sname
-        |  FROM '/root/repo/spark-warehouse/graft_skewfix/sf0.01/skewdim.parquet/*.parquet'),
+        |  FROM '${Fixture.root}/graft_skewfix/sf0.01/skewdim.parquet/*.parquet'),
         |j AS (
         |  SELECT sname, count(*) AS n_items, CAST(sum(cents) AS BIGINT) AS value_cents
         |  FROM f JOIN dm USING (skey) GROUP BY 1)
@@ -3665,16 +3666,16 @@ object Advanced {
     // Verify materializes at SasLabels.dimsDumpDir (DuckDB can't parse SAS
     // `proc format` source, so the parsed dims ARE the interface).
     "etl_i94_top_ports" ->
-      """SELECT port_code, port_city, port_state, n_arrivals FROM (
+      s"""SELECT port_code, port_city, port_state, n_arrivals FROM (
         |  SELECT i.i94port AS port_code, p.city AS port_city, p.state AS port_state,
         |    count(*) AS n_arrivals
         |  FROM read_csv('/root/reference/immigration_data_sample.csv', header=true) i
-        |  LEFT JOIN '/root/repo/spark-warehouse/graft_dims/ports/*.parquet' p
+        |  LEFT JOIN '${Fixture.root}/graft_dims/ports/*.parquet' p
         |    ON i.i94port = p.code
         |  GROUP BY 1, 2, 3)
         |ORDER BY n_arrivals DESC, port_code LIMIT 10""".stripMargin,
     "etl_state_demo" ->
-      """WITH demo AS (
+      s"""WITH demo AS (
         |  SELECT "State Code" AS state_code,
         |    CAST(sum("Total Population") AS BIGINT) AS total_population,
         |    CAST(sum("Foreign-born") AS BIGINT) AS foreign_born,
@@ -3683,7 +3684,7 @@ object Advanced {
         |  GROUP BY 1),
         |fact AS (
         |  SELECT CASE WHEN i94addr IN
-        |      (SELECT code FROM '/root/repo/spark-warehouse/graft_dims/states/*.parquet')
+        |      (SELECT code FROM '${Fixture.root}/graft_dims/states/*.parquet')
         |    THEN i94addr ELSE '99' END AS state_code
         |  FROM read_csv('/root/reference/immigration_data_sample.csv', header=true)),
         |agg AS (SELECT state_code, count(*) AS n_arrivals FROM fact GROUP BY 1)
@@ -3719,10 +3720,10 @@ object Advanced {
       """SELECT l_returnflag, l_linestatus, count(*) AS n, sum(l_quantity) AS qty
         |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     "etl_airport_pipeline" ->
-      """SELECT a.iso_country, a.type, count(*) AS n_airports,
+      s"""SELECT a.iso_country, a.type, count(*) AS n_airports,
         |  CAST(round(avg(a.elevation_ft) * 100) AS BIGINT) AS avg_elev_e2
-        |FROM read_csv('/root/repo/spark-warehouse/graft_airport/airport-codes.csv', header=true) a
-        |JOIN '/root/repo/spark-warehouse/graft_dims/ports/*.parquet' p
+        |FROM read_csv('${Fixture.root}/graft_airport/airport-codes.csv', header=true) a
+        |JOIN '${Fixture.root}/graft_dims/ports/*.parquet' p
         |  ON a.iata_code = p.code
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     "q38_salted_join" ->
@@ -3749,23 +3750,23 @@ object Advanced {
         |  CAST(share_e6 AS BIGINT) AS share_e6
         |FROM j, adv ORDER BY n_items DESC, sname LIMIT 10""".stripMargin,
     "etl_sas7bdat_scan" ->
-      """SELECT category, count(*) AS n, count(value) AS n_value,
+      s"""SELECT category, count(*) AS n, count(value) AS n_value,
         |  round(sum(value), 2) AS sum_value, count(comment) AS n_comment
-        |FROM '/root/repo/spark-warehouse/graft_sas/twin/*.parquet'
+        |FROM '${Fixture.root}/graft_sas/twin/*.parquet'
         |GROUP BY category ORDER BY category""".stripMargin,
     // x306: identical oracle to etl_sas7bdat_scan — the DSv2 face must
     // agree with the function face AND the parquet twin.
     "x306_dsv2_sas" ->
-      """SELECT category, count(*) AS n, count(value) AS n_value,
+      s"""SELECT category, count(*) AS n, count(value) AS n_value,
         |  round(sum(value), 2) AS sum_value, count(comment) AS n_comment
-        |FROM '/root/repo/spark-warehouse/graft_sas/twin/*.parquet'
+        |FROM '${Fixture.root}/graft_sas/twin/*.parquet'
         |GROUP BY category ORDER BY category""".stripMargin,
     "etl_sas7bdat_rle" ->
-      """SELECT tag, count(*) AS n, round(sum(id), 2) AS sum_id,
+      s"""SELECT tag, count(*) AS n, round(sum(id), 2) AS sum_id,
         |  round(sum(z1) + sum(z2) + sum(z3), 2) AS sum_zero,
         |  CAST(sum(length(rtrim(pattern))) AS BIGINT) AS pattern_chars,
         |  count(pattern) AS n_pattern
-        |FROM '/root/repo/spark-warehouse/graft_sas/twin_rle/*.parquet'
+        |FROM '${Fixture.root}/graft_sas/twin_rle/*.parquet'
         |GROUP BY tag ORDER BY tag NULLS FIRST""".stripMargin,
     "q37_catalog_roundtrip" ->
       """SELECT r_name, count(*) AS n_nations,
@@ -3933,21 +3934,14 @@ object Advanced {
   * columnar container so the binaryFile format's (path, length, content)
   * contract — and DuckDB's independent read_blob — see the same bytes. */
 object BinFixture {
-  val dir = "/root/repo/spark-warehouse/graft_bin"
+  val dir = Fixture.dir("graft_bin")
 
   def bytesOf(i: Int): Array[Byte] =
     Array.tabulate(64 + i)(j => ((i * 7 + j * 13) % 256).toByte)
 
-  def ensure(@annotation.unused s: SparkSession): Unit = synchronized {
-    val d = new java.io.File(dir)
-    if (!d.exists()) {
-      d.mkdirs()
-      (0 until 40).foreach { i =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(f"$dir/doc_$i%03d.bin"),
-          bytesOf(i)
-        )
-      }
+  def ensure(): Unit = Fixture.at(dir, "v1") {
+    (0 until 40).foreach { i =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(f"$dir/doc_$i%03d.bin"), bytesOf(i))
     }
   }
 }

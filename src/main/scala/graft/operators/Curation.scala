@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Graft.table
+import graft.sources.Fixture
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -1119,7 +1120,7 @@ object Curation {
   * Residues overlap (e.g. i%35==0 hits two line rules) so the filter's
   * rule precedence is exercised, not just each rule in isolation. */
 object C4Fixture {
-  val dir = "/root/repo/spark-warehouse/graft_c4"
+  val dir = Fixture.dir("graft_c4")
   val docsPath = s"$dir/docs"
 
   def docText(i: Int): String = {
@@ -1137,12 +1138,9 @@ object C4Fixture {
 
   def rows: Seq[(Long, String)] = (0 until 300).map(i => (i.toLong, docText(i)))
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    if (!new java.io.File(docsPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(docsPath)
-    }
+  def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(docsPath)
   }
 }
 
@@ -1152,7 +1150,7 @@ object C4Fixture {
   * query string). Target t carries variants 0..(t%6), so group sizes and
   * keeper ids follow a closed form the spec pins. */
 object UrlFixture {
-  val dir = "/root/repo/spark-warehouse/graft_urls"
+  val dir = Fixture.dir("graft_urls")
   val urlsPath = s"$dir/urls"
 
   /** variant v of target t; url_id = t*6 + v */
@@ -1171,17 +1169,14 @@ object UrlFixture {
   def rows: Seq[(Long, String)] =
     for (t <- 0 until 50; v <- 0 to t % 6) yield ((t * 6 + v).toLong, url(t, v))
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    if (!new java.io.File(urlsPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      rows.toDF("url_id", "url").coalesce(1).write.mode("overwrite").parquet(urlsPath)
-    }
+  def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    rows.toDF("url_id", "url").coalesce(1).write.mode("overwrite").parquet(urlsPath)
   }
 }
 
 object LineFixture {
-  val dir = "/root/repo/spark-warehouse/graft_lines"
+  val dir = Fixture.dir("graft_lines")
   val docsPath = s"$dir/docs"
 
   /** lines with df >= this are boilerplate (pool lines sit at df ≈ 40) */
@@ -1201,11 +1196,8 @@ object LineFixture {
 
   def rows: Seq[(Long, String)] = (0 until 400).map(i => (i.toLong, docLines(i).mkString("\n")))
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    if (!new java.io.File(docsPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(docsPath)
-    }
+  def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(docsPath)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Graft.table
+import graft.sources.Fixture
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -1586,7 +1587,7 @@ object Multimodal {
     // sink IS the operator under test (x286's fixture-guard pattern
     // deliberately not applied).
     "x305_dsv2_write" -> ((s, _) => {
-      val outDir = "/root/repo/spark-warehouse/graft_pq_dsv2"
+      val outDir = s"${Fixture.root}/graft_pq_dsv2"
       val src = s
         .range(20000L)
         .select(
@@ -1649,7 +1650,7 @@ object Multimodal {
     // independent implementation. GraftParquetIoSpec additionally pins
     // Spark-readback parity, null partitions, and %XX value escaping.
     "x307_dsv2_partition_write" -> ((s, _) => {
-      val outDir = "/root/repo/spark-warehouse/graft_pq_dsv2_part"
+      val outDir = s"${Fixture.root}/graft_pq_dsv2_part"
       val src = s
         .range(12000L)
         .select(
@@ -1710,7 +1711,7 @@ object Multimodal {
     // exercises the %20 escaping round-trip); values are hash-checked
     // against DuckDB computing the same aggregate from the source table.
     "x311_dsv2_hive_read" -> ((s, _dir) => {
-      val outDir = "/root/repo/spark-warehouse/graft_pq_hive_read"
+      val outDir = s"${Fixture.root}/graft_pq_hive_read"
       graft.Graft
         .table(s, _dir, "orders")
         .select(
@@ -1755,7 +1756,7 @@ object Multimodal {
     // come from the zero-shuffle execution) and returned as a local
     // frame; DuckDB recomputes the join from the source table.
     "x312_dsv2_spj" -> ((s, _dir) => {
-      val base = "/root/repo/spark-warehouse/graft_pq_spj"
+      val base = s"${Fixture.root}/graft_pq_spj"
       val orders = graft.Graft.table(s, _dir, "orders")
       orders
         .select(
@@ -1820,7 +1821,7 @@ object Multimodal {
     // "scan only the partitions the dimension filter selects" with no
     // partition literal ever written by hand.
     "x313_dsv2_runtime_prune" -> ((s, _dir) => {
-      val base = "/root/repo/spark-warehouse/graft_pq_dpp"
+      val base = s"${Fixture.root}/graft_pq_dpp"
       val orders = graft.Graft.table(s, _dir, "orders")
       orders
         .select(
@@ -2780,8 +2781,8 @@ object Multimodal {
 
   def oracles: Map[String, String] = Map(
     "x23_video_meta" ->
-      """SELECT video_id, width, height, duration_ms
-        |FROM '/root/repo/spark-warehouse/graft_video/twin/*.parquet'
+      s"""SELECT video_id, width, height, duration_ms
+        |FROM '${Fixture.root}/graft_video/twin/*.parquet'
         |ORDER BY video_id""".stripMargin,
     // x176: the whole record table rebuilt from the generation formulas —
     // record layout (warcinfo + 1+W%4 responses + request when W%3=0),
@@ -3054,12 +3055,12 @@ object Multimodal {
     // x286: DuckDB's native reader over the from-scratch writer's bytes —
     // all three codec variants must yield the formula census.
     "x286_parquet_write" ->
-      """WITH u AS (
-        |  SELECT CAST(0 AS BIGINT) AS codec, * FROM read_parquet('/root/repo/spark-warehouse/graft_pq/orders_c0.parquet')
+      s"""WITH u AS (
+        |  SELECT CAST(0 AS BIGINT) AS codec, * FROM read_parquet('${Fixture.root}/graft_pq/orders_c0.parquet')
         |  UNION ALL
-        |  SELECT CAST(2 AS BIGINT), * FROM read_parquet('/root/repo/spark-warehouse/graft_pq/orders_c2.parquet')
+        |  SELECT CAST(2 AS BIGINT), * FROM read_parquet('${Fixture.root}/graft_pq/orders_c2.parquet')
         |  UNION ALL
-        |  SELECT CAST(6 AS BIGINT), * FROM read_parquet('/root/repo/spark-warehouse/graft_pq/orders_c6.parquet'))
+        |  SELECT CAST(6 AS BIGINT), * FROM read_parquet('${Fixture.root}/graft_pq/orders_c6.parquet'))
         |SELECT codec, status, count(*) AS n,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents,
         |  CAST(sum(CASE WHEN cents IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
@@ -3072,10 +3073,10 @@ object Multimodal {
     // x288: values through DuckDB's dictionary decode of OUR bytes + the
     // dict/plain chunk census from parquet_metadata.
     "x288_parquet_dict" ->
-      """WITH m AS (
+      s"""WITH m AS (
         |  SELECT CAST(count(CASE WHEN dictionary_page_offset IS NOT NULL THEN 1 END) AS BIGINT) AS n_dict_cols,
         |    CAST(count(CASE WHEN dictionary_page_offset IS NULL THEN 1 END) AS BIGINT) AS n_plain_cols
-        |  FROM parquet_metadata('/root/repo/spark-warehouse/graft_pq/orders_dict.parquet'))
+        |  FROM parquet_metadata('${Fixture.root}/graft_pq/orders_dict.parquet'))
         |SELECT status, count(*) AS n,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents,
         |  CAST(sum(CASE WHEN cents IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
@@ -3085,16 +3086,16 @@ object Multimodal {
         |  CAST(sum(CASE WHEN flag THEN 1 ELSE 0 END) AS BIGINT) AS n_flag,
         |  CAST(sum(CAST(floor(CAST(ratio AS DOUBLE) * 1024) AS BIGINT)) AS BIGINT) AS sum_fold,
         |  m.n_dict_cols, m.n_plain_cols
-        |FROM read_parquet('/root/repo/spark-warehouse/graft_pq/orders_dict.parquet'), m
+        |FROM read_parquet('${Fixture.root}/graft_pq/orders_dict.parquet'), m
         |GROUP BY status, m.n_dict_cols, m.n_plain_cols ORDER BY status""".stripMargin,
     // x289: the statistics the from-scratch writer put in the footer,
     // read back by DuckDB's own metadata parser.
     "x289_parquet_stats" ->
-      """SELECT path_in_schema AS name,
+      s"""SELECT path_in_schema AS name,
         |  CAST(stats_min_value AS DOUBLE) AS min_v,
         |  CAST(stats_max_value AS DOUBLE) AS max_v,
         |  CAST(stats_null_count AS BIGINT) AS nulls
-        |FROM parquet_metadata('/root/repo/spark-warehouse/graft_pq/orders_dict.parquet')
+        |FROM parquet_metadata('${Fixture.root}/graft_pq/orders_dict.parquet')
         |WHERE path_in_schema IN ('k', 'cents', 'day', 'price', 'lineno', 'ratio')
         |ORDER BY name""".stripMargin,
     // x290: the class census + plain totals from the content formulas;
@@ -3135,26 +3136,26 @@ object Multimodal {
     // x292: per-row-group census from DuckDB's metadata parser over the
     // from-scratch multi-row-group file — counts AND stats windows.
     "x292_parquet_rowgroups" ->
-      """SELECT row_group_id AS rg, CAST(row_group_num_rows AS BIGINT) AS rows,
+      s"""SELECT row_group_id AS rg, CAST(row_group_num_rows AS BIGINT) AS rows,
         |  CAST(stats_min_value AS BIGINT) AS k_min, CAST(stats_max_value AS BIGINT) AS k_max
-        |FROM parquet_metadata('/root/repo/spark-warehouse/graft_pq/orders_mrg.parquet')
+        |FROM parquet_metadata('${Fixture.root}/graft_pq/orders_mrg.parquet')
         |WHERE path_in_schema = 'k' ORDER BY rg""".stripMargin,
     // x293: the pruned census re-derived by DuckDB's own read of OUR
     // bytes under the same predicate, and the expected pruning recomputed
     // from OUR stats via parquet_metadata.
     "x293_parquet_prune" ->
-      """WITH m AS (
+      s"""WITH m AS (
         |  SELECT CAST(count(*) AS BIGINT) AS rg_total,
         |    CAST(count(CASE WHEN CAST(stats_max_value AS BIGINT) >= 6000
         |                     AND CAST(stats_min_value AS BIGINT) <= 10500 THEN 1 END) AS BIGINT) AS rg_decoded
-        |  FROM parquet_metadata('/root/repo/spark-warehouse/graft_pq/orders_mrg.parquet')
+        |  FROM parquet_metadata('${Fixture.root}/graft_pq/orders_mrg.parquet')
         |  WHERE path_in_schema = 'k')
         |SELECT status, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents,
         |  CAST(sum(CASE WHEN cents IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
         |  CAST(sum(day) AS BIGINT) AS sum_day,
         |  m.rg_total, m.rg_decoded
-        |FROM read_parquet('/root/repo/spark-warehouse/graft_pq/orders_mrg.parquet'), m
+        |FROM read_parquet('${Fixture.root}/graft_pq/orders_mrg.parquet'), m
         |WHERE k BETWEEN 6000 AND 10500
         |GROUP BY status, m.rg_total, m.rg_decoded ORDER BY status""".stripMargin,
     // x297: the census rebuilt from the row formulas — the oracle never
@@ -3215,11 +3216,11 @@ object Multimodal {
     // x302: both halves re-derived — values by reading OUR file under
     // each predicate, pruning expectations from OUR stats windows.
     "x302_prune_sweep" ->
-      """WITH p(probe, lo, hi) AS (VALUES
+      s"""WITH p(probe, lo, hi) AS (VALUES
         |  (CAST(0 AS BIGINT), CAST(6000 AS BIGINT), CAST(6999 AS BIGINT)),
         |  (1, 6000, 10500), (2, 0, 19999), (3, 50000, 60000)),
         |m AS (SELECT CAST(stats_min_value AS BIGINT) AS mn, CAST(stats_max_value AS BIGINT) AS mx
-        |  FROM parquet_metadata('/root/repo/spark-warehouse/graft_pq/orders_mrg.parquet')
+        |  FROM parquet_metadata('${Fixture.root}/graft_pq/orders_mrg.parquet')
         |  WHERE path_in_schema = 'k'),
         |rg AS (SELECT p.probe, CAST(count(*) AS BIGINT) AS rg_total,
         |  CAST(count(CASE WHEN m.mx >= p.lo AND m.mn <= p.hi THEN 1 END) AS BIGINT) AS rg_decoded
@@ -3227,7 +3228,7 @@ object Multimodal {
         |v AS (SELECT p.probe, count(r.k) AS n,
         |  CAST(coalesce(sum(r.k), 0) AS BIGINT) AS sum_k,
         |  CAST(coalesce(sum(r.day), 0) AS BIGINT) AS sum_day
-        |  FROM p LEFT JOIN read_parquet('/root/repo/spark-warehouse/graft_pq/orders_mrg.parquet') r
+        |  FROM p LEFT JOIN read_parquet('${Fixture.root}/graft_pq/orders_mrg.parquet') r
         |    ON r.k BETWEEN p.lo AND p.hi
         |  GROUP BY p.probe)
         |SELECT p.probe, p.lo, p.hi, v.n, v.sum_k, v.sum_day, rg.rg_total, rg.rg_decoded
@@ -3258,12 +3259,12 @@ object Multimodal {
     // x305: DuckDB's reader over the dsv2-written bytes — the write half
     // of the two-independent-implementations agreement.
     "x305_dsv2_write" ->
-      """SELECT tag, count(*) AS n,
+      s"""SELECT tag, count(*) AS n,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents,
         |  CAST(sum(CASE WHEN cents IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
         |  CAST(sum(CASE WHEN flag THEN 1 ELSE 0 END) AS BIGINT) AS n_flag,
         |  CAST(sum(CAST(round(price * 100) AS BIGINT)) AS BIGINT) AS sum_price_c
-        |FROM read_parquet('/root/repo/spark-warehouse/graft_pq_dsv2/*.parquet')
+        |FROM read_parquet('${Fixture.root}/graft_pq_dsv2/*.parquet')
         |GROUP BY tag ORDER BY tag""".stripMargin,
     // x310: DuckDB recomputes the footer-answered census from the data
     // itself — if the pushed-aggregate path misread a single stat, the
@@ -3278,11 +3279,11 @@ object Multimodal {
     // directory layout, partition-value encoding, and data bytes all
     // verified by an independent implementation.
     "x307_dsv2_partition_write" ->
-      """SELECT part, count(*) AS n,
+      s"""SELECT part, count(*) AS n,
         |  CAST(sum(v) AS BIGINT) AS sum_v,
         |  CAST(sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
         |  CAST(sum(CASE WHEN flag THEN 1 ELSE 0 END) AS BIGINT) AS n_flag
-        |FROM read_parquet('/root/repo/spark-warehouse/graft_pq_dsv2_part/*/*.parquet',
+        |FROM read_parquet('${Fixture.root}/graft_pq_dsv2_part/*/*.parquet',
         |                  hive_partitioning=1)
         |GROUP BY part ORDER BY part""".stripMargin,
     "x311_dsv2_hive_read" ->
@@ -3383,24 +3384,24 @@ object Multimodal {
         |FROM e ORDER BY warc_id, rec_idx""".stripMargin,
 
     "x88_mp3_meta" ->
-      """SELECT audio_id, n_frames, channels, kbps_sum, duration_ms
-        |FROM '/root/repo/spark-warehouse/graft_mp3/twin/*.parquet'
+      s"""SELECT audio_id, n_frames, channels, kbps_sum, duration_ms
+        |FROM '${Fixture.root}/graft_mp3/twin/*.parquet'
         |ORDER BY audio_id""".stripMargin,
     "x89_h264_meta" ->
-      """SELECT video_id, width, height, profile, level, n_nals, n_slices
-        |FROM '/root/repo/spark-warehouse/graft_h264/twin/*.parquet'
+      s"""SELECT video_id, width, height, profile, level, n_nals, n_slices
+        |FROM '${Fixture.root}/graft_h264/twin/*.parquet'
         |ORDER BY video_id""".stripMargin,
     "x114_gop_index" ->
-      """SELECT video_id, gop_idx, gop_offset, n_slices, gop_bytes
-        |FROM '/root/repo/spark-warehouse/graft_h264gop/twin/*.parquet'
+      s"""SELECT video_id, gop_idx, gop_offset, n_slices, gop_bytes
+        |FROM '${Fixture.root}/graft_h264gop/twin/*.parquet'
         |ORDER BY video_id, gop_idx""".stripMargin,
     "x22_audio_meta" ->
-      """SELECT audio_id, sample_rate, channels, bits, duration_ms
-        |FROM '/root/repo/spark-warehouse/graft_audio/twin/*.parquet'
+      s"""SELECT audio_id, sample_rate, channels, bits, duration_ms
+        |FROM '${Fixture.root}/graft_audio/twin/*.parquet'
         |ORDER BY audio_id""".stripMargin,
     "x21_image_meta" ->
-      """SELECT img_id, format, width, height, n_bytes
-        |FROM '/root/repo/spark-warehouse/graft_images/twin/*.parquet'
+      s"""SELECT img_id, format, width, height, n_bytes
+        |FROM '${Fixture.root}/graft_images/twin/*.parquet'
         |ORDER BY img_id""".stripMargin,
     "x11_multimodal_meta" ->
       """SELECT doc_id, octet_length(encode(text)) AS n_bytes, md5(text) AS digest
@@ -3408,9 +3409,9 @@ object Multimodal {
     // first-principles pixel oracle: fixture formula + the same integer
     // nearest-neighbor mapping, never touching the BMP bytes
     "x33_bmp_decode_resize" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height
-        |  FROM '/root/repo/spark-warehouse/graft_bmp/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_bmp/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height,
@@ -3426,9 +3427,9 @@ object Multimodal {
     // first-principles GIF oracle: the x33 checksum CTE over the composite
     // palette[idx] formula — LZW decode proven without touching the bytes
     "x71_gif_decode" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height
-        |  FROM '/root/repo/spark-warehouse/graft_gif/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_gif/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height,
@@ -3449,9 +3450,9 @@ object Multimodal {
     // CTE pointed at the PNG fixture's pixel formula — decode chain proven
     // without the oracle touching a byte of PNG
     "x70_png_decode" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height
-        |  FROM '/root/repo/spark-warehouse/graft_png/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_png/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height,
@@ -3474,9 +3475,9 @@ object Multimodal {
     // x278: x70's census shape over the export corpus's OWN pixel formula —
     // a correct round-trip through the from-scratch ENCODER must land on it.
     "x278_png_export" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height
-        |  FROM '/root/repo/spark-warehouse/graft_png_export/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_png_export/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height,
@@ -3503,9 +3504,9 @@ object Multimodal {
     // is plain floor in both engines — and truecolor rows are the x70
     // formulas verbatim; then the shared checksum/aHash contract
     "x100_png_palette_alpha" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height
-        |  FROM '/root/repo/spark-warehouse/graft_png_ext/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_png_ext/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height,
@@ -3541,9 +3542,9 @@ object Multimodal {
     // oracle knows nothing about passes; only a correct deinterlace
     // (or a correct grayscale expand) can match it.
     "x146_png_adam7_gray" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height
-        |  FROM '/root/repo/spark-warehouse/graft_png_adam7/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_png_adam7/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height,
@@ -3566,9 +3567,9 @@ object Multimodal {
     // selects the formula alpha, else opaque; the same div-255 white
     // composite as x100's RGBA face.
     "x144_png_trns" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height
-        |  FROM '/root/repo/spark-warehouse/graft_png_trns/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_png_trns/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height,
@@ -3604,9 +3605,9 @@ object Multimodal {
     // in both engines) → the x33 checksum CTE. Huffman/IDCT proven
     // without the oracle touching a byte of JPEG.
     "x80_jpeg_decode" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height
-        |  FROM '/root/repo/spark-warehouse/graft_jpeg/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_jpeg/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height,
@@ -3638,8 +3639,8 @@ object Multimodal {
     // formulas (x33 BMP, x70 PNG, x71 GIF, x80 JPEG), each keyed into a
     // disjoint uid range — it never parses a byte of any format
     "x91_image_dispatch" ->
-      """WITH g AS (SELECT unnest(range(8)) AS v),
-        |png_t AS (SELECT img_id, width, height FROM '/root/repo/spark-warehouse/graft_png/twin/*.parquet'),
+      s"""WITH g AS (SELECT unnest(range(8)) AS v),
+        |png_t AS (SELECT img_id, width, height FROM '${Fixture.root}/graft_png/twin/*.parquet'),
         |png_px AS (
         |  SELECT img_id, width, height, (gj.v * 8 + gi.v + 1) AS wgt,
         |    (gi.v * width) // 8 AS sx, (gj.v * height) // 8 AS sy
@@ -3650,7 +3651,7 @@ object Multimodal {
         |                  + 5 * ((img_id * 9 + sx * 2 + sy * 5) % 256)
         |                  + 7 * ((img_id * 3 + sx * 4 + sy * 7) % 256))) AS BIGINT) AS checksum
         |  FROM png_px GROUP BY img_id, width, height),
-        |gif_t AS (SELECT img_id, width, height FROM '/root/repo/spark-warehouse/graft_gif/twin/*.parquet'),
+        |gif_t AS (SELECT img_id, width, height FROM '${Fixture.root}/graft_gif/twin/*.parquet'),
         |gif_px AS (
         |  SELECT img_id, width, height, (gj.v * 8 + gi.v + 1) AS wgt,
         |    (img_id * 7 + ((gi.v * width) // 8) * 3 + ((gj.v * height) // 8) * 5) % 256 AS idx
@@ -3661,7 +3662,7 @@ object Multimodal {
         |                  + 5 * ((idx * 5 + 11) % 256)
         |                  + 7 * ((idx * 7 + 13) % 256))) AS BIGINT) AS checksum
         |  FROM gif_px GROUP BY img_id, width, height),
-        |jpg_t AS (SELECT img_id, width, height FROM '/root/repo/spark-warehouse/graft_jpeg/twin/*.parquet'),
+        |jpg_t AS (SELECT img_id, width, height FROM '${Fixture.root}/graft_jpeg/twin/*.parquet'),
         |jpg_px AS (
         |  SELECT img_id, width, height, (gj.v * 8 + gi.v + 1) AS wgt,
         |    (gi.v * width) // 8 AS sx, (gj.v * height) // 8 AS sy
@@ -3684,7 +3685,7 @@ object Multimodal {
         |  SELECT img_id + 2000 AS uid, 'jpeg' AS fmt, width, height,
         |    CAST(sum(wgt * (3 * r + 5 * gc + 7 * bc)) AS BIGINT) AS checksum
         |  FROM jpg_rgb GROUP BY img_id, width, height),
-        |bmp_t AS (SELECT img_id, width, height FROM '/root/repo/spark-warehouse/graft_bmp/twin/*.parquet'),
+        |bmp_t AS (SELECT img_id, width, height FROM '${Fixture.root}/graft_bmp/twin/*.parquet'),
         |bmp_px AS (
         |  SELECT img_id, width, height, (gj.v * 8 + gi.v + 1) AS wgt,
         |    (gi.v * width) // 8 AS sx, (gj.v * height) // 8 AS sy
@@ -3695,7 +3696,7 @@ object Multimodal {
         |                  + 5 * ((img_id * 11 + sx + sy * 2) % 256)
         |                  + 7 * ((img_id * 13 + sx * 2 + sy) % 256))) AS BIGINT) AS checksum
         |  FROM bmp_px GROUP BY img_id, width, height),
-        |tif_t AS (SELECT img_id, width, height FROM '/root/repo/spark-warehouse/graft_tiff/twin/*.parquet'),
+        |tif_t AS (SELECT img_id, width, height FROM '${Fixture.root}/graft_tiff/twin/*.parquet'),
         |tif_px AS (
         |  SELECT img_id, width, height, (gj.v * 8 + gi.v + 1) AS wgt,
         |    (gi.v * width) // 8 AS sx, (gj.v * height) // 8 AS sy
@@ -3715,9 +3716,9 @@ object Multimodal {
     // saturating at 255) → 8×8 sample grays → integer mean compare → 64-bit
     // hash in two halves → exact brute-force hamming over the tiny fixture
     "x55_image_phash" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, src_id, bumped, width, height
-        |  FROM '/root/repo/spark-warehouse/graft_phash/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_phash/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |cell AS (
         |  SELECT img_id, src_id, bumped,
@@ -3749,9 +3750,9 @@ object Multimodal {
     // first-principles frame oracle: sampling schedule + pixel formula +
     // resize map, all recomputed in SQL
     "x35_video_frame_sample" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT video_id AS id, width, height, n_frames
-        |  FROM '/root/repo/spark-warehouse/graft_rawvideo/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_rawvideo/twin/*.parquet'),
         |fr AS (SELECT id, width, height, unnest(range(0, n_frames, 3)) AS t FROM t),
         |g AS (SELECT unnest(range(4)) AS v),
         |px AS (
@@ -3767,9 +3768,9 @@ object Multimodal {
     // first-principles PCM oracle: the synthesizer's byte formula
     // b_k = (id*17 + 3k) % 121, reassembled into u8-biased / s16le samples
     "x34_audio_pcm_features" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT audio_id AS id, channels, bits
-        |  FROM '/root/repo/spark-warehouse/graft_audio/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_audio/twin/*.parquet'),
         |n AS (SELECT id, bits, (50 + (id * 37) % 3000) * channels AS total FROM t),
         |s AS (SELECT id, bits, total, unnest(range(total)) AS m FROM n),
         |v AS (
@@ -3784,9 +3785,9 @@ object Multimodal {
     // x211: the resample replayed from the closed-form sample formula —
     // same div/mod positions, same truncating interpolation.
     "x211_audio_resample" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT audio_id AS id, sample_rate AS rate, channels AS ch
-        |  FROM '/root/repo/spark-warehouse/graft_audio/twin/*.parquet' WHERE bits = 16),
+        |  FROM '${Fixture.root}/graft_audio/twin/*.parquet' WHERE bits = 16),
         |n AS (SELECT id, rate, ch, 50 + (id * 37) % 3000 AS frames FROM t),
         |o AS (SELECT id, rate, ch, frames, (frames - 1) * 16000 // rate + 1 AS nout FROM n),
         |jj AS (SELECT id, rate, ch, nout, unnest(range(nout)) AS j FROM o),
@@ -3872,9 +3873,9 @@ object Multimodal {
     // x168: the three kind formulas composed with the white composite /
     // §12.5 rounded reduction, through the shared checksum CTE.
     "x168_png_depth_alpha" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height, kind
-        |  FROM '/root/repo/spark-warehouse/graft_png_depth/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_png_depth/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height, kind,
@@ -3909,9 +3910,9 @@ object Multimodal {
     // integer divisions, keyed classes matching against the (0,0)
     // sample — through the shared checksum CTE.
     "x230_png_complete" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height, clazz, kind
-        |  FROM '/root/repo/spark-warehouse/graft_png_full/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_png_full/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height, clazz, kind,
@@ -3956,9 +3957,9 @@ object Multimodal {
     // x163: the x33 checksum CTE over the TIFF fixture's run-structured
     // pixel formula — IFD walk + strips + PackBits proven byte-free.
     "x163_tiff_decode" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT img_id, width, height, compression
-        |  FROM '/root/repo/spark-warehouse/graft_tiff/twin/*.parquet'),
+        |  FROM '${Fixture.root}/graft_tiff/twin/*.parquet'),
         |g AS (SELECT unnest(range(8)) AS v),
         |px AS (
         |  SELECT img_id, width, height, compression,

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft.table
 import graft.functions.Hashing
+import graft.sources.Fixture
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -490,11 +491,11 @@ object Sampling {
     // shouldn't, rows vanish and the hash breaks); the ≤1/8-of-files
     // bound itself is asserted in ScaleDisciplineSpec.
     "x73_skipping_scan" -> ((s, d) => {
-      val dir = "/root/repo/spark-warehouse/graft_zorder"
+      val dir = graft.sources.DataSkipping.dir(d)
       // fingerprint-guarded: steady-state calls (bench warm + timed
       // passes) are a marker-file read, so the measured number is the
       // manifest-pruned READ path, not layout writes
-      val bounds = graft.sources.DataSkipping.ensureLayout(s, d, dir)
+      val bounds = graft.sources.DataSkipping.ensureLayout(s, d)
       val r = graft.sources.DataSkipping.gateRect(bounds)
       graft.sources.DataSkipping
         .prunedScan(s, dir, r)
@@ -521,8 +522,8 @@ object Sampling {
     // for the contrast leg. Oracle reads the same manifest (the x74
     // gate-SF-pin convention).
     "x222_overlap_depth" -> ((s, d) => {
-      val dir = "/root/repo/spark-warehouse/graft_zorder"
-      graft.sources.DataSkipping.ensureLayout(s, d, dir)
+      val dir = graft.sources.DataSkipping.dir(d)
+      graft.sources.DataSkipping.ensureLayout(s, d)
       val mf = s.read.parquet(s"$dir/manifest").localCheckpoint() // two dims
       def sweep(events: DataFrame): DataFrame = {
         // events: (layout, dim, v, delta); censuses are file-count-sized
@@ -581,8 +582,8 @@ object Sampling {
     // ScaleDisciplineSpec asserts the files-opened bound (file assignment
     // is partitioner-dependent, so counts are spec turf, not oracle turf).
     "x113_bloom_point_lookup" -> ((s, d) => {
-      val dir = "/root/repo/spark-warehouse/graft_zorder"
-      graft.sources.DataSkipping.ensureLayout(s, d, dir)
+      val dir = graft.sources.DataSkipping.dir(d)
+      graft.sources.DataSkipping.ensureLayout(s, d)
       val ks = table(s, d, "orders")
         .select("o_orderkey")
         .distinct()
@@ -1058,8 +1059,7 @@ object Sampling {
     // are asserted in CompactionExecSpec.
     "x78_compaction_exec" -> ((s, d) => {
       import s.implicits._
-      val dir = "/root/repo/spark-warehouse/graft_compacted"
-      graft.sources.Compaction.ensure(s, d, dir)
+      val dir = graft.sources.Compaction.ensure(s, d)
       val counts = graft.sources.Compaction.fileCounts(s, dir).toDF("lang", "n_files")
       s.read
         .parquet(dir)
@@ -1495,9 +1495,9 @@ object Sampling {
     // x222: same sweep over the same manifest (gate-SF pin per the x74
     // convention) + the hash-contrast leg replayed from raw orders.
     "x222_overlap_depth" ->
-      """WITH mf AS (
+      s"""WITH mf AS (
         |  SELECT c_lo, c_hi, d_lo, d_hi
-        |  FROM '/root/repo/spark-warehouse/graft_zorder/manifest/*.parquet'),
+        |  FROM '${Fixture.root}/graft_zorder/sf0.01/manifest/*.parquet'),
         |hf AS (
         |  SELECT ('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 64 AS f,
         |    min(o_custkey) AS lo, max(o_custkey) AS hi

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Graft.table
+import graft.sources.Fixture
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -666,7 +667,7 @@ object Similarity {
     // lookups, and touches corpus floats only to re-rank the 40-deep
     // shortlist. `seg` pins delta codes surfacing in the final top-5.
     "x274_incremental_ivfpq" -> ((s, d) => {
-      val dir = incPqEnsure(s, d)
+      val dir = incIvfEnsure(s, d)
       incPqSearch(s, dir, table(s, d, "embeddings"), k = 5, nQueries = 10, nprobe = 4, shortlist = 40)
     }),
 
@@ -714,7 +715,7 @@ object Similarity {
     // oracle expects TRUE — a recall regression flips the gate red, the
     // x13 contract pattern).
     "x102_ivf_pq" -> ((s, d) => {
-      val dir = pqEnsureGateIndex(s, d)
+      val dir = ivfEnsureGateIndex(s, d)
       val emb = table(s, d, "embeddings")
       val cent = s.read.parquet(s"$dir/centroids")
       val cb = s.read.parquet(s"$dir/pq_codebooks")
@@ -1297,18 +1298,13 @@ object Similarity {
       .orderBy("qid", "rk")
   }
 
-  /** Gate fixture: frozen centroids trained on the 80% base stripe, base
-    * segment = that stripe, two ingest batches of 10% each —
-    * fingerprint-guarded per source dir (the x74 gate-artifact pattern). */
-  private[graft] def incIvfEnsure(s: SparkSession, d: String): String = synchronized {
-    val fp = graft.sources.Fingerprint.of(s, s"$d/embeddings.parquet", "incivf-v1-nlist8-it3")
-    val dir = s"/root/repo/spark-warehouse/graft_incivf_gate/${new java.io.File(d).getName}"
-    val marker = new java.io.File(s"$dir/src_key")
-    val current =
-      if (marker.exists()) new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") else ""
-    if (current != fp) {
-      val f = new java.io.File(dir)
-      if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
+  /** Gate fixture (x269 and x274): frozen centroids trained on the 80%
+    * base stripe, base segment = that stripe, two ingest batches of 10%
+    * each; then x274's PQ codebooks trained on the BASE residuals only and
+    * every segment's codes encoded against them. A [[Fixture]] per source
+    * dir. */
+  private[graft] def incIvfEnsure(s: SparkSession, d: String): String =
+    Fixture("graft_incivf_gate", Some(d), s"incivf-v1-nlist8-it3|pq$PqM/$PqK/$PqGrid") { dir =>
       val emb = table(s, d, "embeddings")
       val base = emb.where(col("vec_id") % 10 < 8)
       kmeansCentroids(s, base, nlist = 8, iters = 3)
@@ -1321,10 +1317,14 @@ object Similarity {
       incIvfWriteSegment(s, dir, base, centF)
       incIvfIngest(s, dir, 1, emb.where(col("vec_id") % 10 === 8))
       incIvfIngest(s, dir, 2, emb.where(col("vec_id") % 10 === 9))
-      java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8"))
+      java.nio.file.Files.write(
+        new java.io.File(s"$dir/emb_src").toPath,
+        s"$d/embeddings.parquet".getBytes("UTF-8")
+      )
+      // codebooks: base residuals ONLY — frozen across every later ingest
+      pqTrainBaseForTest(s, dir)
+      incIvfSegments(dir).foreach(seg => incPqEncodeSegment(s, dir, seg))
     }
-    dir
-  }
 
   // -------------------------------------------- incremental IVF+PQ (x274)
   // x269's segments carrying x102's 8-byte codes: the full FAISS
@@ -1387,29 +1387,6 @@ object Similarity {
       .write
       .mode("overwrite")
       .parquet(s"$dir/pq_codebooks")
-  }
-
-  /** Gate fixture: x269's segment tree + PQ codebooks trained on the BASE
-    * residuals only, every segment's codes encoded against them. */
-  private[graft] def incPqEnsure(s: SparkSession, d: String): String = synchronized {
-    val dir = incIvfEnsure(s, d)
-    val srcKey =
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/src_key")), "UTF-8") +
-        s"|pq$PqM/$PqK/$PqGrid"
-    val marker = new java.io.File(s"$dir/pq_src_key")
-    val current =
-      if (marker.exists()) new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") else ""
-    if (current != srcKey) {
-      java.nio.file.Files.write(
-        new java.io.File(s"$dir/emb_src").toPath,
-        s"$d/embeddings.parquet".getBytes("UTF-8")
-      )
-      // codebooks: base residuals ONLY — frozen across every later ingest
-      pqTrainBaseForTest(s, dir)
-      incIvfSegments(dir).foreach(seg => incPqEncodeSegment(s, dir, seg))
-      java.nio.file.Files.write(marker.toPath, srcKey.getBytes("UTF-8"))
-    }
-    dir
   }
 
   /** ADC top-k over base ∪ delta codes: probe, prune every segment's code
@@ -1498,21 +1475,17 @@ object Similarity {
       .orderBy("qid", "rk")
   }
 
-  private[graft] def ivfEnsureIndex(s: SparkSession, d: String, nlist: Int, iters: Int): String = synchronized {
-    // Cache key includes a CONTENT fingerprint of the corpus files
-    // (name/size/mtime), not just the path — regenerating the corpus at the
-    // same path invalidates the persisted index instead of silently reusing
-    // stale centroids/lists (ADVICE r02).
-    val key = graft.sources.Fingerprint.of(s, s"$d/embeddings.parquet", s"$nlist|$iters")
-    val dir = s"/root/repo/spark-warehouse/graft_ivf/$key"
-    if (!new java.io.File(s"$dir/lists").exists()) {
+  /** A [[Fixture]] per (nlist, iters) and source dir: its fingerprint of
+    * the corpus files (name/size/mtime) means a corpus regenerated at the
+    * same path rebuilds the index instead of reusing stale centroids/lists
+    * (ADVICE r02). */
+  private[graft] def ivfEnsureIndex(s: SparkSession, d: String, nlist: Int, iters: Int): String =
+    Fixture(s"graft_ivf/n${nlist}_i$iters", Some(d), s"$nlist|$iters") { dir =>
       val emb = table(s, d, "embeddings")
       val centroids = kmeansCentroids(s, emb, nlist, iters)
       centroids.write.mode("overwrite").parquet(s"$dir/centroids")
       assignLists(emb, s.read.parquet(s"$dir/centroids")).write.mode("overwrite").parquet(s"$dir/lists")
     }
-    dir
-  }
 
   /** IVF top-k search against a persisted index: probe the nprobe nearest
     * centroids per query, exact-rank inside those lists only — the
@@ -1561,29 +1534,33 @@ object Similarity {
     * read the index as ground truth (the trained-model-fixture pattern,
     * x68), and float32 centroids make the probe ranking bit-replicable via
     * `list_cosine_similarity` — so the x74 search output hash-checks in
-    * full, no contract columns needed. Guarded by the source-index key, so
-    * steady-state calls are a marker-file read. */
-  private[graft] def ivfEnsureGateIndex(s: SparkSession, d: String): String = synchronized {
-    val src = ivfEnsureIndex(s, d, nlist = 8, iters = 3) // path embeds the corpus fingerprint
-    // one artifact subdir PER SOURCE DIR: the bench (sf0.1) and the scale
-    // probe must never rebuild the sf0.01 artifact the oracle reads — a
-    // rebuild between the Verify dump and the DuckDB compare would flip
-    // the gate on artifact drift, not on a real bug (observed once when a
-    // chained bench ran before the oracle check)
-    val dir = s"/root/repo/spark-warehouse/graft_ivf_gate/${new java.io.File(d).getName}"
-    val marker = new java.io.File(s"$dir/src_key")
-    val current =
-      if (marker.exists()) new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") else ""
-    if (current != src) {
+    * full, no contract columns needed. The same artifact carries x102's
+    * PQ half: `pq_codebooks` (m, code, j, cq — M·K·Dsub tiny rows) and
+    * `pq_codes` (vec_id, cid, pcodes). A [[Fixture]] per source dir — the
+    * bench (sf0.1) and the scale probe never rebuild the sf0.01 artifact
+    * the oracle reads; the source index is built inside this fixture's
+    * lock. */
+  private[graft] def ivfEnsureGateIndex(s: SparkSession, d: String): String =
+    Fixture("graft_ivf_gate", Some(d), s"gate-n8-i3|pq$PqM/$PqK/$PqGrid") { dir =>
+      val src = ivfEnsureIndex(s, d, nlist = 8, iters = 3)
       s.read
         .parquet(s"$src/centroids")
         .select(col("cid"), transform(col("cvec"), x => x.cast("float")).as("cvec"))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
       s.read.parquet(s"$src/lists").coalesce(1).write.mode("overwrite").parquet(s"$dir/lists")
-      java.nio.file.Files.write(marker.toPath, src.getBytes("UTF-8"))
+      val emb = table(s, d, "embeddings")
+      val cent = s.read.parquet(s"$dir/centroids")
+      val lists = s.read.parquet(s"$dir/lists")
+      val rl = pqResiduals(emb, cent, lists).localCheckpoint() // feeds train + encode
+      val cb = pqTrain(rl)
+      cb.orderBy("m", "code", "j").coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_codebooks")
+      pqEncode(rl, s.read.parquet(s"$dir/pq_codebooks"))
+        .orderBy("vec_id")
+        .coalesce(1)
+        .write
+        .mode("overwrite")
+        .parquet(s"$dir/pq_codes")
     }
-    dir
-  }
 
   // ---- product quantization (x102) ----------------------------------------
 
@@ -1666,37 +1643,6 @@ object Similarity {
       .agg(min(struct(col("dist"), col("code"))).as("b"))
       .groupBy("vec_id", "cid")
       .agg(sum(expr("shiftleft(CAST(b.code AS BIGINT), 4 * m)")).as("pcodes"))
-
-  /** Materialize the PQ half of the gate index inside the x74 artifact dir:
-    * `pq_codebooks` (m, code, j, cq — M·K·Dsub tiny rows) and `pq_codes`
-    * (vec_id, cid, pcodes). Guarded by its own marker keyed to the ivf
-    * src_key + PQ params, so an IVF rebuild (corpus change) transitively
-    * invalidates the PQ artifact; steady-state calls are two marker reads. */
-  private[graft] def pqEnsureGateIndex(s: SparkSession, d: String): String = synchronized {
-    val dir = ivfEnsureGateIndex(s, d)
-    val srcKey =
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/src_key")), "UTF-8") +
-        s"|pq$PqM/$PqK/$PqGrid"
-    val marker = new java.io.File(s"$dir/pq_src_key")
-    val current =
-      if (marker.exists()) new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") else ""
-    if (current != srcKey) {
-      val emb = table(s, d, "embeddings")
-      val cent = s.read.parquet(s"$dir/centroids")
-      val lists = s.read.parquet(s"$dir/lists")
-      val rl = pqResiduals(emb, cent, lists).localCheckpoint() // feeds train + encode
-      val cb = pqTrain(rl)
-      cb.orderBy("m", "code", "j").coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_codebooks")
-      pqEncode(rl, s.read.parquet(s"$dir/pq_codebooks"))
-        .orderBy("vec_id")
-        .coalesce(1)
-        .write
-        .mode("overwrite")
-        .parquet(s"$dir/pq_codes")
-      java.nio.file.Files.write(marker.toPath, srcKey.getBytes("UTF-8"))
-    }
-    dir
-  }
 
   /** LSH-banded near-dup: band-collision candidates → exact cos ≥ tau.
     * Every join is equi-key (band bucket, then id); no all-pairs step. */
@@ -2031,10 +1977,10 @@ object Similarity {
     // would read a different artifact — that's an oracle-convention limit,
     // not a regression.
     "x74_ivf_search" ->
-      """WITH c AS (
-        |  SELECT cid, cvec FROM '/root/repo/spark-warehouse/graft_ivf_gate/sf0.01/centroids/*.parquet'),
+      s"""WITH c AS (
+        |  SELECT cid, cvec FROM '${Fixture.root}/graft_ivf_gate/sf0.01/centroids/*.parquet'),
         |l AS (
-        |  SELECT vec_id, cid FROM '/root/repo/spark-warehouse/graft_ivf_gate/sf0.01/lists/*.parquet'),
+        |  SELECT vec_id, cid FROM '${Fixture.root}/graft_ivf_gate/sf0.01/lists/*.parquet'),
         |q AS (
         |  SELECT vec_id AS qid, embedding AS qe FROM embeddings
         |  WHERE vec_id IN (SELECT DISTINCT vec_id FROM embeddings ORDER BY vec_id LIMIT 10)),
@@ -2061,17 +2007,17 @@ object Similarity {
     // broke composition hash-diverges; seg is recomputed from the stripe
     // arithmetic the fixture ingests by.
     "x269_incremental_ivf" ->
-      """WITH c AS (
-        |  SELECT cid, cvec FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/centroids/*.parquet'),
+      s"""WITH c AS (
+        |  SELECT cid, cvec FROM '${Fixture.root}/graft_incivf_gate/sf0.01/centroids/*.parquet'),
         |l AS (
         |  SELECT vec_id, cid, 0 AS seg
-        |    FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/lists/*/*.parquet'
+        |    FROM '${Fixture.root}/graft_incivf_gate/sf0.01/lists/*/*.parquet'
         |  UNION ALL
         |  SELECT vec_id, cid, 1 AS seg
-        |    FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/delta_1/lists/*/*.parquet'
+        |    FROM '${Fixture.root}/graft_incivf_gate/sf0.01/delta_1/lists/*/*.parquet'
         |  UNION ALL
         |  SELECT vec_id, cid, 2 AS seg
-        |    FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/delta_2/lists/*/*.parquet'),
+        |    FROM '${Fixture.root}/graft_incivf_gate/sf0.01/delta_2/lists/*/*.parquet'),
         |q AS (
         |  SELECT vec_id AS qid, embedding AS qe FROM embeddings
         |  WHERE vec_id IN (SELECT DISTINCT vec_id FROM embeddings ORDER BY vec_id LIMIT 10)),
@@ -2098,19 +2044,19 @@ object Similarity {
     // code stores — residual grid, distance table, nibble unpack, and the
     // exact float32 re-rank all engine-independent; seg from the glob.
     "x274_incremental_ivfpq" ->
-      """WITH c AS (
-        |  SELECT cid, cvec FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/centroids/*.parquet'),
+      s"""WITH c AS (
+        |  SELECT cid, cvec FROM '${Fixture.root}/graft_incivf_gate/sf0.01/centroids/*.parquet'),
         |cb AS (
-        |  SELECT m, code, j, cq FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/pq_codebooks/*.parquet'),
+        |  SELECT m, code, j, cq FROM '${Fixture.root}/graft_incivf_gate/sf0.01/pq_codebooks/*.parquet'),
         |cd AS (
         |  SELECT vec_id, cid, pcodes, 0 AS seg
-        |    FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/pq_codes/*/*.parquet'
+        |    FROM '${Fixture.root}/graft_incivf_gate/sf0.01/pq_codes/*/*.parquet'
         |  UNION ALL
         |  SELECT vec_id, cid, pcodes, 1 AS seg
-        |    FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/delta_1/pq_codes/*/*.parquet'
+        |    FROM '${Fixture.root}/graft_incivf_gate/sf0.01/delta_1/pq_codes/*/*.parquet'
         |  UNION ALL
         |  SELECT vec_id, cid, pcodes, 2 AS seg
-        |    FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/delta_2/pq_codes/*/*.parquet'),
+        |    FROM '${Fixture.root}/graft_incivf_gate/sf0.01/delta_2/pq_codes/*/*.parquet'),
         |q AS (
         |  SELECT vec_id AS qid, embedding AS qe FROM embeddings
         |  WHERE vec_id IN (SELECT DISTINCT vec_id FROM embeddings ORDER BY vec_id LIMIT 10)),
@@ -2154,18 +2100,18 @@ object Similarity {
     // x275: both component replays inlined with prefixed CTEs (frozen =
     // x269's artifact, retrained = x74's), then the overlap census.
     "x275_ivf_staleness" ->
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT vec_id AS qid, embedding AS qe FROM embeddings
         |  WHERE vec_id IN (SELECT DISTINCT vec_id FROM embeddings ORDER BY vec_id LIMIT 10)),
         |fc AS (
-        |  SELECT cid, cvec FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/centroids/*.parquet'),
+        |  SELECT cid, cvec FROM '${Fixture.root}/graft_incivf_gate/sf0.01/centroids/*.parquet'),
         |fl AS (
         |  SELECT vec_id, cid
-        |    FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/lists/*/*.parquet'
+        |    FROM '${Fixture.root}/graft_incivf_gate/sf0.01/lists/*/*.parquet'
         |  UNION ALL SELECT vec_id, cid
-        |    FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/delta_1/lists/*/*.parquet'
+        |    FROM '${Fixture.root}/graft_incivf_gate/sf0.01/delta_1/lists/*/*.parquet'
         |  UNION ALL SELECT vec_id, cid
-        |    FROM '/root/repo/spark-warehouse/graft_incivf_gate/sf0.01/delta_2/lists/*/*.parquet'),
+        |    FROM '${Fixture.root}/graft_incivf_gate/sf0.01/delta_2/lists/*/*.parquet'),
         |fpr AS (
         |  SELECT qid, qe, cid FROM (
         |    SELECT q.qid, q.qe, fc.cid,
@@ -2182,9 +2128,9 @@ object Similarity {
         |    WHERE e.vec_id <> fpr.qid)
         |  WHERE rk <= 5),
         |rc AS (
-        |  SELECT cid, cvec FROM '/root/repo/spark-warehouse/graft_ivf_gate/sf0.01/centroids/*.parquet'),
+        |  SELECT cid, cvec FROM '${Fixture.root}/graft_ivf_gate/sf0.01/centroids/*.parquet'),
         |rl AS (
-        |  SELECT vec_id, cid FROM '/root/repo/spark-warehouse/graft_ivf_gate/sf0.01/lists/*.parquet'),
+        |  SELECT vec_id, cid FROM '${Fixture.root}/graft_ivf_gate/sf0.01/lists/*.parquet'),
         |rpr AS (
         |  SELECT qid, qe, cid FROM (
         |    SELECT q.qid, q.qe, rc.cid,
@@ -2219,12 +2165,12 @@ object Similarity {
     // recall flags are hardcoded TRUE: Spark computes them against the
     // exact twin, so a quality regression flips the gate red (x13 pattern).
     "x102_ivf_pq" ->
-      """WITH c AS (
-        |  SELECT cid, cvec FROM '/root/repo/spark-warehouse/graft_ivf_gate/sf0.01/centroids/*.parquet'),
+      s"""WITH c AS (
+        |  SELECT cid, cvec FROM '${Fixture.root}/graft_ivf_gate/sf0.01/centroids/*.parquet'),
         |cb AS (
-        |  SELECT m, code, j, cq FROM '/root/repo/spark-warehouse/graft_ivf_gate/sf0.01/pq_codebooks/*.parquet'),
+        |  SELECT m, code, j, cq FROM '${Fixture.root}/graft_ivf_gate/sf0.01/pq_codebooks/*.parquet'),
         |cd AS (
-        |  SELECT vec_id, cid, pcodes FROM '/root/repo/spark-warehouse/graft_ivf_gate/sf0.01/pq_codes/*.parquet'),
+        |  SELECT vec_id, cid, pcodes FROM '${Fixture.root}/graft_ivf_gate/sf0.01/pq_codes/*.parquet'),
         |q AS (
         |  SELECT vec_id AS qid, embedding AS qe FROM embeddings
         |  WHERE vec_id IN (SELECT DISTINCT vec_id FROM embeddings ORDER BY vec_id LIMIT 10)),

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft.table
 import graft.functions.Hashing
+import graft.sources.Fixture
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -33,13 +34,8 @@ object TextAnalysis {
     * parquet, keyed per SOURCE DIR with a content fingerprint (the x74
     * gate-artifact convention — bench/probe runs on other SFs must never
     * clobber the artifact the sf0.01 oracle round reads). */
-  private[graft] def invIdxEnsure(s: SparkSession, d: String): String = synchronized {
-    val fp = graft.sources.Fingerprint.of(s, s"$d/documents.parquet", "invidx-v1-b64")
-    val dir = s"/root/repo/spark-warehouse/graft_invidx_gate/${new java.io.File(d).getName}"
-    val marker = new java.io.File(s"$dir/src_key")
-    val current =
-      if (marker.exists()) new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") else ""
-    if (current != fp) {
+  private[graft] def invIdxEnsure(s: SparkSession, d: String): String =
+    Fixture("graft_invidx_gate", Some(d), "invidx-v1-b64") { dir =>
       val docs = table(s, d, "documents")
       val tf = docs
         .select(col("doc_id"), explode(toks).as("term"))
@@ -51,10 +47,7 @@ object TextAnalysis {
         .withColumn("bucket", Hashing.md5Bucket(col("term"), 64L))
         .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
       docs.agg(count(lit(1)).as("n")).coalesce(1).write.mode("overwrite").parquet(s"$dir/totals")
-      java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8"))
     }
-    dir
-  }
 
   // ------------------------------------------------ incremental index (x266)
   // x170 rebuilds its whole artifact when the fingerprint drifts; this is
@@ -184,23 +177,13 @@ object TextAnalysis {
 
   /** gate fixture: base = 80% of documents, two ingest batches of 10%
     * each (disjoint doc_id stripes), fingerprint-guarded */
-  private[graft] def incIdxEnsure(s: SparkSession, d: String): String = synchronized {
-    val fp = graft.sources.Fingerprint.of(s, s"$d/documents.parquet", "incidx-v1-b64")
-    val dir = s"/root/repo/spark-warehouse/graft_incidx_gate/${new java.io.File(d).getName}"
-    val marker = new java.io.File(s"$dir/src_key")
-    val current =
-      if (marker.exists()) new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") else ""
-    if (current != fp) {
-      val f = new java.io.File(dir)
-      if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
+  private[graft] def incIdxEnsure(s: SparkSession, d: String): String =
+    Fixture("graft_incidx_gate", Some(d), "incidx-v1-b64") { dir =>
       val docs = table(s, d, "documents")
       incIdxWriteSegment(s, dir, docs.where(col("doc_id") % 10 < 8))
       incIdxIngest(s, dir, 1, docs.where(col("doc_id") % 10 === 8))
       incIdxIngest(s, dir, 2, docs.where(col("doc_id") % 10 === 9))
-      java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8"))
     }
-    dir
-  }
 
   private def hashedFeatures(s: SparkSession, d: String): DataFrame =
     table(s, d, "documents")

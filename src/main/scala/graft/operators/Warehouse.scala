@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Fixture
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -946,14 +947,14 @@ object Warehouse {
     // recomputes the merged content AND the provenance from the raw
     // orders table plus the insert/update formulas.
     "x81_cow_merge" -> ((s, d) => {
-      graft.sources.CowTable.ensure(s, d)
+      val root = graft.sources.CowTable.ensure(s, d)
       val content = graft.sources.CowTable
-        .read(s, 2)
+        .read(s, 2, root)
         .withColumn("bucket", expr(s"k div ${graft.sources.CowTable.BucketWidth}L"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("total_cents"))
       val prov = graft.sources.CowTable
-        .manifest(s, 2)
+        .manifest(s, 2, root)
         .select(
           col("bucket"),
           when(col("path").contains("/v2/"), lit(2L)).otherwise(lit(1L)).as("src_version")
@@ -982,25 +983,25 @@ object Warehouse {
       import s.implicits._
       val w = ct.BucketWidth
       val content = ct
-        .read(s, 2, ct.wapDir)
+        .read(s, 2, ct.wapDir(d))
         .withColumn("bucket", expr(s"k div ${w}L"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("total_cents"))
       val prov = ct
-        .entries(s, 2, ct.wapDir)
+        .entries(s, 2, ct.wapDir(d))
         .map(e => (e.bucket, e.path.contains("/wap_good/")))
         .toDF("bucket", "from_branch")
       val pubAudit = ct
-        .read(s, 2, ct.wapDir)
+        .read(s, 2, ct.wapDir(d))
         .agg(
           count(lit(1)).as("pub_rows"),
           countDistinct(col("k")).as("pub_distinct"),
           sum(when(col("k") >= ct.WapBadBase, 1L).otherwise(0L)).as("bad_keys_visible")
         )
       val badAudit = ct
-        .readStaged(s, "bad", ct.wapDir)
+        .readStaged(s, "bad", ct.wapDir(d))
         .agg(count(lit(1)).as("bad_staged_rows"), countDistinct(col("k")).as("bad_staged_distinct"))
-      val v1 = ct.read(s, 1, ct.wapDir).agg(count(lit(1)).as("v1_rows"))
+      val v1 = ct.read(s, 1, ct.wapDir(d)).agg(count(lit(1)).as("v1_rows"))
       content
         .join(broadcast(prov), Seq("bucket"))
         .crossJoin(broadcast(pubAudit))
@@ -1014,14 +1015,14 @@ object Warehouse {
     // Provenance now spans three tiers (v1-carried / v2 / v3), all
     // recomputed by the oracle from the stacked change formulas.
     "x83_merge_delete" -> ((s, d) => {
-      graft.sources.CowTable.ensure(s, d)
+      val root = graft.sources.CowTable.ensure(s, d)
       val content = graft.sources.CowTable
-        .read(s, 3)
+        .read(s, 3, root)
         .withColumn("bucket", expr(s"k div ${graft.sources.CowTable.BucketWidth}L"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("total_cents"))
       val prov = graft.sources.CowTable
-        .manifest(s, 3)
+        .manifest(s, 3, root)
         .select(
           col("bucket"),
           when(col("path").contains("/v3/"), lit(3L))
@@ -1047,10 +1048,10 @@ object Warehouse {
     // groups corrupted on disk, plan + read unharmed).
     "x263_mtree_range_plan" -> ((s, d) => {
       val ct = graft.sources.CowTable
-      ct.ensure(s, d)
+      val root = ct.ensure(s, d)
       import s.implicits._
       val (lo, hi) = (512L, 1535L) // buckets 0..1 cut mid-bucket both ends (exists at every SF)
-      val man = ct.manifestDir(3)
+      val man = ct.manifestDir(3, root)
       val planned = ct.pruneEntriesRange(s, man, lo, hi)
       val acct = Seq(
         (
@@ -1084,8 +1085,8 @@ object Warehouse {
     "x267_manifest_commit_census" -> ((s, d) => {
       val ct = graft.sources.CowTable
       ct.ensureClone(s, d)
-      val l1 = s.read.parquet(ct.manifestDir(1, ct.cloneDir)).select(col("g"), col("mpath").as("m1"))
-      val l2 = s.read.parquet(ct.manifestDir(2, ct.cloneDir)).select(col("g"), col("mpath").as("m2"))
+      val l1 = s.read.parquet(ct.manifestDir(1, ct.cloneDir(d))).select(col("g"), col("mpath").as("m1"))
+      val l2 = s.read.parquet(ct.manifestDir(2, ct.cloneDir(d))).select(col("g"), col("mpath").as("m2"))
       l1.join(l2, Seq("g"), "full_outer")
         .select(
           when(col("m1").isNull, lit("added"))
@@ -1243,13 +1244,13 @@ object Warehouse {
     // Scale shape: the compose is one key-equi full-outer join of two
     // change-sized feeds; the direct branch reads changed buckets only.
     "x188_cdc_compose" -> ((s, d) => {
-      graft.sources.CowTable.ensure(s, d)
+      val root = graft.sources.CowTable.ensure(s, d)
       val direct = graft.sources.CowTable
-        .snapshotDiff(s, 1, 3)
+        .snapshotDiff(s, 1, 3, root)
         .withColumn("branch", lit("direct"))
       val composed = composeDiffs(
-        graft.sources.CowTable.snapshotDiff(s, 1, 2),
-        graft.sources.CowTable.snapshotDiff(s, 2, 3)
+        graft.sources.CowTable.snapshotDiff(s, 1, 2, root),
+        graft.sources.CowTable.snapshotDiff(s, 2, 3, root)
       ).withColumn("branch", lit("composed"))
       direct.unionByName(composed).orderBy("branch", "k")
     }),
@@ -1260,8 +1261,8 @@ object Warehouse {
     // D rows the old one. The oracle replays the v2→v3 change formulas
     // row by row, excluding same-value rewrites exactly as the diff does.
     "x84_snapshot_diff" -> ((s, d) => {
-      graft.sources.CowTable.ensure(s, d)
-      graft.sources.CowTable.snapshotDiff(s, 2, 3).orderBy("k")
+      val root = graft.sources.CowTable.ensure(s, d)
+      graft.sources.CowTable.snapshotDiff(s, 2, 3, root).orderBy("k")
     }),
     // Incremental materialized-view maintenance — the reason CDC exists:
     // MV(v3) is computed as MV(v2) + per-bucket deltas folded from the
@@ -1312,15 +1313,15 @@ object Warehouse {
     }),
 
     "x85_incremental_mv" -> ((s, d) => {
-      graft.sources.CowTable.ensure(s, d)
+      val root = graft.sources.CowTable.ensure(s, d)
       val w = graft.sources.CowTable.BucketWidth
       val mv2 = graft.sources.CowTable
-        .read(s, 2)
+        .read(s, 2, root)
         .withColumn("bucket", expr(s"k div ${w}L"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("total_cents"))
       val deltas = graft.sources.CowTable
-        .snapshotDiff(s, 2, 3)
+        .snapshotDiff(s, 2, 3, root)
         .withColumn("bucket", expr(s"k div ${w}L"))
         .groupBy("bucket")
         .agg(
@@ -1352,9 +1353,9 @@ object Warehouse {
     // The gate never deletes — executing vacuum breaks time travel to
     // expired snapshots by design, so execution lives in CowTableSpec.
     "x86_vacuum_plan" -> ((s, d) => {
-      graft.sources.CowTable.ensure(s, d)
+      val root = graft.sources.CowTable.ensure(s, d)
       import s.implicits._
-      val (orphans, all) = graft.sources.CowTable.vacuumPlan(s, Seq(2, 3))
+      val (orphans, all) = graft.sources.CowTable.vacuumPlan(s, Seq(2, 3), root)
       Seq((orphans.size.toLong, (all.size - orphans.size).toLong, all.size.toLong))
         .toDF("n_orphans", "n_referenced", "n_dirs")
     }),
@@ -1368,10 +1369,9 @@ object Warehouse {
     // two stripe formulas; CowGcSpec EXECUTES the vacuum and proves the
     // clone still reads, then deregisters and proves the hold releases.
     "x229_vacuum_full" -> ((s, d) => {
-      graft.sources.CowGc.ensure(s, d)
       import s.implicits._
       val (orphans, cands, cloneOnly) =
-        graft.sources.CowTable.vacuumPlanFull(s, Seq(5), graft.sources.CowGc.dir)
+        graft.sources.CowTable.vacuumPlanFull(s, Seq(5), graft.sources.CowGc.ensure(s, d))
       Seq(
         (
           cands.size.toLong,
@@ -1630,8 +1630,7 @@ object Warehouse {
     // gate always runs sf0.01). Footer reads distribute; only the file
     // list is driver-side.
     "x256_layout_audit" -> ((s, d) => {
-      graft.sources.ManifestTree.ensure(s, d)
-      val root = graft.sources.ManifestTree.dir
+      val root = graft.sources.ManifestTree.ensure(s, d)
       def level(name: String, sub: String): DataFrame =
         graft.sources.FooterStats
           .layout(s, s"$root/$sub")
@@ -1763,11 +1762,11 @@ object Warehouse {
     // both trees online. Missing side (the v2-only insert bucket)
     // surfaces as the -1 sentinel, never a null.
     "x231_merkle_diff" -> ((s, d) => {
-      graft.sources.CowTable.ensure(s, d)
+      val cow = graft.sources.CowTable.ensure(s, d)
       val P = "2305843009213693951L" // 2^61 - 1
       def tree(version: Int): DataFrame = {
         val rows = graft.sources.CowTable
-          .read(s, version)
+          .read(s, version, cow)
           .select(
             expr(s"k div ${graft.sources.CowTable.BucketWidth}L").as("bucket"),
             graft.functions.Hashing
@@ -1803,9 +1802,9 @@ object Warehouse {
     // referenced (not copied) by v2, so this hash-matching the ORIGINAL
     // table is the gate-level proof that the merge overwrote nothing.
     "x82_time_travel" -> ((s, d) => {
-      graft.sources.CowTable.ensure(s, d)
+      val root = graft.sources.CowTable.ensure(s, d)
       graft.sources.CowTable
-        .read(s, 1)
+        .read(s, 1, root)
         .withColumn("bucket", expr(s"k div ${graft.sources.CowTable.BucketWidth}L"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("total_cents"))
@@ -1820,10 +1819,9 @@ object Warehouse {
     // still point at a /v1/ data file (data_src_version pinned to the
     // oracle's literal 1), with has_dv/n_del recomputed from the stripe.
     "x97_mor_delete" -> ((s, d) => {
-      graft.sources.CowEvo.ensure(s, d)
       import s.implicits._
       val w = graft.sources.CowTable.BucketWidth
-      val root = graft.sources.CowEvo.dir
+      val root = graft.sources.CowEvo.ensure(s, d)
       val mor = graft.sources.CowTable
         .read(s, 2, root)
         .withColumn("bucket", expr(s"k div ${w}L"))
@@ -1855,10 +1853,9 @@ object Warehouse {
     // (n_other_files is the oracle's literal 0), with has_dv/n_del
     // recomputed from the stripe formulas (n_del = delete ∪ update masks).
     "x126_mor_upsert" -> ((s, d) => {
-      graft.sources.CowEvo.ensure(s, d)
       import s.implicits._
       val w = graft.sources.CowTable.BucketWidth
-      val root = graft.sources.CowEvo.dir
+      val root = graft.sources.CowEvo.ensure(s, d)
       val mor = graft.sources.CowTable
         .read(s, 6, root)
         .withColumn("bucket", expr(s"k div ${w}L"))
@@ -1897,9 +1894,8 @@ object Warehouse {
     // metadata-only restoration (its row must equal v2's with 0 fresh
     // files) across the whole history.
     "x130_snapshots_meta" -> ((s, d) => {
-      graft.sources.CowEvo.ensure(s, d)
       import s.implicits._
-      val root = graft.sources.CowEvo.dir
+      val root = graft.sources.CowEvo.ensure(s, d)
       Seq(1, 2, 3, 4, 5, 6, 7, 30, 31)
         .map { v =>
           val es = graft.sources.CowTable.entries(s, v, root)
@@ -1927,10 +1923,9 @@ object Warehouse {
     // a wrong id mapping (or a rewrite that should not have happened)
     // flips the hash.
     "x99_schema_evolution" -> ((s, d) => {
-      graft.sources.CowEvo.ensure(s, d)
       import s.implicits._
       val w = graft.sources.CowTable.BucketWidth
-      val root = graft.sources.CowEvo.dir
+      val root = graft.sources.CowEvo.ensure(s, d)
       val sid = graft.sources.CowTable
         .entries(s, 4, root)
         .map(e => (e.bucket, e.schemaId.toLong))
@@ -2028,17 +2023,17 @@ object Warehouse {
       val ct = graft.sources.CowTable
       val w = ct.BucketWidth
       val ownDf = ct
-        .entries(s, 2, ct.cloneDir)
-        .map(e => (e.bucket, e.path.startsWith(ct.cloneDir)))
+        .entries(s, 2, ct.cloneDir(d))
+        .map(e => (e.bucket, e.path.startsWith(ct.cloneDir(d))))
         .toDF("bucket", "own_file")
       val per = ct
-        .read(s, 2, ct.cloneDir)
+        .read(s, 2, ct.cloneDir(d))
         .withColumn("bucket", expr(s"k div ${w}L"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("cents_total"))
         .join(broadcast(ownDf), Seq("bucket"))
       val src = ct
-        .read(s, 2)
+        .read(s, 2, ct.dir(d))
         .agg(count(lit(1)).as("src_rows"), sum("cents").as("src_cents"))
       val stats = ownDf
         .agg(
@@ -2084,26 +2079,26 @@ object Warehouse {
           col("n_buckets"),
           lit(nEntries).as("n_entries")
         )
-      val tagRef = ct.readRefMeta(s, "audit", ct.refsDir)
-      val expRef = ct.readRefMeta(s, "exp", ct.refsDir)
+      val tagRef = ct.readRefMeta(s, "audit", ct.refsDir(d))
+      val expRef = ct.readRefMeta(s, "exp", ct.refsDir(d))
       scopeAgg(
-        ct.refRead(s, "audit", ct.refsDir),
+        ct.refRead(s, "audit", ct.refsDir(d)),
         "tag_audit",
         tagRef.kind,
         tagRef.seq.toLong,
         ct.entriesAt(s, tagRef.manifestPath).size.toLong
       ).unionByName(
-        scopeAgg(ct.read(s, 2, ct.refsDir), "main_v2", "main", 2L, ct.entries(s, 2, ct.refsDir).size.toLong)
+        scopeAgg(ct.read(s, 2, ct.refsDir(d)), "main_v2", "main", 2L, ct.entries(s, 2, ct.refsDir(d)).size.toLong)
       ).unionByName(
         scopeAgg(
-          ct.refRead(s, "exp", ct.refsDir),
+          ct.refRead(s, "exp", ct.refsDir(d)),
           "branch_head",
           expRef.kind,
           expRef.seq.toLong,
           ct.entriesAt(s, expRef.manifestPath).size.toLong
         )
       ).unionByName(
-        scopeAgg(ct.read(s, 3, ct.refsDir), "main_ff", "main", 3L, ct.entries(s, 3, ct.refsDir).size.toLong)
+        scopeAgg(ct.read(s, 3, ct.refsDir(d)), "main_ff", "main", 3L, ct.entries(s, 3, ct.refsDir(d)).size.toLong)
       ).orderBy("scope")
     }),
     // Avro container scan (x119): fixture files are written by the
@@ -2126,13 +2121,9 @@ object Warehouse {
     // each leg reads with an explicit schema (no inference pass).
     "x193_federated_scan" -> ((s, d) => {
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val root = s"/root/repo/spark-warehouse/graft_federated/${new java.io.File(d).getName}"
-      // fingerprint guard: a regenerated orders table must invalidate the
-      // five format copies (the x74/CowTable artifact-drift discipline)
-      val fp = graft.sources.Fingerprint.of(s, s"$d/orders.parquet", "federated-v2")
-      val marker = new java.io.File(s"$root/_OK_$fp")
-      if (!marker.exists()) {
-        new java.io.File(root).mkdirs()
+      // a Fixture per source dir: a regenerated orders table invalidates
+      // the five format copies (the x74/CowTable artifact-drift discipline)
+      val root = Fixture("graft_federated", Some(d), "federated-v2") { root =>
         val proj = graft.Graft
           .table(s, d, "orders")
           .select(
@@ -2162,7 +2153,6 @@ object Warehouse {
           ),
           rows.toSeq
         )
-        marker.createNewFile()
       }
       val schema = StructType(
         Seq(StructField("k", LongType), StructField("cents", LongType), StructField("status", StringType))
@@ -2205,9 +2195,8 @@ object Warehouse {
     }),
 
     "x119_avro_scan" -> ((s, d) => {
-      graft.sources.AvroScan.ensure(s, d)
       graft.sources.AvroScan
-        .read(s, graft.sources.AvroScan.fixtureDir(d))
+        .read(s, graft.sources.AvroScan.ensure(s, d))
         .groupBy("o_orderstatus")
         .agg(
           count(lit(1)).as("n"),
@@ -2280,11 +2269,11 @@ object Warehouse {
       se.ensure(s, d)
       import s.implicits._
       val content = se
-        .read(s, 3)
+        .read(s, d, 3)
         .withColumn("sb", expr(s"k div ${se.W2}L"))
         .groupBy("sb")
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("cents_total"))
-      val es = se.entriesOf(s, 3)
+      val es = se.entriesOf(s, d, 3)
       val provDf = es
         .map(e => (if (e.specId == 1) e.bucket / (se.W2 / se.W1) else e.bucket, e.specId))
         .toDF("sb", "spec")
@@ -2293,7 +2282,7 @@ object Warehouse {
           sum(when(col("spec") === 1, 1L).otherwise(0L)).as("n_spec1_files"),
           sum(when(col("spec") === 2, 1L).otherwise(0L)).as("n_spec2_files")
         )
-      val metaOnly = se.entriesOf(s, 2) == se.entriesOf(s, 1)
+      val metaOnly = se.entriesOf(s, d, 2) == se.entriesOf(s, d, 1)
       val b0 = graft.Graft
         .table(s, d, "orders")
         .select(col("o_orderkey").as("k"))
@@ -2303,7 +2292,7 @@ object Warehouse {
         .getLong(0)
       val lo = b0 * se.W1
       val hi = lo + se.W1 - 1
-      val pruned = se.pruneEntries(s, 3, lo, hi)
+      val pruned = se.pruneEntries(s, d, 3, lo, hi)
       val narrowRows = s.read.parquet(pruned.map(_.path): _*).where(col("k").between(lo, hi)).count()
       val stats = Seq((es.size.toLong, pruned.size.toLong, narrowRows, metaOnly))
         .toDF("n_files_total", "n_files_narrow", "narrow_rows", "evolve_meta_only")
@@ -2336,11 +2325,11 @@ object Warehouse {
     // arithmetic; ManifestTreeSpec proves non-overlapping metadata and
     // data are physically never opened (corrupts them, plans through).
     "x226_manifest_plan" -> ((s, d) => {
-      graft.sources.ManifestTree.ensure(s, d)
+      val root = graft.sources.ManifestTree.ensure(s, d)
       // keys are dense from 0, so [300, 1100] is non-empty at every SF;
       // pruning reads 1 of 2 manifests at sf0.01 and 1 of 19 at sf0.1
       val (lo, hi) = (300L, 1100L)
-      val p = graft.sources.ManifestTree.planRange(s, lo, hi)
+      val p = graft.sources.ManifestTree.planRange(s, lo, hi, root)
       graft.sources.ManifestTree
         .readTasks(s, p, lo, hi)
         .groupBy(expr(s"k div ${graft.sources.ManifestTree.BucketWidth}L").as("bucket"))
@@ -3062,12 +3051,12 @@ object Warehouse {
     // DISTINCT per (file, row group) because parquet_metadata() emits a
     // row per column chunk.
     "x256_layout_audit" ->
-      """WITH d AS (SELECT DISTINCT file_name, row_group_id, row_group_num_rows
-        |  FROM parquet_metadata('/root/repo/spark-warehouse/graft_mtree/data/*/*.parquet')),
+      s"""WITH d AS (SELECT DISTINCT file_name, row_group_id, row_group_num_rows
+        |  FROM parquet_metadata('${Fixture.root}/graft_mtree/sf0.01/data/*/*.parquet')),
         |m AS (SELECT DISTINCT file_name, row_group_id, row_group_num_rows
-        |  FROM parquet_metadata('/root/repo/spark-warehouse/graft_mtree/manifests/*/*.parquet')),
+        |  FROM parquet_metadata('${Fixture.root}/graft_mtree/sf0.01/manifests/*/*.parquet')),
         |l AS (SELECT DISTINCT file_name, row_group_id, row_group_num_rows
-        |  FROM parquet_metadata('/root/repo/spark-warehouse/graft_mtree/manifest_list/*.parquet')),
+        |  FROM parquet_metadata('${Fixture.root}/graft_mtree/sf0.01/manifest_list/*.parquet')),
         |u AS (
         |  SELECT 'data' AS level, count(DISTINCT file_name) AS n_files, count(*) AS n_row_groups,
         |    CAST(sum(row_group_num_rows) AS BIGINT) AS n_rows,

@@ -134,7 +134,7 @@ object AdpcmAudio {
   * in a recursive CTE, so a gate match proves the container parse AND
   * every integer state transition, without the oracle touching a byte. */
 object AdpcmFixture {
-  val dir = "/root/repo/spark-warehouse/graft_adpcm"
+  val dir = Fixture.dir("graft_adpcm")
   val payloadPath = s"$dir/payloads"
 
   val N = 200
@@ -156,14 +156,11 @@ object AdpcmFixture {
       (b, t) => nib(id, b, t)
     )
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    if (!new java.io.File(payloadPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0 until N)
-        .map(i => (i.toLong, payload(i)))
-        .toDF("audio_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-    }
+  def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0 until N)
+      .map(i => (i.toLong, payload(i)))
+      .toDF("audio_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

@@ -300,20 +300,10 @@ object AvroScan {
   }
 
   // ------------------------------------------------ fixture (official lib)
-  val fixtureRoot = "/root/repo/spark-warehouse/graft_avro"
-
   /** Write the orders projection as REAL Avro (official library, deflate
     * codec) — our reader is then validated against reference-written
     * bytes, keyed per source dir and fingerprint-guarded. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val dir = s"$fixtureRoot/${new java.io.File(d).getName}"
-    val key = Fingerprint.of(s, s"$d/orders.parquet", "avro1")
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key) return
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    val dfs = dp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (dfs.exists(dp)) dfs.delete(dp, true)
+  def ensure(s: SparkSession, d: String): String = Fixture("graft_avro", Some(d), "avro1") { dir =>
     val root = new java.io.File(s"$dir/data")
     root.mkdirs()
     val schema = new org.apache.avro.Schema.Parser().parse(
@@ -348,8 +338,5 @@ object AvroScan {
       writers((k % 4).toInt).append(rec)
     }
     writers.foreach(_.close())
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/src_key"), key.getBytes("UTF-8"))
-  }
-
-  def fixtureDir(d: String): String = s"$fixtureRoot/${new java.io.File(d).getName}/data"
+  } + "/data"
 }

@@ -87,7 +87,7 @@ object BmpPixels {
   * lets the DuckDB oracle recompute the decoded+resized checksum from first
   * principles without parsing a byte of BMP. */
 object BmpFixture {
-  val dir = "/root/repo/spark-warehouse/graft_bmp"
+  val dir = Fixture.dir("graft_bmp")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -104,18 +104,15 @@ object BmpFixture {
     (i.toLong, BmpPixels.synthesize(w, h, rgbAt(i.toLong)), w, h)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h) => (id, w, h) }
-        .toDF("img_id", "width", "height")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h) => (id, w, h) }
+      .toDF("img_id", "width", "height")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }
 
@@ -126,7 +123,7 @@ object BmpFixture {
   * The twin table carries (src_id, bumped) so the DuckDB oracle can
   * recompute every aHash from the closed-form pixel formula. */
 object PhashFixture {
-  val dir = "/root/repo/spark-warehouse/graft_phash"
+  val dir = Fixture.dir("graft_phash")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -151,17 +148,14 @@ object PhashFixture {
         (id, src, bump, w, h, BmpPixels.synthesize(w, h, rgbAt(src, bump)))
       }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, _, _, _, _, p) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, src, bump, w, h, _) => (id, src, bump, w, h) }
-        .toDF("img_id", "src_id", "bumped", "width", "height")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, _, _, _, _, p) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, src, bump, w, h, _) => (id, src, bump, w, h) }
+      .toDF("img_id", "src_id", "bumped", "width", "height")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }

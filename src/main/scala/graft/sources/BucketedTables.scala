@@ -18,11 +18,8 @@ import org.apache.spark.sql.functions._
   * Fixture shape: `orders` bucketed+sorted by `o_orderkey` and `lineitem`
   * by `l_orderkey`, both `Buckets` buckets, one file per bucket (the
   * pre-write `repartition` matches task grain to bucket grain, so the
-  * merge join needs no per-file sort either). Tables are managed-catalog
-  * entries (the S7/q37 surface) named per source dir — the in-memory
-  * catalog forgets entries across JVMs while their warehouse dirs persist,
-  * so ensure() drops both the entry and any orphaned location before
-  * rewriting, exactly like q37.
+  * merge join needs no per-file sort either). Tables are external
+  * catalog entries named per source dir over the fixture's files.
   *
   * SMB-discipline assertions (zero exchanges vs the shuffled plain-parquet
   * twin, bucket pruning) live in SmbJoinSpec; the driver gate pins the
@@ -33,41 +30,35 @@ object BucketedTables {
 
   val Buckets = 8
 
-  private val created = scala.collection.mutable.Set[String]()
-
-  /** (ordersTable, lineitemTable) for the given source dir, creating the
-    * bucketed managed tables on first use per session. */
-  def ensure(s: SparkSession, d: String): (String, String) = synchronized {
+  /** (ordersTable, lineitemTable) for the given source dir. The bucketed
+    * files are a [[Fixture]]; each session registers them as external
+    * catalog tables on first use (the in-memory catalog forgets entries
+    * across JVMs while the files persist). */
+  def ensure(s: SparkSession, d: String): (String, String) = {
     val tag = new java.io.File(d).getName.replace(".", "_")
-    val ot = s"graft_bkt_orders_$tag"
-    val lt = s"graft_bkt_lineitem_$tag"
-    val key = s"$ot|$lt"
-    if (!created(key) || !s.catalog.tableExists(ot) || !s.catalog.tableExists(lt)) {
-      def reset(tbl: String): Unit = {
+    val tables = Seq(
+      (s"graft_bkt_orders_$tag", "orders", "o_orderkey"),
+      (s"graft_bkt_lineitem_$tag", "lineitem", "l_orderkey")
+    )
+    val dir = Fixture("graft_bkt", Some(d), s"bkt$Buckets") { dir =>
+      for ((tbl, t, key) <- tables) {
         s.sql(s"DROP TABLE IF EXISTS $tbl")
-        val loc = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), tbl)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+        graft.Graft
+          .table(s, d, t)
+          .repartition(Buckets, col(key))
+          .write
+          .mode("overwrite")
+          .bucketBy(Buckets, key)
+          .sortBy(key)
+          .option("path", s"$dir/$t")
+          .saveAsTable(tbl)
       }
-      reset(ot)
-      reset(lt)
-      graft.Graft
-        .table(s, d, "orders")
-        .repartition(Buckets, col("o_orderkey"))
-        .write
-        .mode("overwrite")
-        .bucketBy(Buckets, "o_orderkey")
-        .sortBy("o_orderkey")
-        .saveAsTable(ot)
-      graft.Graft
-        .table(s, d, "lineitem")
-        .repartition(Buckets, col("l_orderkey"))
-        .write
-        .mode("overwrite")
-        .bucketBy(Buckets, "l_orderkey")
-        .sortBy("l_orderkey")
-        .saveAsTable(lt)
-      created += key
     }
-    (ot, lt)
+    for ((tbl, t, key) <- tables if !s.catalog.tableExists(tbl))
+      s.sql(
+        s"CREATE TABLE $tbl (${s.read.parquet(s"$dir/$t").schema.toDDL}) USING parquet " +
+          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS LOCATION '$dir/$t'"
+      )
+    (tables(0)._1, tables(1)._1)
   }
 }

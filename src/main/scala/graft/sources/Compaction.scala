@@ -30,20 +30,10 @@ object Compaction {
     * production 128 MiB (same stand-in ratio as the gate fixtures). */
   val TargetBytes: Long = 64L * 1024
 
-  /** Rewrite `documents` at `d` into `dir/lang=<l>/` with the x45 file
-    * counts. Fingerprint-guarded like [[DataSkipping.ensureLayout]]:
-    * steady-state calls are a marker-file read. */
-  def ensure(s: SparkSession, d: String, dir: String): Unit = synchronized {
-    val key = Fingerprint.of(s, s"$d/documents.parquet", s"$TargetBytes")
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key) return
-    // rebuild = whole-dir replace: per-lang overwrite alone would leave
-    // stale lang=* partitions behind when the corpus (and its lang set)
-    // changes under the same artifact path
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val dirFs = dirPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (dirFs.exists(dirPath)) dirFs.delete(dirPath, true)
+  /** Rewrite `documents` at `d` into `<fixture dir>/lang=<l>/` with the
+    * x45 file counts; returns the fixture dir. A [[Fixture]]: steady-state
+    * calls are a marker-file read. */
+  def ensure(s: SparkSession, d: String): String = Fixture("graft_compacted", Some(d), s"$TargetBytes") { dir =>
     val docs = graft.Graft.table(s, d, "documents").select("doc_id", "lang", "text")
     // the x45 plan: per-partition byte volume → target file count. A
     // handful of rows (one per lang) — driver-sized control metadata.
@@ -61,7 +51,6 @@ object Compaction {
         .write
         .mode("overwrite")
         .parquet(s"$dir/lang=$lang")
-    java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
   }
 
   /** Actual parquet file count per lang partition, from a driver fs

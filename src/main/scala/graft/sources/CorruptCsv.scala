@@ -25,8 +25,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CorruptCsv {
 
-  private val fixtureRoot = "spark-warehouse/graft_corrupt_csv"
-
   val schema: StructType = StructType(Seq(
     StructField("o_orderkey", LongType),
     StructField("o_orderstatus", StringType),
@@ -34,30 +32,15 @@ object CorruptCsv {
     StructField("_corrupt", StringType)
   ))
 
-  def fixturePath(d: String): String =
-    s"$fixtureRoot/${new java.io.File(d).getName}/orders.csv"
+  def fixturePath(d: String): String = s"${Fixture.dir("graft_corrupt_csv", Some(d))}/orders.csv"
 
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val dir = s"$fixtureRoot/${new java.io.File(d).getName}"
-    val key = Fingerprint.of(s, s"$d/orders.parquet", "corruptcsv1")
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key) return
-    val root = new java.io.File(dir)
-    if (root.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(root)
-    }
-    root.mkdirs()
+  def ensure(s: SparkSession, d: String): Unit = Fixture("graft_corrupt_csv", Some(d), "corruptcsv1") { dir =>
     val rows = graft.Graft
       .table(s, d, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .orderBy("o_orderkey")
       .collect() // fixture generation: gate-sized by design (the AvroScan pattern)
-    val w = new java.io.PrintWriter(new java.io.File(root, "orders.csv"), "UTF-8")
+    val w = new java.io.PrintWriter(new java.io.File(dir, "orders.csv"), "UTF-8")
     try rows.foreach { r =>
       val k = r.getLong(0)
       val st = r.getString(1)
@@ -68,7 +51,6 @@ object CorruptCsv {
         else s"$k,$st,$price"
       w.println(line)
     } finally w.close()
-    java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
   }
 
   /** PERMISSIVE read with the quarantine channel: `_corrupt` is null for

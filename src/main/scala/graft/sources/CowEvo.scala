@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   */
 object CowEvo {
 
-  val dir = "/root/repo/spark-warehouse/graft_cow_evo"
+  def dir(d: String): String = Fixture.dir("graft_cow_evo", Some(d))
 
   /** MOR-deleted stripe: distinct moduli from every CowTable stripe so the
     * two fixtures can never shadow each other's coverage. */
@@ -69,18 +69,11 @@ object CowEvo {
     (3, 1, "k", "bigint"), (3, 2, "amount_cents", "bigint"), (3, 3, "qty", "bigint")
   )
 
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val key = Fingerprint.of(
-      s,
-      s"$d/orders.parquet",
-      s"${CowTable.BucketWidth}|$DelFilter|$AddBase|$AddCount|$UpsFilter|$UpsBump|$UpsBase|$UpsCount|evo4tree"
-    )
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key) return
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val dirFs = dirPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (dirFs.exists(dirPath)) dirFs.delete(dirPath, true)
+  def ensure(s: SparkSession, d: String): String = Fixture(
+    "graft_cow_evo",
+    Some(d),
+    s"${CowTable.BucketWidth}|$DelFilter|$AddBase|$AddCount|$UpsFilter|$UpsBump|$UpsBase|$UpsCount|evo4tree"
+  ) { dir =>
 
     // ---- v1: base table, schema 1
     val base = graft.Graft
@@ -147,7 +140,5 @@ object CowEvo {
 
     // ---- v7: roll the table back to the v2 state, metadata only
     CowTable.rollback(s, 2, 7, dir)
-
-    java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
   }
 }

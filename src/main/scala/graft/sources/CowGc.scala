@@ -22,22 +22,14 @@ import org.apache.spark.sql.functions._
   * executing the vacuum and reading the clone afterwards.
   */
 object CowGc {
-  val dir = "/root/repo/spark-warehouse/graft_cow_gc"
-  val cloneDir = "/root/repo/spark-warehouse/graft_cow_gc_clone"
+  /** the clone shares the fixture's files and is built with it */
+  private def cloneDir(d: String): String = Fixture.dir("graft_cow_gc_clone", Some(d))
 
   val DelA = s"k % 97 = 0 AND (k div ${CowTable.BucketWidth}L) % 5 = 0"
   val DelB = s"k % 89 = 0 AND (k div ${CowTable.BucketWidth}L) % 3 = 0"
 
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val key = Fingerprint.of(s, s"$d/orders.parquet", s"cowgc2tree|$DelA|$DelB")
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key) return
-    for (r <- Seq(dir, cloneDir)) {
-      val p = new org.apache.hadoop.fs.Path(r)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+  def ensure(s: SparkSession, d: String): String = Fixture("graft_cow_gc", Some(d), s"cowgc2tree|$DelA|$DelB") { dir =>
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cloneDir(d)))
     val base = graft.Graft
       .table(s, d, "orders")
       .select(
@@ -49,12 +41,11 @@ object CowGc {
     base.write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/v1")
     CowTable.writeManifestRows(s, 1, CowTable.statsOf(s, s"$dir/v1", schemaId = 1), dir)
     CowTable.morDelete(s, 1, 2, base.where(expr(DelA)).select("k"), dir)
-    CowTable.cloneTable(s, 2, cloneDir, dir)
+    CowTable.cloneTable(s, 2, cloneDir(d), dir)
     CowTable.foldDv(s, 2, 3, dir)
     // dead stripe-A keys inside stripe B no-op in the DV probe, so the
     // closed-form key set equals "live 89-multiples" exactly
     CowTable.morDelete(s, 3, 4, base.where(expr(DelB)).select("k"), dir)
     CowTable.foldDv(s, 4, 5, dir)
-    java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
   }
 }

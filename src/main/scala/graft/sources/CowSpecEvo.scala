@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CowSpecEvo {
 
-  val root = "/root/repo/spark-warehouse/graft_cow_spec"
+  def root(d: String): String = Fixture.dir("graft_cow_spec", Some(d))
 
   val W1 = 1024L // spec 1: the original bucket width
   val W2 = 4096L // spec 2: the evolved width (4 old buckets per new)
@@ -42,20 +42,20 @@ object CowSpecEvo {
 
   case class E(specId: Int, bucket: Long, path: String, minKey: Long, maxKey: Long, nRows: Long)
 
-  private def manifestPath(v: Int) = s"$root/manifest_v$v"
+  private def manifestPath(d: String, v: Int) = s"${root(d)}/manifest_v$v"
 
-  private def writeManifest(s: SparkSession, v: Int, rows: Seq[E]): Unit = {
+  private def writeManifest(s: SparkSession, d: String, v: Int, rows: Seq[E]): Unit = {
     import s.implicits._
     rows
       .map(e => (e.specId, e.bucket, e.path, e.minKey, e.maxKey, e.nRows))
       .toDF("spec_id", "bucket", "path", "min_key", "max_key", "n_rows")
       .coalesce(1)
-      .write.mode("overwrite").parquet(manifestPath(v))
+      .write.mode("overwrite").parquet(manifestPath(d, v))
   }
 
-  def entriesOf(s: SparkSession, v: Int): Seq[E] =
+  def entriesOf(s: SparkSession, d: String, v: Int): Seq[E] =
     s.read
-      .parquet(manifestPath(v))
+      .parquet(manifestPath(d, v))
       .collect()
       .map(r =>
         E(
@@ -93,28 +93,24 @@ object CowSpecEvo {
 
   /** snapshot read across specs: the union of every entry's file, keyed
     * columns only (bucket ids are layout, not content). */
-  def read(s: SparkSession, v: Int): DataFrame = {
-    val es = entriesOf(s, v)
+  def read(s: SparkSession, d: String, v: Int): DataFrame = {
+    val es = entriesOf(s, d, v)
     s.read.parquet(es.map(_.path): _*).select("k", "cents")
   }
 
   /** spec-agnostic key-range pruning: tight per-entry min/max make the
     * probe identical across layout generations. Driver-side planning over
     * file-count-sized metadata, the selectFiles shape. */
-  def pruneEntries(s: SparkSession, v: Int, lo: Long, hi: Long): Seq[E] =
-    entriesOf(s, v).filter(e => e.maxKey >= lo && e.minKey <= hi)
+  def pruneEntries(s: SparkSession, d: String, v: Int, lo: Long, hi: Long): Seq[E] =
+    entriesOf(s, d, v).filter(e => e.maxKey >= lo && e.minKey <= hi)
 
   /** v1 base (spec 1) → v2 evolution commit (metadata only) → v3 merge
-    * under spec 2; fingerprint-guarded like every fixture artifact. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val key = Fingerprint.of(s, s"$d/orders.parquet", s"$W1|$W2|$UpdFilter|$UpdCents|$InsertBase|$InsertCount|spec1")
-    val marker = new java.io.File(s"$root/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key) return
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-
+    * under spec 2: a [[Fixture]] per source dir, returning its root. */
+  def ensure(s: SparkSession, d: String): String = Fixture(
+    "graft_cow_spec",
+    Some(d),
+    s"$W1|$W2|$UpdFilter|$UpdCents|$InsertBase|$InsertCount|spec1"
+  ) { root =>
     // ---- v1: base table bucketed under spec 1
     val base = graft.Graft
       .table(s, d, "orders")
@@ -122,11 +118,11 @@ object CowSpecEvo {
     base
       .withColumn("bucket", expr(s"k div ${W1}L"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$root/v1")
-    writeManifest(s, 1, statsOf(s, s"$root/v1", specId = 1))
+    writeManifest(s, d, 1, statsOf(s, s"$root/v1", specId = 1))
 
     // ---- v2: EVOLVE the partition spec — a pure metadata commit. The
     // manifest rows carry verbatim; no data dir exists for v2 at all.
-    writeManifest(s, 2, entriesOf(s, 1))
+    writeManifest(s, d, 2, entriesOf(s, d, 1))
 
     // ---- v3: merge under the NEW spec. Touched spec-1 buckets rewrite
     // (and re-bucket at width 4096); inserts land as spec-2 files;
@@ -141,7 +137,7 @@ object CowSpecEvo {
       .collect()
       .map(_.getLong(0))
       .toSet
-    val man2 = entriesOf(s, 2)
+    val man2 = entriesOf(s, d, 2)
     val (touchedEs, carried) = man2.partition(e => touched.contains(e.bucket))
     val cur = s.read.parquet(touchedEs.map(_.path): _*).select("k", "cents")
     val rewritten = cur
@@ -151,8 +147,6 @@ object CowSpecEvo {
     rewritten
       .withColumn("bucket", expr(s"k div ${W2}L"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$root/v3")
-    writeManifest(s, 3, statsOf(s, s"$root/v3", specId = 2) ++ carried)
-
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/src_key"), key.getBytes("UTF-8"))
+    writeManifest(s, d, 3, statsOf(s, s"$root/v3", specId = 2) ++ carried)
   }
 }

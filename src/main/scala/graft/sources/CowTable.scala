@@ -76,7 +76,8 @@ object CowTable {
   /** key-range bucket width (stand-in for a production file's key span) */
   val BucketWidth: Long = 1024L
 
-  val dir = "/root/repo/spark-warehouse/graft_cow"
+  /** the gate table's root for the source dir `d` */
+  def dir(d: String): String = Fixture.dir("graft_cow", Some(d))
 
   /** updated keys: every 97th order key, but only in every 5th bucket —
     * localized updates keep the carried/rewritten split meaningful at any
@@ -390,12 +391,12 @@ object CowTable {
 
   /** (bucket, path, min_key, max_key, n_rows, dv_path, n_del, schema_id)
     * for one snapshot, distributed — the table-format planning unit. */
-  def manifest(s: SparkSession, version: Int, root: String = dir): DataFrame =
+  def manifest(s: SparkSession, version: Int, root: String): DataFrame =
     entriesDfAt(s, manifestPath(version, root))
 
   /** Manifest rows as [[Entry]]s — the FULL set, for full-snapshot reads
     * (whose task list is the whole table) and spec accounting. */
-  def entries(s: SparkSession, version: Int, root: String = dir): Seq[Entry] =
+  def entries(s: SparkSession, version: Int, root: String): Seq[Entry] =
     entriesAt(s, manifestPath(version, root))
 
   /** [[entries]] for an arbitrary manifest directory (staged WAP branches
@@ -471,7 +472,7 @@ object CowTable {
   /** a snapshot's manifest directory (planning entry point for pruned
     * scans: pair with [[pruneEntries]]/[[pruneEntriesRange]] +
     * [[readEntries]]) */
-  def manifestDir(version: Int, root: String = dir): String = manifestPath(version, root)
+  def manifestDir(version: Int, root: String): String = manifestPath(version, root)
 
   /** Execute a plan: DV-masked read of exactly the planned entries —
     * the x226 readTasks counterpart on the write-path tables. */
@@ -552,7 +553,7 @@ object CowTable {
     * through the field-id map onto the snapshot's CURRENT schema (missing
     * fields read as typed NULL, renamed fields under their current name).
     * Legacy roots (no meta) emit columns as written. */
-  def read(s: SparkSession, version: Int, root: String = dir): DataFrame = {
+  def read(s: SparkSession, version: Int, root: String): DataFrame = {
     val es = entries(s, version, root)
     versionSchemaId(s, version, root) match {
       case None => rawRead(s, es)
@@ -616,23 +617,15 @@ object CowTable {
       }
       .reduce(_.unionByName(_))
 
-  /** Build snapshot v1 from `orders` and snapshot v2 = MERGE(updates ∪
-    * inserts) into it, fingerprint-guarded on the source files. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val key = Fingerprint.of(
-      s,
-      s"$d/orders.parquet",
-      // "mtree1" salts the key for the two-level manifest tree (list +
-      // immutable group files) so flat-manifest artifacts rebuild once
-      s"$BucketWidth|$UpdateFilter|$UpdateBump|$InsertBase|$InsertCount|$Upsert3Filter|$Delete3Filter|mtree1"
-    )
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key) return
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val dirFs = dirPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (dirFs.exists(dirPath)) dirFs.delete(dirPath, true)
-
+  /** Build snapshot v1 from `orders` and snapshots v2/v3 by MERGE into
+    * it: a [[Fixture]] per source dir, returning the table root. "mtree1"
+    * salts the key for the two-level manifest tree (list + immutable
+    * group files). */
+  def ensure(s: SparkSession, d: String): String = Fixture(
+    "graft_cow",
+    Some(d),
+    s"$BucketWidth|$UpdateFilter|$UpdateBump|$InsertBase|$InsertCount|$Upsert3Filter|$Delete3Filter|mtree1"
+  ) { dir =>
     // ---- snapshot v1: bucket the base table, one immutable dir per bucket
     val base = graft.Graft
       .table(s, d, "orders")
@@ -642,7 +635,7 @@ object CowTable {
       )
       .withColumn("bucket", expr(s"k div ${BucketWidth}L"))
     base.write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/v1")
-    writeManifestRows(s, 1, statsOf(s, s"$dir/v1", schemaId = 1))
+    writeManifestRows(s, 1, statsOf(s, s"$dir/v1", schemaId = 1), dir)
 
     // ---- MERGE into v2: updates (matched) + inserts (not matched)
     val updates = base
@@ -654,7 +647,7 @@ object CowTable {
         (col("id") + lit(InsertBase)).as("k"),
         (lit(100000L) + col("id") * 7L).as("cents")
       )
-    merge(s, fromVersion = 1, toVersion = 2, changes = updates.unionByName(inserts))
+    merge(s, fromVersion = 1, toVersion = 2, changes = updates.unionByName(inserts), root = dir)
 
     // ---- MERGE into v3: the full three-clause shape — upserts with an
     // absolute value formula (no dependence on v2 state, so the oracle
@@ -664,9 +657,7 @@ object CowTable {
       .where(expr(Upsert3Filter))
       .select(col("k"), expr("50000L + k % 1000").as("cents"))
     val deletes3 = base.where(expr(Delete3Filter)).select("k")
-    merge(s, fromVersion = 2, toVersion = 3, changes = upserts3, deletes = deletes3)
-
-    java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
+    merge(s, fromVersion = 2, toVersion = 3, changes = upserts3, deletes = deletes3, root = dir)
   }
 
   // ------------------------------------------------ zero-copy CLONE (x104)
@@ -680,7 +671,7 @@ object CowTable {
     * files by reference, so the two tables diverge independently while
     * sharing unchanged storage; a clone-side vacuum only ever lists the
     * clone root, so shared source files are structurally out of its reach. */
-  def cloneTable(s: SparkSession, srcVersion: Int, dstRoot: String, srcRoot: String = dir): Unit = {
+  def cloneTable(s: SparkSession, srcVersion: Int, dstRoot: String, srcRoot: String): Unit = {
     if (pathExists(s"$srcRoot/schemas"))
       s.read.parquet(s"$srcRoot/schemas").coalesce(1).write.mode("overwrite").parquet(s"$dstRoot/schemas")
     versionSchemaId(s, srcVersion, srcRoot).foreach(sid => writeVersionMeta(s, dstRoot, 1, sid))
@@ -693,7 +684,16 @@ object CowTable {
     registerClone(srcRoot, dstRoot)
   }
 
-  val cloneDir = "/root/repo/spark-warehouse/graft_cow_clone"
+  def cloneDir(d: String): String = Fixture.dir("graft_cow_clone", Some(d))
+
+  /** A table over the gate table's files (clone, WAP, refs): salted with the
+    * gate table's build stamp, so a rebuild of the one rebuilds the other,
+    * and built holding the gate table's lock, so no JVM rebuilds it under
+    * the build. Locks nest derived → gate table. */
+  private def derived(s: SparkSession, name: String, d: String, salt: String)(build: String => Unit): String = {
+    val src = ensure(s, d)
+    Fixture(name, Some(d), s"${Fixture.stamp(src)}|$salt")(out => Fixture.holding(src)(build(out)))
+  }
 
   /** clone-side divergence delta (absolute formulas, closed-form oracle):
     * upsert stripe disjoint in form from the source's, plus 20 inserts in
@@ -703,22 +703,16 @@ object CowTable {
   val CloneInsertCount = 20
 
   /** Gate fixture: clone source v2 into [[cloneDir]], then MERGE the
-    * divergence delta into the clone (clone v1 → v2). Marker-guarded by
-    * the source artifact's key, so a source rebuild (SF switch) rebuilds
-    * the clone once and steady-state calls are a marker read. */
-  def ensureClone(s: SparkSession, d: String): Unit = synchronized {
-    ensure(s, d)
-    val srcKey = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/src_key")),
-      "UTF-8"
-    ) + s"|clone|$CloneUpsertFilter|$CloneInsertBase|$CloneInsertCount"
-    val marker = new java.io.File(s"$cloneDir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == srcKey) return
-    val p = new org.apache.hadoop.fs.Path(cloneDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    cloneTable(s, srcVersion = 2, cloneDir)
+    * divergence delta into the clone (clone v1 → v2). Salted with the
+    * source table's build stamp, so a source rebuild rebuilds the clone
+    * once and steady-state calls are a marker read. */
+  def ensureClone(s: SparkSession, d: String): String = derived(
+    s,
+    "graft_cow_clone",
+    d,
+    s"clone|$CloneUpsertFilter|$CloneInsertBase|$CloneInsertCount"
+  ) { cloneDir =>
+    cloneTable(s, srcVersion = 2, cloneDir, dir(d))
     val base = graft.Graft
       .table(s, d, "orders")
       .select(col("o_orderkey").as("k"), expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -729,10 +723,9 @@ object CowTable {
       .range(CloneInsertCount.toLong)
       .select((col("id") + lit(CloneInsertBase)).as("k"), (lit(200000L) + col("id") * 11L).as("cents"))
     merge(s, fromVersion = 1, toVersion = 2, changes = upserts.unionByName(inserts), root = cloneDir)
-    java.nio.file.Files.write(marker.toPath, srcKey.getBytes("UTF-8"))
   }
 
-  val wapDir = "/root/repo/spark-warehouse/graft_cow_wap"
+  def wapDir(d: String): String = Fixture.dir("graft_cow_wap", Some(d))
 
   /** WAP gate formulas (absolute, closed-form oracle): the good branch
     * re-prices one bucket-striped key class; the bad branch inserts each
@@ -750,19 +743,13 @@ object CowTable {
     * The build itself enforces audit-before-publish: a regression that
     * makes the bad branch pass (or the good one fail) aborts the fixture,
     * not just the assertion. */
-  def ensureWap(s: SparkSession, d: String): Unit = synchronized {
-    ensure(s, d)
-    val srcKey = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/src_key")),
-      "UTF-8"
-    ) + s"|wap|$WapGoodFilter|$WapBadBase|$WapBadCount"
-    val marker = new java.io.File(s"$wapDir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == srcKey) return
-    val p = new org.apache.hadoop.fs.Path(wapDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    cloneTable(s, srcVersion = 3, wapDir)
+  def ensureWap(s: SparkSession, d: String): String = derived(
+    s,
+    "graft_cow_wap",
+    d,
+    s"wap|$WapGoodFilter|$WapBadBase|$WapBadCount"
+  ) { wapDir =>
+    cloneTable(s, srcVersion = 3, wapDir, dir(d))
     val good = graft.Graft
       .table(s, d, "orders")
       .select(col("o_orderkey").as("k"))
@@ -784,7 +771,6 @@ object CowTable {
       case Right(v) => require(v == 2, s"WAP publish landed at v$v, expected v2")
       case Left(c)  => throw new IllegalStateException(s"WAP publish conflicted on $c")
     }
-    java.nio.file.Files.write(marker.toPath, srcKey.getBytes("UTF-8"))
   }
 
   /** The COW MERGE, all three clauses: manifest-prune to the touched
@@ -805,7 +791,7 @@ object CowTable {
       toVersion: Int,
       changes: DataFrame,
       deletes: DataFrame = null,
-      root: String = dir
+      root: String
   ): Unit = {
     mergeCompute(
       s,
@@ -923,7 +909,7 @@ object CowTable {
 
   /** newest committed version: max N over `manifest_vN` directories (the
     * staging dirs carry a `.stage` suffix and never match) */
-  def latestVersion(root: String = dir): Int =
+  def latestVersion(root: String): Int =
     listNames(root)
       .flatMap { n =>
         val m = "^manifest_v(\\d+)$".r.findFirstMatchIn(n)
@@ -1103,7 +1089,7 @@ object CowTable {
       changes: DataFrame,
       deletes: DataFrame = null,
       atVersion: Option[Int] = None,
-      root: String = dir
+      root: String
   ): Int = {
     val base = atVersion.getOrElse(latestVersion(root))
     mergeCompute(
@@ -1121,12 +1107,12 @@ object CowTable {
   }
 
   /** entries of a staged branch's manifest */
-  def stagedEntries(s: SparkSession, name: String, root: String = dir): Seq[Entry] =
+  def stagedEntries(s: SparkSession, name: String, root: String): Seq[Entry] =
     entriesAt(s, s"$root/wap_manifest_$name")
 
   /** DV-masked read of a staged branch (pre-evolution contract, like the
     * merge paths — WAP stages data changes, not schema changes). */
-  def readStaged(s: SparkSession, name: String, root: String = dir): DataFrame =
+  def readStaged(s: SparkSession, name: String, root: String): DataFrame =
     rawRead(s, stagedEntries(s, name, root))
 
   /** Publish a staged branch as the next snapshot: the same CAS loop as
@@ -1135,7 +1121,7 @@ object CowTable {
   def publishStaged(
       s: SparkSession,
       name: String,
-      root: String = dir,
+      root: String,
       maxRetries: Int = 5
   ): Either[Set[Long], Int] = {
     val base = readSmall(s"$root/wap_base_$name").trim.toInt
@@ -1153,7 +1139,7 @@ object CowTable {
   }
 
   /** Abort a staged branch: delete manifest, base marker and data dir. */
-  def abortStaged(s: SparkSession, name: String, root: String = dir): Unit = {
+  def abortStaged(s: SparkSession, name: String, root: String): Unit = {
     Seq(s"$root/wap_manifest_$name", s"$root/wap_$name").foreach(deleteDir)
     deleteFile(s"$root/wap_base_$name")
   }
@@ -1192,7 +1178,7 @@ object CowTable {
       .parquet(refPath(root, name))
   }
 
-  def readRefMeta(s: SparkSession, name: String, root: String = dir): Ref = {
+  def readRefMeta(s: SparkSession, name: String, root: String): Ref = {
     val r = s.read.parquet(refPath(root, name)).collect()(0)
     Ref(
       r.getAs[String]("kind"),
@@ -1202,10 +1188,10 @@ object CowTable {
     )
   }
 
-  def tagCreate(s: SparkSession, name: String, version: Int, root: String = dir): Unit =
+  def tagCreate(s: SparkSession, name: String, version: Int, root: String): Unit =
     writeRef(s, root, name, Ref("tag", manifestPath(version, root), version, 0))
 
-  def branchCreate(s: SparkSession, name: String, fromVersion: Int, root: String = dir): Unit =
+  def branchCreate(s: SparkSession, name: String, fromVersion: Int, root: String): Unit =
     writeRef(s, root, name, Ref("branch", manifestPath(fromVersion, root), fromVersion, 0))
 
   /** MERGE into the branch head; advances the ref, never `manifest_vN`. */
@@ -1214,7 +1200,7 @@ object CowTable {
       name: String,
       changes: DataFrame,
       deletes: DataFrame = null,
-      root: String = dir
+      root: String
   ): Unit = {
     val ref = readRefMeta(s, name, root)
     require(ref.kind == "branch", s"ref $name is a ${ref.kind}, not a branch")
@@ -1227,12 +1213,12 @@ object CowTable {
 
   /** DV-masked read through a ref (pre-evolution contract, like the merge
     * paths — branch lineages here stage data changes, not schema ones). */
-  def refRead(s: SparkSession, name: String, root: String = dir): DataFrame =
+  def refRead(s: SparkSession, name: String, root: String): DataFrame =
     rawRead(s, entriesAt(s, readRefMeta(s, name, root).manifestPath))
 
   /** Publish the branch head as the next MAIN version (metadata-only,
     * files carried by reference). Refuses if main moved since the fork. */
-  def fastForward(s: SparkSession, name: String, root: String = dir): Int = {
+  def fastForward(s: SparkSession, name: String, root: String): Int = {
     val ref = readRefMeta(s, name, root)
     require(ref.kind == "branch", s"ref $name is a ${ref.kind}, not a branch")
     val latest = latestVersion(root)
@@ -1252,7 +1238,7 @@ object CowTable {
     next
   }
 
-  val refsDir = "/root/repo/spark-warehouse/graft_cow_refs"
+  def refsDir(d: String): String = Fixture.dir("graft_cow_refs", Some(d))
 
   /** x150 fixture formulas (absolute, closed-form oracle): after cloning
     * source v2, main re-prices one stripe (v2); the branch forks at v2,
@@ -1267,19 +1253,13 @@ object CowTable {
 
   /** Gate fixture (x150): tag + branch lifecycle over a clone of source
     * v2, marker-guarded like every fixture artifact. */
-  def ensureRefs(s: SparkSession, d: String): Unit = synchronized {
-    ensure(s, d)
-    val srcKey = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/src_key")),
-      "UTF-8"
-    ) + s"|refs|$RefsMainFilter|$RefsBranchUpsertFilter|$RefsBranchDeleteFilter|$RefsBranchInsertBase|$RefsBranchInsertCount"
-    val marker = new java.io.File(s"$refsDir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == srcKey) return
-    val p = new org.apache.hadoop.fs.Path(refsDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    cloneTable(s, srcVersion = 2, refsDir)
+  def ensureRefs(s: SparkSession, d: String): String = derived(
+    s,
+    "graft_cow_refs",
+    d,
+    s"refs|$RefsMainFilter|$RefsBranchUpsertFilter|$RefsBranchDeleteFilter|$RefsBranchInsertBase|$RefsBranchInsertCount"
+  ) { refsDir =>
+    cloneTable(s, srcVersion = 2, refsDir, dir(d))
     tagCreate(s, "audit", 1, refsDir)
     val base = graft.Graft
       .table(s, d, "orders")
@@ -1308,7 +1288,6 @@ object CowTable {
       root = refsDir
     )
     fastForward(s, "exp", refsDir)
-    java.nio.file.Files.write(marker.toPath, srcKey.getBytes("UTF-8"))
   }
 
   /** Merge-on-read DELETE: instead of rewriting the touched buckets, write
@@ -1327,7 +1306,7 @@ object CowTable {
       fromVersion: Int,
       toVersion: Int,
       deletes: DataFrame,
-      root: String = dir
+      root: String
   ): Unit = {
     val fromMan = manifestPath(fromVersion, root)
     val dl = deletes.withColumn("bucket", expr(s"k div ${BucketWidth}L"))
@@ -1455,7 +1434,7 @@ object CowTable {
       fromVersion: Int,
       toVersion: Int,
       upserts: DataFrame,
-      root: String = dir
+      root: String
   ): Unit = {
     morDelete(s, fromVersion, toVersion, upserts.select("k"), root)
     val deltaRoot = s"$root/delta_v$toVersion"
@@ -1488,7 +1467,7 @@ object CowTable {
     * versions stay fully time-travelable, and the restored snapshot's
     * schema meta rides along. Cost is one manifest copy at any table
     * size. */
-  def rollback(s: SparkSession, toVersion: Int, asVersion: Int, root: String = dir): Unit = {
+  def rollback(s: SparkSession, toVersion: Int, asVersion: Int, root: String): Unit = {
     copyManifest(s, root, manifestPath(toVersion, root), manifestPath(asVersion, root), s"rb_v$asVersion")
     versionSchemaId(s, toVersion, root).foreach(writeVersionMeta(s, root, asVersion, _))
   }
@@ -1499,7 +1478,7 @@ object CowTable {
     * references, carry everything else by reference. The x78 OPTIMIZE
     * pattern applied to deletion vectors: read cost and write cost both
     * track DV'd buckets, never table size. */
-  def foldDv(s: SparkSession, fromVersion: Int, toVersion: Int, root: String = dir): Unit = {
+  def foldDv(s: SparkSession, fromVersion: Int, toVersion: Int, root: String): Unit = {
     val fromMan = manifestPath(fromVersion, root)
     // list-level prune: only groups whose n_dv stat is nonzero can carry
     // DV'd entries — clean groups' files never open
@@ -1548,7 +1527,7 @@ object CowTable {
     * `(k, change_type I|U|D, old_cents, new_cents)` with -1 standing in
     * for "no value" (sentinel keeps the gate free of nullable columns);
     * same-value rewrites are not changes and are excluded. */
-  def snapshotDiff(s: SparkSession, fromVersion: Int, toVersion: Int, root: String = dir): DataFrame = {
+  def snapshotDiff(s: SparkSession, fromVersion: Int, toVersion: Int, root: String): DataFrame = {
     val manO = manifestPath(fromVersion, root)
     val manN = manifestPath(toVersion, root)
     // the change unit is (data path, dv path): a rewritten bucket differs
@@ -1639,7 +1618,7 @@ object CowTable {
   def vacuumPlanFull(
       s: SparkSession,
       retain: Seq[Int],
-      root: String = dir
+      root: String
   ): (Seq[String], Seq[String], Seq[String]) = {
     def refsOfManifest(path: String): Seq[String] =
       entriesAt(s, path).flatMap(e => Seq(e.path) ++ (if (e.dvPath.nonEmpty) Seq(e.dvPath) else Nil))
@@ -1671,7 +1650,7 @@ object CowTable {
   /** Execute the full-era plan: delete orphan dirs, return them. Clone-
     * and retention-referenced paths are structurally unreachable here —
     * the refusal the CowGcSpec proves. */
-  def vacuumExecute(s: SparkSession, retain: Seq[Int], root: String = dir): Seq[String] = {
+  def vacuumExecute(s: SparkSession, retain: Seq[Int], root: String): Seq[String] = {
     val (orphans, _, _) = vacuumPlanFull(s, retain, root)
     orphans.foreach { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
@@ -1680,7 +1659,7 @@ object CowTable {
     orphans
   }
 
-  def vacuumPlan(s: SparkSession, retain: Seq[Int], root: String = dir): (Seq[String], Seq[String]) = {
+  def vacuumPlan(s: SparkSession, retain: Seq[Int], root: String): (Seq[String], Seq[String]) = {
     val refNames = listNames(s"$root/refs")
     val referenced = (retain
       .flatMap(v => manifest(s, v, root).select("path").collect().map(_.getString(0))) ++
@@ -1767,7 +1746,7 @@ object CowTable {
 
   /** Whole-manifest write: every group file fresh (fixture builds and
     * bootstrap manifests; incremental commits use [[writeManifestCow]]). */
-  def writeManifestRows(s: SparkSession, version: Int, rows: Seq[Entry], root: String = dir): Unit =
+  def writeManifestRows(s: SparkSession, version: Int, rows: Seq[Entry], root: String): Unit =
     writeListTo(s, manifestPath(version, root), writeGroupFiles(s, root, s"v$version", entryDf(s, rows)))
 
   /** COPY-ON-WRITE manifest commit — the metadata-level mirror of the

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * DuckDB's independent read_csv parser against the same file.
   */
 object CsvRoundTrip {
-  val dir = "/root/repo/spark-warehouse/graft_csv_rt"
+  val dir = Fixture.dir("graft_csv_rt")
   val outPath = s"$dir/out"
 
   /** the field formula — mirrored in the x260 oracle SQL */
@@ -28,25 +28,21 @@ object CsvRoundTrip {
       )
     )
 
-  def ensure(s: SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V2").exists()) {
-      new java.io.File(dir).mkdirs()
-      s.range(300)
-        .select(col("id").as("rid"))
-        .select(col("rid"), f1Expr.as("f1"), (col("rid") * 17L + 3L).as("f2"))
-        .coalesce(1)
-        .write
-        .mode("overwrite")
-        .option("header", "true")
-        // Spark's CSV DEFAULTS are not RFC 4180: quotes escape with
-        // backslash (escape=\) and trailing whitespace is TRIMMED on
-        // write (ignoreTrailingWhiteSpace=true) — both found by this
-        // fixture's own spec. Doubling + preservation are opt-in:
-        .option("escape", "\"")
-        .option("ignoreLeadingWhiteSpace", "false")
-        .option("ignoreTrailingWhiteSpace", "false")
-        .csv(outPath)
-      new java.io.File(s"$dir/_OK_V2").createNewFile()
-    }
+  def ensure(s: SparkSession): Unit = Fixture.at(dir, "v2") {
+    s.range(300)
+      .select(col("id").as("rid"))
+      .select(col("rid"), f1Expr.as("f1"), (col("rid") * 17L + 3L).as("f2"))
+      .coalesce(1)
+      .write
+      .mode("overwrite")
+      .option("header", "true")
+      // Spark's CSV DEFAULTS are not RFC 4180: quotes escape with
+      // backslash (escape=\) and trailing whitespace is TRIMMED on
+      // write (ignoreTrailingWhiteSpace=true) — both found by this
+      // fixture's own spec. Doubling + preservation are opt-in:
+      .option("escape", "\"")
+      .option("ignoreLeadingWhiteSpace", "false")
+      .option("ignoreTrailingWhiteSpace", "false")
+      .csv(outPath)
   }
 }

@@ -74,7 +74,9 @@ object DataSkipping {
   val BloomBits = 4095L
   val BloomK = 3
 
-  def writeLayout(s: SparkSession, d: String, dir: String, nFiles: Int = 64): Bounds = {
+  private val NFiles = 64
+
+  private def writeLayout(s: SparkSession, d: String, dir: String): Bounds = {
     val o = base(s, d)
     val b = o.agg(min("o_custkey"), max("o_custkey"), min("days"), max("days")).collect()(0)
     val bounds = Bounds(b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
@@ -86,7 +88,7 @@ object DataSkipping {
       // column (one dy band non-null) for null-count skipping
       .withColumn("tag", expr("(cx div 4096) * 16 + (dy div 4096)"))
       .withColumn("promo", expr("CASE WHEN dy div 4096 = 6 THEN days ELSE CAST(NULL AS BIGINT) END"))
-      .repartitionByRange(nFiles, col("zkey"))
+      .repartitionByRange(NFiles, col("zkey"))
       .select("o_orderkey", "o_custkey", "days", "tag", "promo")
       .write.mode("overwrite").parquet(s"$dir/data")
     val data = s.read.parquet(s"$dir/data")
@@ -127,27 +129,26 @@ object DataSkipping {
     bounds
   }
 
-  /** Ensure the layout exists for the corpus at `d`, rebuilding only when
-    * the corpus files change (name/size/mtime fingerprint — the
-    * ivfEnsureGateIndex pattern; steady-state calls are a marker-file
-    * read, so the bench measures the READ path, not layout writes).
-    * Returns the corpus bounds, parsed from the marker on a hit. */
-  def ensureLayout(s: SparkSession, d: String, dir: String, nFiles: Int = 64): Bounds = synchronized {
+  /** the layout's directory for the corpus at `d` */
+  def dir(d: String): String = Fixture.dir("graft_zorder", Some(d))
+
+  /** Ensure the layout exists for the corpus at `d` (a [[Fixture]]:
+    * steady-state calls are a marker-file read, so the bench measures the
+    * READ path, not layout writes). Returns the corpus bounds, which the
+    * build writes beside the layout. */
+  def ensureLayout(s: SparkSession, d: String): Bounds = {
     // "stats3" salts for the enriched manifest (null counts + tag KMV +
     // the x113 per-file o_orderkey Bloom)
-    val key = Fingerprint.of(s, s"$d/orders.parquet", s"$nFiles|stats3")
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists()) {
-      val parts = new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").split('|')
-      if (parts.length == 5 && parts(0) == key)
-        return Bounds(parts(1).toLong, parts(2).toLong, parts(3).toLong, parts(4).toLong)
+    val out = Fixture("graft_zorder", Some(d), s"$NFiles|stats3") { dir =>
+      val b = writeLayout(s, d, dir)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$dir/bounds"),
+        s"${b.cMin}|${b.cMax}|${b.dMin}|${b.dMax}".getBytes("UTF-8")
+      )
     }
-    val bounds = writeLayout(s, d, dir, nFiles)
-    java.nio.file.Files.write(
-      marker.toPath,
-      s"$key|${bounds.cMin}|${bounds.cMax}|${bounds.dMin}|${bounds.dMax}".getBytes("UTF-8")
-    )
-    bounds
+    val p = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$out/bounds")), "UTF-8")
+      .split('|').map(_.toLong)
+    Bounds(p(0), p(1), p(2), p(3))
   }
 
   /** Manifest-driven file pruning: the files whose [min, max] box

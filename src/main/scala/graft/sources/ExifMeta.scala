@@ -173,7 +173,7 @@ object ExifMeta {
   * "cam" + i%3; dims (640 + i%7, 480 + i%5); DateTimeOriginal
   * "2026:01:<dd> 0<h>:00:00" with dd = 1 + i%28, h = i%10. */
 object ExifFixture {
-  val dir = "/root/repo/spark-warehouse/graft_exif"
+  val dir = Fixture.dir("graft_exif")
   val payloadPath = s"$dir/payloads"
 
   def meta(i: Long): ExifMeta.Meta = ExifMeta.Meta(
@@ -190,15 +190,11 @@ object ExifFixture {
     ExifMeta.synthesize(m.byteOrder == "MM", m.orientation, m.make, m.width, m.height, m.dtOriginal)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 200L)
-        .map(i => (i, fileBytes(i)))
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 200L)
+      .map(i => (i, fileBytes(i)))
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

@@ -2,15 +2,12 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared source-fingerprint for fixture artifacts (the build-once guard
-  * used by [[Compaction]], [[DataSkipping]], [[CowTable]] and the IVF
-  * index): a digest over the source file listing's (name, length, mtime)
-  * plus a caller salt of build-relevant constants. Regenerating a source
-  * at the same path — the driver does this between rounds — changes the
+/** Source fingerprint for built artifacts ([[Fixture]]'s freshness key,
+  * [[IngestLedger]]'s per-file identity): a digest over the source
+  * listing's (name, length, mtime) plus a caller salt of build-relevant
+  * constants. Regenerating a source at the same path changes the
   * fingerprint and invalidates the artifact instead of silently reusing
-  * stale data (ADVICE r02). Marker handling stays with each caller: some
-  * stash extra state in the marker (DataSkipping's bounds), some key the
-  * artifact DIRECTORY by fingerprint (IVF), most write a plain src_key. */
+  * stale data (ADVICE r02). */
 object Fingerprint {
 
   /** 16-hex digest of `path`'s file listing + `salt`. */

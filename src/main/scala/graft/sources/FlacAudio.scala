@@ -597,7 +597,7 @@ object FlacAudio {
   * CONSTANT subframes). The families are disjoint mod 200.
   */
 object FlacFixture {
-  val dir = "/root/repo/spark-warehouse/graft_flac"
+  val dir = Fixture.dir("graft_flac")
   val payloadPath = s"$dir/payloads"
 
   val N = 200
@@ -639,17 +639,14 @@ object FlacFixture {
     )
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(payloadPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0 until N)
-        .map(i => (i.toLong, payload(i)))
-        .toDF("audio_id", "payload")
-        .coalesce(1)
-        .write
-        .mode("overwrite")
-        .parquet(payloadPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0 until N)
+      .map(i => (i.toLong, payload(i)))
+      .toDF("audio_id", "payload")
+      .coalesce(1)
+      .write
+      .mode("overwrite")
+      .parquet(payloadPath)
   }
 }

@@ -185,22 +185,11 @@ object FooterStats {
     )
   }
 
-  val rgRoot = "spark-warehouse/graft_rg"
-
   /** x124 fixture: lineitem's (l_orderkey, cents) range-partitioned into 4
     * files SORTED by key, written with a small parquet block size so each
     * file holds several row groups — the layout where row-group-grain
     * skipping beats file grain. Fingerprint-guarded like every fixture. */
-  def ensureSorted(s: SparkSession, d: String): String = synchronized {
-    val dir = s"$rgRoot/${new java.io.File(d).getName}"
-    val key = Fingerprint.of(s, s"$d/lineitem.parquet", "rg2")
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key)
-      return s"$dir/data"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+  def ensureSorted(s: SparkSession, d: String): String = Fixture("graft_rg", Some(d), "rg2") { dir =>
     graft.Graft
       .table(s, d, "lineitem")
       .select(
@@ -215,7 +204,5 @@ object FooterStats {
       .option("parquet.block.size", 8 * 1024) // several row groups per file even at sf0.001
       .mode("overwrite")
       .parquet(s"$dir/data")
-    java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
-    s"$dir/data"
-  }
+  } + "/data"
 }

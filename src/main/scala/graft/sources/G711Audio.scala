@@ -98,7 +98,7 @@ object G711Audio {
   * (audio_id, t) — the x98 pattern; the DuckDB oracle pushes the SAME
   * formula through the G.711 expansion arithmetic inline. */
 object G711Fixture {
-  val dir = "/root/repo/spark-warehouse/graft_g711"
+  val dir = Fixture.dir("graft_g711")
   val payloadPath = s"$dir/payloads"
 
   val N = 200
@@ -109,14 +109,11 @@ object G711Fixture {
   def payload(id: Int): Array[Byte] =
     G711Audio.synthesize(law(id), 8000, nSamples(id), t => code(id, t))
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    if (!new java.io.File(payloadPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0 until N)
-        .map(i => (i.toLong, payload(i)))
-        .toDF("audio_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-    }
+  def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0 until N)
+      .map(i => (i.toLong, payload(i)))
+      .toDF("audio_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

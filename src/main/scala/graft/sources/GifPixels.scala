@@ -195,7 +195,7 @@ object GifPixels {
   * composite palette[idx] formula is what the DuckDB oracle recomputes
   * from first principles without parsing a byte of GIF. */
 object GifFixture {
-  val dir = "/root/repo/spark-warehouse/graft_gif"
+  val dir = Fixture.dir("graft_gif")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -209,17 +209,14 @@ object GifFixture {
     (i.toLong, GifPixels.synthesize(w, h, idxAt(i.toLong), palette), w, h)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h) => (id, w, h) }
-        .toDF("img_id", "width", "height")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h) => (id, w, h) }
+      .toDF("img_id", "width", "height")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }

@@ -310,7 +310,7 @@ object H264Meta {
   * twin records the generator's ground-truth split table (per-GOP byte
   * offset, slice count, byte extent) — the x89/x21/x22 twin pattern. */
 object H264GopFixture {
-  val dir = "/root/repo/spark-warehouse/graft_h264gop"
+  val dir = Fixture.dir("graft_h264gop")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -327,24 +327,21 @@ object H264GopFixture {
     (i.toLong, bytes, gops)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _) => (id, p) }
-        .toDF("video_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.flatMap { case (id, _, gops) =>
-        gops.zipWithIndex.map { case ((off, ns, nb), g) => (id, g.toLong, off, ns, nb) }
-      }.toDF("video_id", "gop_idx", "gop_offset", "n_slices", "gop_bytes")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _) => (id, p) }
+      .toDF("video_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.flatMap { case (id, _, gops) =>
+      gops.zipWithIndex.map { case ((off, ns, nb), g) => (id, g.toLong, off, ns, nb) }
+    }.toDF("video_id", "gop_idx", "gop_offset", "n_slices", "gop_bytes")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }
 
 object H264Fixture {
-  val dir = "/root/repo/spark-warehouse/graft_h264"
+  val dir = Fixture.dir("graft_h264")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -363,17 +360,14 @@ object H264Fixture {
     (i.toLong, bytes, w, h, profile, level, (3 + slices).toLong, slices.toLong)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _, _, _, _, _) => (id, p) }
-        .toDF("video_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h, pr, lv, nn, ns) => (id, w, h, pr, lv, nn, ns) }
-        .toDF("video_id", "width", "height", "profile", "level", "n_nals", "n_slices")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _, _, _, _, _) => (id, p) }
+      .toDF("video_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h, pr, lv, nn, ns) => (id, w, h, pr, lv, nn, ns) }
+      .toDF("video_id", "width", "height", "profile", "level", "n_nals", "n_slices")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }

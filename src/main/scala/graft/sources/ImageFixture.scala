@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * with [[ImageMeta.parse]]; the oracle reads the twin — a hash match
   * proves the byte-level header parsing end-to-end. */
 object ImageFixture {
-  val dir = "/root/repo/spark-warehouse/graft_images"
+  val dir = Fixture.dir("graft_images")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -21,24 +21,21 @@ object ImageFixture {
     (i.toLong, ImageMeta.synthesize(fmt, w, h, junk = 64 + (i * 17) % 512, seed = i), fmt, w, h)
   }
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, p, f, w, h) => (id, f, w, h, p.length.toLong) }
-        .toDF("img_id", "format", "width", "height", "n_bytes")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, p, f, w, h) => (id, f, w, h, p.length.toLong) }
+      .toDF("img_id", "format", "width", "height", "n_bytes")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }
 
 /** MP4 twin fixture for the x23 video-metadata gate query. */
 object VideoFixture {
-  val dir = "/root/repo/spark-warehouse/graft_video"
+  val dir = Fixture.dir("graft_video")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -49,25 +46,22 @@ object VideoFixture {
     (i.toLong, VideoMeta.synthesize(w, h, durMs, junk = 32 + (i * 19) % 256, seed = i), w, h, durMs)
   }
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _, _) => (id, p) }
-        .toDF("video_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h, durMs) => (id, w, h, durMs) }
-        .toDF("video_id", "width", "height", "duration_ms")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _, _) => (id, p) }
+      .toDF("video_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h, durMs) => (id, w, h, durMs) }
+      .toDF("video_id", "width", "height", "duration_ms")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }
 
 /** WAV twin fixture for the x22 audio-metadata gate query (same pattern as
   * [[ImageFixture]]: binary payloads + independent metadata twin). */
 object AudioFixture {
-  val dir = "/root/repo/spark-warehouse/graft_audio"
+  val dir = Fixture.dir("graft_audio")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -83,17 +77,14 @@ object AudioFixture {
     (i.toLong, p, rate, channels, bits, meta.durationMs)
   }
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _, _, _) => (id, p) }
-        .toDF("audio_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, rate, ch, bits, durMs) => (id, rate, ch, bits, durMs) }
-        .toDF("audio_id", "sample_rate", "channels", "bits", "duration_ms")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _, _, _) => (id, p) }
+      .toDF("audio_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, rate, ch, bits, durMs) => (id, rate, ch, bits, durMs) }
+      .toDF("audio_id", "sample_rate", "channels", "bits", "duration_ms")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }

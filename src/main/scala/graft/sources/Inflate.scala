@@ -486,7 +486,7 @@ object Inflate {
   * load-bearing in the gate row; the oracle rebuilds content from the
   * formulas and never touches the format (the x227 conformance split). */
 object InflateFixture {
-  val dir = "/root/repo/spark-warehouse/graft_inflate"
+  val dir = Fixture.dir("graft_inflate")
   val payloadPath = s"$dir/payloads"
 
   private def md5hex(s: String): String =
@@ -521,15 +521,11 @@ object InflateFixture {
     }
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 240L)
-        .map(z => (z, fileBytes(z)))
-        .toDF("blob_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 240L)
+      .map(z => (z, fileBytes(z)))
+      .toDF("blob_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

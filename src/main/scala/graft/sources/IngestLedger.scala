@@ -109,17 +109,12 @@ object IngestLedger {
   * 3 (ids 2–4), 2 (ids 5–7); doc rows/cents follow formulas the oracle
   * replays. Fingerprint-guarded build (steady state = marker read). */
 object IngestFixture {
-  val dir = "/root/repo/spark-warehouse/graft_ingest"
+  val dir = Fixture.dir("graft_ingest")
 
   def nDocsOf(id: Long): Int = 20 + (id * 7 % 30).toInt
   def centsOf(id: Long, j: Int): Long = 1000L + id * 13 + j * 7
 
-  def ensure(s: SparkSession): Unit = synchronized {
-    val marker = new java.io.File(s"$dir/done")
-    if (marker.exists()) return
-    val d = new java.io.File(dir)
-    if (d.exists()) org.apache.commons.io.FileUtils.deleteDirectory(d)
-    d.mkdirs()
+  def ensure(s: SparkSession): Unit = Fixture.at(dir, "v1") {
     import s.implicits._
     for (id <- 0L until 8L) {
       (0 until nDocsOf(id)).map(j => (id * 1000 + j, centsOf(id, j)))
@@ -131,6 +126,5 @@ object IngestFixture {
     require(IngestLedger.offer(s, dir, 1, r1) == 5)
     require(IngestLedger.offer(s, dir, 2, r2) == 3) // 2-4 skipped
     require(IngestLedger.offer(s, dir, 2, r2) == 0) // idempotent re-offer
-    java.nio.file.Files.write(marker.toPath, "done".getBytes("UTF-8"))
   }
 }

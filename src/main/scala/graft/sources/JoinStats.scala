@@ -26,7 +26,7 @@ import org.apache.spark.sql.graftbridge.{GraftColStats, GraftTableStats, StatsJo
   */
 object JoinStats {
 
-  val dir = "/root/repo/spark-warehouse/graft_joinstats"
+  def dir(d: String): String = Fixture.dir("graft_joinstats", Some(d))
 
   val Depth = 4
   val Width = 8192
@@ -53,31 +53,20 @@ object JoinStats {
     )
   }
 
-  private def fingerprint(s: SparkSession, d: String): String =
-    (specs
-      .map { case (t, _) => Fingerprint.of(s, s"$d/$t.parquet", s"joinstats2|$Depth|$Width|$Buckets") } ++
-      pathSpecs(s, d).map { case (_, p, _) => Fingerprint.of(s, p, s"joinstats2|$Depth|$Width|$Buckets") })
-      .mkString("|")
-
-  /** Build (if stale) and LOAD the stats, wiring the rule's provider.
-    * Steady-state calls are a marker read + one small parquet load. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val key = fingerprint(s, d)
-    val marker = new java.io.File(s"$dir/src_key")
-    val fresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key
-    if (!fresh) {
+  /** Ensure the skew fixture, then build (if stale) and LOAD the stats,
+    * wiring the rule's provider. Steady-state calls are two marker reads +
+    * one small parquet load. A build ensures the skew fixture again inside
+    * this fixture's lock: locks nest JoinStats → SkewFixture, never the
+    * other way round. */
+  def ensure(s: SparkSession, d: String): Unit = {
+    SkewFixture.ensure(s, d)
+    load(s, Fixture("graft_joinstats", Some(d), s"joinstats2|$Depth|$Width|$Buckets|${SkewFixture.Salt}") { dir =>
       StatsJoinRule.provider = Map.empty // never plan on stale stats mid-build
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      build(s, d)
-      java.nio.file.Files.write(new java.io.File(s"$dir/src_key").toPath, key.getBytes("UTF-8"))
-    }
-    load(s)
+      build(s, d, dir)
+    })
   }
 
-  private def build(s: SparkSession, d: String): Unit = {
+  private def build(s: SparkSession, d: String, dir: String): Unit = {
     val qs = (0 to Buckets).map(i => i.toDouble / Buckets)
     val sources: Seq[(String, org.apache.spark.sql.DataFrame, Seq[String])] =
       specs.map { case (t, cols) => (t, graft.Graft.table(s, d, t), cols) } ++
@@ -119,8 +108,8 @@ object JoinStats {
     frames.reduce(_.unionByName(_)).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
   }
 
-  /** load the artifact into the rule's provider map */
-  def load(s: SparkSession): Unit = {
+  /** load the artifact at `dir` into the rule's provider map */
+  def load(s: SparkSession, dir: String): Unit = {
     val rows = s.read.parquet(s"$dir/stats").collect()
     val byTable = rows.groupBy(_.getAs[String]("table")).map { case (t, rs) =>
       val cols = rs.map { r =>

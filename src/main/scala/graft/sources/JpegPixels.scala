@@ -434,7 +434,7 @@ object JpegPixels {
   * without parsing a byte of JPEG. Non-multiple-of-8 dimensions make MCU
   * padding/cropping load-bearing too. */
 object JpegFixture {
-  val dir = "/root/repo/spark-warehouse/graft_jpeg"
+  val dir = Fixture.dir("graft_jpeg")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -470,17 +470,14 @@ object JpegFixture {
     (i.toLong, payload(i.toLong, w, h), w, h)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h) => (id, w, h) }
-        .toDF("img_id", "width", "height")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h) => (id, w, h) }
+      .toDF("img_id", "width", "height")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }

@@ -143,7 +143,7 @@ object Lz4Block {
   * letter ('A' + Z%26) (the overlap-match idiom), then H again (a far
   * match). */
 object Lz4Fixture {
-  val dir = "/root/repo/spark-warehouse/graft_lz4"
+  val dir = Fixture.dir("graft_lz4")
   val payloadPath = s"$dir/payloads"
 
   def content(z: Long): String = {
@@ -159,15 +159,11 @@ object Lz4Fixture {
     Array[Byte](n.toByte, (n >> 8).toByte, (n >> 16).toByte, (n >> 24).toByte) ++ comp
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 200L)
-        .map(z => (z, fileBytes(z)))
-        .toDF("blob_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 200L)
+      .map(z => (z, fileBytes(z)))
+      .toDF("blob_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

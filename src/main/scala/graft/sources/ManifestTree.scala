@@ -34,8 +34,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ManifestTree {
 
-  val dir = "/root/repo/spark-warehouse/graft_mtree"
-
   /** key span covered by one data file (one bucket = one immutable dir) */
   val BucketWidth = 1024L
 
@@ -55,13 +53,9 @@ object ManifestTree {
 
   /** Build the tree from `orders` (k = o_orderkey, cents payload):
     * per-bucket data dirs, per-group manifest files, one manifest list.
-    * Fingerprint-guarded like every fixture artifact.
+    * A [[Fixture]] per source dir; returns the tree's root.
     */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val key = Fingerprint.of(s, s"$d/orders.parquet", s"mtree1|$BucketWidth|$GroupSize")
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key) return
+  def ensure(s: SparkSession, d: String): String = Fixture("graft_mtree", Some(d), s"mtree1|$BucketWidth|$GroupSize") { dir =>
     val base = graft.Graft
       .table(s, d, "orders")
       .select(
@@ -70,7 +64,6 @@ object ManifestTree {
       )
       .withColumn("bucket", expr(s"k div ${BucketWidth}L"))
     build(s, base, dir)
-    java.nio.file.Files.write(new java.io.File(s"$dir/src_key").toPath, key.getBytes("UTF-8"))
   }
 
   /** Tree writer over any (k, cents, bucket) frame (spec fixtures reuse
@@ -122,7 +115,7 @@ object ManifestTree {
     * Entries of non-overlapping manifests are never deserialized — their
     * files are never opened (spec-proven by corruption).
     */
-  def planRange(s: SparkSession, lo: Long, hi: Long, root: String = dir): Plan = {
+  def planRange(s: SparkSession, lo: Long, hi: Long, root: String): Plan = {
     val list = s.read.parquet(s"$root/manifest_list").localCheckpoint() // count + prune
     val nTotal = list.count()
     val mpaths = list
@@ -159,7 +152,7 @@ object ManifestTree {
   /** The NAIVE path (every manifest file opened, every entry listed) —
     * the spec's equality twin only; nothing in the query surface calls it.
     */
-  def readRangeNaive(s: SparkSession, lo: Long, hi: Long, root: String = dir): DataFrame = {
+  def readRangeNaive(s: SparkSession, lo: Long, hi: Long, root: String): DataFrame = {
     val all = s.read
       .parquet(s"$root/manifest_list")
       .select("mpath")

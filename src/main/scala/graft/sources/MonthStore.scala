@@ -19,19 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object MonthStore {
 
-  val root = "/root/repo/spark-warehouse/graft_bymonth"
-
-  def dirFor(d: String): String = s"$root/${new java.io.File(d).getName}"
-
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val key = Fingerprint.of(s, s"$d/lineitem.parquet", "month1")
-    val dir = dirFor(d)
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key) return
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+  def ensure(s: SparkSession, d: String): String = Fixture("graft_bymonth", Some(d), "month1") { dir =>
     graft.Graft
       .table(s, d, "lineitem")
       .select(
@@ -46,11 +34,7 @@ object MonthStore {
       .mode("overwrite")
       .partitionBy("ship_month")
       .parquet(s"$dir/data")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/src_key"), key.getBytes("UTF-8"))
   }
 
-  def read(s: SparkSession, d: String): DataFrame = {
-    ensure(s, d)
-    s.read.parquet(s"${dirFor(d)}/data")
-  }
+  def read(s: SparkSession, d: String): DataFrame = s.read.parquet(s"${ensure(s, d)}/data")
 }

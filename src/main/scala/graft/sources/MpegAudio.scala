@@ -170,7 +170,7 @@ object MpegAudio {
   * walker must land exactly on payload end, so one wrong frame-length
   * desynchronizes and the gate hash flips. */
 object MpegFixture {
-  val dir = "/root/repo/spark-warehouse/graft_mp3"
+  val dir = Fixture.dir("graft_mp3")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -196,17 +196,14 @@ object MpegFixture {
     (i.toLong, bytes, n, if (mono) 1 else 2, kbpsSum, durationMs)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _, _, _) => (id, p) }
-        .toDF("audio_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, n, ch, ks, dur) => (id, n.toLong, ch, ks, dur) }
-        .toDF("audio_id", "n_frames", "channels", "kbps_sum", "duration_ms")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _, _, _) => (id, p) }
+      .toDF("audio_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, n, ch, ks, dur) => (id, n.toLong, ch, ks, dur) }
+      .toDF("audio_id", "n_frames", "channels", "kbps_sum", "duration_ms")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }

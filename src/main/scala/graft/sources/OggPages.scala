@@ -176,7 +176,7 @@ object OggPages {
   * values per page) are both exercised on ~half the corpus. Granule of
   * packet j = S·1000 + j. */
 object OggFixture {
-  val dir = "/root/repo/spark-warehouse/graft_ogg"
+  val dir = Fixture.dir("graft_ogg")
   val payloadPath = s"$dir/payloads"
 
   def nPackets(s: Long): Int = 1 + (s % 4).toInt
@@ -191,15 +191,11 @@ object OggFixture {
       granuleOf = j => s * 1000 + j
     )
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 200L)
-        .map(s => (s, fileBytes(s)))
-        .toDF("ogg_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 200L)
+      .map(s => (s, fileBytes(s)))
+      .toDF("ogg_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

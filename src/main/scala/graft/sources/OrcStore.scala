@@ -25,21 +25,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object OrcStore {
 
-  val root = "/root/repo/spark-warehouse/graft_orc"
-
-  def dirFor(d: String): String = s"$root/${new java.io.File(d).getName}"
+  def dirFor(d: String): String = Fixture.dir("graft_orc", Some(d))
 
   /** Write the lineitem projection to zlib ORC, partitioned by return flag
     * (so partition pruning is exercisable), once per fixture fingerprint. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val key = Fingerprint.of(s, s"$d/lineitem.parquet", "orc1")
-    val dir = dirFor(d)
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key) return
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+  def ensure(s: SparkSession, d: String): Unit = Fixture("graft_orc", Some(d), "orc1") { dir =>
     graft.Graft
       .table(s, d, "lineitem")
       .select(
@@ -57,7 +47,6 @@ object OrcStore {
       .option("compression", "zlib")
       .partitionBy("l_returnflag")
       .orc(s"$dir/data")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/src_key"), key.getBytes("UTF-8"))
   }
 
   def read(s: SparkSession, d: String): DataFrame = s.read.orc(s"${dirFor(d)}/data")
@@ -66,16 +55,7 @@ object OrcStore {
     * so stripe statistics windows are disjoint and range probes can skip
     * whole stripes. Fingerprint-guarded like everything else.
     */
-  def ensureSorted(s: SparkSession, d: String): String = synchronized {
-    val dir = s"${dirFor(d)}_sorted"
-    val key = Fingerprint.of(s, s"$d/orders.parquet", "orc_sorted1")
-    val marker = new java.io.File(s"$dir/src_key")
-    if (marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == key)
-      return s"$dir/data"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+  def ensureSorted(s: SparkSession, d: String): String = Fixture("graft_orc_sorted", Some(d), "orc_sorted1") { dir =>
     graft.Graft
       .table(s, d, "orders")
       .select(
@@ -91,7 +71,5 @@ object OrcStore {
       .option("orc.stripe.size", (64 * 1024).toString)
       .mode("overwrite")
       .orc(s"$dir/data")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/src_key"), key.getBytes("UTF-8"))
-    s"$dir/data"
-  }
+  } + "/data"
 }

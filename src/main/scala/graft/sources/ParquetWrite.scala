@@ -478,7 +478,7 @@ object ParquetWrite {
   * is invisible to results") across the engine's OWN implementations.
   */
 object FormatParityFixture {
-  val dir = "/root/repo/spark-warehouse/graft_fmt"
+  val dir = Fixture.dir("graft_fmt")
   val N = 20000
 
   def row(i: Long): (Long, String, Any, Double, Boolean) = (
@@ -489,53 +489,48 @@ object FormatParityFixture {
     i % 3 == 0
   )
 
-  def ensure(s: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    val marker = new java.io.File(s"$dir/_OK_V1")
-    if (!marker.exists()) {
-      new java.io.File(dir).mkdirs()
-      val rows = (0L until N.toLong).map(row)
-      // parquet via the x286 scratch writer
-      val pqSchema = Seq(
-        ParquetWrite.ColSpec("k", ParquetWrite.TInt64, optional = false),
-        ParquetWrite.ColSpec("status", ParquetWrite.TBytes, optional = false, utf8 = true),
-        ParquetWrite.ColSpec("cents", ParquetWrite.TInt64, optional = true),
-        ParquetWrite.ColSpec("price", ParquetWrite.TDouble, optional = false),
-        ParquetWrite.ColSpec("flag", ParquetWrite.TBool, optional = false)
+  def ensure(s: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    val rows = (0L until N.toLong).map(row)
+    // parquet via the x286 scratch writer
+    val pqSchema = Seq(
+      ParquetWrite.ColSpec("k", ParquetWrite.TInt64, optional = false),
+      ParquetWrite.ColSpec("status", ParquetWrite.TBytes, optional = false, utf8 = true),
+      ParquetWrite.ColSpec("cents", ParquetWrite.TInt64, optional = true),
+      ParquetWrite.ColSpec("price", ParquetWrite.TDouble, optional = false),
+      ParquetWrite.ColSpec("flag", ParquetWrite.TBool, optional = false)
+    )
+    val pqRows = rows.map(r => Array[Any](r._1, r._2, r._3, r._4, r._5))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$dir/data.parquet"),
+      ParquetWrite.write(pqSchema, pqRows, ParquetWrite.CodecZstd, dictionary = true, statistics = true)
+    )
+    // avro via the x297 scratch writer
+    val avFields = Seq(
+      AvroWrite.AvField("k", "long", nullable = false),
+      AvroWrite.AvField("status", "string", nullable = false),
+      AvroWrite.AvField("cents", "long", nullable = true),
+      AvroWrite.AvField("price", "double", nullable = false),
+      AvroWrite.AvField("flag", "boolean", nullable = false)
+    )
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$dir/data.avro"),
+      AvroWrite.write(avFields, pqRows, "deflate")
+    )
+    // ORC via the OFFICIAL writer (read-side-only format for the scratch family)
+    import org.apache.spark.sql.functions._
+    s.range(N.toLong)
+      .select(
+        col("id").as("k"),
+        expr("element_at(array('A','B','C'), CAST(id % 3 AS INT) + 1)").as("status"),
+        when(col("id") % 7 === 0, lit(null)).otherwise(col("id") * 37 % 100000).as("cents"),
+        ((col("id") % 1000) * 0.25).as("price"),
+        (col("id") % 3 === 0).as("flag")
       )
-      val pqRows = rows.map(r => Array[Any](r._1, r._2, r._3, r._4, r._5))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/data.parquet"),
-        ParquetWrite.write(pqSchema, pqRows, ParquetWrite.CodecZstd, dictionary = true, statistics = true)
-      )
-      // avro via the x297 scratch writer
-      val avFields = Seq(
-        AvroWrite.AvField("k", "long", nullable = false),
-        AvroWrite.AvField("status", "string", nullable = false),
-        AvroWrite.AvField("cents", "long", nullable = true),
-        AvroWrite.AvField("price", "double", nullable = false),
-        AvroWrite.AvField("flag", "boolean", nullable = false)
-      )
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/data.avro"),
-        AvroWrite.write(avFields, pqRows, "deflate")
-      )
-      // ORC via the OFFICIAL writer (read-side-only format for the scratch family)
-      import org.apache.spark.sql.functions._
-      s.range(N.toLong)
-        .select(
-          col("id").as("k"),
-          expr("element_at(array('A','B','C'), CAST(id % 3 AS INT) + 1)").as("status"),
-          when(col("id") % 7 === 0, lit(null)).otherwise(col("id") * 37 % 100000).as("cents"),
-          ((col("id") % 1000) * 0.25).as("price"),
-          (col("id") % 3 === 0).as("flag")
-        )
-        .coalesce(1)
-        .write
-        .option("compression", "zlib")
-        .mode("overwrite")
-        .orc(s"$dir/data_orc")
-      marker.createNewFile()
-    }
+      .coalesce(1)
+      .write
+      .option("compression", "zlib")
+      .mode("overwrite")
+      .orc(s"$dir/data_orc")
   }
 }
 
@@ -548,7 +543,7 @@ object FormatParityFixture {
   * the marker guards a content-version key.
   */
 object ParquetWriteFixture {
-  val dir = "/root/repo/spark-warehouse/graft_pq"
+  val dir = Fixture.dir("graft_pq")
   val N = 20000
 
   import ParquetWrite._
@@ -575,22 +570,17 @@ object ParquetWriteFixture {
     (i % 128).toFloat * 0.0078125f
   )
 
-  def ensure(): Unit = synchronized {
-    val marker = new java.io.File(s"$dir/_OK_V3")
-    if (!marker.exists()) {
-      new java.io.File(dir).mkdirs()
-      val rows = (0L until N.toLong).map(row)
-      for ((codec, tag) <- Seq(CodecUncompressed -> "c0", CodecGzip -> "c2", CodecZstd -> "c6")) {
-        val bytes = write(schema, rows, codec)
-        java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/orders_$tag.parquet"), bytes)
-      }
-      // x288/x289: dictionary-encoded + statistics variant (zstd pages)
-      val dictBytes = write(schema, rows, CodecZstd, dictionary = true, statistics = true)
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/orders_dict.parquet"), dictBytes)
-      // x292/x293: 5 row groups of 4000 rows, k-sorted → disjoint k stats
-      val mrgBytes = write(schema, rows, CodecZstd, dictionary = true, statistics = true, rowGroupRows = 4000)
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/orders_mrg.parquet"), mrgBytes)
-      marker.createNewFile()
+  def ensure(): Unit = Fixture.at(dir, "v3") {
+    val rows = (0L until N.toLong).map(row)
+    for ((codec, tag) <- Seq(CodecUncompressed -> "c0", CodecGzip -> "c2", CodecZstd -> "c6")) {
+      val bytes = write(schema, rows, codec)
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/orders_$tag.parquet"), bytes)
     }
+    // x288/x289: dictionary-encoded + statistics variant (zstd pages)
+    val dictBytes = write(schema, rows, CodecZstd, dictionary = true, statistics = true)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/orders_dict.parquet"), dictBytes)
+    // x292/x293: 5 row groups of 4000 rows, k-sorted → disjoint k stats
+    val mrgBytes = write(schema, rows, CodecZstd, dictionary = true, statistics = true, rowGroupRows = 4000)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/orders_mrg.parquet"), mrgBytes)
   }
 }

@@ -650,7 +650,7 @@ object PngPixels {
   * decoded back by the from-scratch reader under the x70 census. Distinct
   * pixel formula from x70's so a fixture mix-up cannot silently pass. */
 object PngExportFixture {
-  val dir = "/root/repo/spark-warehouse/graft_png_export"
+  val dir = Fixture.dir("graft_png_export")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -666,22 +666,19 @@ object PngExportFixture {
     (i.toLong, PngPixels.synthesize(w, h, rgbAt(i.toLong), y => (y + i) % 5), w, h)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val prev = PngPixels.useScratchDeflate
-      PngPixels.useScratchDeflate = true // the export corpus is ALWAYS scratch-compressed
-      val r =
-        try rows
-        finally PngPixels.useScratchDeflate = prev
-      r.map { case (id, p, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h) => (id, w, h) }
-        .toDF("img_id", "width", "height")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val prev = PngPixels.useScratchDeflate
+    PngPixels.useScratchDeflate = true // the export corpus is ALWAYS scratch-compressed
+    val r =
+      try rows
+      finally PngPixels.useScratchDeflate = prev
+    r.map { case (id, p, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h) => (id, w, h) }
+      .toDF("img_id", "width", "height")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }
 
@@ -692,7 +689,7 @@ object PngExportFixture {
   * cycle through all five types with a per-image phase, so the whole
   * unfilter surface is load-bearing for the gate hash. */
 object PngFixture {
-  val dir = "/root/repo/spark-warehouse/graft_png"
+  val dir = Fixture.dir("graft_png")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -709,18 +706,15 @@ object PngFixture {
     (i.toLong, PngPixels.synthesize(w, h, rgbAt(i.toLong), y => (y + i) % 5), w, h)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h) => (id, w, h) }
-        .toDF("img_id", "width", "height")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h) => (id, w, h) }
+      .toDF("img_id", "width", "height")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }
 
@@ -733,7 +727,7 @@ object PngFixture {
   * across the color-type surface. x70's own fixture stays untouched (the
   * x91 dispatch oracle depends on it byte-for-byte). */
 object PngExtFixture {
-  val dir = "/root/repo/spark-warehouse/graft_png_ext"
+  val dir = Fixture.dir("graft_png_ext")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -764,18 +758,15 @@ object PngExtFixture {
     (id, p, w, h, ctype)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h, ct) => (id, w, h, ct) }
-        .toDF("img_id", "width", "height", "ctype")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h, ct) => (id, w, h, ct) }
+      .toDF("img_id", "width", "height", "ctype")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }
 
@@ -785,7 +776,7 @@ object PngExtFixture {
   * boundary rule itself is gate-load-bearing. Same formula discipline as
   * [[PngExtFixture]] (whose artifact stays byte-untouched). */
 object PngTrnsFixture {
-  val dir = "/root/repo/spark-warehouse/graft_png_trns"
+  val dir = Fixture.dir("graft_png_trns")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -813,18 +804,15 @@ object PngTrnsFixture {
     (id, p, w, h)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h) => (id, w, h) }
-        .toDF("img_id", "width", "height")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h) => (id, w, h) }
+      .toDF("img_id", "width", "height")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }
 
@@ -836,7 +824,7 @@ object PngTrnsFixture {
   * Interlacing is transport: a hash match proves the deinterlacer's
   * per-pass unfilter + scatter reproduces the sequential pixels. */
 object PngAdam7Fixture {
-  val dir = "/root/repo/spark-warehouse/graft_png_adam7"
+  val dir = Fixture.dir("graft_png_adam7")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -852,18 +840,15 @@ object PngAdam7Fixture {
     (id, p, w, h)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h) => (id, w, h) }
-        .toDF("img_id", "width", "height")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h) => (id, w, h) }
+      .toDF("img_id", "width", "height")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }
 
@@ -873,7 +858,7 @@ object PngAdam7Fixture {
   * sample vary, so a high-byte-only shortcut (instead of the §12.5
   * rounded reduction) flips the hash. */
 object PngDepthFixture {
-  val dir = "/root/repo/spark-warehouse/graft_png_depth"
+  val dir = Fixture.dir("graft_png_depth")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -900,18 +885,15 @@ object PngDepthFixture {
     (id, p, w, h, kind)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h, k) => (id, w, h, k) }
-        .toDF("img_id", "width", "height", "kind")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h, k) => (id, w, h, k) }
+      .toDF("img_id", "width", "height", "kind")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }
 
@@ -923,7 +905,7 @@ object PngDepthFixture {
   * the x230 oracle SQL.
   */
 object PngFullFixture {
-  val dir = "/root/repo/spark-warehouse/graft_png_full"
+  val dir = Fixture.dir("graft_png_full")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -959,17 +941,14 @@ object PngFullFixture {
     (id, p, w, h, clazz, kind)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h, cl, k) => (id, w, h, cl, k) }
-        .toDF("img_id", "width", "height", "clazz", "kind")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h, cl, k) => (id, w, h, cl, k) }
+      .toDF("img_id", "width", "height", "clazz", "kind")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }

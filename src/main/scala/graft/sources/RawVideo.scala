@@ -75,7 +75,7 @@ object RawVideo {
 /** Fixture for x35: 150 raw videos with closed-form pixels so the oracle
   * recomputes sampled-frame checksums from first principles. */
 object RawVideoFixture {
-  val dir = "/root/repo/spark-warehouse/graft_rawvideo"
+  val dir = Fixture.dir("graft_rawvideo")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -93,17 +93,14 @@ object RawVideoFixture {
     (i.toLong, RawVideo.synthesize(w, h, n, rgbAt(i.toLong)), w, h, n)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(twinPath).exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _, _) => (id, p) }
-        .toDF("video_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h, n) => (id, w, h, n) }
-        .toDF("video_id", "width", "height", "n_frames")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _, _) => (id, p) }
+      .toDF("video_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h, n) => (id, w, h, n) }
+      .toDF("video_id", "width", "height", "n_frames")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }

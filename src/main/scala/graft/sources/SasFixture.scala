@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * Content is a pure function of the row index → identical bytes every run.
   */
 object SasFixture {
-  val dir = "/root/repo/spark-warehouse/graft_sas"
+  val dir = Fixture.dir("graft_sas")
   val sasPath = s"$dir/fixture.sas7bdat"
   val twinPath = s"$dir/twin"
 
@@ -37,18 +37,31 @@ object SasFixture {
     )
   }
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val d = new java.io.File(dir)
-    if (!new java.io.File(sasPath).exists() || !new java.io.File(twinPath).exists()) {
-      d.mkdirs()
-      Sas7bdatWriter.write(sasPath, cols, rows)
-      import spark.implicits._
-      rows
-        .map(r => (r(0).asInstanceOf[java.lang.Double], r(1).asInstanceOf[java.lang.Double], r(2).asInstanceOf[String], r(3).asInstanceOf[String]))
-        .toDF("id", "value", "category", "comment")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(twinPath)
-    }
+  /** Both SAS fixtures (plain + RLE-compressed) and their parquet twins:
+    * one directory, so one build. */
+  def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    Sas7bdatWriter.write(sasPath, cols, rows)
+    rows
+      .map(r => (r(0).asInstanceOf[java.lang.Double], r(1).asInstanceOf[java.lang.Double], r(2).asInstanceOf[String], r(3).asInstanceOf[String]))
+      .toDF("id", "value", "category", "comment")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(twinPath)
+    Sas7bdatWriter.write(sasRlePath, rleCols, rleRows, compressRle = true)
+    rleRows
+      .map(r =>
+        (
+          r(0).asInstanceOf[java.lang.Double],
+          r(1).asInstanceOf[java.lang.Double],
+          r(2).asInstanceOf[java.lang.Double],
+          r(3).asInstanceOf[java.lang.Double],
+          r(4).asInstanceOf[String],
+          r(5).asInstanceOf[String]
+        )
+      )
+      .toDF("id", "z1", "z2", "z3", "tag", "pattern")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(twinRlePath)
   }
 
   // ---- RLE-compressed fixture ---------------------------------------------
@@ -115,28 +128,5 @@ object SasFixture {
       if (raw) norun(16, 13L) + "tag" + (i % 5) else "tag" + (i % 5),
       pattern
     )
-  }
-
-  def ensureRle(spark: SparkSession): Unit = synchronized {
-    val d = new java.io.File(dir)
-    if (!new java.io.File(sasRlePath).exists() || !new java.io.File(twinRlePath).exists()) {
-      d.mkdirs()
-      Sas7bdatWriter.write(sasRlePath, rleCols, rleRows, compressRle = true)
-      import spark.implicits._
-      rleRows
-        .map(r =>
-          (
-            r(0).asInstanceOf[java.lang.Double],
-            r(1).asInstanceOf[java.lang.Double],
-            r(2).asInstanceOf[java.lang.Double],
-            r(3).asInstanceOf[java.lang.Double],
-            r(4).asInstanceOf[String],
-            r(5).asInstanceOf[String]
-          )
-        )
-        .toDF("id", "z1", "z2", "z3", "tag", "pattern")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(twinRlePath)
-    }
   }
 }

@@ -12,36 +12,26 @@ import org.apache.spark.sql.functions._
   */
 object SkewFixture {
 
-  def dir(d: String): String =
-    s"/root/repo/spark-warehouse/graft_skewfix/${new java.io.File(d).getName}"
+  val Salt = "skewfix-v1"
 
-  def ensure(s: SparkSession, d: String): String = synchronized {
-    val fp = Fingerprint.of(s, s"$d/lineitem.parquet", "skewfix-v1")
-    val root = dir(d)
-    val marker = new java.io.File(s"$root/src_key")
-    val current =
-      if (marker.exists()) new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") else ""
-    if (current != fp) {
-      val f = new java.io.File(root)
-      if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-      val fact = graft.Graft
-        .table(s, d, "lineitem")
-        .select(
-          expr("CASE WHEN l_orderkey % 10 < 7 THEN 0 ELSE l_orderkey % 997 END").as("skey"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents")
-        )
-      fact.write.mode("overwrite").parquet(s"$root/skewfact.parquet")
-      s.read
-        .parquet(s"$root/skewfact.parquet")
-        .select(col("skey"))
-        .distinct()
-        .select(col("skey"), concat(lit("s"), col("skey")).as("sname"))
-        .coalesce(1)
-        .write
-        .mode("overwrite")
-        .parquet(s"$root/skewdim.parquet")
-      java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8"))
-    }
-    root
+  def dir(d: String): String = Fixture.dir("graft_skewfix", Some(d))
+
+  def ensure(s: SparkSession, d: String): String = Fixture("graft_skewfix", Some(d), Salt) { root =>
+    val fact = graft.Graft
+      .table(s, d, "lineitem")
+      .select(
+        expr("CASE WHEN l_orderkey % 10 < 7 THEN 0 ELSE l_orderkey % 997 END").as("skey"),
+        expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents")
+      )
+    fact.write.mode("overwrite").parquet(s"$root/skewfact.parquet")
+    s.read
+      .parquet(s"$root/skewfact.parquet")
+      .select(col("skey"))
+      .distinct()
+      .select(col("skey"), concat(lit("s"), col("skey")).as("sname"))
+      .coalesce(1)
+      .write
+      .mode("overwrite")
+      .parquet(s"$root/skewdim.parquet")
   }
 }

@@ -129,7 +129,7 @@ object SnappyBlock {
   * (the offset-1 overlap-copy idiom), then H again (a far match for the
   * 2-byte-offset form). */
 object SnappyFixture {
-  val dir = "/root/repo/spark-warehouse/graft_snappy"
+  val dir = Fixture.dir("graft_snappy")
   val payloadPath = s"$dir/payloads"
 
   def content(z: Long): String = {
@@ -141,15 +141,11 @@ object SnappyFixture {
   def fileBytes(z: Long): Array[Byte] =
     org.xerial.snappy.Snappy.compress(content(z).getBytes("UTF-8"))
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 200L)
-        .map(z => (z, fileBytes(z)))
-        .toDF("blob_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 200L)
+      .map(z => (z, fileBytes(z)))
+      .toDF("blob_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

@@ -388,7 +388,7 @@ object TiffPixels {
   * give LZW real growing matches (dictionaries cross the 9-bit width
   * boundary on the larger strips). */
 object TiffFixture {
-  val dir = "/root/repo/spark-warehouse/graft_tiff"
+  val dir = Fixture.dir("graft_tiff")
   val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
@@ -421,21 +421,14 @@ object TiffFixture {
   // the SURVEY row claims LZW/predictor gate coverage (review finding)
   private val Version = "v2-lzw-mm-predictor"
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    val marker = new java.io.File(s"$dir/VERSION")
-    val stale = !new java.io.File(twinPath).exists() ||
-      !marker.exists() || new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") != Version
-    if (stale) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      val r = rows
-      r.map { case (id, p, _, _, _) => (id, p) }
-        .toDF("img_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      r.map { case (id, _, w, h, c) => (id, w, h, c) }
-        .toDF("img_id", "width", "height", "compression")
-        .coalesce(1).write.mode("overwrite").parquet(twinPath)
-      java.nio.file.Files.write(marker.toPath, Version.getBytes("UTF-8"))
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, Version) {
+    import spark.implicits._
+    val r = rows
+    r.map { case (id, p, _, _, _) => (id, p) }
+      .toDF("img_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    r.map { case (id, _, w, h, c) => (id, w, h, c) }
+      .toDF("img_id", "width", "height", "compression")
+      .coalesce(1).write.mode("overwrite").parquet(twinPath)
   }
 }

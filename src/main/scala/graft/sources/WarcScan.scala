@@ -201,7 +201,7 @@ object WarcScan {
   * warcinfo record, 1 + W%4 HTTP responses (status per [[status]]), and
   * for W%3==0 a trailing HTTP request record. */
 object WarcFixture {
-  val dir = "/root/repo/spark-warehouse/graft_warc"
+  val dir = Fixture.dir("graft_warc")
   val payloadPath = s"$dir/payloads"
 
   def nResponses(w: Long): Int = 1 + (w % 4).toInt
@@ -256,16 +256,12 @@ object WarcFixture {
     recs.result().map(enc).reduce(_ ++ _)
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 200L)
-        .map(w => (w, fileBytes(w)))
-        .toDF("warc_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 200L)
+      .map(w => (w, fileBytes(w)))
+      .toDF("warc_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }
 
@@ -275,21 +271,17 @@ object WarcFixture {
   * CRC-32 + ISIZE verification and exact consumed counts) becomes the
   * conformance check on the encoder's gzip framing. */
 object WarcExportFixture {
-  val dir = "/root/repo/spark-warehouse/graft_warc_export"
+  val dir = Fixture.dir("graft_warc_export")
   val payloadPath = s"$dir/payloads"
 
   def fileBytes(w: Long): Array[Byte] =
     WarcFixture.fileBytes(w, r => Deflate.gzipCompress(r))
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 200L)
-        .map(w => (w, fileBytes(w)))
-        .toDF("warc_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 200L)
+      .map(w => (w, fileBytes(w)))
+      .toDF("warc_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

@@ -170,7 +170,7 @@ object ZipWrite {
   * = 2 + (Z+j)%4 CSV lines "Z,j,i,<Z*31+j*7+i>\n"; every second member
   * is STORED (method 0), the rest deflated. */
 object ZipFixture {
-  val dir = "/root/repo/spark-warehouse/graft_zip"
+  val dir = Fixture.dir("graft_zip")
   val payloadPath = s"$dir/payloads"
 
   def nMembers(z: Long): Int = 1 + (z % 3).toInt
@@ -198,16 +198,12 @@ object ZipFixture {
     out.toByteArray
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 200L)
-        .map(z => (z, fileBytes(z)))
-        .toDF("zip_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 200L)
+      .map(z => (z, fileBytes(z)))
+      .toDF("zip_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }
 
@@ -215,7 +211,7 @@ object ZipFixture {
   * stored/deflate alternation) written by [[ZipWrite]] with x268's
   * deflate instead of ZipOutputStream. */
 object ZipExportFixture {
-  val dir = "/root/repo/spark-warehouse/graft_zip_export"
+  val dir = Fixture.dir("graft_zip_export")
   val payloadPath = s"$dir/payloads"
 
   def fileBytes(z: Long): Array[Byte] =
@@ -227,15 +223,11 @@ object ZipExportFixture {
       )
     })
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 200L)
-        .map(z => (z, fileBytes(z)))
-        .toDF("zip_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 200L)
+      .map(z => (z, fileBytes(z)))
+      .toDF("zip_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

@@ -582,7 +582,7 @@ object ZstdFrame {
   *   z%4==3 — single-letter runs (RLE blocks)
   */
 object ZstdFixture {
-  val dir = "/root/repo/spark-warehouse/graft_zstd"
+  val dir = Fixture.dir("graft_zstd")
   val payloadPath = s"$dir/payloads"
 
   private def md5hex(s: String): String =
@@ -603,15 +603,11 @@ object ZstdFixture {
   def fileBytes(z: Long): Array[Byte] =
     com.github.luben.zstd.Zstd.compress(content(z).getBytes("UTF-8"), 3)
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!new java.io.File(s"$dir/_OK_V1").exists()) {
-      new java.io.File(dir).mkdirs()
-      import spark.implicits._
-      (0L until 200L)
-        .map(z => (z, fileBytes(z)))
-        .toDF("blob_id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(payloadPath)
-      new java.io.File(s"$dir/_OK_V1").createNewFile()
-    }
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+    import spark.implicits._
+    (0L until 200L)
+      .map(z => (z, fileBytes(z)))
+      .toDF("blob_id", "payload")
+      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
   }
 }

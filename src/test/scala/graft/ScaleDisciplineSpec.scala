@@ -2,15 +2,31 @@ package graft
 
 import graft.operators.Skew
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tests for the 100 TB design disciplines themselves: partition pruning on
   * partitioned layouts, shuffle-free bucketed joins, salted-join semantics,
   * and the typed Dataset API boundary. */
-class ScaleDisciplineSpec extends AnyFunSuite {
+class ScaleDisciplineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
   private val sf = "/root/testdata/sf0.001"
+
+  // the z-order tests lay out a private copy of the orders table, so every
+  // run builds its own `graft_zorder/<copy>` fixture (the first ensure
+  // builds, later ones hit its marker); removed after the suite
+  private val zsrc = {
+    val src = TestSpark.tempDir()
+    org.apache.commons.io.FileUtils.copyToDirectory(new java.io.File(s"$sf/orders.parquet"), new java.io.File(src))
+    src
+  }
+
+  override def afterAll(): Unit = {
+    val layout = graft.sources.DataSkipping.dir(zsrc)
+    Seq(layout, s"$layout.lock", zsrc).foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    super.afterAll()
+  }
 
   test("partitionBy layout yields partition pruning (PartitionFilters, not data filter)") {
     val dir = TestSpark.tempDir()
@@ -27,12 +43,12 @@ class ScaleDisciplineSpec extends AnyFunSuite {
   }
 
   test("z-order manifest prunes files: selective rectangle reads ≤ 1/8 of the layout") {
-    val dir = TestSpark.tempDir() + "/zorder"
-    val bounds = graft.sources.DataSkipping.ensureLayout(spark, sf, dir)
+    val bounds = graft.sources.DataSkipping.ensureLayout(spark, zsrc)
+    val dir = graft.sources.DataSkipping.dir(zsrc)
     // second ensure must be a marker hit (no rebuild): same bounds, and the
     // data files' mtimes are untouched
     val mtimes = new java.io.File(s"$dir/data").listFiles().map(f => f.getName -> f.lastModified).toMap
-    assert(graft.sources.DataSkipping.ensureLayout(spark, sf, dir) === bounds)
+    assert(graft.sources.DataSkipping.ensureLayout(spark, zsrc) === bounds)
     assert(new java.io.File(s"$dir/data").listFiles().map(f => f.getName -> f.lastModified).toMap === mtimes)
     val r = graft.sources.DataSkipping.gateRect(bounds)
     val (selected, total) = graft.sources.DataSkipping.selectFiles(spark, dir, r)
@@ -45,7 +61,7 @@ class ScaleDisciplineSpec extends AnyFunSuite {
     // correctness of the pruned scan against the full-table filter
     val pruned = graft.sources.DataSkipping.prunedScan(spark, dir, r)
     val full = graft.sources.DataSkipping
-      .dims(spark, sf)
+      .dims(spark, zsrc)
       .where(col("o_custkey").between(r.cLo, r.cHi) && col("days").between(r.dLo, r.dHi))
     assert(pruned.count() === full.count())
     assert(pruned.agg(sum("o_custkey"), sum("days")).collect()(0) === full.agg(sum("o_custkey"), sum("days")).collect()(0))
@@ -59,8 +75,8 @@ class ScaleDisciplineSpec extends AnyFunSuite {
   }
 
   test("manifest stat enrichment: KMV dictionary beats min/max on equality; null counts skip IS NOT NULL") {
-    val dir = TestSpark.tempDir() + "/zorder"
-    graft.sources.DataSkipping.ensureLayout(spark, sf, dir)
+    val dir = graft.sources.DataSkipping.dir(zsrc)
+    graft.sources.DataSkipping.ensureLayout(spark, zsrc)
     val full = graft.sources.DataSkipping
     // equality probes across scattered tag values: the dictionary must
     // never lose a row (soundness) and must open strictly fewer files
@@ -89,8 +105,8 @@ class ScaleDisciplineSpec extends AnyFunSuite {
   }
 
   test("x113 per-file Bloom: point lookup opens a handful of files, never loses a row") {
-    val dir = TestSpark.tempDir() + "/zorder"
-    graft.sources.DataSkipping.ensureLayout(spark, sf, dir)
+    val dir = graft.sources.DataSkipping.dir(zsrc)
+    graft.sources.DataSkipping.ensureLayout(spark, zsrc)
     val ds = graft.sources.DataSkipping
     val data = spark.read.parquet(s"$dir/data")
     val truth = data.groupBy("o_orderkey").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

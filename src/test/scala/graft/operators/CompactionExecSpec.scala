@@ -45,7 +45,7 @@ class CompactionExecSpec extends AnyFunSuite {
 
     // fs-level: the artifact holds exactly the planned files, each within
     // 2× target (round-robin splits the partition near-evenly)
-    val base = new java.io.File("/root/repo/spark-warehouse/graft_compacted")
+    val base = new java.io.File(graft.sources.Compaction.ensure(spark, dir))
     for ((lang, _, _, nFiles) <- got) {
       val files = new java.io.File(base, s"lang=$lang").listFiles().filter(_.getName.endsWith(".parquet"))
       assert(files.length.toLong === nFiles)

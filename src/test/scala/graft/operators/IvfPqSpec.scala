@@ -47,7 +47,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("PQ payload shrinks the searched index >= 4x (logical bytes, codebook included)") {
-    val idx = Similarity.pqEnsureGateIndex(spark, dir)
+    val idx = Similarity.ivfEnsureGateIndex(spark, dir)
     val codes = spark.read.parquet(s"$idx/pq_codes")
     val cb = spark.read.parquet(s"$idx/pq_codebooks")
     val nVec = codes.count()
@@ -71,7 +71,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("rebuild from scratch is bit-identical (integer Lloyd determinism)") {
-    val idx = Similarity.pqEnsureGateIndex(spark, dir)
+    val idx = Similarity.ivfEnsureGateIndex(spark, dir)
     def checksum(): (Long, Long) = {
       val c1 = spark.read
         .parquet(s"$idx/pq_codebooks")
@@ -86,9 +86,9 @@ class IvfPqSpec extends AnyFunSuite {
       (c1, c2)
     }
     val first = checksum()
-    // drop the marker so the next ensure call rebuilds both PQ artifacts
-    assert(new java.io.File(s"$idx/pq_src_key").delete())
-    Similarity.pqEnsureGateIndex(spark, dir)
+    // drop the marker so the next ensure call rebuilds the index and both PQ artifacts
+    assert(new java.io.File(s"$idx/src_key").delete())
+    Similarity.ivfEnsureGateIndex(spark, dir)
     assert(checksum() === first)
   }
 }

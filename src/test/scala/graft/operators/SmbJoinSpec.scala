@@ -80,4 +80,19 @@ class SmbJoinSpec extends AnyFunSuite {
       .collect()
     assert(a.sameElements(b))
   }
+
+  test("a session that finds the bucketed files already built registers them, still exchange-free") {
+    noBroadcast { s2 =>
+      val (ot, lt) = graft.sources.BucketedTables.ensure(s2, sf)
+      // external tables: dropping the catalog entries keeps the files, as
+      // a new JVM's empty catalog does
+      s2.sql(s"DROP TABLE $ot")
+      s2.sql(s"DROP TABLE $lt")
+      assert(graft.sources.BucketedTables.ensure(s2, sf) === ((ot, lt)))
+      val joined = s2.table(lt).join(s2.table(ot), col("l_orderkey") === col("o_orderkey"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange hashpartitioning"), s"re-registered tables shuffled:\n$plan")
+      assert(joined.count() === Graft.table(s2, sf, "lineitem").count())
+    }
+  }
 }

@@ -256,7 +256,7 @@ class WarehouseSpec extends AnyFunSuite {
     // appending to a committed part trips Spark's modified-file guard
     // instead of exercising the parity check): digest diverges, parity
     // flips on every row
-    val root = new java.io.File(s"/root/repo/spark-warehouse/graft_federated/${new java.io.File(dir).getName}")
+    val root = new java.io.File(graft.sources.Fixture.dir("graft_federated", Some(dir)))
     val extra = new java.io.File(new java.io.File(root, "csv"), "part-99999-extra.csv")
     val w = new java.io.FileWriter(extra)
     w.write("k,cents,status\n99,9999,Z\n"); w.close()

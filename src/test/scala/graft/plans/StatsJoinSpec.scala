@@ -105,7 +105,7 @@ class StatsJoinSpec extends AnyFunSuite {
     assert(tables.contains("lineitem") && tables.contains("customer"))
     // a poisoned marker forces a rebuild on the next ensure
     java.nio.file.Files.write(
-      new java.io.File(s"${JoinStats.dir}/src_key").toPath,
+      new java.io.File(s"${JoinStats.dir(d)}/src_key").toPath,
       "stale".getBytes("UTF-8")
     )
     JoinStats.ensure(spark, d)

@@ -75,7 +75,7 @@ class StatsSkewSpec extends AnyFunSuite {
       // no stats, no rewrite
       graft.sources.JoinStats.unload()
       try assert(!Bridge.statsSkew(skewQ)._2)
-      finally graft.sources.JoinStats.load(spark)
+      finally graft.sources.JoinStats.load(spark, graft.sources.JoinStats.dir(d))
     }
   }
 

@@ -21,7 +21,7 @@ class CowCloneSpec extends AnyFunSuite {
   test("clone commit is metadata-only and reads identical to the source snapshot") {
     CowTable.ensure(spark, sf)
     val tmp = TestSpark.tempDir() + "/clone_probe"
-    CowTable.cloneTable(spark, srcVersion = 2, dstRoot = tmp)
+    CowTable.cloneTable(spark, srcVersion = 2, dstRoot = tmp, srcRoot = CowTable.dir(sf))
     // metadata only: the clone root holds a manifest (and optional schema
     // metadata), never a data directory
     val entries = new java.io.File(tmp).listFiles().map(_.getName).toSet
@@ -31,13 +31,13 @@ class CowCloneSpec extends AnyFunSuite {
     val es = CowTable.entries(spark, 1, tmp)
     assert(es.nonEmpty)
     assert(es.forall(!_.path.startsWith(tmp)))
-    assert(rowsOf(1, tmp) === rowsOf(2, CowTable.dir))
+    assert(rowsOf(1, tmp) === rowsOf(2, CowTable.dir(sf)))
   }
 
   test("diverged clone rewrites only touched buckets; source snapshot is unchanged") {
     CowTable.ensureClone(spark, sf)
-    val srcBefore = rowsOf(2, CowTable.dir)
-    val clone = rowsOf(2, CowTable.cloneDir)
+    val srcBefore = rowsOf(2, CowTable.dir(sf))
+    val clone = rowsOf(2, CowTable.cloneDir(sf))
     // expected clone content: source v2 + upsert formula + inserts
     val expected = srcBefore.map { case (k, c) =>
       val hit = k % 113 == 0 && (k / CowTable.BucketWidth) % 11 == 4
@@ -46,17 +46,17 @@ class CowCloneSpec extends AnyFunSuite {
       .map(i => (CowTable.CloneInsertBase + i) -> (200000L + i * 11L))
     assert(clone === expected)
     // provenance: own files exactly where the delta touched
-    val es = CowTable.entries(spark, 2, CowTable.cloneDir)
+    val es = CowTable.entries(spark, 2, CowTable.cloneDir(sf))
     val touched = srcBefore.keySet
       .filter(k => k % 113 == 0 && (k / CowTable.BucketWidth) % 11 == 4)
       .map(_ / CowTable.BucketWidth) + CowTable.CloneInsertBase / CowTable.BucketWidth
     es.foreach { e =>
       assert(
-        e.path.startsWith(CowTable.cloneDir) === touched.contains(e.bucket),
+        e.path.startsWith(CowTable.cloneDir(sf)) === touched.contains(e.bucket),
         s"bucket ${e.bucket}: path ${e.path}"
       )
     }
     // the source reads identically after the clone diverged
-    assert(rowsOf(2, CowTable.dir) === srcBefore)
+    assert(rowsOf(2, CowTable.dir(sf)) === srcBefore)
   }
 }

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class CowEvoSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
-  private def root = CowEvo.dir
+  private def root = CowEvo.dir(sf)
   private val W = CowTable.BucketWidth
 
   private def contents(version: Int): Map[Long, Long] = {

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * simulated-stale and genuinely-threaded races. */
 class CowOccSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val root = "/root/repo/spark-warehouse/graft_cow_occ"
+  private val root = Fixture.scratch("graft_cow_occ")
 
   private def df(rows: Seq[(Long, Long)]) = {
     import spark.implicits._

@@ -20,7 +20,7 @@ class CowPropertySpec extends AnyFunSuite {
     import spark.implicits._
     CowTable.ensure(spark, sf)
     val base: Map[Long, Long] = CowTable
-      .read(spark, 2)
+      .read(spark, 2, CowTable.dir(sf))
       .collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents"))
       .toMap
@@ -47,18 +47,19 @@ class CowPropertySpec extends AnyFunSuite {
         CowTable.merge(
           spark, 2, v,
           changes = ups.toDF("k", "cents"),
-          deletes = dels.toDF("k")
+          deletes = dels.toDF("k"),
+          root = CowTable.dir(sf)
         )
         val expected = (base ++ ups.toMap) -- dels
         val got = CowTable
-          .read(spark, v)
+          .read(spark, v, CowTable.dir(sf))
           .collect()
           .map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents"))
           .toMap
         assert(got === expected, s"sample $i content")
         // CDC diff vs the model diff (same-value rewrites excluded)
         val gotDiff = CowTable
-          .snapshotDiff(spark, 2, v)
+          .snapshotDiff(spark, 2, v, CowTable.dir(sf))
           .collect()
           .map(r => (r.getAs[Long]("k"), r.getAs[String]("change_type"), r.getAs[Long]("old_cents"), r.getAs[Long]("new_cents")))
           .toSet
@@ -74,7 +75,7 @@ class CowPropertySpec extends AnyFunSuite {
         assert(gotDiff === expDiff, s"sample $i diff")
       } finally {
         for (n <- Seq(s"v$v", s"manifest_v$v")) {
-          val f = new java.io.File(s"${CowTable.dir}/$n")
+          val f = new java.io.File(s"${CowTable.dir(sf)}/$n")
           if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
         }
       }

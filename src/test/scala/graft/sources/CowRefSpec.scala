@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CowRefSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val root = "/root/repo/spark-warehouse/graft_cow_ref_spec"
+  private val root = Fixture.scratch("graft_cow_ref_spec")
 
   private def df(rows: Seq[(Long, Long)]) = {
     import spark.implicits._

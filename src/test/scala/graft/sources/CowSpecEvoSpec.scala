@@ -13,14 +13,14 @@ class CowSpecEvoSpec extends AnyFunSuite {
   private val se = CowSpecEvo
 
   private def contentOf(v: Int): Map[Long, Long] =
-    se.read(spark, v).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+    se.read(spark, sf, v).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
 
   test("evolution commit is metadata-only; v3 mixes both specs correctly") {
     se.ensure(spark, sf)
     // v2 = v1 manifest verbatim, and no v2 data directory exists
-    assert(se.entriesOf(spark, 2) === se.entriesOf(spark, 1))
-    assert(!new java.io.File(s"${se.root}/v2").exists())
-    val es = se.entriesOf(spark, 3)
+    assert(se.entriesOf(spark, sf, 2) === se.entriesOf(spark, sf, 1))
+    assert(!new java.io.File(s"${se.root(sf)}/v2").exists())
+    val es = se.entriesOf(spark, sf, 3)
     val (s1, s2) = es.partition(_.specId == 1)
     assert(s1.nonEmpty && s2.nonEmpty, "v3 must mix carried spec-1 and new spec-2 files")
     assert(s1.forall(_.path.contains("/v1/")), "carried entries must reference v1 files")
@@ -47,19 +47,19 @@ class CowSpecEvoSpec extends AnyFunSuite {
 
   test("key-range pruning is spec-agnostic") {
     se.ensure(spark, sf)
-    val es = se.entriesOf(spark, 3)
+    val es = se.entriesOf(spark, sf, 3)
     // a carried spec-1 bucket's block selects exactly that one file
     val c1 = es.filter(_.specId == 1).minBy(_.bucket)
-    val hit1 = se.pruneEntries(spark, 3, c1.bucket * se.W1, (c1.bucket + 1) * se.W1 - 1)
+    val hit1 = se.pruneEntries(spark, sf, 3, c1.bucket * se.W1, (c1.bucket + 1) * se.W1 - 1)
     assert(hit1.map(_.path) === Seq(c1.path))
     // a range spanning a spec boundary selects files of BOTH specs
     val c2 = es.filter(_.specId == 2).minBy(_.bucket)
     val lo = math.min(c1.minKey, c2.minKey)
     val hi = math.max(c1.maxKey, c2.maxKey)
-    val hitSpan = se.pruneEntries(spark, 3, lo, hi)
+    val hitSpan = se.pruneEntries(spark, sf, 3, lo, hi)
     assert(hitSpan.exists(_.specId == 1) && hitSpan.exists(_.specId == 2))
     // soundness: the pruned scan over any range equals the full filter
-    val full = se.read(spark, 3).where(col("k").between(lo, hi)).count()
+    val full = se.read(spark, sf, 3).where(col("k").between(lo, hi)).count()
     val pruned = spark.read
       .parquet(hitSpan.map(_.path): _*)
       .where(col("k").between(lo, hi))

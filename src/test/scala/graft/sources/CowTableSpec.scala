@@ -25,7 +25,7 @@ class CowTableSpec extends AnyFunSuite {
 
   test("merged snapshot equals a from-scratch recompute of update ∪ insert semantics") {
     CowTable.ensure(spark, sf)
-    val got = CowTable.read(spark, 2).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+    val got = CowTable.read(spark, 2, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
     val base = baseRows()
     val expected = base.map { case (k, c) =>
       val touchedBucket = (k / CowTable.BucketWidth) % 5 == 0
@@ -37,8 +37,8 @@ class CowTableSpec extends AnyFunSuite {
 
   test("manifest prune is exact: rewritten buckets = change buckets, carried entries reference v1 files") {
     CowTable.ensure(spark, sf)
-    val v1 = CowTable.manifest(spark, 1).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
-    val v2 = CowTable.manifest(spark, 2).collect()
+    val v1 = CowTable.manifest(spark, 1, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
+    val v2 = CowTable.manifest(spark, 2, CowTable.dir(sf)).collect()
     val base = baseRows()
     val expectedTouched =
       base.keySet.filter(k => k % 97 == 0 && (k / CowTable.BucketWidth) % 5 == 0).map(_ / CowTable.BucketWidth) ++
@@ -57,13 +57,13 @@ class CowTableSpec extends AnyFunSuite {
 
   test("time travel: snapshot v1 read after the merge reproduces the original table") {
     CowTable.ensure(spark, sf)
-    val got = CowTable.read(spark, 1).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+    val got = CowTable.read(spark, 1, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
     assert(got === baseRows())
   }
 
   test("min/max manifest stats bound their bucket's keys exactly") {
     CowTable.ensure(spark, sf)
-    for (r <- CowTable.manifest(spark, 2).collect()) {
+    for (r <- CowTable.manifest(spark, 2, CowTable.dir(sf)).collect()) {
       val b = r.getAs[Long]("bucket")
       assert(r.getAs[Long]("min_key") / CowTable.BucketWidth === b)
       assert(r.getAs[Long]("max_key") / CowTable.BucketWidth === b)
@@ -93,16 +93,17 @@ class CowTableSpec extends AnyFunSuite {
         spark,
         fromVersion = 2,
         toVersion = 99,
-        changes = Seq((existingKey, 77L), (freshKey, 88L)).toDF("k", "cents")
+        changes = Seq((existingKey, 77L), (freshKey, 88L)).toDF("k", "cents"),
+        root = CowTable.dir(sf)
       )
-      val got = CowTable.read(spark, 99).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+      val got = CowTable.read(spark, 99, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
       assert(got(existingKey) === 77L) // matched -> updated
       assert(got(freshKey) === 88L) // unmatched in an occupied bucket -> inserted
-      val v2 = CowTable.read(spark, 2).collect().length
+      val v2 = CowTable.read(spark, 2, CowTable.dir(sf)).collect().length
       assert(got.size === v2 + 1)
       // and the CDC diff classifies exactly these two rows as U and I
       val diff = CowTable
-        .snapshotDiff(spark, 2, 99)
+        .snapshotDiff(spark, 2, 99, CowTable.dir(sf))
         .collect()
         .map(r => (r.getAs[Long]("k"), r.getAs[String]("change_type"), r.getAs[Long]("old_cents"), r.getAs[Long]("new_cents")))
         .toSet
@@ -110,7 +111,7 @@ class CowTableSpec extends AnyFunSuite {
     } finally {
       // scratch snapshot: keep the fixed artifact at its steady v1/v2 state
       for (n <- Seq("v99", "manifest_v99")) {
-        val f = new java.io.File(s"${CowTable.dir}/$n")
+        val f = new java.io.File(s"${CowTable.dir(sf)}/$n")
         if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
       }
     }
@@ -130,7 +131,7 @@ class CowTableSpec extends AnyFunSuite {
       case (k, c) if !(k % 101 == 0 && (k / CowTable.BucketWidth) % 7 == 1) =>
         k -> (if (k % 103 == 0 && (k / CowTable.BucketWidth) % 7 == 3) 50000L + k % 1000 else c)
     }
-    val got = CowTable.read(spark, 3).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+    val got = CowTable.read(spark, 3, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
     assert(got === expected)
   }
 
@@ -138,7 +139,7 @@ class CowTableSpec extends AnyFunSuite {
     CowTable.ensure(spark, sf)
     val v2 = v2Rows()
     val got = CowTable
-      .snapshotDiff(spark, 2, 3)
+      .snapshotDiff(spark, 2, 3, CowTable.dir(sf))
       .collect()
       .map(r => (r.getAs[Long]("k"), r.getAs[String]("change_type"), r.getAs[Long]("old_cents"), r.getAs[Long]("new_cents")))
       .toSet
@@ -158,33 +159,33 @@ class CowTableSpec extends AnyFunSuite {
   test("whole-bucket delete drops the bucket from the manifest; absent-key deletes rewrite nothing") {
     import spark.implicits._
     CowTable.ensure(spark, sf)
-    val v3man = CowTable.manifest(spark, 3).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
+    val v3man = CowTable.manifest(spark, 3, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
     val noChanges = Seq.empty[(Long, Long)].toDF("k", "cents")
     try {
       // delete EVERY key of one bucket → the bucket must vanish from v98
       val victim = v3man.keySet.min
       val victimKeys = CowTable
-        .read(spark, 3)
+        .read(spark, 3, CowTable.dir(sf))
         .where(org.apache.spark.sql.functions.expr(s"k div ${CowTable.BucketWidth}L = $victim"))
         .select("k")
-      CowTable.merge(spark, 3, 98, noChanges, deletes = victimKeys)
-      val v98 = CowTable.manifest(spark, 98).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
+      CowTable.merge(spark, 3, 98, noChanges, deletes = victimKeys, root = CowTable.dir(sf))
+      val v98 = CowTable.manifest(spark, 98, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
       assert(!v98.contains(victim))
       assert(v98 === v3man - victim) // every other bucket carried by reference
       // deletes of keys no snapshot holds: nothing rewrites, all carried
-      CowTable.merge(spark, 3, 97, noChanges, deletes = Seq(20000000L, 20000001L).toDF("k"))
-      val v97 = CowTable.manifest(spark, 97).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
+      CowTable.merge(spark, 3, 97, noChanges, deletes = Seq(20000000L, 20000001L).toDF("k"), root = CowTable.dir(sf))
+      val v97 = CowTable.manifest(spark, 97, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
       assert(v97 === v3man)
       // absent KEY in a PRESENT bucket: the key probe must carry the
       // bucket untouched (advice-found: bucket presence alone used to
       // force a byte-identical rewrite under a fresh manifest path)
-      val v3keys = CowTable.read(spark, 3).select("k").collect().map(_.getLong(0)).toSet
+      val v3keys = CowTable.read(spark, 3, CowTable.dir(sf)).select("k").collect().map(_.getLong(0)).toSet
       val (pb, pbKeys) = v3keys.groupBy(_ / CowTable.BucketWidth).find(_._2.size < CowTable.BucketWidth).get
       val absentKey = (pb * CowTable.BucketWidth until (pb + 1) * CowTable.BucketWidth)
         .find(k => !pbKeys.contains(k))
         .get
-      CowTable.merge(spark, 3, 95, noChanges, deletes = Seq(absentKey).toDF("k"))
-      val v95 = CowTable.manifest(spark, 95).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
+      CowTable.merge(spark, 3, 95, noChanges, deletes = Seq(absentKey).toDF("k"), root = CowTable.dir(sf))
+      val v95 = CowTable.manifest(spark, 95, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
       assert(v95 === v3man)
       // delete-wins in a NEW bucket too (review-found): a key inserted and
       // deleted in the same merge must not survive just because its bucket
@@ -192,14 +193,15 @@ class CowTableSpec extends AnyFunSuite {
       CowTable.merge(
         spark, 3, 96,
         changes = Seq((30000000L, 5L), (30000001L, 6L)).toDF("k", "cents"),
-        deletes = Seq(30000000L).toDF("k")
+        deletes = Seq(30000000L).toDF("k"),
+        root = CowTable.dir(sf)
       )
-      val v96 = CowTable.read(spark, 96).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+      val v96 = CowTable.read(spark, 96, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
       assert(!v96.contains(30000000L))
       assert(v96(30000001L) === 6L)
     } finally {
       for (n <- Seq("v98", "manifest_v98", "v97", "manifest_v97", "v96", "manifest_v96", "v95", "manifest_v95")) {
-        val f = new java.io.File(s"${CowTable.dir}/$n")
+        val f = new java.io.File(s"${CowTable.dir(sf)}/$n")
         if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
       }
     }
@@ -207,9 +209,9 @@ class CowTableSpec extends AnyFunSuite {
 
   test("steady-state ensure is a marker read: no manifest rewrite on the second call") {
     CowTable.ensure(spark, sf)
-    val before = new java.io.File(CowTable.dir + "/manifest_v2").lastModified()
+    val before = new java.io.File(CowTable.dir(sf) + "/manifest_v2").lastModified()
     CowTable.ensure(spark, sf)
-    assert(new java.io.File(CowTable.dir + "/manifest_v2").lastModified() === before)
+    assert(new java.io.File(CowTable.dir(sf) + "/manifest_v2").lastModified() === before)
   }
 
   test("incrementally-maintained MV equals the direct v3 aggregate") {
@@ -221,7 +223,7 @@ class CowTableSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("bucket"), r.getAs[Long]("n_rows"), r.getAs[Long]("total_cents")))
       .toSet
     val direct = CowTable
-      .read(spark, 3)
+      .read(spark, 3, CowTable.dir(sf))
       .withColumn("bucket", expr(s"k div ${CowTable.BucketWidth}L"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"), sum("cents").as("t"))
@@ -236,20 +238,20 @@ class CowTableSpec extends AnyFunSuite {
   // then rebuilds the fixture from scratch for whoever runs next.
   test("executed vacuum deletes only unreachable dirs; retained snapshots survive, expired ones die") {
     CowTable.ensure(spark, sf)
-    val (orphans, all) = CowTable.vacuumPlan(spark, Seq(2, 3))
+    val (orphans, all) = CowTable.vacuumPlan(spark, Seq(2, 3), CowTable.dir(sf))
     assert(orphans.nonEmpty && orphans.size < all.size)
-    val v3Before = CowTable.read(spark, 3).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+    val v3Before = CowTable.read(spark, 3, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
     try {
       orphans.foreach(p => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
       // retained snapshots: fully readable, identical content
-      val v3After = CowTable.read(spark, 3).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+      val v3After = CowTable.read(spark, 3, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
       assert(v3After === v3Before)
-      assert(CowTable.read(spark, 2).count() > 0)
+      assert(CowTable.read(spark, 2, CowTable.dir(sf)).count() > 0)
       // expired snapshot: its rewritten-away files are gone → read fails
-      intercept[Exception] { CowTable.read(spark, 1).count() }
+      intercept[Exception] { CowTable.read(spark, 1, CowTable.dir(sf)).count() }
     } finally {
       // rebuild the artifact so later suites/gates see the steady state
-      new java.io.File(s"${CowTable.dir}/src_key").delete()
+      new java.io.File(s"${CowTable.dir(sf)}/src_key").delete()
       CowTable.ensure(spark, sf)
     }
   }

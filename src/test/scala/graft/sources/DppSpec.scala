@@ -50,8 +50,7 @@ class DppSpec extends AnyFunSuite {
   }
 
   test("partitioned layout: one directory per month, static pruning reads a strict subset") {
-    MonthStore.ensure(spark, sf)
-    val dirs = new java.io.File(s"${MonthStore.dirFor(sf)}/data")
+    val dirs = new java.io.File(s"${MonthStore.ensure(spark, sf)}/data")
       .listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("ship_month="))
     assert(dirs.length > 12) // multi-year fixture: pruning must matter

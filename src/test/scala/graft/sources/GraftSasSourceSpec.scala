@@ -25,7 +25,7 @@ class GraftSasSourceSpec extends AnyFunSuite {
   }
 
   test("parity on the RLE-compressed fixture") {
-    SasFixture.ensureRle(spark)
+    SasFixture.ensure(spark)
     val mine = spark.read.format("graft-sas7bdat").load(SasFixture.sasRlePath)
     val ref = Sas7bdat.read(spark, SasFixture.sasRlePath)
     assert(mine.schema === ref.schema)

@@ -108,7 +108,7 @@ class Sas7bdatSpec extends AnyFunSuite {
   }
 
   test("RLE fixture: compressed file round-trips and actually shrinks") {
-    SasFixture.ensureRle(spark)
+    SasFixture.ensure(spark)
     val meta = {
       val p = new org.apache.hadoop.fs.Path(SasFixture.sasRlePath)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -147,7 +147,7 @@ class Sas7bdatSpec extends AnyFunSuite {
 
   test("RDC-compressed input is rejected with a clear error") {
     // hand-flip the literal in a copy of the RLE fixture: SASYZCRL→SASYZCR2
-    SasFixture.ensureRle(spark)
+    SasFixture.ensure(spark)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(SasFixture.sasRlePath))
     val needle = "SASYZCRL".getBytes("US-ASCII")
     val idx = bytes.indices.indexWhere(i => i + 8 <= bytes.length && needle.indices.forall(j => bytes(i + j) == needle(j)))
