@@ -70,8 +70,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC").flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(1500.0)
-    // SPARK_GRAFT_BENCH_SHARD="i/k" → run the i-th of k round-robin shards
-    val shard = sys.env.get("SPARK_GRAFT_BENCH_SHARD")
     val wallStart = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - wallStart) / 1e9
     val spark = Graft.session("graft-bench")
@@ -104,25 +102,13 @@ object Bench {
       val failedField =
         if (failed.isEmpty) ""
         else failed.asScala.toSeq.sorted.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
-      val shardField = shard.map(s => s""","shard":"$s"""").getOrElse("")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"loadavg_start":$loadStart,"loadavg_end":$loadavg,"waited_sec":$waited,$jvmTelemetry$shardField$failedField$partialField}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"loadavg_start":$loadStart,"loadavg_end":$loadavg,"waited_sec":$waited,$jvmTelemetry$failedField$partialField}"""
     }
     def writeFile(line: String): Unit =
       try { val w = new java.io.PrintWriter("bench_last.json"); w.println(line); w.close() }
       catch { case _: Throwable => () }
 
-    // fresh-JVM sharding is the suite-drag instrument: k shard totals
-    // summed vs the monolith total isolate the shared-JVM tax; every
-    // query still ensures its own fixtures, so shards are independent
-    val names = {
-      val all = SparkEntry.queries.toSeq.sortBy(_._1)
-      shard match {
-        case Some(s) =>
-          val Array(i, k) = s.split("/").map(_.toInt)
-          all.zipWithIndex.collect { case (nf, idx) if idx % k == i => nf }
-        case None => all
-      }
-    }
+    val names = SparkEntry.queries.toSeq.sortBy(_._1)
     // act on the contention signal instead of just reporting it (the r7
     // driver artifact published 2-4x-inflated queries at loadavg 7.92):
     // wait out co-tenant load in bounded 15 s steps — up to 10 min, then

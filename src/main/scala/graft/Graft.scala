@@ -53,12 +53,9 @@ object Graft {
       // every post-shuffle partition's map output is under 64 MB — a
       // RUNTIME-size-aware rewrite (default 0 = off), so it removes the
       // per-partition sorts on fixture-scale joins and self-disables at
-      // 100 TB where partitions exceed the threshold. Parameterized via
-      // env for cluster deploys.
-      .config(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m")
-      )
+      // 100 TB where partitions exceed the threshold. A deploy overrides
+      // it through SPARK_GRAFT_EXTRA_CONF like any other knob.
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.Graft.table
-import graft.sources.Fixture
+import graft.sources.{Fixture, Payloads}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Multimodal column plumbing [EXT]: image/audio/video payloads as opaque
@@ -38,15 +37,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   */
 object Multimodal {
 
-  val mediaMetaSchema: StructType = StructType(
-    Seq(
-      StructField("format", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("n_frames", IntegerType)
-    )
-  )
-
   /** Attach a binary payload column (fake media bytes = UTF-8 of the text —
     * deterministic stand-in for real image/audio blobs). */
   def withPayload(docs: DataFrame): DataFrame =
@@ -69,23 +59,11 @@ object Multimodal {
 
   /** Per-partition decode: the distributed plumbing a real codec plugs into.
     * One iterator pass, no materialization of the whole partition. */
-  def decodeAll(withPayloads: DataFrame): DataFrame = {
-    val schema = StructType(
-      Seq(StructField("doc_id", LongType), StructField("n_bytes", LongType)) ++ mediaMetaSchema.fields
-    )
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    withPayloads
-      .select(col("doc_id"), col("payload"))
-      .mapPartitions { it =>
-        // real codecs would init once per partition here (e.g. decoder ctx)
-        it.map { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val meta = decodeStub(bytes)
-          Row.fromSeq(Seq(id, bytes.length.toLong) ++ meta.toSeq)
-        }
-      }(enc)
-  }
+  def decodeAll(withPayloads: DataFrame): DataFrame =
+    Payloads.decode(
+      withPayloads.select(col("doc_id"), col("payload")),
+      "doc_id BIGINT, n_bytes BIGINT, format STRING, width INT, height INT, n_frames INT"
+    )((id, bytes) => Some(Seq(Row.fromSeq(Seq(id, bytes.length.toLong) ++ decodeStub(bytes).toSeq))))
 
   /** Stubbed media transforms — the full decode → resize → frame-sample
     * chain a training-data pipeline runs over image/video columns. Real
@@ -108,71 +86,125 @@ object Multimodal {
   /** Distributed resize + frame-sample over the payload column: one
     * mapPartitions pass, one output row per sampled frame (explode shape),
     * schema declared up front. */
-  def transformMedia(withPayloads: DataFrame, w: Int = 64, h: Int = 64, everyK: Int = 4): DataFrame = {
-    val schema = StructType(
-      Seq(
-        StructField("doc_id", LongType),
-        StructField("frame_idx", IntegerType),
-        StructField("frame_bytes", LongType),
-        StructField("resized_bytes", LongType)
-      )
-    )
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    withPayloads.select(col("doc_id"), col("payload")).mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        val resized = resizeStub(bytes, w, h)
-        frameSampleStub(bytes, everyK).zipWithIndex.map { case (frame, i) =>
-          Row(id, i, frame.length.toLong, resized.length.toLong)
-        }
-      }
-    }(enc)
+  def transformMedia(withPayloads: DataFrame, w: Int = 64, h: Int = 64, everyK: Int = 4): DataFrame =
+    Payloads.decode(
+      withPayloads.select(col("doc_id"), col("payload")),
+      "doc_id BIGINT, frame_idx INT, frame_bytes BIGINT, resized_bytes BIGINT"
+    ) { (id, bytes) =>
+      val resized = resizeStub(bytes, w, h)
+      Some(frameSampleStub(bytes, everyK).zipWithIndex.map { case (frame, i) =>
+        Row(id, i, frame.length.toLong, resized.length.toLong)
+      })
+    }
+
+  /** The x33 contract every pixel gate shares: nearest-neighbor 8×8
+    * resample → position-weighted checksum. */
+  private def tileChecksum(img: graft.sources.BmpPixels.Image): Long =
+    graft.sources.BmpPixels.checksum(graft.sources.BmpPixels.resizeNearest(img, 8, 8))
+
+  /** aHash of an 8×8 tile as two 32-bit halves (neither engine touches the
+    * sign bit): bit k set iff cell gray (r+g+b) exceeds the tile mean,
+    * compared as gray·64 > Σgray — integer-exact, no division. */
+  private def aHash(tile: IndexedSeq[(Int, Int, Int)]): (Long, Long) = {
+    val grays = tile.map { case (pr, pg, pb) => (pr + pg + pb).toLong }
+    val total = grays.sum
+    var hi = 0L; var lo = 0L
+    grays.zipWithIndex.foreach { case (g0, k) =>
+      if (g0 * 64L > total) { if (k < 32) hi |= 1L << k else lo |= 1L << (k - 32) }
+    }
+    (hi, lo)
+  }
+
+  /** The codec-decode gates' shape (x198/x199/x227): each blob decoded,
+    * its length and md5 emitted. */
+  private def blobDigestScan(s: SparkSession, dir: String)(decode: Array[Byte] => Option[Array[Byte]]): DataFrame =
+    Payloads.decode(Payloads.read(s, dir), "blob_id BIGINT, n_bytes BIGINT, content_md5 STRING") { (id, b) =>
+      decode(b).map(body => Seq(Row(id, body.length.toLong, Payloads.md5Hex(body))))
+    }.orderBy("blob_id")
+
+  /** graft's own inflate and the JDK's official twin over one stream of
+    * wrapper kind 0 (gzip), 1 (zlib) or 2 (raw DEFLATE): (own, jdk). */
+  private def inflateBoth(kind: Int, b: Array[Byte]): (Option[Array[Byte]], Option[Array[Byte]]) = {
+    import graft.sources.Inflate
+    val cap = 16 << 20
+    kind match {
+      case 0 => (Inflate.gunzip(b, cap), Inflate.gunzipJdk(b))
+      case 1 => (Inflate.zlib(b, cap), Inflate.zlibJdk(b, cap))
+      case _ => (Inflate.raw(b, 0, b.length, cap).map(_.data), Inflate.rawJdk(b, 0, b.length, cap).map(_.data))
+    }
+  }
+
+  /** The zstd encode gates (x279/x280/x281/x291) over x227's content
+    * classes: `encode(strategy, data)` gives the frame and the gate's size
+    * law, strategy = id mod `nStrategies` (a column when there are several).
+    * The OFFICIAL zstd-jni must recover the content (`jni_match`; the md5 is
+    * of what it recovered) and so must graft's own x227 decoder
+    * (`self_match`). */
+  private def zstdRoundTrip(s: SparkSession, nStrategies: Int, law: String)(
+      encode: (Int, Array[Byte]) => (Array[Byte], Boolean)
+  ): DataFrame = {
+    val strategyCol = if (nStrategies > 1) "strategy BIGINT, " else ""
+    Payloads.decode(
+      Payloads.generated(s, 200)(z => graft.sources.ZstdFixture.content(z).getBytes("UTF-8")),
+      s"blob_id BIGINT, ${strategyCol}n_bytes BIGINT, content_md5 STRING, jni_match BOOLEAN, " +
+        s"self_match BOOLEAN, $law BOOLEAN"
+    ) { (z, data) =>
+      val strategy = (z % nStrategies).toInt
+      val (comp, lawHolds) = encode(strategy, data)
+      val jni =
+        try Some(com.github.luben.zstd.Zstd.decompress(comp, data.length))
+        catch { case _: com.github.luben.zstd.ZstdException => None }
+      val self = graft.sources.ZstdFrame.decode(comp)
+      val key = if (nStrategies > 1) Seq(z, strategy.toLong) else Seq(z)
+      Some(Seq(Row.fromSeq(key ++ (jni match {
+        case Some(d) =>
+          Seq(d.length.toLong, Payloads.md5Hex(d), d.sameElements(data), self.exists(_.sameElements(data)), lawHolds)
+        case None => Seq(null, null, false, false, false)
+      }))))
+    }.orderBy("blob_id")
   }
 
   /** Oracle-checkable face of the plumbing: byte length + digest of the
     * binary payload (metadata from the stub is engine-internal → tested in
     * the unit spec instead). */
 
-  /** Shared decode → 8×8 resample → checksum (+ optional aHash bit words)
-    * scan used by the x70/x100/x144/x146 PNG gates — ONE copy of the
-    * tile-hash contract (review-found triplication). Quarantined payloads
-    * emit null metric columns. */
-  private def pngTileScan(s: SparkSession, payloadPath: String, withBits: Boolean): DataFrame = {
-    val base = Seq(
-      StructField("img_id", LongType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("checksum", LongType)
-    )
-    val schema = StructType(if (withBits) base ++ Seq(StructField("hi", LongType), StructField("lo", LongType)) else base)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    s.read
-      .parquet(payloadPath)
-      .mapPartitions { it =>
-        it.map { r =>
-          val id = r.getAs[Long]("img_id")
-          graft.sources.PngPixels.decode(r.getAs[Array[Byte]]("payload")) match {
-            case Some(img) =>
-              val tile = graft.sources.BmpPixels.resizeNearest(img, 8, 8)
-              val cs = graft.sources.BmpPixels.checksum(tile)
-              if (!withBits) Row(id, img.width, img.height, cs)
-              else {
-                val grays = tile.map { case (pr, pg, pb) => (pr + pg + pb).toLong }
-                val total = grays.sum
-                var hi = 0L; var lo = 0L
-                grays.zipWithIndex.foreach { case (g0, k) =>
-                  if (g0 * 64L > total) { if (k < 32) hi |= 1L << k else lo |= 1L << (k - 32) }
-                }
-                Row(id, img.width, img.height, cs, hi, lo)
-              }
-            case None =>
-              if (!withBits) Row(id, null, null, null) else Row(id, null, null, null, null, null)
-          }
-        }
-      }(enc)
-      .orderBy("img_id")
-  }
+  /** The pixel gates' scan (x33/x71/x80/x146): decode → 8×8 resample →
+    * checksum. Quarantined payloads emit null metric columns. */
+  private def tileScan(s: SparkSession, dir: String)(
+      decode: Array[Byte] => Option[graft.sources.BmpPixels.Image]
+  ): DataFrame =
+    Payloads.decode(Payloads.read(s, dir), "img_id BIGINT, width INT, height INT, checksum BIGINT") { (id, b) =>
+      decode(b).map(img => Seq(Row(id, img.width, img.height, tileChecksum(img))))
+    }.orderBy("img_id")
+
+  /** [[tileScan]] plus a header label column that pins the decoder's
+    * dispatch (x163 TIFF compression, x168/x230 PNG kind). */
+  private def labeledTileScan(s: SparkSession, dir: String, labelCol: String)(
+      decode: Array[Byte] => Option[graft.sources.BmpPixels.Image],
+      label: Array[Byte] => Option[String]
+  ): DataFrame =
+    Payloads.decode(
+      Payloads.read(s, dir),
+      s"img_id BIGINT, width INT, height INT, $labelCol STRING, checksum BIGINT"
+    ) { (id, b) =>
+      decode(b).map(img => Seq(Row(id, img.width, img.height, label(b).orNull, tileChecksum(img))))
+    }.orderBy("img_id")
+
+  /** Shared decode → 8×8 resample → checksum + aHash bit words scan used by
+    * the x70/x100/x144/x278 PNG gates — ONE copy of the tile-hash contract
+    * (review-found triplication). Quarantined payloads emit null metric
+    * columns. */
+  private def pngTileScan(s: SparkSession, dir: String): DataFrame =
+    Payloads.decode(
+      Payloads.read(s, dir),
+      "img_id BIGINT, width INT, height INT, checksum BIGINT, hi BIGINT, lo BIGINT"
+    ) { (id, b) =>
+      graft.sources.PngPixels.decode(b).map { img =>
+        val tile = graft.sources.BmpPixels.resizeNearest(img, 8, 8)
+        val (hi, lo) = aHash(tile)
+        Seq(Row(id, img.width, img.height, graft.sources.BmpPixels.checksum(tile), hi, lo))
+      }
+    }.orderBy("img_id")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // real binary metadata extraction in the gate: PNG/JPEG/GIF/BMP headers
@@ -180,90 +212,38 @@ object Multimodal {
     // metadata parquet (the oracle never sees the binary)
     "x21_image_meta" -> ((s, _) => {
       graft.sources.ImageFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("img_id", LongType),
-          StructField("format", StringType),
-          StructField("width", IntegerType),
-          StructField("height", IntegerType),
-          StructField("n_bytes", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.ImageFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            val bytes = r.getAs[Array[Byte]]("payload")
-            val m = graft.sources.ImageMeta.parse(bytes)
-            Row(
-              r.getAs[Long]("img_id"),
-              m.map(_.format).orNull,
-              m.map(x => Int.box(x.width)).orNull,
-              m.map(x => Int.box(x.height)).orNull,
-              bytes.length.toLong
-            )
-          }
-        }(enc)
-        .orderBy("img_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.ImageFixture.dir),
+        "img_id BIGINT, format STRING, width INT, height INT, n_bytes BIGINT"
+      ) { (id, bytes) =>
+        // the byte count survives an unparseable header
+        val m = graft.sources.ImageMeta.parse(bytes)
+        Some(Seq(Row(id, m.map(_.format).orNull, m.map(x => Int.box(x.width)).orNull,
+          m.map(x => Int.box(x.height)).orNull, bytes.length.toLong)))
+      }.orderBy("img_id")
     }),
     // video face: ISO-BMFF/MP4 box walk (moov/mvhd + trak/tkhd) → track
     // dimensions + duration, hash-checked vs the twin
     "x23_video_meta" -> ((s, _) => {
       graft.sources.VideoFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("video_id", LongType),
-          StructField("width", IntegerType),
-          StructField("height", IntegerType),
-          StructField("duration_ms", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.VideoFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            val m = graft.sources.VideoMeta.parse(r.getAs[Array[Byte]]("payload"))
-            Row(
-              r.getAs[Long]("video_id"),
-              m.map(x => Int.box(x.width)).orNull,
-              m.map(x => Int.box(x.height)).orNull,
-              m.map(x => Long.box(x.durationMs)).orNull
-            )
-          }
-        }(enc)
-        .orderBy("video_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.VideoFixture.dir),
+        "video_id BIGINT, width INT, height INT, duration_ms BIGINT"
+      ) { (id, b) =>
+        graft.sources.VideoMeta.parse(b).map(m => Seq(Row(id, m.width, m.height, m.durationMs)))
+      }.orderBy("video_id")
     }),
     // audio face of the same pattern: WAV/RIFF chunk walk → sample rate,
     // channels, bit depth, arithmetic duration — hash-checked vs the twin
     "x22_audio_meta" -> ((s, _) => {
       graft.sources.AudioFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("audio_id", LongType),
-          StructField("sample_rate", IntegerType),
-          StructField("channels", IntegerType),
-          StructField("bits", IntegerType),
-          StructField("duration_ms", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.AudioFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            val m = graft.sources.AudioMeta.parse(r.getAs[Array[Byte]]("payload"))
-            Row(
-              r.getAs[Long]("audio_id"),
-              m.map(x => Int.box(x.sampleRate)).orNull,
-              m.map(x => Int.box(x.channels)).orNull,
-              m.map(x => Int.box(x.bitsPerSample)).orNull,
-              m.map(x => Long.box(x.durationMs)).orNull
-            )
-          }
-        }(enc)
-        .orderBy("audio_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.AudioFixture.dir),
+        "audio_id BIGINT, sample_rate INT, channels INT, bits INT, duration_ms BIGINT"
+      ) { (id, b) =>
+        graft.sources.AudioMeta.parse(b).map(m =>
+          Seq(Row(id, m.sampleRate, m.channels, m.bitsPerSample, m.durationMs)))
+      }.orderBy("audio_id")
     }),
     // WARC web-archive scan (x176) — the Common Crawl ingestion format
     // from the public specs (ISO 28500 records over RFC 1952 per-record
@@ -280,37 +260,16 @@ object Multimodal {
     // shards by).
     "x176_warc_scan" -> ((s, _) => {
       graft.sources.WarcFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("warc_id", LongType),
-          StructField("rec_idx", LongType),
-          StructField("warc_type", StringType),
-          StructField("target_uri", StringType),
-          StructField("http_status", LongType),
-          StructField("body_bytes", LongType),
-          StructField("body_md5", StringType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.WarcFixture.payloadPath)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { r =>
-            val id = r.getAs[Long]("warc_id")
-            graft.sources.WarcScan.parse(r.getAs[Array[Byte]]("payload")) match {
-              case Some(recs) =>
-                recs.map { rec =>
-                  md.reset()
-                  val hex = md.digest(rec.body).map(b => f"${b & 0xff}%02x").mkString
-                  Row(id, rec.recIdx, rec.warcType, rec.targetUri, rec.httpStatus,
-                    rec.body.length.toLong, hex)
-                }
-              case None => Seq(Row(id, null, null, null, null, null, null))
-            }
-          }
-        }(enc)
-        .orderBy("warc_id", "rec_idx")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.WarcFixture.dir),
+        "warc_id BIGINT, rec_idx BIGINT, warc_type STRING, target_uri STRING, http_status BIGINT, " +
+          "body_bytes BIGINT, body_md5 STRING"
+      ) { (id, b) =>
+        graft.sources.WarcScan.parse(b).map(_.map { rec =>
+          Row(id, rec.recIdx, rec.warcType, rec.targetUri, rec.httpStatus, rec.body.length.toLong,
+            Payloads.md5Hex(rec.body))
+        })
+      }.orderBy("warc_id", "rec_idx")
     }),
 
     // WARC EXPORT (x276) — the write half of the crawl transport, now
@@ -325,50 +284,24 @@ object Multimodal {
     // .warc.gz without java.util.zip on either side of the hot path.
     "x276_warc_export" -> ((s, _) => {
       graft.sources.WarcExportFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("warc_id", LongType),
-          StructField("rec_idx", LongType),
-          StructField("warc_type", StringType),
-          StructField("target_uri", StringType),
-          StructField("http_status", LongType),
-          StructField("body_bytes", LongType),
-          StructField("body_md5", StringType),
-          StructField("jdk_ok", BooleanType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.WarcExportFixture.payloadPath)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { r =>
-            val id = r.getAs[Long]("warc_id")
-            val payload = r.getAs[Array[Byte]]("payload")
-            // the official twin must walk OUR multi-member stream and
-            // recover the exact concatenated plaintext
-            val jdkOk =
-              try {
-                val g = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(payload))
-                val bos = new java.io.ByteArrayOutputStream()
-                val tmp = new Array[Byte](8192)
-                var n = g.read(tmp)
-                while (n >= 0) { bos.write(tmp, 0, n); n = g.read(tmp) }
-                graft.sources.Inflate.gunzip(payload, 64 << 20).exists(_.sameElements(bos.toByteArray))
-              } catch { case _: java.io.IOException => false }
-            graft.sources.WarcScan.parse(payload) match {
-              case Some(recs) =>
-                recs.map { rec =>
-                  md.reset()
-                  val hex = md.digest(rec.body).map(b => f"${b & 0xff}%02x").mkString
-                  Row(id, rec.recIdx, rec.warcType, rec.targetUri, rec.httpStatus,
-                    rec.body.length.toLong, hex, jdkOk)
-                }
-              case None => Seq(Row(id, null, null, null, null, null, null, false))
+      Payloads.decode(
+        Payloads.read(s, graft.sources.WarcExportFixture.dir),
+        "warc_id BIGINT, rec_idx BIGINT, warc_type STRING, target_uri STRING, http_status BIGINT, " +
+          "body_bytes BIGINT, body_md5 STRING, jdk_ok BOOLEAN"
+      ) { (id, payload) =>
+        // the official twin must walk OUR multi-member stream and
+        // recover the exact concatenated plaintext
+        val jdkOk = graft.sources.Inflate.gunzipJdk(payload).exists(jdk =>
+          graft.sources.Inflate.gunzip(payload, 64 << 20).exists(_.sameElements(jdk)))
+        Some(graft.sources.WarcScan.parse(payload) match {
+          case Some(recs) =>
+            recs.map { rec =>
+              Row(id, rec.recIdx, rec.warcType, rec.targetUri, rec.httpStatus, rec.body.length.toLong,
+                Payloads.md5Hex(rec.body), jdkOk)
             }
-          }
-        }(enc)
-        .orderBy("warc_id", "rec_idx")
+          case None => Seq(Row(id, null, null, null, null, null, null, false))
+        })
+      }.orderBy("warc_id", "rec_idx")
     }),
 
     // Snappy block decode (x198) — the ecosystem's own shuffle/Parquet
@@ -382,30 +315,7 @@ object Multimodal {
     // digest. Per-payload mapPartitions, zero shuffles before the sort.
     "x198_snappy_decode" -> ((s, _) => {
       graft.sources.SnappyFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("n_bytes", LongType),
-          StructField("content_md5", StringType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.SnappyFixture.payloadPath)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.map { r =>
-            val id = r.getAs[Long]("blob_id")
-            graft.sources.SnappyBlock.decode(r.getAs[Array[Byte]]("payload")) match {
-              case Some(body) =>
-                md.reset()
-                val hex = md.digest(body).map(b => f"${b & 0xff}%02x").mkString
-                Row(id, body.length.toLong, hex)
-              case None => Row(id, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
+      blobDigestScan(s, graft.sources.SnappyFixture.dir)(graft.sources.SnappyBlock.decode)
     }),
 
     // LZ4 block decode (x199) — Spark's DEFAULT shuffle codec read back
@@ -416,30 +326,7 @@ object Multimodal {
     // lz4-java (the x198 conformance split); same formula oracle shape.
     "x199_lz4_decode" -> ((s, _) => {
       graft.sources.Lz4Fixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("n_bytes", LongType),
-          StructField("content_md5", StringType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.Lz4Fixture.payloadPath)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.map { r =>
-            val id = r.getAs[Long]("blob_id")
-            graft.sources.Lz4Block.decode(r.getAs[Array[Byte]]("payload")) match {
-              case Some(body) =>
-                md.reset()
-                val hex = md.digest(body).map(b => f"${b & 0xff}%02x").mkString
-                Row(id, body.length.toLong, hex)
-              case None => Row(id, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
+      blobDigestScan(s, graft.sources.Lz4Fixture.dir)(graft.sources.Lz4Block.decode)
     }),
 
     // RFC 4180 CSV round-trip (x260) — the quoting edge cases the S1/S2
@@ -492,65 +379,17 @@ object Multimodal {
     // x189's zip members are additional conformance surface.
     "x264_inflate_decode" -> ((s, _) => {
       graft.sources.InflateFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("kind", LongType),
-          StructField("n_bytes", LongType),
-          StructField("content_md5", StringType),
-          StructField("jdk_match", BooleanType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.InflateFixture.payloadPath)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          def hex(b: Array[Byte]): String = { md.reset(); md.digest(b).map(x => f"${x & 0xff}%02x").mkString }
-          it.map { r =>
-            val id = r.getAs[Long]("blob_id")
-            val b = r.getAs[Array[Byte]]("payload")
-            val kind = graft.sources.InflateFixture.kind(id)
-            val cap = 16 << 20
-            val mine: Option[Array[Byte]] = kind match {
-              case 0 => graft.sources.Inflate.gunzip(b, cap)
-              case 1 => graft.sources.Inflate.zlib(b, cap)
-              case _ => graft.sources.Inflate.raw(b, 0, b.length, cap).map(_.data)
-            }
-            val jdk: Option[Array[Byte]] = kind match {
-              case 0 =>
-                try {
-                  val g = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))
-                  val bos = new java.io.ByteArrayOutputStream()
-                  val tmp = new Array[Byte](8192)
-                  var n = g.read(tmp)
-                  while (n >= 0) { bos.write(tmp, 0, n); n = g.read(tmp) }
-                  Some(bos.toByteArray)
-                } catch { case _: java.io.IOException => None }
-              case 1 =>
-                val inf = new java.util.zip.Inflater()
-                inf.setInput(b)
-                val bos = new java.io.ByteArrayOutputStream()
-                val tmp = new Array[Byte](8192)
-                try {
-                  var ok = true
-                  while (ok && !inf.finished()) {
-                    val n = inf.inflate(tmp)
-                    if (n == 0 && (inf.needsInput() || inf.needsDictionary())) ok = false
-                    else bos.write(tmp, 0, n)
-                  }
-                  if (ok) Some(bos.toByteArray) else None
-                } catch { case _: java.util.zip.DataFormatException => None } finally inf.end()
-              case _ => graft.sources.Inflate.rawJdk(b, 0, b.length, cap).map(_.data)
-            }
-            mine match {
-              case Some(d) =>
-                Row(id, kind.toLong, d.length.toLong, hex(d), jdk.exists(_.sameElements(d)))
-              case None => Row(id, kind.toLong, null, null, false)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.InflateFixture.dir),
+        "blob_id BIGINT, kind BIGINT, n_bytes BIGINT, content_md5 STRING, jdk_match BOOLEAN"
+      ) { (id, b) =>
+        val kind = graft.sources.InflateFixture.kind(id)
+        val (mine, jdk) = inflateBoth(kind, b)
+        Some(Seq(mine match {
+          case Some(d) => Row(id, kind.toLong, d.length.toLong, Payloads.md5Hex(d), jdk.exists(_.sameElements(d)))
+          case None    => Row(id, kind.toLong, null, null, false)
+        }))
+      }.orderBy("blob_id")
     }),
 
     // DEFLATE/zlib/gzip ENCODE (x268) — x264's conformance split run in
@@ -565,94 +404,36 @@ object Multimodal {
     // strategy dimension forces each block type so all three emitters are
     // load-bearing; content classes and the oracle CTE are x264's own.
     "x268_deflate_encode" -> ((s, _) => {
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("wrapper", LongType),
-          StructField("strategy", LongType),
-          StructField("n_bytes", LongType),
-          StructField("content_md5", StringType),
-          StructField("jdk_match", BooleanType),
-          StructField("self_match", BooleanType),
-          StructField("auto_min", BooleanType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      import graft.sources.{Deflate, Inflate, InflateFixture}
-      s.range(240)
-        .toDF("z")
-        .repartition(8)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          def hex(b: Array[Byte]): String = { md.reset(); md.digest(b).map(x => f"${x & 0xff}%02x").mkString }
-          def jdkDecode(wrapper: Int, comp: Array[Byte]): Option[Array[Byte]] = wrapper match {
-            case 0 =>
-              try {
-                val g = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(comp))
-                val bos = new java.io.ByteArrayOutputStream()
-                val tmp = new Array[Byte](8192)
-                var n = g.read(tmp)
-                while (n >= 0) { bos.write(tmp, 0, n); n = g.read(tmp) }
-                Some(bos.toByteArray)
-              } catch { case _: java.io.IOException => None }
-            case 1 =>
-              val inf = new java.util.zip.Inflater()
-              inf.setInput(comp)
-              val bos = new java.io.ByteArrayOutputStream()
-              val tmp = new Array[Byte](8192)
-              try {
-                var ok = true
-                while (ok && !inf.finished()) {
-                  val n = inf.inflate(tmp)
-                  bos.write(tmp, 0, n)
-                  if (n == 0 && !inf.finished() && (inf.needsInput() || inf.needsDictionary())) ok = false
-                }
-                if (ok) Some(bos.toByteArray) else None
-              } catch { case _: java.util.zip.DataFormatException => None } finally inf.end()
-            case _ => Inflate.rawJdk(comp, 0, comp.length, 16 << 20).map(_.data)
-          }
-          it.map { r =>
-            val z = r.getLong(0)
-            val data = InflateFixture.content(z).getBytes("UTF-8")
-            val wrapper = (z % 3).toInt
-            val strategy = ((z / 3) % 3).toInt
-            val allow = strategy match {
-              case 0 => Deflate.AllowStored
-              case 1 => Deflate.AllowFixed
-              case _ => Deflate.AllowAll
-            }
-            val comp = wrapper match {
-              case 0 => Deflate.gzipCompress(data, allow)
-              case 1 => Deflate.zlibCompress(data, allow)
-              case _ => Deflate.deflateRaw(data, allow)
-            }
-            val jdk = jdkDecode(wrapper, comp)
-            val self: Option[Array[Byte]] = wrapper match {
-              case 0 => Inflate.gunzip(comp, 16 << 20)
-              case 1 => Inflate.zlib(comp, 16 << 20)
-              case _ => Inflate.raw(comp, 0, comp.length, 16 << 20).map(_.data)
-            }
-            val autoLen = Deflate.deflateRaw(data).length
-            val forcedMin = Seq(Deflate.AllowStored, Deflate.AllowFixed, Deflate.AllowDynamic)
-              .map(a => Deflate.deflateRaw(data, a).length)
-              .min
-            jdk match {
-              case Some(d) =>
-                Row(
-                  z,
-                  wrapper.toLong,
-                  strategy.toLong,
-                  d.length.toLong,
-                  hex(d),
-                  d.sameElements(data),
-                  self.exists(_.sameElements(data)),
-                  autoLen <= forcedMin + 1
-                )
-              case None => Row(z, wrapper.toLong, strategy.toLong, null, null, false, false, false)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
+      import graft.sources.{Deflate, InflateFixture}
+      Payloads.decode(
+        Payloads.generated(s, 240)(z => InflateFixture.content(z).getBytes("UTF-8")),
+        "blob_id BIGINT, wrapper BIGINT, strategy BIGINT, n_bytes BIGINT, content_md5 STRING, " +
+          "jdk_match BOOLEAN, self_match BOOLEAN, auto_min BOOLEAN"
+      ) { (z, data) =>
+        val wrapper = (z % 3).toInt
+        val strategy = ((z / 3) % 3).toInt
+        val allow = strategy match {
+          case 0 => Deflate.AllowStored
+          case 1 => Deflate.AllowFixed
+          case _ => Deflate.AllowAll
+        }
+        val comp = wrapper match {
+          case 0 => Deflate.gzipCompress(data, allow)
+          case 1 => Deflate.zlibCompress(data, allow)
+          case _ => Deflate.deflateRaw(data, allow)
+        }
+        val (self, jdk) = inflateBoth(wrapper, comp)
+        val autoLen = Deflate.deflateRaw(data).length
+        val forcedMin = Seq(Deflate.AllowStored, Deflate.AllowFixed, Deflate.AllowDynamic)
+          .map(a => Deflate.deflateRaw(data, a).length)
+          .min
+        Some(Seq(jdk match {
+          case Some(d) =>
+            Row(z, wrapper.toLong, strategy.toLong, d.length.toLong, Payloads.md5Hex(d), d.sameElements(data),
+              self.exists(_.sameElements(data)), autoLen <= forcedMin + 1)
+          case None => Row(z, wrapper.toLong, strategy.toLong, null, null, false, false, false)
+        }))
+      }.orderBy("blob_id")
     }),
     // zstd ENCODE (x279) — the x268 conformance split on the modern codec:
     // the from-scratch RFC 8878 encoder (x268's LZ77 matcher, raw/RLE
@@ -666,62 +447,17 @@ object Multimodal {
     // sequences (with the spec-REQUIRED raw fallback when compressed ≥
     // regenerated — RFC 8878 §3.1.1.2), 2 = auto. Content classes and the
     // oracle CTE are x227's own formulas.
-    "x279_zstd_encode" -> ((s, _) => {
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("strategy", LongType),
-          StructField("n_bytes", LongType),
-          StructField("content_md5", StringType),
-          StructField("jni_match", BooleanType),
-          StructField("self_match", BooleanType),
-          StructField("auto_min", BooleanType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      import graft.sources.{ZstdEncode, ZstdFixture, ZstdFrame}
-      s.range(200)
-        .toDF("z")
-        .repartition(8)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          def hex(b: Array[Byte]): String = { md.reset(); md.digest(b).map(x => f"${x & 0xff}%02x").mkString }
-          def jniDecode(comp: Array[Byte], n: Int): Option[Array[Byte]] =
-            try Some(com.github.luben.zstd.Zstd.decompress(comp, n))
-            catch { case _: com.github.luben.zstd.ZstdException => None }
-          it.map { r =>
-            val z = r.getLong(0)
-            val data = ZstdFixture.content(z).getBytes("UTF-8")
-            val strategy = (z % 3).toInt
-            val allow = strategy match {
-              case 0 => ZstdEncode.AllowRaw
-              case 1 => ZstdEncode.AllowSeq
-              case _ => ZstdEncode.AllowAll
-            }
-            val comp = ZstdEncode.compress(data, allow)
-            val jni = jniDecode(comp, data.length)
-            val self = ZstdFrame.decode(comp)
-            val autoLen = ZstdEncode.compress(data).length
-            val forcedMin = Seq(ZstdEncode.AllowRaw, ZstdEncode.AllowRaw | ZstdEncode.AllowRle, ZstdEncode.AllowSeq)
-              .map(a => ZstdEncode.compress(data, a).length)
-              .min
-            jni match {
-              case Some(d) =>
-                Row(
-                  z,
-                  strategy.toLong,
-                  d.length.toLong,
-                  hex(d),
-                  d.sameElements(data),
-                  self.exists(_.sameElements(data)),
-                  autoLen <= forcedMin
-                )
-              case None => Row(z, strategy.toLong, null, null, false, false, false)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
-    }),
+    "x279_zstd_encode" -> ((s, _) =>
+      zstdRoundTrip(s, 3, "auto_min") { (strategy, data) =>
+        import graft.sources.ZstdEncode._
+        val allow = strategy match {
+          case 0 => AllowRaw
+          case 1 => AllowSeq
+          case _ => AllowAll
+        }
+        val forcedMin = Seq(AllowRaw, AllowRaw | AllowRle, AllowSeq).map(a => compress(data, a).length).min
+        (compress(data, allow), compress(data).length <= forcedMin)
+      }),
     // zstd Huffman literals (x280) — x279's remaining entropy stage: the
     // literals section cost-picks a canonical Huffman table (package-merge
     // ≤11-bit lengths, direct 4-bit weight description with the deduced
@@ -732,55 +468,12 @@ object Multimodal {
     // emitters stay load-bearing even where the cost pick would choose
     // raw); huf_le pins that enabling Huffman never loses the frame-size
     // cost pick. The md5 column is what the OFFICIAL zstd recovered.
-    "x280_zstd_huffman" -> ((s, _) => {
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("strategy", LongType),
-          StructField("n_bytes", LongType),
-          StructField("content_md5", StringType),
-          StructField("jni_match", BooleanType),
-          StructField("self_match", BooleanType),
-          StructField("huf_le", BooleanType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      import graft.sources.{ZstdEncode, ZstdFixture, ZstdFrame}
-      s.range(200)
-        .toDF("z")
-        .repartition(8)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          def hex(b: Array[Byte]): String = { md.reset(); md.digest(b).map(x => f"${x & 0xff}%02x").mkString }
-          def jniDecode(comp: Array[Byte], n: Int): Option[Array[Byte]] =
-            try Some(com.github.luben.zstd.Zstd.decompress(comp, n))
-            catch { case _: com.github.luben.zstd.ZstdException => None }
-          it.map { r =>
-            val z = r.getLong(0)
-            val data = ZstdFixture.content(z).getBytes("UTF-8")
-            val strategy = (z % 2).toInt
-            val comp = ZstdEncode.compress(data, ZstdEncode.AllowAll, forceHuf = strategy == 1)
-            val jni = jniDecode(comp, data.length)
-            val self = ZstdFrame.decode(comp)
-            val hufLe = ZstdEncode.compress(data).length <=
-              ZstdEncode.compress(data, ZstdEncode.AllowAll & ~ZstdEncode.AllowHuf).length
-            jni match {
-              case Some(d) =>
-                Row(
-                  z,
-                  strategy.toLong,
-                  d.length.toLong,
-                  hex(d),
-                  d.sameElements(data),
-                  self.exists(_.sameElements(data)),
-                  hufLe
-                )
-              case None => Row(z, strategy.toLong, null, null, false, false, false)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
-    }),
+    "x280_zstd_huffman" -> ((s, _) =>
+      zstdRoundTrip(s, 2, "huf_le") { (strategy, data) =>
+        import graft.sources.ZstdEncode._
+        (compress(data, AllowAll, forceHuf = strategy == 1),
+          compress(data).length <= compress(data, AllowAll & ~AllowHuf).length)
+      }),
     // zstd custom FSE tables (x281) — the "dynamic Huffman" analog on the
     // modern codec: per block the encoder measures the real LL/OF/ML code
     // distributions, normalizes them to a power-of-two table
@@ -790,55 +483,12 @@ object Multimodal {
     // shrinking), and cost-picks the custom section against the
     // predefined one by emitted bytes; single-symbol channels use the
     // 1-byte RLE table mode. Strategy 1 FORCES the custom-table emitters.
-    "x281_zstd_fse" -> ((s, _) => {
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("strategy", LongType),
-          StructField("n_bytes", LongType),
-          StructField("content_md5", StringType),
-          StructField("jni_match", BooleanType),
-          StructField("self_match", BooleanType),
-          StructField("fse_le", BooleanType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      import graft.sources.{ZstdEncode, ZstdFixture, ZstdFrame}
-      s.range(200)
-        .toDF("z")
-        .repartition(8)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          def hex(b: Array[Byte]): String = { md.reset(); md.digest(b).map(x => f"${x & 0xff}%02x").mkString }
-          def jniDecode(comp: Array[Byte], n: Int): Option[Array[Byte]] =
-            try Some(com.github.luben.zstd.Zstd.decompress(comp, n))
-            catch { case _: com.github.luben.zstd.ZstdException => None }
-          it.map { r =>
-            val z = r.getLong(0)
-            val data = ZstdFixture.content(z).getBytes("UTF-8")
-            val strategy = (z % 2).toInt
-            val comp = ZstdEncode.compress(data, ZstdEncode.AllowAll, forceFse = strategy == 1)
-            val jni = jniDecode(comp, data.length)
-            val self = ZstdFrame.decode(comp)
-            val fseLe = ZstdEncode.compress(data).length <=
-              ZstdEncode.compress(data, ZstdEncode.AllowAll & ~ZstdEncode.AllowFse).length
-            jni match {
-              case Some(d) =>
-                Row(
-                  z,
-                  strategy.toLong,
-                  d.length.toLong,
-                  hex(d),
-                  d.sameElements(data),
-                  self.exists(_.sameElements(data)),
-                  fseLe
-                )
-              case None => Row(z, strategy.toLong, null, null, false, false, false)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
-    }),
+    "x281_zstd_fse" -> ((s, _) =>
+      zstdRoundTrip(s, 2, "fse_le") { (strategy, data) =>
+        import graft.sources.ZstdEncode._
+        (compress(data, AllowAll, forceFse = strategy == 1),
+          compress(data).length <= compress(data, AllowAll & ~AllowFse).length)
+      }),
     // Parquet from first principles (x282) — the engine's own data plane
     // decoded with ZERO org.apache.parquet imports: Thrift compact footer,
     // RLE/bit-packed hybrid levels, PLAIN + RLE_DICTIONARY values, page
@@ -1096,44 +746,12 @@ object Multimodal {
     // rewrite is itself cost-picked because a new low OF symbol can GROW
     // a custom FSE description (spec-caught, 1 byte). rep_le pins the
     // exact-pick law.
-    "x291_zstd_repoffsets" -> ((s, _) => {
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("n_bytes", LongType),
-          StructField("content_md5", StringType),
-          StructField("jni_match", BooleanType),
-          StructField("self_match", BooleanType),
-          StructField("rep_le", BooleanType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      import graft.sources.{ZstdEncode, ZstdFixture, ZstdFrame}
-      s.range(200)
-        .toDF("z")
-        .repartition(8)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          def hex(b: Array[Byte]): String = { md.reset(); md.digest(b).map(x => f"${x & 0xff}%02x").mkString }
-          def jniDecode(comp: Array[Byte], n: Int): Option[Array[Byte]] =
-            try Some(com.github.luben.zstd.Zstd.decompress(comp, n))
-            catch { case _: com.github.luben.zstd.ZstdException => None }
-          it.map { r =>
-            val z = r.getLong(0)
-            val data = ZstdFixture.content(z).getBytes("UTF-8")
-            val comp = ZstdEncode.compress(data)
-            val jni = jniDecode(comp, data.length)
-            val self = ZstdFrame.decode(comp)
-            val repLe = comp.length <= ZstdEncode.compress(data, ZstdEncode.AllowAll & ~ZstdEncode.AllowRep).length
-            jni match {
-              case Some(d) =>
-                Row(z, d.length.toLong, hex(d), d.sameElements(data), self.exists(_.sameElements(data)), repLe)
-              case None => Row(z, null, null, false, false, false)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
-    }),
+    "x291_zstd_repoffsets" -> ((s, _) =>
+      zstdRoundTrip(s, 1, "rep_le") { (_, data) =>
+        import graft.sources.ZstdEncode._
+        val comp = compress(data)
+        (comp, comp.length <= compress(data, AllowAll & ~AllowRep).length)
+      }),
     // Multi-row-group parquet write (x292) — row groups ARE the
     // distribution grain of the format; the writer splits every 4000 rows
     // (k-sorted → disjoint k statistics windows, the layout x124-style
@@ -1201,75 +819,52 @@ object Multimodal {
     // back and the OFFICIAL Apache Avro library must accept every file
     // and agree cell-for-cell (`jdk_ok`). Codec alternates null/deflate.
     "x297_avro_export" -> ((s, _) => {
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("codec", StringType),
-          StructField("n_rows", LongType),
-          StructField("sum_id", LongType),
-          StructField("sum_opt", LongType),
-          StructField("n_null", LongType),
-          StructField("sum_cents", LongType),
-          StructField("names_md5", StringType),
-          StructField("jdk_ok", BooleanType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
       import graft.sources.{AvroFixture, AvroScan}
-      s.range(200)
-        .toDF("z")
-        .repartition(8)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.map { r =>
-            val z = r.getLong(0)
-            val bytes = AvroFixture.fileBytes(z)
-            AvroScan.decode(bytes) match {
-              case Some(data) =>
-                val idx = data.fields.map(_.name).zipWithIndex.toMap
-                val rs = data.rows
-                val n = rs.length.toLong
-                val sumId = rs.map(_(idx("id")).asInstanceOf[Long]).sum
-                val opts = rs.map(_(idx("opt")))
-                val sumOpt = opts.collect { case v: Long => v }.sum
-                val nNull = opts.count(_ == null).toLong
-                val sumCents = rs.map(r0 => math.round(r0(idx("val")).asInstanceOf[Double] * 100)).sum
-                md.reset()
-                val namesMd5 = md
-                  .digest(rs.map(_(idx("name")).asInstanceOf[String]).mkString("|").getBytes("UTF-8"))
-                  .map(b => f"${b & 0xff}%02x")
-                  .mkString
-                // official Apache Avro reader over OUR bytes, cell-for-cell
-                val jdkOk =
-                  try {
-                    val rdr = new org.apache.avro.file.DataFileReader[org.apache.avro.generic.GenericRecord](
-                      new org.apache.avro.file.SeekableByteArrayInput(bytes),
-                      new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]()
-                    )
-                    try {
-                      var ok = true
-                      var i = 0
-                      while (rdr.hasNext) {
-                        val rec = rdr.next()
-                        val src = rs(i)
-                        ok &= rec.get("id").asInstanceOf[Long] == src(idx("id")).asInstanceOf[Long]
-                        ok &= rec.get("name").toString == src(idx("name")).asInstanceOf[String]
-                        ok &= rec.get("val").asInstanceOf[Double] == src(idx("val")).asInstanceOf[Double]
-                        ok &= (rec.get("opt") == null) == (src(idx("opt")) == null)
-                        if (rec.get("opt") != null)
-                          ok &= rec.get("opt").asInstanceOf[Long] == src(idx("opt")).asInstanceOf[Long]
-                        ok &= rec.get("flag").asInstanceOf[Boolean] == src(idx("flag")).asInstanceOf[Boolean]
-                        i += 1
-                      }
-                      ok && i == rs.length
-                    } finally rdr.close()
-                  } catch { case _: Exception => false }
-                Row(z, AvroFixture.codec(z), n, sumId, sumOpt, nNull, sumCents, namesMd5, jdkOk)
-              case None => Row(z, AvroFixture.codec(z), null, null, null, null, null, null, false)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
+      Payloads.decode(
+        Payloads.generated(s, 200)(AvroFixture.fileBytes),
+        "blob_id BIGINT, codec STRING, n_rows BIGINT, sum_id BIGINT, sum_opt BIGINT, n_null BIGINT, " +
+          "sum_cents BIGINT, names_md5 STRING, jdk_ok BOOLEAN"
+      ) { (z, bytes) =>
+        Some(Seq(AvroScan.decode(bytes) match {
+          case Some(data) =>
+            val idx = data.fields.map(_.name).zipWithIndex.toMap
+            val rs = data.rows
+            val n = rs.length.toLong
+            val sumId = rs.map(_(idx("id")).asInstanceOf[Long]).sum
+            val opts = rs.map(_(idx("opt")))
+            val sumOpt = opts.collect { case v: Long => v }.sum
+            val nNull = opts.count(_ == null).toLong
+            val sumCents = rs.map(r0 => math.round(r0(idx("val")).asInstanceOf[Double] * 100)).sum
+            val namesMd5 = Payloads.md5Hex(rs.map(_(idx("name")).asInstanceOf[String]).mkString("|").getBytes("UTF-8"))
+            // official Apache Avro reader over OUR bytes, cell-for-cell
+            val jdkOk =
+              try {
+                val rdr = new org.apache.avro.file.DataFileReader[org.apache.avro.generic.GenericRecord](
+                  new org.apache.avro.file.SeekableByteArrayInput(bytes),
+                  new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]()
+                )
+                try {
+                  var ok = true
+                  var i = 0
+                  while (rdr.hasNext) {
+                    val rec = rdr.next()
+                    val src = rs(i)
+                    ok &= rec.get("id").asInstanceOf[Long] == src(idx("id")).asInstanceOf[Long]
+                    ok &= rec.get("name").toString == src(idx("name")).asInstanceOf[String]
+                    ok &= rec.get("val").asInstanceOf[Double] == src(idx("val")).asInstanceOf[Double]
+                    ok &= (rec.get("opt") == null) == (src(idx("opt")) == null)
+                    if (rec.get("opt") != null)
+                      ok &= rec.get("opt").asInstanceOf[Long] == src(idx("opt")).asInstanceOf[Long]
+                    ok &= rec.get("flag").asInstanceOf[Boolean] == src(idx("flag")).asInstanceOf[Boolean]
+                    i += 1
+                  }
+                  ok && i == rs.length
+                } finally rdr.close()
+              } catch { case _: Exception => false }
+            Row(z, AvroFixture.codec(z), n, sumId, sumOpt, nNull, sumCents, namesMd5, jdkOk)
+          case None => Row(z, AvroFixture.codec(z), null, null, null, null, null, null, false)
+        }))
+      }.orderBy("blob_id")
     }),
     // ORC from first principles (x299) — the x282 move on the OTHER
     // columnar format: x106's official-writer fixture (Spark's ORC sink,
@@ -1493,69 +1088,47 @@ object Multimodal {
     // a validity story, not a ratio story) + the CRC. The official
     // library must accept every emitted file cell-for-cell.
     "x303_avro_snappy" -> ((s, _) => {
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("n_rows", LongType),
-          StructField("sum_id", LongType),
-          StructField("sum_opt", LongType),
-          StructField("n_null", LongType),
-          StructField("sum_cents", LongType),
-          StructField("names_md5", StringType),
-          StructField("jdk_ok", BooleanType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
       import graft.sources.{AvroFixture, AvroScan, AvroWrite}
-      s.range(200)
-        .toDF("z")
-        .repartition(8)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.map { r =>
-            val z = r.getLong(0)
-            val bytes = AvroWrite.write(AvroFixture.fields, AvroFixture.rows(z), "snappy")
-            AvroScan.decode(bytes) match {
-              case Some(data) =>
-                val idx = data.fields.map(_.name).zipWithIndex.toMap
-                val rs = data.rows
-                val opts = rs.map(_(idx("opt")))
-                md.reset()
-                val namesMd5 = md
-                  .digest(rs.map(_(idx("name")).asInstanceOf[String]).mkString("|").getBytes("UTF-8"))
-                  .map(b => f"${b & 0xff}%02x")
-                  .mkString
-                val jdkOk =
-                  try {
-                    val rdr = new org.apache.avro.file.DataFileReader[org.apache.avro.generic.GenericRecord](
-                      new org.apache.avro.file.SeekableByteArrayInput(bytes),
-                      new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]()
-                    )
-                    try {
-                      var i = 0
-                      var ok = true
-                      while (rdr.hasNext) {
-                        ok &= rdr.next().get("id").asInstanceOf[Long] == rs(i)(idx("id")).asInstanceOf[Long]
-                        i += 1
-                      }
-                      ok && i == rs.length
-                    } finally rdr.close()
-                  } catch { case _: Exception => false }
-                Row(
-                  z,
-                  rs.length.toLong,
-                  rs.map(_(idx("id")).asInstanceOf[Long]).sum,
-                  opts.collect { case v: Long => v }.sum,
-                  opts.count(_ == null).toLong,
-                  rs.map(r0 => math.round(r0(idx("val")).asInstanceOf[Double] * 100)).sum,
-                  namesMd5,
-                  jdkOk
+      Payloads.decode(
+        Payloads.generated(s, 200)(z => AvroWrite.write(AvroFixture.fields, AvroFixture.rows(z), "snappy")),
+        "blob_id BIGINT, n_rows BIGINT, sum_id BIGINT, sum_opt BIGINT, n_null BIGINT, sum_cents BIGINT, " +
+          "names_md5 STRING, jdk_ok BOOLEAN"
+      ) { (z, bytes) =>
+        Some(Seq(AvroScan.decode(bytes) match {
+          case Some(data) =>
+            val idx = data.fields.map(_.name).zipWithIndex.toMap
+            val rs = data.rows
+            val opts = rs.map(_(idx("opt")))
+            val namesMd5 = Payloads.md5Hex(rs.map(_(idx("name")).asInstanceOf[String]).mkString("|").getBytes("UTF-8"))
+            val jdkOk =
+              try {
+                val rdr = new org.apache.avro.file.DataFileReader[org.apache.avro.generic.GenericRecord](
+                  new org.apache.avro.file.SeekableByteArrayInput(bytes),
+                  new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]()
                 )
-              case None => Row(z, null, null, null, null, null, null, false)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
+                try {
+                  var i = 0
+                  var ok = true
+                  while (rdr.hasNext) {
+                    ok &= rdr.next().get("id").asInstanceOf[Long] == rs(i)(idx("id")).asInstanceOf[Long]
+                    i += 1
+                  }
+                  ok && i == rs.length
+                } finally rdr.close()
+              } catch { case _: Exception => false }
+            Row(
+              z,
+              rs.length.toLong,
+              rs.map(_(idx("id")).asInstanceOf[Long]).sum,
+              opts.collect { case v: Long => v }.sum,
+              opts.count(_ == null).toLong,
+              rs.map(r0 => math.round(r0(idx("val")).asInstanceOf[Double] * 100)).sum,
+              namesMd5,
+              jdkOk
+            )
+          case None => Row(z, null, null, null, null, null, null, false)
+        }))
+      }.orderBy("blob_id")
     }),
     // DataSource V2 face of the scratch parquet reader (x304, r10): the
     // same driver-generated table read through
@@ -1586,8 +1159,8 @@ object Multimodal {
     // diverges the hash. The write runs live on every invocation — the
     // sink IS the operator under test (x286's fixture-guard pattern
     // deliberately not applied).
-    "x305_dsv2_write" -> ((s, _) => {
-      val outDir = s"${Fixture.root}/graft_pq_dsv2"
+    "x305_dsv2_write" -> ((s, d) => {
+      val outDir = Fixture.dir("graft_pq_dsv2", Some(d))
       val src = s
         .range(20000L)
         .select(
@@ -1649,8 +1222,8 @@ object Multimodal {
     // partition-value encoding, AND the data bytes are all verified by an
     // independent implementation. GraftParquetIoSpec additionally pins
     // Spark-readback parity, null partitions, and %XX value escaping.
-    "x307_dsv2_partition_write" -> ((s, _) => {
-      val outDir = s"${Fixture.root}/graft_pq_dsv2_part"
+    "x307_dsv2_partition_write" -> ((s, d) => {
+      val outDir = Fixture.dir("graft_pq_dsv2_part", Some(d))
       val src = s
         .range(12000L)
         .select(
@@ -1672,30 +1245,7 @@ object Multimodal {
     }),
     "x227_zstd_decode" -> ((s, _) => {
       graft.sources.ZstdFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("blob_id", LongType),
-          StructField("n_bytes", LongType),
-          StructField("content_md5", StringType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.ZstdFixture.payloadPath)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.map { r =>
-            val id = r.getAs[Long]("blob_id")
-            graft.sources.ZstdFrame.decode(r.getAs[Array[Byte]]("payload")) match {
-              case Some(body) =>
-                md.reset()
-                val hex = md.digest(body).map(b => f"${b & 0xff}%02x").mkString
-                Row(id, body.length.toLong, hex)
-              case None => Row(id, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("blob_id")
+      blobDigestScan(s, graft.sources.ZstdFixture.dir)(graft.sources.ZstdFrame.decode)
     }),
 
     // DSv2 HIVE-PARTITIONED read (x311, r11): the read half of x307 —
@@ -1711,7 +1261,7 @@ object Multimodal {
     // exercises the %20 escaping round-trip); values are hash-checked
     // against DuckDB computing the same aggregate from the source table.
     "x311_dsv2_hive_read" -> ((s, _dir) => {
-      val outDir = s"${Fixture.root}/graft_pq_hive_read"
+      val outDir = Fixture.scratch("graft_pq_hive_read")
       graft.Graft
         .table(s, _dir, "orders")
         .select(
@@ -1756,7 +1306,7 @@ object Multimodal {
     // come from the zero-shuffle execution) and returned as a local
     // frame; DuckDB recomputes the join from the source table.
     "x312_dsv2_spj" -> ((s, _dir) => {
-      val base = s"${Fixture.root}/graft_pq_spj"
+      val base = Fixture.scratch("graft_pq_spj")
       val orders = graft.Graft.table(s, _dir, "orders")
       orders
         .select(
@@ -1821,7 +1371,7 @@ object Multimodal {
     // "scan only the partitions the dimension filter selects" with no
     // partition literal ever written by hand.
     "x313_dsv2_runtime_prune" -> ((s, _dir) => {
-      val base = s"${Fixture.root}/graft_pq_dpp"
+      val base = Fixture.scratch("graft_pq_dpp")
       val orders = graft.Graft.table(s, _dir, "orders")
       orders
         .select(
@@ -1862,31 +1412,14 @@ object Multimodal {
     // six fields from the fixture formulas; structural lies quarantine.
     "x197_exif_meta" -> ((s, _) => {
       graft.sources.ExifFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("img_id", LongType),
-          StructField("byte_order", StringType),
-          StructField("orientation", LongType),
-          StructField("make", StringType),
-          StructField("width", LongType),
-          StructField("height", LongType),
-          StructField("dt_original", StringType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.ExifFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            val id = r.getAs[Long]("img_id")
-            graft.sources.ExifMeta.parse(r.getAs[Array[Byte]]("payload")) match {
-              case Some(m) =>
-                Row(id, m.byteOrder, m.orientation.toLong, m.make, m.width, m.height, m.dtOriginal)
-              case None => Row(id, null, null, null, null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("img_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.ExifFixture.dir),
+        "img_id BIGINT, byte_order STRING, orientation BIGINT, make STRING, width BIGINT, height BIGINT, " +
+          "dt_original STRING"
+      ) { (id, b) =>
+        graft.sources.ExifMeta.parse(b).map(m =>
+          Seq(Row(id, m.byteOrder, m.orientation.toLong, m.make, m.width, m.height, m.dtOriginal)))
+      }.orderBy("img_id")
     }),
 
     // Ogg container walk (x190, RFC 3533) — the paged stream container
@@ -1904,32 +1437,15 @@ object Multimodal {
     // is what makes Ogg split-friendly at scale.
     "x190_ogg_scan" -> ((s, _) => {
       graft.sources.OggFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("ogg_id", LongType),
-          StructField("packet_idx", LongType),
-          StructField("n_bytes", LongType),
-          StructField("checksum", LongType),
-          StructField("granule", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.OggFixture.payloadPath)
-        .mapPartitions { it =>
-          it.flatMap { r =>
-            val id = r.getAs[Long]("ogg_id")
-            graft.sources.OggPages.parse(r.getAs[Array[Byte]]("payload")) match {
-              case Some(pks) =>
-                pks.map { p =>
-                  val ck = p.bytes.zipWithIndex.map { case (b, i) => (i + 1).toLong * (b & 0xff) }.sum
-                  Row(id, p.idx, p.bytes.length.toLong, ck, p.granule)
-                }
-              case None => Seq(Row(id, null, null, null, null))
-            }
-          }
-        }(enc)
-        .orderBy("ogg_id", "packet_idx")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.OggFixture.dir),
+        "ogg_id BIGINT, packet_idx BIGINT, n_bytes BIGINT, checksum BIGINT, granule BIGINT"
+      ) { (id, b) =>
+        graft.sources.OggPages.parse(b).map(_.map { p =>
+          val ck = p.bytes.zipWithIndex.map { case (b, i) => (i + 1).toLong * (b & 0xff) }.sum
+          Row(id, p.idx, p.bytes.length.toLong, ck, p.granule)
+        })
+      }.orderBy("ogg_id", "packet_idx")
     }),
 
     // ZIP archive scan (x189) — the bulk-delivery container of the data
@@ -1946,35 +1462,14 @@ object Multimodal {
     // shards by (the x114 split-planning idea on archives).
     "x189_zip_scan" -> ((s, _) => {
       graft.sources.ZipFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("zip_id", LongType),
-          StructField("member_idx", LongType),
-          StructField("name", StringType),
-          StructField("method", LongType),
-          StructField("uncomp_bytes", LongType),
-          StructField("content_md5", StringType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.ZipFixture.payloadPath)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { r =>
-            val id = r.getAs[Long]("zip_id")
-            graft.sources.ZipScan.parse(r.getAs[Array[Byte]]("payload")) match {
-              case Some(ms) =>
-                ms.map { m =>
-                  md.reset()
-                  val hex = md.digest(m.body).map(b => f"${b & 0xff}%02x").mkString
-                  Row(id, m.idx, m.name, m.method.toLong, m.uncompBytes, hex)
-                }
-              case None => Seq(Row(id, null, null, null, null, null))
-            }
-          }
-        }(enc)
-        .orderBy("zip_id", "member_idx")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.ZipFixture.dir),
+        "zip_id BIGINT, member_idx BIGINT, name STRING, method BIGINT, uncomp_bytes BIGINT, content_md5 STRING"
+      ) { (id, b) =>
+        graft.sources.ZipScan.parse(b).map(_.map { m =>
+          Row(id, m.idx, m.name, m.method.toLong, m.uncompBytes, Payloads.md5Hex(m.body))
+        })
+      }.orderBy("zip_id", "member_idx")
     }),
 
     // ZIP export (x277) — x276's move on the second container: the x189
@@ -1985,55 +1480,35 @@ object Multimodal {
     // the EOCD) with the official ZipInputStream as the per-file twin.
     "x277_zip_export" -> ((s, _) => {
       graft.sources.ZipExportFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("zip_id", LongType),
-          StructField("member_idx", LongType),
-          StructField("name", StringType),
-          StructField("method", LongType),
-          StructField("uncomp_bytes", LongType),
-          StructField("content_md5", StringType),
-          StructField("jdk_ok", BooleanType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.ZipExportFixture.payloadPath)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { r =>
-            val id = r.getAs[Long]("zip_id")
-            val payload = r.getAs[Array[Byte]]("payload")
-            val scanned = graft.sources.ZipScan.parse(payload)
-            // official twin: ZipInputStream must stream the same members
-            val jdkOk =
-              try {
-                val zi = new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(payload))
-                val tmp = new Array[Byte](8192)
-                val got = Iterator
-                  .continually(zi.getNextEntry)
-                  .takeWhile(_ != null)
-                  .map { e =>
-                    val bos = new java.io.ByteArrayOutputStream()
-                    var n = zi.read(tmp)
-                    while (n >= 0) { bos.write(tmp, 0, n); n = zi.read(tmp) }
-                    (e.getName, bos.toByteArray.toSeq)
-                  }
-                  .toVector
-                scanned.exists(ms => ms.map(m => (m.name, m.body.toSeq)) == got)
-              } catch { case _: Exception => false }
-            scanned match {
-              case Some(ms) =>
-                ms.map { m =>
-                  md.reset()
-                  val hex = md.digest(m.body).map(b => f"${b & 0xff}%02x").mkString
-                  Row(id, m.idx, m.name, m.method.toLong, m.uncompBytes, hex, jdkOk)
-                }
-              case None => Seq(Row(id, null, null, null, null, null, false))
-            }
-          }
-        }(enc)
-        .orderBy("zip_id", "member_idx")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.ZipExportFixture.dir),
+        "zip_id BIGINT, member_idx BIGINT, name STRING, method BIGINT, uncomp_bytes BIGINT, content_md5 STRING, " +
+          "jdk_ok BOOLEAN"
+      ) { (id, payload) =>
+        val scanned = graft.sources.ZipScan.parse(payload)
+        // official twin: ZipInputStream must stream the same members
+        val jdkOk =
+          try {
+            val zi = new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(payload))
+            val tmp = new Array[Byte](8192)
+            val got = Iterator
+              .continually(zi.getNextEntry)
+              .takeWhile(_ != null)
+              .map { e =>
+                val bos = new java.io.ByteArrayOutputStream()
+                var n = zi.read(tmp)
+                while (n >= 0) { bos.write(tmp, 0, n); n = zi.read(tmp) }
+                (e.getName, bos.toByteArray.toSeq)
+              }
+              .toVector
+            scanned.exists(ms => ms.map(m => (m.name, m.body.toSeq)) == got)
+          } catch { case _: Exception => false }
+        Some(scanned match {
+          case Some(ms) =>
+            ms.map(m => Row(id, m.idx, m.name, m.method.toLong, m.uncompBytes, Payloads.md5Hex(m.body), jdkOk))
+          case None => Seq(Row(id, null, null, null, null, null, false))
+        })
+      }.orderBy("zip_id", "member_idx")
     }),
 
     // HTML visible-text extraction (x177) — the boilerplate-strip step
@@ -2050,35 +1525,18 @@ object Multimodal {
     // class); zero shuffles before the output sort.
     "x177_html_extract" -> ((s, _) => {
       graft.sources.WarcFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("warc_id", LongType),
-          StructField("rec_idx", LongType),
-          StructField("n_chars", LongType),
-          StructField("n_words", LongType),
-          StructField("text_md5", StringType),
-          StructField("text", StringType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.WarcFixture.payloadPath)
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { r =>
-            val id = r.getAs[Long]("warc_id")
-            graft.sources.WarcScan.parse(r.getAs[Array[Byte]]("payload")).toSeq.flatten
-              .filter(rec => rec.warcType == "response" && rec.httpStatus == 200L)
-              .map { rec =>
-                val text = graft.sources.HtmlText.extract(new String(rec.body, "ISO-8859-1"))
-                val words = if (text.isEmpty) 0L else text.split(" ").length.toLong
-                md.reset()
-                val hex = md.digest(text.getBytes("ISO-8859-1")).map(b => f"${b & 0xff}%02x").mkString
-                Row(id, rec.recIdx, text.length.toLong, words, hex, text)
-              }
-          }
-        }(enc)
-        .orderBy("warc_id", "rec_idx")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.WarcFixture.dir),
+        "warc_id BIGINT, rec_idx BIGINT, n_chars BIGINT, n_words BIGINT, text_md5 STRING, text STRING"
+      ) { (id, b) =>
+        Some(graft.sources.WarcScan.parse(b).toSeq.flatten
+          .filter(rec => rec.warcType == "response" && rec.httpStatus == 200L)
+          .map { rec =>
+            val text = graft.sources.HtmlText.extract(new String(rec.body, "ISO-8859-1"))
+            val words = if (text.isEmpty) 0L else text.split(" ").length.toLong
+            Row(id, rec.recIdx, text.length.toLong, words, Payloads.md5Hex(text.getBytes("ISO-8859-1")), text)
+          })
+      }.orderBy("warc_id", "rec_idx")
     }),
 
     // REAL MP3 container parse in the gate: ID3v2 synchsafe skip → frame
@@ -2088,31 +1546,12 @@ object Multimodal {
     // frame-length computation desynchronizes → nulls → hash flip.
     "x88_mp3_meta" -> ((s, _) => {
       graft.sources.MpegFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("audio_id", LongType),
-          StructField("n_frames", LongType),
-          StructField("channels", IntegerType),
-          StructField("kbps_sum", LongType),
-          StructField("duration_ms", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.MpegFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            val m = graft.sources.MpegAudio.parse(r.getAs[Array[Byte]]("payload"))
-            Row(
-              r.getAs[Long]("audio_id"),
-              m.map(x => Long.box(x.nFrames)).orNull,
-              m.map(x => Int.box(x.channels)).orNull,
-              m.map(x => Long.box(x.kbpsSum)).orNull,
-              m.map(x => Long.box(x.durationMs)).orNull
-            )
-          }
-        }(enc)
-        .orderBy("audio_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.MpegFixture.dir),
+        "audio_id BIGINT, n_frames BIGINT, channels INT, kbps_sum BIGINT, duration_ms BIGINT"
+      ) { (id, b) =>
+        graft.sources.MpegAudio.parse(b).map(m => Seq(Row(id, m.nFrames, m.channels, m.kbpsSum, m.durationMs)))
+      }.orderBy("audio_id")
     }),
     // REAL H.264 bitstream parse in the gate: Annex-B start-code walk →
     // NAL census → emulation-prevention strip → Exp-Golomb SPS decode
@@ -2128,61 +1567,22 @@ object Multimodal {
     // split table (the x89 twin pattern).
     "x114_gop_index" -> ((s, _) => {
       graft.sources.H264GopFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("video_id", LongType),
-          StructField("gop_idx", LongType),
-          StructField("gop_offset", LongType),
-          StructField("n_slices", LongType),
-          StructField("gop_bytes", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.H264GopFixture.payloadPath)
-        .mapPartitions { it =>
-          it.flatMap { r =>
-            val id = r.getAs[Long]("video_id")
-            graft.sources.H264Meta.gopIndex(r.getAs[Array[Byte]]("payload")) match {
-              case Some(gops) =>
-                gops.map(g => Row(id, g.gopIdx, g.offset, g.nSlices, g.nBytes))
-              case None => Seq(Row(id, null, null, null, null))
-            }
-          }
-        }(enc)
-        .orderBy("video_id", "gop_idx")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.H264GopFixture.dir),
+        "video_id BIGINT, gop_idx BIGINT, gop_offset BIGINT, n_slices BIGINT, gop_bytes BIGINT"
+      ) { (id, b) =>
+        graft.sources.H264Meta.gopIndex(b).map(_.map(g => Row(id, g.gopIdx, g.offset, g.nSlices, g.nBytes)))
+      }.orderBy("video_id", "gop_idx")
     }),
     "x89_h264_meta" -> ((s, _) => {
       graft.sources.H264Fixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("video_id", LongType),
-          StructField("width", IntegerType),
-          StructField("height", IntegerType),
-          StructField("profile", IntegerType),
-          StructField("level", IntegerType),
-          StructField("n_nals", LongType),
-          StructField("n_slices", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.H264Fixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            val m = graft.sources.H264Meta.parse(r.getAs[Array[Byte]]("payload"))
-            Row(
-              r.getAs[Long]("video_id"),
-              m.map(x => Int.box(x.width)).orNull,
-              m.map(x => Int.box(x.height)).orNull,
-              m.map(x => Int.box(x.profile)).orNull,
-              m.map(x => Int.box(x.level)).orNull,
-              m.map(x => Long.box(x.nNals.toLong)).orNull,
-              m.map(x => Long.box(x.nSlices.toLong)).orNull
-            )
-          }
-        }(enc)
-        .orderBy("video_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.H264Fixture.dir),
+        "video_id BIGINT, width INT, height INT, profile INT, level INT, n_nals BIGINT, n_slices BIGINT"
+      ) { (id, b) =>
+        graft.sources.H264Meta.parse(b).map(m =>
+          Seq(Row(id, m.width, m.height, m.profile, m.level, m.nNals.toLong, m.nSlices.toLong)))
+      }.orderBy("video_id")
     }),
     // REAL pixel decode + resize in the gate: 24bpp BMP payload bytes →
     // pixel array → nearest-neighbor 8×8 resample → position-weighted
@@ -2193,30 +1593,7 @@ object Multimodal {
     // over the deflate-compressed path (PNG).
     "x33_bmp_decode_resize" -> ((s, _) => {
       graft.sources.BmpFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("img_id", LongType),
-          StructField("width", IntegerType),
-          StructField("height", IntegerType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.BmpFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            // undecodable payloads yield null metrics (quarantine-friendly),
-            // never a task-killing exception — same discipline as x21/x22
-            graft.sources.BmpPixels.decode(r.getAs[Array[Byte]]("payload")) match {
-              case Some(img) =>
-                val cs = graft.sources.BmpPixels.checksum(graft.sources.BmpPixels.resizeNearest(img, 8, 8))
-                Row(r.getAs[Long]("img_id"), img.width, img.height, cs)
-              case None => Row(r.getAs[Long]("img_id"), null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("img_id")
+      tileScan(s, graft.sources.BmpFixture.dir)(graft.sources.BmpPixels.decode)
     }),
     // REAL compressed-image decode in the gate: PNG payload bytes →
     // chunk walk (CRC32-verified) → zlib inflate of the IDAT stream →
@@ -2228,7 +1605,7 @@ object Multimodal {
     // of PNG — so a match proves the full decode chain end-to-end.
     "x70_png_decode" -> ((s, _) => {
       graft.sources.PngFixture.ensure(s)
-      pngTileScan(s, graft.sources.PngFixture.payloadPath, withBits = true)
+      pngTileScan(s, graft.sources.PngFixture.dir)
     }),
     // PNG export (x278) — the image write path with ZERO java.util.zip:
     // scanline filtering (all five filter WRITERS cycling per row) + the
@@ -2239,7 +1616,7 @@ object Multimodal {
     // the write-side Inflate.useScratch).
     "x278_png_export" -> ((s, _) => {
       graft.sources.PngExportFixture.ensure(s)
-      pngTileScan(s, graft.sources.PngExportFixture.payloadPath, withBits = true)
+      pngTileScan(s, graft.sources.PngExportFixture.dir)
     }),
     // REAL LZW decode in the gate — the other compressed-image family:
     // GIF header/descriptor walk → variable-width LSB-first LZW code
@@ -2256,7 +1633,7 @@ object Multimodal {
     // the alpha composite in pure integer SQL.
     "x100_png_palette_alpha" -> ((s, _) => {
       graft.sources.PngExtFixture.ensure(s)
-      pngTileScan(s, graft.sources.PngExtFixture.payloadPath, withBits = true)
+      pngTileScan(s, graft.sources.PngExtFixture.dir)
     }),
     // tRNS palette transparency (x144) — the quarantine x100 deliberately
     // left closed, now decoded: per-entry alpha for a PREFIX of the
@@ -2267,7 +1644,7 @@ object Multimodal {
     // composes alpha∘palette∘index formulas in pure integer SQL.
     "x144_png_trns" -> ((s, _) => {
       graft.sources.PngTrnsFixture.ensure(s)
-      pngTileScan(s, graft.sources.PngTrnsFixture.payloadPath, withBits = true)
+      pngTileScan(s, graft.sources.PngTrnsFixture.dir)
     }),
     // Adam7 + grayscale (x146) — the LAYOUT face of the PNG decoder:
     // even ids are the x70 truecolor formula transported through the
@@ -2278,7 +1655,7 @@ object Multimodal {
     // resample/checksum contract.
     "x146_png_adam7_gray" -> ((s, _) => {
       graft.sources.PngAdam7Fixture.ensure(s)
-      pngTileScan(s, graft.sources.PngAdam7Fixture.payloadPath, withBits = false)
+      tileScan(s, graft.sources.PngAdam7Fixture.dir)(graft.sources.PngPixels.decode)
     }),
     // PNG depth/alpha surface (x168) — the LAST quarantined color-type
     // slice of the decoder: gray+alpha (type 4, white-composited with
@@ -2290,36 +1667,8 @@ object Multimodal {
     // resample/checksum contract.
     "x168_png_depth_alpha" -> ((s, _) => {
       graft.sources.PngDepthFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("img_id", LongType),
-          StructField("width", IntegerType),
-          StructField("height", IntegerType),
-          StructField("kind", StringType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.PngDepthFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            val payload = r.getAs[Array[Byte]]("payload")
-            graft.sources.PngPixels.decode(payload) match {
-              case Some(img) =>
-                val cs = graft.sources.BmpPixels.checksum(graft.sources.BmpPixels.resizeNearest(img, 8, 8))
-                Row(
-                  r.getAs[Long]("img_id"),
-                  img.width,
-                  img.height,
-                  graft.sources.PngPixels.kindOf(payload).orNull,
-                  cs
-                )
-              case None => Row(r.getAs[Long]("img_id"), null, null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("img_id")
+      labeledTileScan(s, graft.sources.PngDepthFixture.dir, "kind")(
+        graft.sources.PngPixels.decode, graft.sources.PngPixels.kindOf)
     }),
     // PNG completion (x230) — the LAST quarantined slices leave: 16-bit
     // gray+alpha and RGBA (full-depth white composite, then the §12.5
@@ -2331,61 +1680,12 @@ object Multimodal {
     // formulas.
     "x230_png_complete" -> ((s, _) => {
       graft.sources.PngFullFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("img_id", LongType),
-          StructField("width", IntegerType),
-          StructField("height", IntegerType),
-          StructField("kind", StringType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.PngFullFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            val payload = r.getAs[Array[Byte]]("payload")
-            graft.sources.PngPixels.decode(payload) match {
-              case Some(img) =>
-                val cs = graft.sources.BmpPixels.checksum(graft.sources.BmpPixels.resizeNearest(img, 8, 8))
-                Row(
-                  r.getAs[Long]("img_id"),
-                  img.width,
-                  img.height,
-                  graft.sources.PngPixels.kindOf(payload).orNull,
-                  cs
-                )
-              case None => Row(r.getAs[Long]("img_id"), null, null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("img_id")
+      labeledTileScan(s, graft.sources.PngFullFixture.dir, "kind")(
+        graft.sources.PngPixels.decode, graft.sources.PngPixels.kindOf)
     }),
     "x71_gif_decode" -> ((s, _) => {
       graft.sources.GifFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("img_id", LongType),
-          StructField("width", IntegerType),
-          StructField("height", IntegerType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.GifFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            graft.sources.GifPixels.decode(r.getAs[Array[Byte]]("payload")) match {
-              case Some(img) =>
-                val cs = graft.sources.BmpPixels.checksum(graft.sources.BmpPixels.resizeNearest(img, 8, 8))
-                Row(r.getAs[Long]("img_id"), img.width, img.height, cs)
-              case None => Row(r.getAs[Long]("img_id"), null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("img_id")
+      tileScan(s, graft.sources.GifFixture.dir)(graft.sources.GifPixels.decode)
     }),
     // REAL baseline-JPEG decode in the gate — the transform-coded image
     // family: marker walk → DHT canonical Huffman decode of the
@@ -2399,28 +1699,7 @@ object Multimodal {
     // chain end-to-end. Non-multiple-of-8 sizes pin MCU padding/cropping.
     "x80_jpeg_decode" -> ((s, _) => {
       graft.sources.JpegFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("img_id", LongType),
-          StructField("width", IntegerType),
-          StructField("height", IntegerType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.JpegFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            graft.sources.JpegPixels.decode(r.getAs[Array[Byte]]("payload")) match {
-              case Some(img) =>
-                val cs = graft.sources.BmpPixels.checksum(graft.sources.BmpPixels.resizeNearest(img, 8, 8))
-                Row(r.getAs[Long]("img_id"), img.width, img.height, cs)
-              case None => Row(r.getAs[Long]("img_id"), null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("img_id")
+      tileScan(s, graft.sources.JpegFixture.dir)(graft.sources.JpegPixels.decode)
     }),
     // Mixed-corpus DISPATCH — the integration face of the four image
     // decoders: payloads from all four fixture families union WITHOUT a
@@ -2435,37 +1714,20 @@ object Multimodal {
       graft.sources.GifFixture.ensure(s)
       graft.sources.JpegFixture.ensure(s)
       graft.sources.TiffFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("uid", LongType),
-          StructField("fmt", StringType),
-          StructField("width", IntegerType),
-          StructField("height", IntegerType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
       val mixed = Seq(
-        graft.sources.PngFixture.payloadPath -> 0L,
-        graft.sources.GifFixture.payloadPath -> 1000L,
-        graft.sources.JpegFixture.payloadPath -> 2000L,
-        graft.sources.BmpFixture.payloadPath -> 3000L,
-        graft.sources.TiffFixture.payloadPath -> 4000L
-      ).map { case (p, off) =>
-        s.read.parquet(p).select((col("img_id") + lit(off)).as("uid"), col("payload"))
+        graft.sources.PngFixture.dir -> 0L,
+        graft.sources.GifFixture.dir -> 1000L,
+        graft.sources.JpegFixture.dir -> 2000L,
+        graft.sources.BmpFixture.dir -> 3000L,
+        graft.sources.TiffFixture.dir -> 4000L
+      ).map { case (dir, off) =>
+        Payloads.read(s, dir).select((col("img_id") + lit(off)).as("uid"), col("payload"))
       }.reduce(_.unionByName(_))
-      mixed
-        .mapPartitions { it =>
-          it.map { r =>
-            graft.sources.ImageDispatch.decodeAny(r.getAs[Array[Byte]]("payload")) match {
-              case Some((fmt, img)) =>
-                val cs = graft.sources.BmpPixels.checksum(graft.sources.BmpPixels.resizeNearest(img, 8, 8))
-                Row(r.getAs[Long]("uid"), fmt, img.width, img.height, cs)
-              case None => Row(r.getAs[Long]("uid"), null, null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("uid")
+      Payloads.decode(mixed, "uid BIGINT, fmt STRING, width INT, height INT, checksum BIGINT") { (uid, b) =>
+        graft.sources.ImageDispatch.decodeAny(b).map { case (fmt, img) =>
+          Seq(Row(uid, fmt, img.width, img.height, tileChecksum(img)))
+        }
+      }.orderBy("uid")
     }),
     // Perceptual-hash image dedup: the content-level dedup step of a
     // multimodal curation pipeline (metadata x21 → decode x33 → fingerprint
@@ -2480,28 +1742,16 @@ object Multimodal {
     // space exactly.
     "x55_image_phash" -> ((s, _) => {
       graft.sources.PhashFixture.ensure(s)
-      val schema = StructType(
-        Seq(StructField("img_id", LongType), StructField("hi", LongType), StructField("lo", LongType))
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      val sigs = s.read
-        .parquet(graft.sources.PhashFixture.payloadPath)
-        .mapPartitions { it =>
-          it.flatMap { r =>
-            graft.sources.BmpPixels.decode(r.getAs[Array[Byte]]("payload")).map { img =>
-              val grays = graft.sources.BmpPixels
-                .resizeNearest(img, 8, 8)
-                .map { case (pr, pg, pb) => (pr + pg + pb).toLong }
-              val total = grays.sum
-              var hi = 0L; var lo = 0L
-              grays.zipWithIndex.foreach { case (g0, k) =>
-                if (g0 * 64L > total) { if (k < 32) hi |= 1L << k else lo |= 1L << (k - 32) }
-              }
-              Row(r.getAs[Long]("img_id"), hi, lo)
-            }
-          }
-        }(enc)
-        .localCheckpoint() // decode once; bands + both verify sides probe blocks
+      // undecodable payloads drop out of the dedup rather than quarantine
+      val sigs = Payloads.decode(
+        Payloads.read(s, graft.sources.PhashFixture.dir),
+        "img_id BIGINT, hi BIGINT, lo BIGINT"
+      ) { (id, b) =>
+        Some(graft.sources.BmpPixels.decode(b).toSeq.map { img =>
+          val (hi, lo) = aHash(graft.sources.BmpPixels.resizeNearest(img, 8, 8))
+          Row(id, hi, lo)
+        })
+      }.localCheckpoint() // decode once; bands + both verify sides probe blocks
       val bands = sigs.select(
         col("img_id"),
         posexplode(
@@ -2531,26 +1781,12 @@ object Multimodal {
     // closed-form byte formula — again first-principles, not an echo.
     "x34_audio_pcm_features" -> ((s, _) => {
       graft.sources.AudioFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("audio_id", LongType),
-          StructField("n_samples", LongType),
-          StructField("sum_abs", LongType),
-          StructField("peak", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.AudioFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            graft.sources.AudioMeta.pcmFeatures(r.getAs[Array[Byte]]("payload")) match {
-              case Some((n, sumAbs, peak)) => Row(r.getAs[Long]("audio_id"), n, sumAbs, peak)
-              case None => Row(r.getAs[Long]("audio_id"), null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("audio_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.AudioFixture.dir),
+        "audio_id BIGINT, n_samples BIGINT, sum_abs BIGINT, peak BIGINT"
+      ) { (id, b) =>
+        graft.sources.AudioMeta.pcmFeatures(b).map { case (n, sumAbs, peak) => Seq(Row(id, n, sumAbs, peak)) }
+      }.orderBy("audio_id")
     }),
     // 16 kHz resample (x211) — the rate-normalization pass between x34's
     // raw features and any model: channel-0 16-bit samples linearly
@@ -2562,26 +1798,14 @@ object Multimodal {
     // operator here); per-payload mapPartitions, no shuffle.
     "x211_audio_resample" -> ((s, _) => {
       graft.sources.AudioFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("audio_id", LongType),
-          StructField("n_out", LongType),
-          StructField("sum_abs", LongType),
-          StructField("peak", LongType),
-          StructField("poschk", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.AudioFixture.payloadPath)
-        .mapPartitions { it =>
-          it.flatMap { r =>
-            graft.sources.AudioMeta.resample16k(r.getAs[Array[Byte]]("payload")).map {
-              case (n, sum, peak, chk) => Row(r.getAs[Long]("audio_id"), n, sum, peak, chk)
-            }
-          }
-        }(enc)
-        .orderBy("audio_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.AudioFixture.dir),
+        "audio_id BIGINT, n_out BIGINT, sum_abs BIGINT, peak BIGINT, poschk BIGINT"
+      ) { (id, b) =>
+        Some(graft.sources.AudioMeta.resample16k(b).toSeq.map { case (n, sum, peak, chk) =>
+          Row(id, n, sum, peak, chk)
+        })
+      }.orderBy("audio_id")
     }),
 
     // REAL compressed-audio sample decode: IMA ADPCM (WAVE tag 0x11) —
@@ -2603,62 +1827,31 @@ object Multimodal {
     // predictor / stereo-mode / Rice-partition path the 200 payloads take.
     "x111_flac_decode" -> ((s, _) => {
       graft.sources.FlacFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("audio_id", LongType),
-          StructField("channels", LongType),
-          StructField("n_per_ch", LongType),
-          StructField("sum_abs", LongType),
-          StructField("peak", LongType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.FlacFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            graft.sources.FlacAudio.decode(r.getAs[Array[Byte]]("payload")) match {
-              case Some(pcm) =>
-                var sumAbs = 0L; var peak = 0L; var chk = 0L
-                var i = 0
-                while (i < pcm.samples.length) {
-                  val v = pcm.samples(i).toLong
-                  sumAbs += math.abs(v); peak = math.max(peak, math.abs(v))
-                  chk += (i + 1) * v
-                  i += 1
-                }
-                Row(r.getAs[Long]("audio_id"), pcm.channels.toLong, pcm.nPerChannel, sumAbs, peak, chk)
-              case None => Row(r.getAs[Long]("audio_id"), null, null, null, null, null)
-            }
+      Payloads.decode(
+        Payloads.read(s, graft.sources.FlacFixture.dir),
+        "audio_id BIGINT, channels BIGINT, n_per_ch BIGINT, sum_abs BIGINT, peak BIGINT, checksum BIGINT"
+      ) { (id, b) =>
+        graft.sources.FlacAudio.decode(b).map { pcm =>
+          var sumAbs = 0L; var peak = 0L; var chk = 0L
+          var i = 0
+          while (i < pcm.samples.length) {
+            val v = pcm.samples(i).toLong
+            sumAbs += math.abs(v); peak = math.max(peak, math.abs(v))
+            chk += (i + 1) * v
+            i += 1
           }
-        }(enc)
-        .orderBy("audio_id")
+          Seq(Row(id, pcm.channels.toLong, pcm.nPerChannel, sumAbs, peak, chk))
+        }
+      }.orderBy("audio_id")
     }),
     "x98_adpcm_decode" -> ((s, _) => {
       graft.sources.AdpcmFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("audio_id", LongType),
-          StructField("n_samples", LongType),
-          StructField("sum_abs", LongType),
-          StructField("peak", LongType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.AdpcmFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            graft.sources.AdpcmAudio.features(r.getAs[Array[Byte]]("payload")) match {
-              case Some((n, sumAbs, peak, chk)) =>
-                Row(r.getAs[Long]("audio_id"), n, sumAbs, peak, chk)
-              case None => Row(r.getAs[Long]("audio_id"), null, null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("audio_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.AdpcmFixture.dir),
+        "audio_id BIGINT, n_samples BIGINT, sum_abs BIGINT, peak BIGINT, checksum BIGINT"
+      ) { (id, b) =>
+        graft.sources.AdpcmAudio.features(b).map { case (n, sumAbs, peak, chk) => Seq(Row(id, n, sumAbs, peak, chk)) }
+      }.orderBy("audio_id")
     }),
     // TIFF pixel decode (x163): classic TIFF (II + MM) — IFD tag walk,
     // strip assembly, PackBits RLE and MSB-first early-change LZW (the
@@ -2670,36 +1863,8 @@ object Multimodal {
     // ImageIO-plugin conformance (the PNG discipline).
     "x163_tiff_decode" -> ((s, _) => {
       graft.sources.TiffFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("img_id", LongType),
-          StructField("width", IntegerType),
-          StructField("height", IntegerType),
-          StructField("compression", StringType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.TiffFixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            val payload = r.getAs[Array[Byte]]("payload")
-            graft.sources.TiffPixels.decode(payload) match {
-              case Some(img) =>
-                val cs = graft.sources.BmpPixels.checksum(graft.sources.BmpPixels.resizeNearest(img, 8, 8))
-                Row(
-                  r.getAs[Long]("img_id"),
-                  img.width,
-                  img.height,
-                  graft.sources.TiffPixels.compressionOf(payload).orNull,
-                  cs
-                )
-              case None => Row(r.getAs[Long]("img_id"), null, null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("img_id")
+      labeledTileScan(s, graft.sources.TiffFixture.dir, "compression")(
+        graft.sources.TiffPixels.decode, graft.sources.TiffPixels.compressionOf)
     }),
 
     // G.711 μ-law/A-law sample decode (x151): the telephony-audio codec —
@@ -2712,29 +1877,14 @@ object Multimodal {
     // 6-column result.
     "x151_g711_decode" -> ((s, _) => {
       graft.sources.G711Fixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("audio_id", LongType),
-          StructField("law", StringType),
-          StructField("n_samples", LongType),
-          StructField("sum_abs", LongType),
-          StructField("peak", LongType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.G711Fixture.payloadPath)
-        .mapPartitions { it =>
-          it.map { r =>
-            graft.sources.G711Audio.features(r.getAs[Array[Byte]]("payload")) match {
-              case Some((law, n, sumAbs, peak, chk)) =>
-                Row(r.getAs[Long]("audio_id"), law, n, sumAbs, peak, chk)
-              case None => Row(r.getAs[Long]("audio_id"), null, null, null, null, null)
-            }
-          }
-        }(enc)
-        .orderBy("audio_id")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.G711Fixture.dir),
+        "audio_id BIGINT, law STRING, n_samples BIGINT, sum_abs BIGINT, peak BIGINT, checksum BIGINT"
+      ) { (id, b) =>
+        graft.sources.G711Audio.features(b).map { case (law, n, sumAbs, peak, chk) =>
+          Seq(Row(id, law, n, sumAbs, peak, chk))
+        }
+      }.orderBy("audio_id")
     }),
     // REAL frame sampling: raw uncompressed video payloads (rawvideo/y4m
     // shape) → every-3rd-frame schedule → per-frame nearest-neighbor 4×4
@@ -2744,29 +1894,16 @@ object Multimodal {
     // recomputed entirely in SQL.
     "x35_video_frame_sample" -> ((s, _) => {
       graft.sources.RawVideoFixture.ensure(s)
-      val schema = StructType(
-        Seq(
-          StructField("video_id", LongType),
-          StructField("frame_idx", LongType),
-          StructField("checksum", LongType)
-        )
-      )
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.sources.RawVideoFixture.payloadPath)
-        .mapPartitions { it =>
-          it.flatMap { r =>
-            val id = r.getAs[Long]("video_id")
-            graft.sources.RawVideo.decode(r.getAs[Array[Byte]]("payload")) match {
-              case Some(v) =>
-                graft.sources.RawVideo
-                  .sampleIndices(v.nFrames, everyK = 3)
-                  .map(t => Row(id, t.toLong, graft.sources.RawVideo.frameChecksum(v, t, 4, 4)))
-              case None => Seq(Row(id, null, null)) // quarantine row, never a thrown task
-            }
-          }
-        }(enc)
-        .orderBy("video_id", "frame_idx")
+      Payloads.decode(
+        Payloads.read(s, graft.sources.RawVideoFixture.dir),
+        "video_id BIGINT, frame_idx BIGINT, checksum BIGINT"
+      ) { (id, b) =>
+        graft.sources.RawVideo.decode(b).map { v =>
+          graft.sources.RawVideo
+            .sampleIndices(v.nFrames, everyK = 3)
+            .map(t => Row(id, t.toLong, graft.sources.RawVideo.frameChecksum(v, t, 4, 4)))
+        }
+      }.orderBy("video_id", "frame_idx")
     }),
     "x11_multimodal_meta" -> ((s, d) => {
       withPayload(table(s, d, "documents"))
@@ -3257,14 +2394,16 @@ object Multimodal {
         |FROM documents WHERE doc_id BETWEEN 100 AND 5000
         |GROUP BY lang ORDER BY lang""".stripMargin,
     // x305: DuckDB's reader over the dsv2-written bytes — the write half
-    // of the two-independent-implementations agreement.
+    // of the two-independent-implementations agreement. The query writes
+    // per source dir and the oracle reads the gate's sf0.01 tree (the
+    // x74 GATE-SF PIN), so a run at another SF never rewrites it.
     "x305_dsv2_write" ->
       s"""SELECT tag, count(*) AS n,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents,
         |  CAST(sum(CASE WHEN cents IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
         |  CAST(sum(CASE WHEN flag THEN 1 ELSE 0 END) AS BIGINT) AS n_flag,
         |  CAST(sum(CAST(round(price * 100) AS BIGINT)) AS BIGINT) AS sum_price_c
-        |FROM read_parquet('${Fixture.root}/graft_pq_dsv2/*.parquet')
+        |FROM read_parquet('${Fixture.root}/graft_pq_dsv2/sf0.01/*.parquet')
         |GROUP BY tag ORDER BY tag""".stripMargin,
     // x310: DuckDB recomputes the footer-answered census from the data
     // itself — if the pushed-aggregate path misread a single stat, the
@@ -3277,13 +2416,13 @@ object Multimodal {
         |FROM documents""".stripMargin,
     // x307: DuckDB's hive-partitioning read over the dsv2-written tree —
     // directory layout, partition-value encoding, and data bytes all
-    // verified by an independent implementation.
+    // verified by an independent implementation. sf0.01 pinned as x305.
     "x307_dsv2_partition_write" ->
       s"""SELECT part, count(*) AS n,
         |  CAST(sum(v) AS BIGINT) AS sum_v,
         |  CAST(sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
         |  CAST(sum(CASE WHEN flag THEN 1 ELSE 0 END) AS BIGINT) AS n_flag
-        |FROM read_parquet('${Fixture.root}/graft_pq_dsv2_part/*/*.parquet',
+        |FROM read_parquet('${Fixture.root}/graft_pq_dsv2_part/sf0.01/*/*.parquet',
         |                  hive_partitioning=1)
         |GROUP BY part ORDER BY part""".stripMargin,
     "x311_dsv2_hive_read" ->

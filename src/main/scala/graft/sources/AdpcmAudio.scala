@@ -135,7 +135,6 @@ object AdpcmAudio {
   * every integer state transition, without the oracle touching a byte. */
 object AdpcmFixture {
   val dir = Fixture.dir("graft_adpcm")
-  val payloadPath = s"$dir/payloads"
 
   val N = 200
   val BlockAlign = 256 // → 505 samples per block
@@ -157,10 +156,6 @@ object AdpcmFixture {
     )
 
   def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0 until N)
-      .map(i => (i.toLong, payload(i)))
-      .toDF("audio_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "audio_id", (0 until N).map(i => (i.toLong, payload(i))))
   }
 }

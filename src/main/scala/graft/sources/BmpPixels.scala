@@ -88,7 +88,6 @@ object BmpPixels {
   * principles without parsing a byte of BMP. */
 object BmpFixture {
   val dir = Fixture.dir("graft_bmp")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   /** pixel formula — mirrored verbatim in the x33 oracle SQL */
@@ -107,9 +106,7 @@ object BmpFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _) => (id, p) })
     r.map { case (id, _, w, h) => (id, w, h) }
       .toDF("img_id", "width", "height")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)
@@ -124,7 +121,6 @@ object BmpFixture {
   * recompute every aHash from the closed-form pixel formula. */
 object PhashFixture {
   val dir = Fixture.dir("graft_phash")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   /** pixel formula by SOURCE id — mirrored verbatim in the x55 oracle SQL */
@@ -151,9 +147,7 @@ object PhashFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, _, _, _, _, p) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, _, _, _, _, p) => (id, p) })
     r.map { case (id, src, bump, w, h, _) => (id, src, bump, w, h) }
       .toDF("img_id", "src_id", "bumped", "width", "height")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)

@@ -174,7 +174,6 @@ object ExifMeta {
   * "2026:01:<dd> 0<h>:00:00" with dd = 1 + i%28, h = i%10. */
 object ExifFixture {
   val dir = Fixture.dir("graft_exif")
-  val payloadPath = s"$dir/payloads"
 
   def meta(i: Long): ExifMeta.Meta = ExifMeta.Meta(
     if (i % 2 == 0) "MM" else "II",
@@ -191,10 +190,6 @@ object ExifFixture {
   }
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0L until 200L)
-      .map(i => (i, fileBytes(i)))
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", (0L until 200L).map(i => (i, fileBytes(i))))
   }
 }

@@ -598,14 +598,11 @@ object FlacAudio {
   */
 object FlacFixture {
   val dir = Fixture.dir("graft_flac")
-  val payloadPath = s"$dir/payloads"
 
   val N = 200
 
-  private def h(s: String): Long = {
-    val dig = java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-    java.lang.Long.parseLong(dig.map("%02x".format(_)).mkString.substring(0, 15), 16)
-  }
+  private def h(s: String): Long =
+    java.lang.Long.parseLong(Payloads.md5Hex(s.getBytes("UTF-8")).substring(0, 15), 16)
 
   def channels(id: Int): Int = 1 + id % 2
   def nSamples(id: Int): Int = 600 + (id * 37) % 500
@@ -640,13 +637,6 @@ object FlacFixture {
   }
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0 until N)
-      .map(i => (i.toLong, payload(i)))
-      .toDF("audio_id", "payload")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(payloadPath)
+    Payloads.write(spark, dir, "audio_id", (0 until N).map(i => (i.toLong, payload(i))))
   }
 }

@@ -99,7 +99,6 @@ object G711Audio {
   * formula through the G.711 expansion arithmetic inline. */
 object G711Fixture {
   val dir = Fixture.dir("graft_g711")
-  val payloadPath = s"$dir/payloads"
 
   val N = 200
   def law(id: Int): String = if (id % 2 == 0) "ulaw" else "alaw"
@@ -110,10 +109,6 @@ object G711Fixture {
     G711Audio.synthesize(law(id), 8000, nSamples(id), t => code(id, t))
 
   def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0 until N)
-      .map(i => (i.toLong, payload(i)))
-      .toDF("audio_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "audio_id", (0 until N).map(i => (i.toLong, payload(i))))
   }
 }

@@ -196,7 +196,6 @@ object GifPixels {
   * from first principles without parsing a byte of GIF. */
 object GifFixture {
   val dir = Fixture.dir("graft_gif")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   /** index + palette formulas — mirrored verbatim in the x71 oracle SQL */
@@ -212,9 +211,7 @@ object GifFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _) => (id, p) })
     r.map { case (id, _, w, h) => (id, w, h) }
       .toDF("img_id", "width", "height")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)

@@ -311,7 +311,6 @@ object H264Meta {
   * offset, slice count, byte extent) — the x89/x21/x22 twin pattern. */
 object H264GopFixture {
   val dir = Fixture.dir("graft_h264gop")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   def rows: Seq[(Long, Array[Byte], Seq[(Long, Long, Long)])] = (0 until 200).map { i =>
@@ -330,9 +329,7 @@ object H264GopFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _) => (id, p) }
-      .toDF("video_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "video_id", r.map { case (id, p, _) => (id, p) })
     r.flatMap { case (id, _, gops) =>
       gops.zipWithIndex.map { case ((off, ns, nb), g) => (id, g.toLong, off, ns, nb) }
     }.toDF("video_id", "gop_idx", "gop_offset", "n_slices", "gop_bytes")
@@ -342,7 +339,6 @@ object H264GopFixture {
 
 object H264Fixture {
   val dir = Fixture.dir("graft_h264")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   def rows: Seq[(Long, Array[Byte], Int, Int, Int, Int, Long, Long)] = (0 until 200).map { i =>
@@ -363,9 +359,7 @@ object H264Fixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _, _, _, _, _) => (id, p) }
-      .toDF("video_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "video_id", r.map { case (id, p, _, _, _, _, _, _) => (id, p) })
     r.map { case (id, _, w, h, pr, lv, nn, ns) => (id, w, h, pr, lv, nn, ns) }
       .toDF("video_id", "width", "height", "profile", "level", "n_nals", "n_slices")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)

@@ -9,7 +9,6 @@ import org.apache.spark.sql.SparkSession
   * proves the byte-level header parsing end-to-end. */
 object ImageFixture {
   val dir = Fixture.dir("graft_images")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   private val formats = Seq("image/png", "image/jpeg", "image/gif", "image/bmp")
@@ -24,9 +23,7 @@ object ImageFixture {
   def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _, _) => (id, p) })
     r.map { case (id, p, f, w, h) => (id, f, w, h, p.length.toLong) }
       .toDF("img_id", "format", "width", "height", "n_bytes")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)
@@ -36,7 +33,6 @@ object ImageFixture {
 /** MP4 twin fixture for the x23 video-metadata gate query. */
 object VideoFixture {
   val dir = Fixture.dir("graft_video")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   def rows: Seq[(Long, Array[Byte], Int, Int, Long)] = (0 until 200).map { i =>
@@ -49,9 +45,7 @@ object VideoFixture {
   def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _, _) => (id, p) }
-      .toDF("video_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "video_id", r.map { case (id, p, _, _, _) => (id, p) })
     r.map { case (id, _, w, h, durMs) => (id, w, h, durMs) }
       .toDF("video_id", "width", "height", "duration_ms")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)
@@ -62,7 +56,6 @@ object VideoFixture {
   * [[ImageFixture]]: binary payloads + independent metadata twin). */
 object AudioFixture {
   val dir = Fixture.dir("graft_audio")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   private val rates = Seq(8000, 16000, 22050, 44100, 48000)
@@ -80,9 +73,7 @@ object AudioFixture {
   def ensure(spark: SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _, _, _) => (id, p) }
-      .toDF("audio_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "audio_id", r.map { case (id, p, _, _, _, _) => (id, p) })
     r.map { case (id, _, rate, ch, bits, durMs) => (id, rate, ch, bits, durMs) }
       .toDF("audio_id", "sample_rate", "channels", "bits", "duration_ms")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)

@@ -460,24 +460,37 @@ object Inflate {
 
   /** zlib path with the same dispatch (PNG's IDAT stream). */
   def zlibDispatch(b: Array[Byte], maxOut: Int): Option[Array[Byte]] =
-    if (useScratch) zlib(b, maxOut)
-    else {
-      val inf = new java.util.zip.Inflater()
-      inf.setInput(b)
+    if (useScratch) zlib(b, maxOut) else zlibJdk(b, maxOut)
+
+  /** the official zlib (RFC 1950) twin */
+  def zlibJdk(b: Array[Byte], maxOut: Int): Option[Array[Byte]] = {
+    val inf = new java.util.zip.Inflater()
+    inf.setInput(b)
+    val bos = new java.io.ByteArrayOutputStream()
+    val tmp = new Array[Byte](8192)
+    try {
+      while (!inf.finished()) {
+        val n = inf.inflate(tmp)
+        if (n == 0 && !inf.finished() && (inf.needsInput() || inf.needsDictionary())) return None
+        if (bos.size() + n > maxOut) return None
+        bos.write(tmp, 0, n)
+      }
+      Some(bos.toByteArray)
+    } catch {
+      case _: java.util.zip.DataFormatException => None
+    } finally inf.end()
+  }
+
+  /** the official gzip (RFC 1952) twin: every member, concatenated */
+  def gunzipJdk(b: Array[Byte]): Option[Array[Byte]] =
+    try {
+      val g = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))
       val bos = new java.io.ByteArrayOutputStream()
       val tmp = new Array[Byte](8192)
-      try {
-        while (!inf.finished()) {
-          val n = inf.inflate(tmp)
-          if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return None
-          if (bos.size() + n > maxOut) return None
-          bos.write(tmp, 0, n)
-        }
-        Some(bos.toByteArray)
-      } catch {
-        case _: java.util.zip.DataFormatException => None
-      } finally inf.end()
-    }
+      var n = g.read(tmp)
+      while (n >= 0) { bos.write(tmp, 0, n); n = g.read(tmp) }
+      Some(bos.toByteArray)
+    } catch { case _: java.io.IOException => None }
 }
 
 /** x264 fixture: the OFFICIAL encoders (JDK Deflater / GZIPOutputStream —
@@ -487,10 +500,8 @@ object Inflate {
   * formulas and never touches the format (the x227 conformance split). */
 object InflateFixture {
   val dir = Fixture.dir("graft_inflate")
-  val payloadPath = s"$dir/payloads"
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+  private def md5hex(s: String): String = Payloads.md5Hex(s.getBytes("UTF-8"))
 
   def content(z: Long): String = (z % 4) match {
     case 0 => (0 until (200 + (z % 300)).toInt).map(i => s"w${(z * 13 + i * 7) % 31} ").mkString
@@ -522,10 +533,6 @@ object InflateFixture {
   }
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0L until 240L)
-      .map(z => (z, fileBytes(z)))
-      .toDF("blob_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "blob_id", (0L until 240L).map(z => (z, fileBytes(z))))
   }
 }

@@ -435,7 +435,6 @@ object JpegPixels {
   * padding/cropping load-bearing too. */
 object JpegFixture {
   val dir = Fixture.dir("graft_jpeg")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   /** luma DC stays in 8..247 so ±2 AC never clamps — mirrored in the oracle */
@@ -473,9 +472,7 @@ object JpegFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _) => (id, p) })
     r.map { case (id, _, w, h) => (id, w, h) }
       .toDF("img_id", "width", "height")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)

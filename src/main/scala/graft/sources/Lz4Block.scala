@@ -144,7 +144,6 @@ object Lz4Block {
   * match). */
 object Lz4Fixture {
   val dir = Fixture.dir("graft_lz4")
-  val payloadPath = s"$dir/payloads"
 
   def content(z: Long): String = {
     val h = (0 until (4 + (z % 7)).toInt).map(i => s"L,$z,$i,${z * 17 + i * 13}\n").mkString
@@ -160,10 +159,6 @@ object Lz4Fixture {
   }
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0L until 200L)
-      .map(z => (z, fileBytes(z)))
-      .toDF("blob_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "blob_id", (0L until 200L).map(z => (z, fileBytes(z))))
   }
 }

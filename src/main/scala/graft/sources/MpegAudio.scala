@@ -171,7 +171,6 @@ object MpegAudio {
   * desynchronizes and the gate hash flips. */
 object MpegFixture {
   val dir = Fixture.dir("graft_mp3")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   private[sources] val BrV1L3 = Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
@@ -199,9 +198,7 @@ object MpegFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _, _, _) => (id, p) }
-      .toDF("audio_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "audio_id", r.map { case (id, p, _, _, _, _) => (id, p) })
     r.map { case (id, _, n, ch, ks, dur) => (id, n.toLong, ch, ks, dur) }
       .toDF("audio_id", "n_frames", "channels", "kbps_sum", "duration_ms")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)

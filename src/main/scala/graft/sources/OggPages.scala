@@ -177,7 +177,6 @@ object OggPages {
   * packet j = S·1000 + j. */
 object OggFixture {
   val dir = Fixture.dir("graft_ogg")
-  val payloadPath = s"$dir/payloads"
 
   def nPackets(s: Long): Int = 1 + (s % 4).toInt
   def packetLen(s: Long, j: Long): Int = 40 + (((s + j) % 5) * 160).toInt
@@ -192,10 +191,6 @@ object OggFixture {
     )
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0L until 200L)
-      .map(s => (s, fileBytes(s)))
-      .toDF("ogg_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "ogg_id", (0L until 200L).map(s => (s, fileBytes(s))))
   }
 }

@@ -651,7 +651,6 @@ object PngPixels {
   * pixel formula from x70's so a fixture mix-up cannot silently pass. */
 object PngExportFixture {
   val dir = Fixture.dir("graft_png_export")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   def rgbAt(id: Long)(x: Int, y: Int): (Int, Int, Int) = (
@@ -673,9 +672,7 @@ object PngExportFixture {
     val r =
       try rows
       finally PngPixels.useScratchDeflate = prev
-    r.map { case (id, p, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _) => (id, p) })
     r.map { case (id, _, w, h) => (id, w, h) }
       .toDF("img_id", "width", "height")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)
@@ -690,7 +687,6 @@ object PngExportFixture {
   * unfilter surface is load-bearing for the gate hash. */
 object PngFixture {
   val dir = Fixture.dir("graft_png")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   /** pixel formula — mirrored verbatim in the x70 oracle SQL */
@@ -709,9 +705,7 @@ object PngFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _) => (id, p) })
     r.map { case (id, _, w, h) => (id, w, h) }
       .toDF("img_id", "width", "height")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)
@@ -728,7 +722,6 @@ object PngFixture {
   * x91 dispatch oracle depends on it byte-for-byte). */
 object PngExtFixture {
   val dir = Fixture.dir("graft_png_ext")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   def nPal(id: Long): Int = 16 + ((id * 13) % 241).toInt // 16..256
@@ -761,9 +754,7 @@ object PngExtFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _, _) => (id, p) })
     r.map { case (id, _, w, h, ct) => (id, w, h, ct) }
       .toDF("img_id", "width", "height", "ctype")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)
@@ -777,7 +768,6 @@ object PngExtFixture {
   * [[PngExtFixture]] (whose artifact stays byte-untouched). */
 object PngTrnsFixture {
   val dir = Fixture.dir("graft_png_trns")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   // palette geometry SHARED with PngExtFixture by reference, so the
@@ -807,9 +797,7 @@ object PngTrnsFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _) => (id, p) })
     r.map { case (id, _, w, h) => (id, w, h) }
       .toDF("img_id", "width", "height")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)
@@ -825,7 +813,6 @@ object PngTrnsFixture {
   * per-pass unfilter + scatter reproduces the sequential pixels. */
 object PngAdam7Fixture {
   val dir = Fixture.dir("graft_png_adam7")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   def grayAt(id: Long)(x: Int, y: Int): Int = ((id * 7 + x * 5 + y * 11) % 256).toInt
@@ -843,9 +830,7 @@ object PngAdam7Fixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _) => (id, p) })
     r.map { case (id, _, w, h) => (id, w, h) }
       .toDF("img_id", "width", "height")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)
@@ -859,7 +844,6 @@ object PngAdam7Fixture {
   * rounded reduction) flips the hash. */
 object PngDepthFixture {
   val dir = Fixture.dir("graft_png_depth")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   /** formulas — mirrored verbatim in the x168 oracle SQL */
@@ -888,9 +872,7 @@ object PngDepthFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _, _) => (id, p) })
     r.map { case (id, _, w, h, k) => (id, w, h, k) }
       .toDF("img_id", "width", "height", "kind")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)
@@ -906,7 +888,6 @@ object PngDepthFixture {
   */
 object PngFullFixture {
   val dir = Fixture.dir("graft_png_full")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   def c1(id: Long)(x: Int, y: Int): Int = ((id * 131 + x * 4799 + y * 9601) % 65536).toInt
@@ -944,9 +925,7 @@ object PngFullFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _, _, _) => (id, p) })
     r.map { case (id, _, w, h, cl, k) => (id, w, h, cl, k) }
       .toDF("img_id", "width", "height", "clazz", "kind")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)

@@ -76,7 +76,6 @@ object RawVideo {
   * recomputes sampled-frame checksums from first principles. */
 object RawVideoFixture {
   val dir = Fixture.dir("graft_rawvideo")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   /** pixel formula — mirrored verbatim in the x35 oracle SQL */
@@ -96,9 +95,7 @@ object RawVideoFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _, _) => (id, p) }
-      .toDF("video_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "video_id", r.map { case (id, p, _, _, _) => (id, p) })
     r.map { case (id, _, w, h, n) => (id, w, h, n) }
       .toDF("video_id", "width", "height", "n_frames")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)

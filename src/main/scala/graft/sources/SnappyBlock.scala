@@ -130,7 +130,6 @@ object SnappyBlock {
   * 2-byte-offset form). */
 object SnappyFixture {
   val dir = Fixture.dir("graft_snappy")
-  val payloadPath = s"$dir/payloads"
 
   def content(z: Long): String = {
     val h = (0 until (5 + (z % 5)).toInt).map(i => s"$z,$i,${z * 31 + i * 7}\n").mkString
@@ -142,10 +141,6 @@ object SnappyFixture {
     org.xerial.snappy.Snappy.compress(content(z).getBytes("UTF-8"))
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0L until 200L)
-      .map(z => (z, fileBytes(z)))
-      .toDF("blob_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "blob_id", (0L until 200L).map(z => (z, fileBytes(z))))
   }
 }

@@ -389,7 +389,6 @@ object TiffPixels {
   * boundary on the larger strips). */
 object TiffFixture {
   val dir = Fixture.dir("graft_tiff")
-  val payloadPath = s"$dir/payloads"
   val twinPath = s"$dir/twin"
 
   /** pixel formula — mirrored verbatim in the x163 oracle SQL; the
@@ -424,9 +423,7 @@ object TiffFixture {
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, Version) {
     import spark.implicits._
     val r = rows
-    r.map { case (id, p, _, _, _) => (id, p) }
-      .toDF("img_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "img_id", r.map { case (id, p, _, _, _) => (id, p) })
     r.map { case (id, _, w, h, c) => (id, w, h, c) }
       .toDF("img_id", "width", "height", "compression")
       .coalesce(1).write.mode("overwrite").parquet(twinPath)

@@ -202,7 +202,6 @@ object WarcScan {
   * for W%3==0 a trailing HTTP request record. */
 object WarcFixture {
   val dir = Fixture.dir("graft_warc")
-  val payloadPath = s"$dir/payloads"
 
   def nResponses(w: Long): Int = 1 + (w % 4).toInt
   def status(w: Long, j: Long): Long =
@@ -257,11 +256,7 @@ object WarcFixture {
   }
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0L until 200L)
-      .map(w => (w, fileBytes(w)))
-      .toDF("warc_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "warc_id", (0L until 200L).map(w => (w, fileBytes(w))))
   }
 }
 
@@ -272,16 +267,11 @@ object WarcFixture {
   * conformance check on the encoder's gzip framing. */
 object WarcExportFixture {
   val dir = Fixture.dir("graft_warc_export")
-  val payloadPath = s"$dir/payloads"
 
   def fileBytes(w: Long): Array[Byte] =
     WarcFixture.fileBytes(w, r => Deflate.gzipCompress(r))
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0L until 200L)
-      .map(w => (w, fileBytes(w)))
-      .toDF("warc_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "warc_id", (0L until 200L).map(w => (w, fileBytes(w))))
   }
 }

@@ -171,7 +171,6 @@ object ZipWrite {
   * is STORED (method 0), the rest deflated. */
 object ZipFixture {
   val dir = Fixture.dir("graft_zip")
-  val payloadPath = s"$dir/payloads"
 
   def nMembers(z: Long): Int = 1 + (z % 3).toInt
   def content(z: Long, j: Long): String =
@@ -199,11 +198,7 @@ object ZipFixture {
   }
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0L until 200L)
-      .map(z => (z, fileBytes(z)))
-      .toDF("zip_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "zip_id", (0L until 200L).map(z => (z, fileBytes(z))))
   }
 }
 
@@ -212,7 +207,6 @@ object ZipFixture {
   * deflate instead of ZipOutputStream. */
 object ZipExportFixture {
   val dir = Fixture.dir("graft_zip_export")
-  val payloadPath = s"$dir/payloads"
 
   def fileBytes(z: Long): Array[Byte] =
     ZipWrite.archive((0 until ZipFixture.nMembers(z)).map { j =>
@@ -224,10 +218,6 @@ object ZipExportFixture {
     })
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0L until 200L)
-      .map(z => (z, fileBytes(z)))
-      .toDF("zip_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "zip_id", (0L until 200L).map(z => (z, fileBytes(z))))
   }
 }

@@ -583,10 +583,8 @@ object ZstdFrame {
   */
 object ZstdFixture {
   val dir = Fixture.dir("graft_zstd")
-  val payloadPath = s"$dir/payloads"
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+  private def md5hex(s: String): String = Payloads.md5Hex(s.getBytes("UTF-8"))
 
   def content(z: Long): String = (z % 4) match {
     case 0 =>
@@ -604,10 +602,6 @@ object ZstdFixture {
     com.github.luben.zstd.Zstd.compress(content(z).getBytes("UTF-8"), 3)
 
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
-    import spark.implicits._
-    (0L until 200L)
-      .map(z => (z, fileBytes(z)))
-      .toDF("blob_id", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(payloadPath)
+    Payloads.write(spark, dir, "blob_id", (0L until 200L).map(z => (z, fileBytes(z))))
   }
 }

@@ -2,13 +2,12 @@ package graft
 
 import graft.operators.Skew
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tests for the 100 TB design disciplines themselves: partition pruning on
   * partitioned layouts, shuffle-free bucketed joins, salted-join semantics,
   * and the typed Dataset API boundary. */
-class ScaleDisciplineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScaleDisciplineSpec extends AnyFunSuite with TempSources {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
   private val sf = "/root/testdata/sf0.001"
@@ -17,15 +16,9 @@ class ScaleDisciplineSpec extends AnyFunSuite with BeforeAndAfterAll {
   // run builds its own `graft_zorder/<copy>` fixture (the first ensure
   // builds, later ones hit its marker); removed after the suite
   private val zsrc = {
-    val src = TestSpark.tempDir()
+    val src = tempSource()
     org.apache.commons.io.FileUtils.copyToDirectory(new java.io.File(s"$sf/orders.parquet"), new java.io.File(src))
     src
-  }
-
-  override def afterAll(): Unit = {
-    val layout = graft.sources.DataSkipping.dir(zsrc)
-    Seq(layout, s"$layout.lock", zsrc).foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    super.afterAll()
   }
 
   test("partitionBy layout yields partition pruning (PartitionFilters, not data filter)") {

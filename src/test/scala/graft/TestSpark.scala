@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.{BeforeAndAfterAll, Suite}
+import scala.jdk.CollectionConverters._
 
 /** One shared local session for the whole forked test JVM (never stopped —
   * the fork exits after the run). */
@@ -14,4 +17,39 @@ object TestSpark {
 
   def writeTable(dir: String, name: String, df: DataFrame): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
+
+  /** Delete `src` and every fixture built from it: a fixture keyed by a
+    * source lives at `<root>/<name>/<basename of src>` (names nest at most
+    * two deep, e.g. `graft_ivf/n8_i3`), beside its `.lock`. */
+  def dropFixtures(src: String): Unit = {
+    val base = new java.io.File(src).getName
+    val root = java.nio.file.Paths.get(graft.sources.Fixture.root)
+    if (java.nio.file.Files.isDirectory(root)) {
+      val hits = java.nio.file.Files.find(
+        root,
+        3,
+        (p, _) => p.getFileName.toString == base || p.getFileName.toString == s"$base.lock"
+      )
+      try hits.iterator().asScala.toList.foreach(p => FileUtils.deleteQuietly(p.toFile))
+      finally hits.close()
+    }
+    FileUtils.deleteQuietly(new java.io.File(src))
+  }
+}
+
+/** A suite whose queries build fixtures from temporary sources: every
+  * [[tempSource]] is removed after the suite together with the fixtures
+  * built from it, so runs leave nothing behind under the fixture root. */
+trait TempSources extends BeforeAndAfterAll { this: Suite =>
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  def tempSource(): String = {
+    val d = TestSpark.tempDir()
+    made.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try made.forEach(d => TestSpark.dropFixtures(d))
+    finally super.afterAll()
 }

@@ -1,13 +1,13 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempSources, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** x78 compaction execution: the rewrite must emit EXACTLY the planned
   * ⌈bytes/64KiB⌉ file count per lang partition, every emitted file must
   * stay near the target size, and the read-back must be content-identical
   * to the source (counts + order-free text digest). */
-class CompactionExecSpec extends AnyFunSuite {
+class CompactionExecSpec extends AnyFunSuite with TempSources {
   private lazy val spark = TestSpark.spark
 
   test("planned file counts executed exactly; content survives the rewrite") {
@@ -16,7 +16,7 @@ class CompactionExecSpec extends AnyFunSuite {
     val docsAa = (0L until 300L).map(i => (i, "aa", s"d$i " + ("x" * 395)))
     val docsBb = (1000L until 1020L).map(i => (i, "bb", s"s$i tiny"))
     val docs = docsAa ++ docsBb
-    val dir = java.nio.file.Files.createTempDirectory("compaction_spec").toString
+    val dir = tempSource()
     docs.toDF("doc_id", "lang", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val got = Sampling

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempSources, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** x170: the persisted inverted index must (a) answer point lookups by
@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pruning contract that makes the index an index — and (b) reproduce
   * x32's corpus-scan ranking exactly (same integer scoring, frozen df/N).
   */
-class InvertedIndexSpec extends AnyFunSuite {
+class InvertedIndexSpec extends AnyFunSuite with TempSources {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -50,7 +50,7 @@ class InvertedIndexSpec extends AnyFunSuite {
 
   test("the artifact rebuilds when the source fingerprint changes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("invidx_spec").toString
+    val dir = tempSource()
     def write(docs: Seq[(Long, String)]): Unit =
       docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
     write(Seq((0L, "table table spark"), (1L, "window spark")))

@@ -1,18 +1,18 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempSources, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** x102 IVF+PQ: artifact shape, compression ratio, rebuild determinism, and
   * search quality on a clustered 64-dim fixture (4 anchor directions + small
   * perturbations — the regime IVF+PQ exists for; the isotropic testdata
   * corpus is its worst case and is covered by the gate's recall floors). */
-class IvfPqSpec extends AnyFunSuite {
+class IvfPqSpec extends AnyFunSuite with TempSources {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = TestSpark.tempDir()
+    val d = tempSource()
     val rnd = new scala.util.Random(42)
     val anchors = Array.fill(4, 64)(rnd.nextFloat() * 2f - 1f)
     // 200 vectors: enough to amortize the fixed 8 KiB codebook so the

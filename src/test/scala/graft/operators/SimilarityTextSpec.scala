@@ -1,15 +1,15 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempSources, TestSpark}
 import org.apache.spark.sql.functions.{col, lower, size, split, trim}
 import org.scalatest.funsuite.AnyFunSuite
 
-class SimilarityTextSpec extends AnyFunSuite {
+class SimilarityTextSpec extends AnyFunSuite with TempSources {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = TestSpark.tempDir()
+    val d = tempSource()
     // vec 1 ∥ vec 0 (cos=1), vec 2 ⟂ vec 0, vec 3 anti-parallel
     val embs = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f, 0.0f), 0),
@@ -192,7 +192,7 @@ class SimilarityTextSpec extends AnyFunSuite {
   }
 
   test("fingerprints: same token multiset → same sorted fp, different rolling hash") {
-    val d2 = TestSpark.tempDir()
+    val d2 = tempSource()
     TestSpark.writeTable(
       d2,
       "documents",

@@ -1,11 +1,11 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempSources, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q56/q57 on planted event logs. Fixture `ts` is raw TIMESTAMP(NANOS)
   * longs, exactly like the driver tables ([[graft.Graft.events]] converts). */
-class WarehouseSpec extends AnyFunSuite {
+class WarehouseSpec extends AnyFunSuite with TempSources {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -13,7 +13,7 @@ class WarehouseSpec extends AnyFunSuite {
   private def us(sec: Long): Long = sec * 1000000L
 
   test("q56 collapses consecutive equal states into SCD2 validity intervals") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     val rows = Seq(
       // user 7: A A B A → three intervals, the last open-ended
       (0L, nanos(10), 7L, "A", 1.0, "{}"),
@@ -41,7 +41,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("q59 funnel requires strict stage order (signup before click before purchase)") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     val rows = Seq(
       // user 1: in order → reaches all three stages
       (0L, nanos(10), 1L, "signup", 1.0, "{}"),
@@ -71,7 +71,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("q57 arg-max breaks value ties by event_id, deterministically") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     val rows = Seq(
       (10L, nanos(1), 5L, "x", 2.00, "{}"),
       (11L, nanos(2), 6L, "x", 2.00, "{}"), // tie on value → higher event_id wins
@@ -92,7 +92,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("x166 recovers a planted period-2 series: negative lag-1, positive lag-2 ACF") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     // 14 days alternating 10 / 2 events per day
     val counts = (0 until 14).map(d => d -> (if (d % 2 == 0) 10 else 2))
     val rows = counts.flatMap { case (d, c) =>
@@ -120,7 +120,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("x172 mines session paths: gap split, (ts, event_id) order, 5-event truncation") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     val rows = Seq(
       // user 1, session 1: 7 events 1s apart — path truncates at 5
       (0L, nanos(100), 1L, "view", 1.0, "{}"),
@@ -153,7 +153,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("x173 Theil-Sen trend resists a planted outlier day; matches the in-memory order statistics") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     // day d carries d+1 events (true slope exactly 1/day) except day 7's
     // 50-event burst — the median pairwise slope must stay at 1e6 ppm
     // while a moment-based (OLS) slope would be dragged by the outlier
@@ -183,7 +183,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("x191 contract audit: a clean feed passes all rules; a planted duplicate key is localized") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     // keys chosen OFF every planted stripe (k % 1009/1013/1019/1021 != 0)
     // so the in-query plants stay inert and the feed is genuinely clean
     val mkOrders = (keys: Seq[Long]) =>
@@ -202,7 +202,7 @@ class WarehouseSpec extends AnyFunSuite {
       assert(r.getAs[Long]("min_bad_key") === -1L)
     }
     // duplicate key 6 → only the uniqueness rule fires, localized at 6
-    val dir2 = TestSpark.tempDir()
+    val dir2 = tempSource()
     TestSpark.writeTable(dir2, "orders", mkOrders(Seq(5L, 6L, 6L, 7L)))
     TestSpark.writeTable(dir2, "customer", Seq(Tuple1(1L)).toDF("c_custkey"))
     val dup = Warehouse
@@ -216,7 +216,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("x194 watermark profile: planted lateness straddles each fence with exact drop counts") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     // 500 on-time events 1 s apart; ids 37k/101k/211k get their event
     // time pulled back 5 min / 30 min / 2 h by the in-query plant
     val rows = (1 to 500).map(i => (i.toLong, nanos(10000L + i), 1L, "click", 1.0, "{}"))
@@ -240,7 +240,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("x193 federated parity: five formats agree on a fresh table; a corrupted leg flips parity") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     val orders = Seq(
       (1L, 10.00, "F", java.sql.Date.valueOf("1996-01-01"), 1L),
       (2L, 20.50, "O", java.sql.Date.valueOf("1996-01-02"), 1L),
@@ -306,7 +306,7 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("x181 chi2: zero statistic on an exactly independent table; in-memory replay of the planted test") {
     import graft.functions.Hashing
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     // 2x2 exactly independent: cells (A,X)=(A,Y)=(B,X)=(B,Y)=10 -> every
     // O*N - R*C = 0, chi2 exactly 0, not significant
     val rows = (0 until 40).map { i =>
@@ -347,7 +347,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("x183 seasonal decomposition: flat series + plants recover exact closed-form components") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     // EXACTLY 10 events every day for 28 consecutive days starting at a
     // Monday-aligned epoch day: after the in-query plants the series is
     // pure weekly pattern + one spike, so every component is closed-form
@@ -384,7 +384,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("x174 PIT join: boundary inclusivity, run collapse, pre-state facts, zero-width intervals") {
-    val dir = TestSpark.tempDir()
+    val dir = tempSource()
     val rows = Seq(
       // user 1: purchase BEFORE any state → 'none' / -1
       (0L, nanos(5), 1L, "purchase", 1.0, "{}"),
