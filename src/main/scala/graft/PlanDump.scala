@@ -11,12 +11,12 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
-    val names = args(3).split(",").toSeq
+    val selected = SparkEntry.select(args(3))
     val spark = Graft.session("graft-plandump")
     new java.io.File(outDir).mkdirs()
-    names.foreach { name =>
+    selected.foreach { case (name, fn) =>
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )

@@ -2,28 +2,27 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Scale robustness probe (not part of the driver contract): replicates the
-  * sf0.1 fact tables N× with shifted order keys (~10M lineitem rows at
-  * N=16), then runs the heavy relational queries. Confirms the plans that
-  * pass correctness at sf0.01 still behave at 100× that scale — no OOM, no
-  * quadratic blowup, runtimes scaling ~linearly with input.
+/** Scale-probe input generator (not part of the driver contract): writes
+  * all 10 sf0.1 tables into a work dir, the fact tables replicated N× with
+  * shifted keys (~10M lineitem rows at N=16), the dims copied as they are.
+  * Probing is then an ordinary Bench run on the work dir, which shows
+  * whether plans that pass correctness at sf0.01 still behave at 100× that
+  * scale (no OOM, no quadratic blowup, runtimes ~linear in input):
   *
-  * Usage: runMain graft.ScaleProbe [N] [workDir] [--skip-gen] [--only=a,b]
-  * (--skip-gen reuses an existing workDir; --only filters the query list —
-  * useful because x04's clone-corpus quadratic contaminates same-JVM
-  * timings of everything after it; flags may appear anywhere)
+  *   runMain graft.ScaleProbe [N] [workDir]      (defaults 16, /tmp/graft_scaleprobe)
+  *   SPARK_GRAFT_SF_DIR=<workDir> runMain graft.Bench [q1,q2,...]
+  *
+  * At 16× a full or large Bench run outgrows the default budget: raise
+  * SPARK_GRAFT_BENCH_BUDGET_SEC so the warm sweep and both timed passes run.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val (flags, positional) = args.partition(_.startsWith("--"))
-    val n = positional.headOption.map(_.toInt).getOrElse(16)
-    val work = if (positional.length > 1) positional(1) else "/tmp/graft_scaleprobe"
+    val n = args.headOption.map(_.toInt).getOrElse(16)
+    val work = args.lift(1).getOrElse("/tmp/graft_scaleprobe")
     val src = "/root/testdata/sf0.1"
     val spark = Graft.session("graft-scaleprobe")
-    val skipGen = new java.io.File(s"$work/orders.parquet").exists() && flags.contains("--skip-gen")
 
     val copies = spark.range(n).toDF("rep")
-    if (!skipGen) {
     def scaleFact(name: String, keyCols: Seq[String]): Unit = {
       val t = Graft.table(spark, src, name)
       val scaled = t
@@ -36,9 +35,8 @@ object ScaleProbe {
     }
     scaleFact("lineitem", Seq("l_orderkey"))
     scaleFact("orders", Seq("o_orderkey"))
-    // customers scale for the record-linkage and graph probes (x108's
-    // record universe and the md5 graph's vertex set are customer-sized);
-    // none of the probed queries broadcast customer as a small dim
+    // customers scale for the record-linkage and graph queries (their
+    // record universe and vertex set are customer-sized)
     scaleFact("customer", Seq("c_custkey"))
     // documents replicate with shifted ids but IDENTICAL text — deliberately
     // the dedup worst case: every doc gains n-1 exact clones, every shingle's
@@ -62,505 +60,13 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$work/events.parquet")
     }
     // customer is NOT in this dim-copy list — it is fact-scaled above
-    // (a copy here would clobber the 16x table and silently run the
-    // x108/x109 probes at 1x)
+    // (a copy here would clobber the N× table and silently run the
+    // customer-sized queries at 1x)
     Seq("region", "nation", "supplier", "part", "embeddings")
       .foreach { t =>
         Graft.table(spark, src, t).write.mode("overwrite").parquet(s"$work/$t.parquet")
       }
     println(s"[probe] generated ${n}x facts at $work")
-    }
-
-    val heavy = Seq(
-      "q01_pricing_summary", "q02_filter_project", "q04_join_shuffle", "q05_join_semi",
-      "q07_join_outer_hist", "q08_window_rank", "q10_topk", "q12_distinct_agg",
-      "q17_rollup", "q27_percentiles", "q30_hash_sample",
-      "x01_dedup_exact", "x02_dedup_ngram_jaccard", "x04_dedup_simhash",
-      "x14_dedup_chargram", "x17_pii_redact", "x18_decontaminate", "x19_repetition",
-      "x20_dedup_pipeline",
-      // round-3 corpus ops: x25/x31 carry full-corpus term aggregations
-      // (the clone corpus multiplies every df by n), x26 stresses the
-      // per-lang running-sum window, x30/x32 are scan-shaped
-      "x24_hash_split", "x25_tfidf_keywords", "x26_token_budget_sample",
-      "x30_embedding_quantize", "x31_span_stats", "x32_keyword_search",
-      "x36_winnow_fingerprint", // positional gram hashing, the heaviest per-row text op
-      // clone corpus = dense dup graph: every text's 16 clones pair up via
-      // shared shingles, so components run on ~100× the 1× edge count
-      "x37_dedup_clusters", "x38_doc_chunks",
-      // round-4 corpus ops over the scaled documents: x42 multiplies every
-      // bigram/prefix count by n (the coherence join keys get n× hotter),
-      // x43 stresses the per-stratum ranking window, x45 the byte rollup;
-      // x44 rides at base embeddings scale; q47/q48 run over the 16x
-      // replicated events (users replicated since r5)
-      "x42_bigram_coherence", "x43_stratified_sample", "x45_compaction_plan",
-      "x44_random_projection", "q47_higher_order", "q48_sliding_window",
-      // bloom build multiplies by n only through the benchmark gram set;
-      // the probe side is the broadcast-join scan shape
-      "x46_bloom_decontaminate",
-      // custom bounded-heap top-k-per-key vs its declarative twin: the clone
-      // corpus multiplies every supplier's group 16x, which the window twin
-      // pays for in local sort volume and the heap admits in O(1) rejects
-      "q51_topk_per_key", "q51_window_twin",
-      // round-4 late additions: q52/q53/q54 aggregate the 16x orders (Expand
-      // multiplies rows 3x in q53 — the probe shows it stays linear); q55
-      // runs BFS over the ~10M-row scaled lineitem edge graph (the real
-      // frontier-join stress); q56 runs over the 16x events (users replicated), q57 the 16x lineitem; x51 runs
-      // the rule scan over the 16x clone corpus; x50 rides at base
-      // embeddings scale as a shape check
-      "q52_unpivot", "q53_grouping_sets", "q54_map_funcs", "q55_recursive_reach",
-      "q56_scd2_intervals", "q57_argmax", "x50_semdedup", "x51_gopher_filter",
-      // x52's gram df and coverage windows run over the 16x clone corpus
-      // (every 5-gram's df jumps to ≥16 ⇒ every word covered — the
-      // worst-case full-redaction path); x53's prefix sum spans 80k docs;
-      // q58/q59 run over the 16x events, q60 the 16x orders
-      "x52_span_dedup", "x53_sequence_pack", "q58_variant", "q59_funnel",
-      "q60_set_ops_all",
-      // x54 rides the x02 inverted index over the 16x clone corpus (every
-      // clone pair is a 100%-containment pair — the dense worst case)
-      "x54_containment",
-      // 5 Pregel supersteps over the ~24M-edge graph: per-iteration join +
-      // agg with lineage cut per round
-      "q62_pagerank",
-      // round-4 analytic batch: q65-q68 aggregate the 16x lineitem/orders;
-      // q63 rides at base customer scale; q64 windows the 16x events; x57 iterates over base embeddings (k·dims broadcast per
-      // round); x59's per-source ranking window runs over the 16x clone
-      // corpus (every source's stratum multiplies 16x)
-      "q63_ntile_distribution", "q64_ignore_nulls", "q65_bitwise_agg",
-      "q66_median", "q67_try_arith", "q68_calendar_arith",
-      "x57_kmeans", "x59_temperature_mix",
-      // q71 sessionizes the 16x events (16x users, same per-user sessions); x61/x62/x63
-      // run their corpus aggregations over the 16x clone documents (every
-      // tf and pair count multiplies by 16; x62's fences shift with the
-      // replicated distribution)
-      "q71_session_window", "x61_surprisal", "x62_winsorize", "x63_bpe_pairs",
-      "x64_epoch_upsample",
-      // r5: bigram-LM perplexity buckets — vocab aggs + equi-joins back;
-      // span decontamination runs the x52 coverage machinery against the
-      // benchmark gram set over the 16x clone corpus (every clone of a
-      // benchmark doc is fully covered — the full-redaction worst case)
-      "x66_perplexity_bucket", "x67_span_decontaminate",
-      // x68 is scan → tiny broadcast → per-doc agg; x69's clone corpus is
-      // the mass-duplication case: exact pass collapses clones, the
-      // hot-bucket cap keeps the band join off the dense buckets
-      "x68_quality_classifier", "x69_incremental_dedup",
-      // r6: search-only ANN against the persisted gate index — steady
-      // state is a marker-file read + the probe/list joins; compare with
-      // x13, whose entry also pays the brute-force exact twin
-      "x74_ivf_search", "x13_sim_ivf",
-      // r6: the trigram langid's profile build + scoring join both ride
-      // the corpus trigram stream (3x chars per doc; the clone corpus
-      // multiplies every (lang, trigram) count by 16)
-      "x09_text_langid",
-      // r6: the BPE trainer scans the corpus once into the word-frequency
-      // vocab; the 16x clone corpus multiplies every word count by 16 but
-      // leaves the vocab (and so every merge round) the same size — the
-      // probe shows round cost is vocab-bound, not corpus-bound
-      "x72_bpe_train",
-      // r6: encode = train (even half) + k folds over the DISTINCT-word
-      // vocab + one join back to per-doc word counts; the clone corpus
-      // multiplies the join's probe side by 16 but not the vocab folds
-      "x75_bpe_encode",
-      // r6: leakage-safe split = the x37 component pass + a left join on
-      // doc_id; the clone corpus is the dense-cluster worst case (every
-      // clone family is one component riding a single md5 bucket)
-      "x76_leakage_safe_split",
-      // r6: PPS sample = the x26/x53 distributed prefix-sum over the 16x
-      // corpus (80k intervals, same ≤B-row bucket offsets)
-      "x77_pps_sample",
-      // r6: compaction exec steady state is a marker-file read + the
-      // compacted-artifact scan/agg (the warm pass absorbs the rebuild)
-      "x78_compaction_exec",
-      // r6: calibration = per-doc scoring agg + two ExactPercentile passes
-      // over the 16x clone corpus (every score repeats 16x — the
-      // duplicate-heavy distinct-value regime the two-phase operator
-      // collapses map-side)
-      "x79_quality_calibrate",
-      // r6: COW table format over the 16x orders (~9.4k bucket dirs —
-      // the small-files regime the manifest is built for). The first
-      // probed query pays the fingerprint rebuild (bucketed write + two
-      // merges); x84/x85 then show diff/MV cost tracking CHANGED buckets,
-      // not table size — the carried 80% is never read
-      "x81_cow_merge", "x84_snapshot_diff", "x85_incremental_mv",
-      // r6: shard shuffle = one corpus scan + the x26/x53 prefix-sum over
-      // the 16x clone corpus (80k docs); the only single-task window is
-      // the 32-row bucket-offset frame
-      "x87_shard_shuffle",
-      // r7: MOR deletion vectors + schema evolution over the 16x orders —
-      // x97 pays the CowEvo fingerprint rebuild on first touch (bucketed
-      // write + morDelete probe + COW twin), then the read side is the
-      // DV broadcast anti-join; x99's schema-mapped read adds only column
-      // aliases per file group. Both show cost tracking deleted/changed
-      // buckets, never table size.
-      "x97_mor_delete", "x99_schema_evolution",
-      // r7: corpus-fed Misra–Gries — the 16x lineitem stream (~25M rows
-      // after the 25x stripe replication) through the same k=16 buffers;
-      // partial-sketch merge volume is partitions x k, independent of n
-      "x101_heavy_hitters_corpus",
-      // r7: x73's enriched stats pass (null counts + per-file KMV) rides
-      // the same one-scan manifest build; steady state is marker-read +
-      // pruned scan
-      "x73_skipping_scan",
-      // r7 session 2: entity resolution over 16x customers (~48k records)
-      // — blocking joins on md5-uniform 4-hex keys; candidate volume grows
-      // with block occupancy (birthday pairs), matches stay linear
-      "x108_entity_resolution",
-      // r7 session 2: 5 LPA rounds over the 16x-vertex md5 graph — per
-      // round one edges⋈labels join + bounded argmax agg; edge table
-      // checkpointed once
-      "x109_label_propagation",
-      // r7 session 2: resample/gap-fill over 16x users (1.6M events) —
-      // one window pass per user partition, grid explode bounded by span
-      "x110_resample_gapfill",
-      // r7 session 2: sketch algebra over 16x orders — the KMV build is
-      // the corpus-sized part (bounded buffers); the algebra is two
-      // 256-long arrays regardless of scale
-      "x112_kmv_set_algebra",
-      // r7 session 2: ORC rewrite of the 16x lineitem (one-pass format
-      // conversion, then the pruned aggregate read)
-      "x106_orc_roundtrip",
-      // r7 session 2: Bloom manifest build over 16x orders (one grouped
-      // scan + the 3x probe explode), then driver-side point planning
-      "x113_bloom_point_lookup",
-      // r7 session 2: chunking is map-only split+explode over the 16x
-      // clone corpus — the embedding-prep scan shape
-      "x115_doc_chunking",
-      // r7 session 2: partition-spec evolution over 16x orders — first
-      // touch pays the fixture build (v1 bucketed write + evolve + merge);
-      // the measured steady state is the cross-spec read + driver prune,
-      // cost tracking touched buckets not table size
-      "x117_partition_evolution",
-      // r7 session 2: quantile sketch over 16x lineitem — bounded
-      // k·levels buffers through 10M rows; the rank probe is a 3-value
-      // broadcast conditional agg
-      "x118_quantile_sketch",
-      // r7 session 4: WordPiece encode over the 16x clone corpus — vocab
-      // and max-match run per DISTINCT word (clone-invariant), the corpus
-      // stream crosses one per-doc agg; x128 runs two spillable
-      // ExactPercentile passes over 16x orders; x129 the same plus the
-      // broadcast-array bucket pass over 16x lineitem
-      "x127_wordpiece_encode", "x128_mad_outliers", "x129_equidepth_stats",
-      // r7 session 4b: SCD2 maintenance over 16x users (1.6M events, 3
-      // chronological batches); sketch rollup over 16x lineitem (bounded
-      // 256-long buffers, merge arithmetic sketch-sized)
-      "x135_scd2_merge", "x136_sketch_rollup",
-      // r7 session 4c: cohort/rolling-distinct/overlap run over 16x users
-      // (1.6M events) — censuses + bounded explodes; x137 novelty over the
-      // 16x clone corpus (distinct-gram sets are clone-invariant); x140's
-      // d² stencil ticks at base embeddings scale (corpus-independent)
-      "x141_cohort_retention", "x142_interval_overlap_join", "x143_rolling_distinct",
-      "x137_ngram_novelty",
-      // r7 session 5: fuzzy resolution over the 16x clone corpus — the
-      // mention stream is 16x but distinct mention strings (and so the
-      // neighborhood join) are clone-INVARIANT; Viterbi encode likewise
-      // runs its DP per distinct word; DSIR's feature stream is 16x but
-      // both bucket aggs collapse map-side into ≤256 rows
-      "x147_fuzzy_resolve", "x148_unigram_viterbi", "x149_dsir_select",
-      // r7 session 5: SSSP relaxes over the ~10M-row scaled lineitem
-      // graph (4 rounds, same discipline as q55/q62); assoc rules pair
-      // within 16x baskets (bounded quadratic per basket); the native
-      // Jaro-Winkler scalar scans 16x customers in one codegen stage
-      "x152_weighted_sssp", "x153_assoc_rules", "x154_jaro_winkler",
-      // r7 session 5b: delta-join MV over 16x orders/lineitem — the
-      // delta sides stay batch-sized broadcasts, so refresh cost tracks
-      // the deltas; BM25 and the AUC eval ride the 16x clone corpus
-      // (score tables are vocab/score-resolution-bounded); the drift
-      // report aggregates 16x events in one conditional-sum pass; MMR's
-      // distributed part (relevance + pair dots) rides base embeddings
-      "x155_delta_join_mv", "x156_bm25_rank", "x157_drift_report",
-      "x159_auc_calibration", "x158_mmr_select",
-      // r7 session 5c: the eager-agg rewrite over 16x lineitem — the
-      // pre-aggregation collapses ~10M fact rows to one per supplier
-      // BEFORE the join shuffle (the rule's whole point at scale); CUSUM
-      // collapses 16x events to one row per day then folds the series
-      "x160_eager_agg", "x161_cusum_changepoint",
-      // r7 session 5d: A/B census over 16x events (one user-keyed agg);
-      // TIFF decode + 5-way dispatch ride the fixture corpora (per-row
-      // codec work, corpus-size independent)
-      "x162_ab_test", "x163_tiff_decode", "x91_image_dispatch",
-      // r7 session 6: NB training over the 16x clone corpus — the feature
-      // stream collapses per (doc, bucket) in one shuffle, the grid stays
-      // L×256; PCA's matvec rounds are matrix-sized (base embeddings),
-      // the projection is the corpus-scan part; ACF collapses 16x events
-      // to one row per day before the 7-way bounded lag join
-      "x164_nb_classifier", "x165_pca_power", "x166_autocorrelation",
-      // r7 session 6: HITS over the 16x-vertex directed md5 graph — 8
-      // half-steps of co-partitioned join + vertex-key agg (q62 class);
-      // the PNG depth/alpha decode rides its fixture corpus (per-row
-      // codec work, corpus-size independent)
-      "x167_hits", "x168_png_depth_alpha",
-      // r7 session 6: isotonic fit rides x149's audited scoring pipeline
-      // (PAV itself is g-sized); the inverted-index lookup pays the
-      // 16x-corpus posting build on first touch, steady state is the
-      // bucket-pruned point read (the x74/x78 pattern)
-      "x169_isotonic_calibration", "x170_inverted_index",
-      // r7 session 6: k-anonymity census over the 16x clone corpus (one
-      // grouped agg); path mining's user window + session agg over 16x
-      // users (the q36/q71 event class)
-      "x171_k_anonymity", "x172_session_paths",
-      // r7 session 7: Theil–Sen collapses 16x events to the SAME day
-      // census (counts x16, day count unchanged) — the pair explode is
-      // calendar-bounded, so the probe cost is the daily agg scan
-      "x173_theil_sen",
-      // PIT SCD2 join: one user_id shuffle over 16x users (the q36/x172
-      // event-window class); no interval join ever materializes
-      "x174_pit_scd2_join",
-      // Kneser-Ney: one corpus pass into the (w1,w2) count table; the 16x
-      // clone corpus multiplies counts, not types — every downstream agg
-      // stays vocab-sized (the x66 discipline)
-      "x175_kneser_ney",
-      // WARC walk + HTML extraction are per-payload maps over the fixture
-      // corpus (fixture-bound like the image decoders — the probe is a
-      // plumbing check, the per-file walk cost is what scales per shard)
-      "x176_warc_scan", "x177_html_extract",
-      // DBSCAN over 16x customers: the grid-stencil pair join fans out
-      // per-cell (uniform background densifies 16x — the operator's own
-      // regime shift), components via the audited min-label propagation
-      "x178_dbscan",
-      // linear probe: one map-side moment aggregate over base embeddings
-      // (corpus crosses once; the Cramer solve is a 1-row projection)
-      "x179_linear_probe",
-      // logstar CC: 13 fixed large/small pairs over the 16x stripe graph
-      // (240k vertices) - round count is SIZE-independent, per-round cost
-      // linear; the x178 lesson institutionalized
-      "x180_logstar_cc",
-      // chi-squared: two cell censuses over 16x orders (map-side combine),
-      // everything downstream margin-sized
-      "x181_chi2_independence",
-      // skew profiler: two key censuses over the ~10M-row 16x lineitem
-      // (the skewed profile's explode adds ~3.3x rows map-side)
-      "x182_skew_profile",
-      // seasonal decomposition: one day-census agg absorbs the 16x
-      // counts; all decomposition joins run on the bounded day table
-      "x183_seasonal_decompose",
-      // NFC keys: per-row normalize over the 16x clone corpus, zero
-      // shuffles before the sort
-      "x184_nfc_keys",
-      // phrase search: one postings explode over the 16x clone corpus,
-      // term-selective co-partitioned adjacency joins per phrase
-      "x185_phrase_search",
-      // Zipf fit: two corpus-pass censuses (map-side combine); ranking
-      // and the OLS run on vocab-bounded tables
-      "x186_zipf_fit",
-      // encoding advisor: five aggs over one localCheckpointed 16x scan
-      "x187_encoding_advisor",
-      // CDC compose: two change-sized feeds folded by one key join; the
-      // direct branch reads changed buckets only (the x84 cost shape)
-      "x188_cdc_compose",
-      // zip scan: per-archive map over the fixture corpus (fixture-bound)
-      "x189_zip_scan", "x190_ogg_scan",
-      // contract audit: one localCheckpointed feed scan + key census +
-      // broadcast FK anti-join over the 16x orders
-      "x191_contract_audit",
-      // delta pack: prefix-sum ranks over 16x lineitem, block-bounded
-      // mapGroups packing (the x87 layout class)
-      "x192_delta_pack",
-      // federated parity: five format reads of the 16x projection (the
-      // SAS leg exercises the from-scratch page-splittable reader)
-      "x193_federated_scan",
-      // watermark profile: prefix-max buckets over 16x events, three
-      // conditional sums on one checkpointed pass
-      "x194_watermark_profile",
-      // assortativity: degree agg + two joins over the 16x md5 graph
-      "x195_assortativity",
-      // KN perplexity: train stats from the 16x even half (vocab-bound),
-      // eval stream crosses one per-lang agg shuffle
-      "x196_kn_perplexity",
-      // EXIF: per-payload metadata walk (fixture-bound)
-      "x197_exif_meta",
-      // snappy/lz4: per-payload byte-codec map (fixture-bound)
-      "x198_snappy_decode", "x199_lz4_decode",
-      // skyline: bounds+census aggs over 16x part, exact join on the
-      // pruned survivor band only
-      "x200_skyline",
-      // RRF fusion: two shortlist legs (term-filtered scan + broadcast
-      // probe) fused on 20-row frames
-      "x201_rrf_fusion",
-      // HRW rebalance: per-row 9-slot argmax in codegen over 16x orders,
-      // one 18-group agg shuffle
-      "x202_hrw_rebalance",
-      // Heaps fit: one corpus explode into a vocab-bound min-agg; all
-      // cumulative/fit math on <=16-row tables
-      "x203_heaps_fit",
-      // mojibake: per-row byte-codec map over the 16x docs, no shuffle
-      "x204_mojibake",
-      // Holt: monthly census agg absorbs the 16x; the recurrence runs on
-      // bounded per-series month rows
-      "x205_holt_smoothing",
-      // IDN: per-row label decode (fixture-bound)
-      "x206_idn_decode",
-      // prefix join: rarest-first prefixes keep the candidate join off
-      // hot shingles by construction over the 16x clone corpus
-      "x207_prefix_join",
-      // AMS: one census with map-side combine; 31x explode of the
-      // vocab-bounded census only
-      "x208_ams_f2",
-      // Luhn: per-row regex + digit aggregate, no shuffle
-      "x209_luhn_redact",
-      // Benford: one census agg; everything after is 9 rows
-      "x210_benford",
-      // resample: per-payload integer interpolation (fixture-bound)
-      "x211_audio_resample",
-      // islands/rank-census stats: one key shuffle + bounded windows
-      "x212_interval_merge", "x213_cohens_kappa", "x214_mannwhitney",
-      "x215_gini_tokens",
-      // pseudonymize: two keyed scans + one token join; apportion is
-      // census-sized after the mass agg
-      "x216_pseudonymize", "x217_apportion",
-      // AP: eval-set brute ranking (bounded by construction)
-      "x218_avg_precision",
-      // spearman: value censuses (AQE-sized joins) over 16x lineitem
-      "x219_spearman",
-      // KS: one census + bucketed prefix + max fold
-      "x220_ks_test",
-      // tree stump: 3 domain-bounded census searches + bounded argmax
-      "x221_tree_stump",
-      // overlap depth: manifest-sized sweeps + one contrast-leg scan
-      "x222_overlap_depth",
-      // LTTB: monthly census absorbs the stream; buckets series-bounded
-      "x223_lttb_downsample",
-      // LSH eval: two audited pipelines + one pair join
-      "x224_lsh_eval",
-      // r8 additions over the scaled tables (fixture-bound ops — x226
-      // manifest tree, x227 zstd, x229-x231 COW roots — probe via their
-      // gates/specs instead):
-      // logistic GD: 5 rounds × two map-side-combinable shuffles over
-      // the 16x clone corpus (every bucket census ×16)
-      "x228_logistic_gd",
-      // CIDR join: 16x customer ips against the 64-block grid
-      "x232_cidr_join",
-      // assoc rules: basket self-join over 16x orders (baskets ×16, the
-      // per-basket bound unchanged)
-      "x233_assoc_rules",
-      // KMV estimate: bottom-256 heaps over 16x key streams
-      "x234_kmv_join_estimate",
-      // half-sample CI: 120 conditional sums in one 16x scan
-      "x235_halfsample_ci",
-      // decayed top-k: faced census over 16x events
-      "x236_decayed_topk",
-      // bitmap index: word censuses over 16x lineitem
-      "x237_bitmap_index",
-      // Neyman: stratum census over 16x customer
-      "x238_neyman_alloc",
-      // FD discovery: six 2-column distinct censuses over 16x tables
-      "x239_fd_discovery",
-      // filter attribution: one token-census pass over the 16x clone
-      // corpus, then 32-row arithmetic
-      "x240_filter_attribution",
-      // mutual NN: base embeddings scale (shape check)
-      "x241_mutual_nn",
-      // keep-best: CC over the 16x clone corpus — the dense-cluster
-      // worst case x37 already absorbs, plus one quality census
-      "x242_keep_best",
-      // RFM: three bucketed-prefix quintile passes over 16x customers
-      "x243_rfm_segments",
-      // reconciliation: one line agg + header join at 16x
-      "x244_order_reconcile",
-      // time-to-convert: per-user aggs + delta census over 16x events
-      "x245_time_to_convert",
-      // join amplification: key census + slice verify over 16x lineitem
-      "x246_join_amplification",
-      // DAU/WAU: <=7x expansion of the 16x (user, day) grain
-      "x248_dau_wau",
-      // OOV: token censuses over the 16x clone corpus
-      "x249_oov_rate",
-      // bot detection: user-partitioned lag over 16x events
-      "x250_bot_detection",
-      // band sweep: x207 truth + 3 band cuts over the clone corpus
-      "x253_band_sweep",
-      // churn features: customer-partitioned lag over 16x orders
-      "x254_churn_features",
-      // RFM / k-anon / DP / backtest are census-cheap; rode along once:
-      "x251_dp_geometric", "x252_k_anonymity", "x255_forecast_backtest",
-      // layout audit is fixture-metadata-bound (rides its gate); the rest:
-      // CUPED: one moments pass over 16x orders
-      "x257_cuped",
-      // QTE: arm-partitioned census picks over 16x lineitem
-      "x258_qte",
-      // graph coefficients: 16x-customer draw graph (edges x16)
-      "x259_graph_coefficients",
-      // sketch sweep: one agg pass per 16x key stream
-      "x261_sketch_accuracy",
-      // learning curve: 3 x228 trainings over the 16x clone corpus
-      "x262_learning_curve",
-      // manifest-tree range plan: 16x cow fixture rebuild + pruned read
-      "x263_mtree_range_plan",
-      // stats-fed reorder: stats build over 16x tables + the 3-chain
-      "x265_stats_join_reorder",
-      // incremental index: 16x corpus split-build + segment lookup
-      "x266_incremental_index",
-      // r9 session-2 additions:
-      // incremental IVF: base embeddings scale (segment build + pruned
-      // search — artifact is per-source-dir, so this is the shape check)
-      "x269_incremental_ivf",
-      // adaptive salt: exact key census + salted join over 16x lineitem
-      "x270_adaptive_salt",
-      // CDC chunking: char-position explode over the 16x clone corpus
-      // (~80M boundary candidates), doc-bounded span windows, chunk census
-      "x271_cdc_chunks",
-      // priority sample: per-row decimal priorities + top-51 heaps over
-      // 16x orders
-      "x272_priority_sample",
-      // stats-fed skew salting: skew-fixture + stats rebuild over the 16x
-      // lineitem (the JoinStats pass), then the salted join itself
-      "x273_stats_skew_join",
-      // incremental IVF+PQ: base embeddings scale (pruned ADC shape check)
-      "x274_incremental_ivfpq",
-      // r9 session-3 additions:
-      // from-scratch parquet scan: 16x orders decoded per file-task
-      // (thrift footer + hybrid levels + dictionary pages + snappy pages)
-      "x282_parquet_scan",
-      // histogram CART: 3 level passes over 16x orders (census cells stay
-      // bounded; routing joins scale with rows)
-      "x284_cart_tree",
-      // forest: 3 bagged depth-2 trainings + the 3-way vote join
-      "x285_random_forest",
-      // GBT: 3 sequential rounds of regression trees + score updates
-      "x287_gbt",
-      // attribution: user-keyed journey windows over 16x events
-      "x294_attribution",
-      // MAD audit: two census passes over 16x orders
-      "x295_mad_outliers",
-      // Benford: one digit census over 16x orders
-      "x296_benford",
-      // ORC scratch scan: 16x lineitem projection rebuilt + decoded
-      "x299_orc_scan"
-    )
-    val only = flags.collectFirst { case f if f.startsWith("--only=") => f.stripPrefix("--only=").split(',').toSet }
-    val selected = only.fold(heavy)(o => heavy.filter(o.contains))
-    // probe-only twins (not in the driver gate): the declarative
-    // sort+group-limit formulation of q51, for a same-JVM head-to-head
-    // against the custom bounded-heap operator
-    val extras: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Map("q51_window_twin" -> { (s, d) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("l_suppkey")
-          .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc, col("l_linenumber").asc)
-        Graft
-          .table(s, d, "lineitem")
-          .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 3)
-          .select(
-            col("l_suppkey"),
-            col("l_orderkey"),
-            col("l_linenumber"),
-            round(col("l_extendedprice") * 100).cast("long").as("price_cents")
-          )
-          .orderBy("l_suppkey", "l_orderkey", "l_linenumber")
-      })
-
-    selected.foreach { name =>
-      try {
-        val fn = extras.getOrElse(name, SparkEntry.queries(name))
-        fn(spark, work).write.mode("overwrite").format("noop").save() // warm
-        val t0 = System.nanoTime()
-        fn(spark, work).write.mode("overwrite").format("noop").save()
-        println(f"[probe] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s  (${n}x sf0.1)")
-      } catch {
-        // a failed query must not hide the rest of the probe
-        case e: Throwable => println(s"[probe] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-    }
     spark.stop()
   }
 }

@@ -33,6 +33,17 @@ object SparkEntry {
       TextAnalysis.queries ++ Multimodal.queries ++ Curation.queries ++ Sampling.queries ++
       TopKPerKey.queries ++ Reshape.queries ++ Warehouse.queries ++ Analytic.queries
 
+  /** The [[queries]] named in a comma-separated list, in the order given.
+    * Fails naming every unknown name, so a misspelt filter never silently
+    * drops a query. */
+  def select(names: String): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val wanted = names.split(",").toSeq
+    val unknown = wanted.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    wanted.map(n => n -> all(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -6,13 +6,14 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (local iteration;
-    // the driver always passes exactly two args → full surface)
+    // the driver always passes exactly two args → full surface); an
+    // unknown name fails here instead of silently dropping its query
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    val only: Option[Set[String]] = args.lift(2).map(SparkEntry.select(_).map(_._1).toSet)
     val spark = Graft.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // materialize the SAS-label dims for the DuckDB side of the ETL oracles
-    try graft.etl.SasLabels.dump(spark, "/root/reference/I94_SAS_Labels_Descriptions.SAS")
+    try graft.etl.SasLabels.dump(spark, s"${graft.etl.ReferenceData.root}/I94_SAS_Labels_Descriptions.SAS")
     catch { case e: Throwable => System.err.println(s"[verify] dims dump failed: ${e.getMessage}") }
     SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1))).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

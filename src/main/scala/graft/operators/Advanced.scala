@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Graft.table
+import graft.etl.ReferenceData
 import graft.sources.Fixture
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2308,7 +2309,7 @@ object Advanced {
       graft.etl.Ingest.writeParquet(raw, graft.etl.AirportFixture.parquetPath)
       val airports = graft.etl.Ingest.parquet(s, graft.etl.AirportFixture.parquetPath)
       val ports = graft.etl.SasLabels
-        .load(s, "/root/reference/I94_SAS_Labels_Descriptions.SAS")
+        .load(s, s"${ReferenceData.root}/I94_SAS_Labels_Descriptions.SAS")
         .ports.select(col("code"), col("city"))
       airports
         .join(broadcast(ports), col("iata_code") === col("code"))
@@ -2412,14 +2413,14 @@ object Advanced {
     // ingest and the broadcast join all sit inside the gate. The float avg
     // crosses engines as integer centi-years (median_age_e2).
     "etl_state_demo" -> ((s, _) => {
-      val dims = graft.etl.SasLabels.load(s, "/root/reference/I94_SAS_Labels_Descriptions.SAS")
+      val dims = graft.etl.SasLabels.load(s, s"${ReferenceData.root}/I94_SAS_Labels_Descriptions.SAS")
       val states = dims.states.select("code").collect().map(_.getString(0)).toSeq
       val raw = graft.etl.Ingest
-        .csv(s, "/root/reference/immigration_data_sample.csv", graft.etl.Schemas.immigrationSample)
+        .csv(s, s"${ReferenceData.root}/immigration_data_sample.csv", graft.etl.Schemas.immigrationSample)
         .drop("_row")
       val fact = graft.etl.Clean.immigration(raw, states)
       val demo = graft.etl.Model.stateDemographics(
-        graft.etl.Ingest.demographics(s, "/root/reference/us-cities-demographics.csv")
+        graft.etl.Ingest.demographics(s, s"${ReferenceData.root}/us-cities-demographics.csv")
       )
       fact
         .groupBy("state_code")
@@ -2628,13 +2629,13 @@ object Advanced {
         .orderBy("vec_id")
     }),
 
-    // Reference-parity ETL pipeline end-to-end (reads /root/reference, so
+    // Reference-parity ETL pipeline end-to-end (reads ReferenceData.root, so
     // rows-only — the sf tables play no part): SURVEY.md §7.2 flagship.
     "etl_i94_top_ports" -> ((s, _) => {
-      val dims = graft.etl.SasLabels.load(s, "/root/reference/I94_SAS_Labels_Descriptions.SAS")
+      val dims = graft.etl.SasLabels.load(s, s"${ReferenceData.root}/I94_SAS_Labels_Descriptions.SAS")
       val states = dims.states.select("code").collect().map(_.getString(0)).toSeq
       val raw = graft.etl.Ingest
-        .csv(s, "/root/reference/immigration_data_sample.csv", graft.etl.Schemas.immigrationSample)
+        .csv(s, s"${ReferenceData.root}/immigration_data_sample.csv", graft.etl.Schemas.immigrationSample)
         .drop("_row")
       val star = graft.etl.Model.build(s, graft.etl.Clean.immigration(raw, states), dims)
       star
@@ -3669,7 +3670,7 @@ object Advanced {
       s"""SELECT port_code, port_city, port_state, n_arrivals FROM (
         |  SELECT i.i94port AS port_code, p.city AS port_city, p.state AS port_state,
         |    count(*) AS n_arrivals
-        |  FROM read_csv('/root/reference/immigration_data_sample.csv', header=true) i
+        |  FROM read_csv('${ReferenceData.root}/immigration_data_sample.csv', header=true) i
         |  LEFT JOIN '${Fixture.root}/graft_dims/ports/*.parquet' p
         |    ON i.i94port = p.code
         |  GROUP BY 1, 2, 3)
@@ -3680,13 +3681,13 @@ object Advanced {
         |    CAST(sum("Total Population") AS BIGINT) AS total_population,
         |    CAST(sum("Foreign-born") AS BIGINT) AS foreign_born,
         |    CAST(round(avg("Median Age") * 100) AS BIGINT) AS median_age_e2
-        |  FROM read_csv('/root/reference/us-cities-demographics.csv', delim=';', header=true)
+        |  FROM read_csv('${ReferenceData.root}/us-cities-demographics.csv', delim=';', header=true)
         |  GROUP BY 1),
         |fact AS (
         |  SELECT CASE WHEN i94addr IN
         |      (SELECT code FROM '${Fixture.root}/graft_dims/states/*.parquet')
         |    THEN i94addr ELSE '99' END AS state_code
-        |  FROM read_csv('/root/reference/immigration_data_sample.csv', header=true)),
+        |  FROM read_csv('${ReferenceData.root}/immigration_data_sample.csv', header=true)),
         |agg AS (SELECT state_code, count(*) AS n_arrivals FROM fact GROUP BY 1)
         |SELECT a.state_code, a.n_arrivals, d.total_population, d.foreign_born, d.median_age_e2
         |FROM agg a LEFT JOIN demo d ON a.state_code = d.state_code

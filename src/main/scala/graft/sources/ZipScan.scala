@@ -182,6 +182,8 @@ object ZipFixture {
     (0 until nMembers(z)).foreach { j =>
       val data = content(z, j.toLong).getBytes("UTF-8")
       val entry = new java.util.zip.ZipEntry(s"part_${z}_$j.csv")
+      // a fixed DOS time: left unset, every header carries the build's clock
+      entry.setTimeLocal(java.time.LocalDateTime.of(1980, 1, 1, 0, 0))
       if (j % 2 == 1) { // STORED requires sizes + CRC up front
         entry.setMethod(java.util.zip.ZipEntry.STORED)
         entry.setSize(data.length.toLong)
@@ -197,7 +199,7 @@ object ZipFixture {
     out.toByteArray
   }
 
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v1") {
+  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = Fixture.at(dir, "v2") {
     Payloads.write(spark, dir, "zip_id", (0L until 200L).map(z => (z, fileBytes(z))))
   }
 }

@@ -15,11 +15,7 @@ class ScaleDisciplineSpec extends AnyFunSuite with TempSources {
   // the z-order tests lay out a private copy of the orders table, so every
   // run builds its own `graft_zorder/<copy>` fixture (the first ensure
   // builds, later ones hit its marker); removed after the suite
-  private val zsrc = {
-    val src = tempSource()
-    org.apache.commons.io.FileUtils.copyToDirectory(new java.io.File(s"$sf/orders.parquet"), new java.io.File(src))
-    src
-  }
+  private val zsrc = tempCopy(sf, "orders")
 
   test("partitionBy layout yields partition pruning (PartitionFilters, not data filter)") {
     val dir = TestSpark.tempDir()

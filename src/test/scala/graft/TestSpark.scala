@@ -15,6 +15,20 @@ object TestSpark {
   def tempDir(): String =
     java.nio.file.Files.createTempDirectory("graft-test").toString
 
+  /** `file:line: text` of every line in the Scala sources under src/main
+    * and src/test, except in files named `except`, that contains `needle`:
+    * the guards that keep a literal spelt in one place. */
+  def spelledOutside(needle: String, except: String): Seq[String] = {
+    def sources(top: String) =
+      java.nio.file.Files.walk(java.nio.file.Paths.get(top)).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    for {
+      file <- sources("src/main") ++ sources("src/test")
+      if file.getFileName.toString != except
+      (line, i) <- java.nio.file.Files.readAllLines(file).asScala.zipWithIndex
+      if line.contains(needle)
+    } yield s"$file:${i + 1}: ${line.trim}"
+  }
+
   def writeTable(dir: String, name: String, df: DataFrame): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
 
@@ -46,6 +60,13 @@ trait TempSources extends BeforeAndAfterAll { this: Suite =>
   def tempSource(): String = {
     val d = TestSpark.tempDir()
     made.add(d)
+    d
+  }
+
+  /** A [[tempSource]] holding a copy of `table` from the source dir `sf`. */
+  def tempCopy(sf: String, table: String): String = {
+    val d = tempSource()
+    FileUtils.copyToDirectory(new java.io.File(s"$sf/$table.parquet"), new java.io.File(d))
     d
   }
 

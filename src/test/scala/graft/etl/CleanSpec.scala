@@ -29,9 +29,9 @@ class CleanSpec extends AnyFunSuite {
 
   test("full clean on the reference 1000-row sample") {
     val raw = Ingest
-      .csv(spark, "/root/reference/immigration_data_sample.csv", Schemas.immigrationSample)
+      .csv(spark, s"${ReferenceData.root}/immigration_data_sample.csv", Schemas.immigrationSample)
       .drop("_row")
-    val dims = SasLabels.load(spark, "/root/reference/I94_SAS_Labels_Descriptions.SAS")
+    val dims = SasLabels.load(spark, s"${ReferenceData.root}/I94_SAS_Labels_Descriptions.SAS")
     val states = dims.states.select("code").as[String].collect().toSeq
     val cleaned = Clean.immigration(raw, states)
 

@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden end-to-end on the reference's FULL 3.1M-row fact table
-  * (`/root/reference/sas_data`, the Spark-written Parquet the reference
+  * (`ReferenceData.root/sas_data`, the Spark-written Parquet the reference
   * ships — SURVEY.md §5.2). Expected values pinned independently with
   * DuckDB over the same files. */
 class GoldenSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private lazy val raw = Ingest.parquet(spark, "/root/reference/sas_data")
+  private lazy val raw = Ingest.parquet(spark, s"${ReferenceData.root}/sas_data")
 
   test("full fact table: 3,096,313 rows, cicid unique") {
     assert(raw.count() === 3096313L)
@@ -20,7 +20,7 @@ class GoldenSpec extends AnyFunSuite {
   }
 
   test("cleaned + decoded star schema reproduces pinned golden aggregates") {
-    val dims = SasLabels.load(spark, "/root/reference/I94_SAS_Labels_Descriptions.SAS")
+    val dims = SasLabels.load(spark, s"${ReferenceData.root}/I94_SAS_Labels_Descriptions.SAS")
     val cleaned = Clean.immigration(raw, dims.states.select("code").as[String].collect().toSeq)
     val star = Model.build(spark, cleaned, dims)
 

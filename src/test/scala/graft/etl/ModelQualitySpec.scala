@@ -8,10 +8,10 @@ class ModelQualitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private lazy val dims = SasLabels.load(spark, "/root/reference/I94_SAS_Labels_Descriptions.SAS")
+  private lazy val dims = SasLabels.load(spark, s"${ReferenceData.root}/I94_SAS_Labels_Descriptions.SAS")
   private lazy val cleaned = {
     val raw = Ingest
-      .csv(spark, "/root/reference/immigration_data_sample.csv", Schemas.immigrationSample)
+      .csv(spark, s"${ReferenceData.root}/immigration_data_sample.csv", Schemas.immigrationSample)
       .drop("_row")
     Clean.immigration(raw, dims.states.select("code").as[String].collect().toSeq)
   }
@@ -31,7 +31,7 @@ class ModelQualitySpec extends AnyFunSuite {
   }
 
   test("demographics aggregate to state grain") {
-    val demo = Ingest.demographics(spark, "/root/reference/us-cities-demographics.csv")
+    val demo = Ingest.demographics(spark, s"${ReferenceData.root}/us-cities-demographics.csv")
     assert(demo.count() === 2891L)
     val byState = Model.stateDemographics(demo)
     val n = byState.count()

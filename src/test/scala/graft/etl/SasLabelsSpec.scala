@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class SasLabelsSpec extends AnyFunSuite {
   private lazy val dims =
-    SasLabels.load(TestSpark.spark, "/root/reference/I94_SAS_Labels_Descriptions.SAS")
+    SasLabels.load(TestSpark.spark, s"${ReferenceData.root}/I94_SAS_Labels_Descriptions.SAS")
 
   test("country dim has 289 entries incl. sentinels") {
     assert(dims.countries.count() === 289L)

@@ -20,18 +20,25 @@ class CowCloneSpec extends AnyFunSuite {
 
   test("clone commit is metadata-only and reads identical to the source snapshot") {
     CowTable.ensure(spark, sf)
-    val tmp = TestSpark.tempDir() + "/clone_probe"
+    val tmpDir = TestSpark.tempDir()
+    val tmp = tmpDir + "/clone_probe"
     CowTable.cloneTable(spark, srcVersion = 2, dstRoot = tmp, srcRoot = CowTable.dir(sf))
-    // metadata only: the clone root holds a manifest (and optional schema
-    // metadata), never a data directory
-    val entries = new java.io.File(tmp).listFiles().map(_.getName).toSet
-    assert(entries.contains("manifest_v1"))
-    assert(!entries.exists(_.startsWith("v")), s"clone wrote data dirs: $entries")
-    // every referenced path is a source path, none under the clone root
-    val es = CowTable.entries(spark, 1, tmp)
-    assert(es.nonEmpty)
-    assert(es.forall(!_.path.startsWith(tmp)))
-    assert(rowsOf(1, tmp) === rowsOf(2, CowTable.dir(sf)))
+    try {
+      // metadata only: the clone root holds a manifest (and optional schema
+      // metadata), never a data directory
+      val entries = new java.io.File(tmp).listFiles().map(_.getName).toSet
+      assert(entries.contains("manifest_v1"))
+      assert(!entries.exists(_.startsWith("v")), s"clone wrote data dirs: $entries")
+      // every referenced path is a source path, none under the clone root
+      val es = CowTable.entries(spark, 1, tmp)
+      assert(es.nonEmpty)
+      assert(es.forall(!_.path.startsWith(tmp)))
+      assert(rowsOf(1, tmp) === rowsOf(2, CowTable.dir(sf)))
+    } finally {
+      // the clone registered itself in the shared gate table: take it out
+      CowTable.deregisterClone(CowTable.dir(sf), tmp)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmpDir))
+    }
   }
 
   test("diverged clone rewrites only touched buckets; source snapshot is unchanged") {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.TestSpark
+import graft.{TempSources, TestSpark}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,18 +9,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * batches applied through the distributed merge must equal the trivial
   * in-memory map model (upserts replace-or-insert, deletes win, absent
   * deletes no-op) — and the CDC diff must equal the model's row diff. */
-class CowPropertySpec extends AnyFunSuite {
+class CowPropertySpec extends AnyFunSuite with TempSources {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
+
+  // the merges commit scratch versions: they go to a private table built
+  // from a copy of sf0.001's orders, never to the gate table
+  private lazy val scratch: String = CowTable.ensure(spark, tempCopy(sf, "orders"))
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (1 to n).map(i => g.pureApply(Gen.Parameters.default, Seed(i.toLong * 7)))
 
   test("arbitrary merge batches equal the in-memory model; diff equals the model diff") {
     import spark.implicits._
-    CowTable.ensure(spark, sf)
     val base: Map[Long, Long] = CowTable
-      .read(spark, 2, CowTable.dir(sf))
+      .read(spark, 2, scratch)
       .collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents"))
       .toMap
@@ -48,18 +51,18 @@ class CowPropertySpec extends AnyFunSuite {
           spark, 2, v,
           changes = ups.toDF("k", "cents"),
           deletes = dels.toDF("k"),
-          root = CowTable.dir(sf)
+          root = scratch
         )
         val expected = (base ++ ups.toMap) -- dels
         val got = CowTable
-          .read(spark, v, CowTable.dir(sf))
+          .read(spark, v, scratch)
           .collect()
           .map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents"))
           .toMap
         assert(got === expected, s"sample $i content")
         // CDC diff vs the model diff (same-value rewrites excluded)
         val gotDiff = CowTable
-          .snapshotDiff(spark, 2, v, CowTable.dir(sf))
+          .snapshotDiff(spark, 2, v, scratch)
           .collect()
           .map(r => (r.getAs[Long]("k"), r.getAs[String]("change_type"), r.getAs[Long]("old_cents"), r.getAs[Long]("new_cents")))
           .toSet
@@ -75,7 +78,7 @@ class CowPropertySpec extends AnyFunSuite {
         assert(gotDiff === expDiff, s"sample $i diff")
       } finally {
         for (n <- Seq(s"v$v", s"manifest_v$v")) {
-          val f = new java.io.File(s"${CowTable.dir(sf)}/$n")
+          val f = new java.io.File(s"$scratch/$n")
           if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
         }
       }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.TestSpark
+import graft.{TempSources, TestSpark}
 import graft.operators.Warehouse
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,9 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * snapshot's files verbatim (zero bytes copied), merged content must equal
   * a from-scratch recompute, and the old snapshot must stay readable and
   * identical after the merge (time travel / immutability). */
-class CowTableSpec extends AnyFunSuite {
+class CowTableSpec extends AnyFunSuite with TempSources {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
+
+  // tests that commit scratch versions, vacuum or rebuild use a private
+  // table built from a copy of sf0.001's orders (the same rows), so a
+  // second JVM reading the gate table `CowTable.dir(sf)` never sees them
+  private lazy val scratch: String = CowTable.ensure(spark, tempCopy(sf, "orders"))
 
   private def baseRows(): Map[Long, Long] = {
     import org.apache.spark.sql.functions._
@@ -76,7 +81,6 @@ class CowTableSpec extends AnyFunSuite {
     // change keys that had no current row but keyed into an occupied
     // bucket. Merge v2 -> v99 with one such insert plus one update.
     import spark.implicits._
-    CowTable.ensure(spark, sf)
     val base = baseRows()
     // any occupied bucket with a key-range gap (dense generators can fill
     // whole buckets, so search rather than assume)
@@ -94,24 +98,24 @@ class CowTableSpec extends AnyFunSuite {
         fromVersion = 2,
         toVersion = 99,
         changes = Seq((existingKey, 77L), (freshKey, 88L)).toDF("k", "cents"),
-        root = CowTable.dir(sf)
+        root = scratch
       )
-      val got = CowTable.read(spark, 99, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+      val got = CowTable.read(spark, 99, scratch).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
       assert(got(existingKey) === 77L) // matched -> updated
       assert(got(freshKey) === 88L) // unmatched in an occupied bucket -> inserted
-      val v2 = CowTable.read(spark, 2, CowTable.dir(sf)).collect().length
+      val v2 = CowTable.read(spark, 2, scratch).collect().length
       assert(got.size === v2 + 1)
       // and the CDC diff classifies exactly these two rows as U and I
       val diff = CowTable
-        .snapshotDiff(spark, 2, 99, CowTable.dir(sf))
+        .snapshotDiff(spark, 2, 99, scratch)
         .collect()
         .map(r => (r.getAs[Long]("k"), r.getAs[String]("change_type"), r.getAs[Long]("old_cents"), r.getAs[Long]("new_cents")))
         .toSet
       assert(diff === Set((existingKey, "U", v2Rows()(existingKey), 77L), (freshKey, "I", -1L, 88L)))
     } finally {
-      // scratch snapshot: keep the fixed artifact at its steady v1/v2 state
+      // scratch snapshot: keep the private table at its steady v1-v3 state
       for (n <- Seq("v99", "manifest_v99")) {
-        val f = new java.io.File(s"${CowTable.dir(sf)}/$n")
+        val f = new java.io.File(s"$scratch/$n")
         if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
       }
     }
@@ -158,34 +162,33 @@ class CowTableSpec extends AnyFunSuite {
 
   test("whole-bucket delete drops the bucket from the manifest; absent-key deletes rewrite nothing") {
     import spark.implicits._
-    CowTable.ensure(spark, sf)
-    val v3man = CowTable.manifest(spark, 3, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
+    val v3man = CowTable.manifest(spark, 3, scratch).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
     val noChanges = Seq.empty[(Long, Long)].toDF("k", "cents")
     try {
       // delete EVERY key of one bucket → the bucket must vanish from v98
       val victim = v3man.keySet.min
       val victimKeys = CowTable
-        .read(spark, 3, CowTable.dir(sf))
+        .read(spark, 3, scratch)
         .where(org.apache.spark.sql.functions.expr(s"k div ${CowTable.BucketWidth}L = $victim"))
         .select("k")
-      CowTable.merge(spark, 3, 98, noChanges, deletes = victimKeys, root = CowTable.dir(sf))
-      val v98 = CowTable.manifest(spark, 98, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
+      CowTable.merge(spark, 3, 98, noChanges, deletes = victimKeys, root = scratch)
+      val v98 = CowTable.manifest(spark, 98, scratch).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
       assert(!v98.contains(victim))
       assert(v98 === v3man - victim) // every other bucket carried by reference
       // deletes of keys no snapshot holds: nothing rewrites, all carried
-      CowTable.merge(spark, 3, 97, noChanges, deletes = Seq(20000000L, 20000001L).toDF("k"), root = CowTable.dir(sf))
-      val v97 = CowTable.manifest(spark, 97, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
+      CowTable.merge(spark, 3, 97, noChanges, deletes = Seq(20000000L, 20000001L).toDF("k"), root = scratch)
+      val v97 = CowTable.manifest(spark, 97, scratch).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
       assert(v97 === v3man)
       // absent KEY in a PRESENT bucket: the key probe must carry the
       // bucket untouched (advice-found: bucket presence alone used to
       // force a byte-identical rewrite under a fresh manifest path)
-      val v3keys = CowTable.read(spark, 3, CowTable.dir(sf)).select("k").collect().map(_.getLong(0)).toSet
+      val v3keys = CowTable.read(spark, 3, scratch).select("k").collect().map(_.getLong(0)).toSet
       val (pb, pbKeys) = v3keys.groupBy(_ / CowTable.BucketWidth).find(_._2.size < CowTable.BucketWidth).get
       val absentKey = (pb * CowTable.BucketWidth until (pb + 1) * CowTable.BucketWidth)
         .find(k => !pbKeys.contains(k))
         .get
-      CowTable.merge(spark, 3, 95, noChanges, deletes = Seq(absentKey).toDF("k"), root = CowTable.dir(sf))
-      val v95 = CowTable.manifest(spark, 95, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
+      CowTable.merge(spark, 3, 95, noChanges, deletes = Seq(absentKey).toDF("k"), root = scratch)
+      val v95 = CowTable.manifest(spark, 95, scratch).collect().map(r => r.getAs[Long]("bucket") -> r.getAs[String]("path")).toMap
       assert(v95 === v3man)
       // delete-wins in a NEW bucket too (review-found): a key inserted and
       // deleted in the same merge must not survive just because its bucket
@@ -194,14 +197,14 @@ class CowTableSpec extends AnyFunSuite {
         spark, 3, 96,
         changes = Seq((30000000L, 5L), (30000001L, 6L)).toDF("k", "cents"),
         deletes = Seq(30000000L).toDF("k"),
-        root = CowTable.dir(sf)
+        root = scratch
       )
-      val v96 = CowTable.read(spark, 96, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+      val v96 = CowTable.read(spark, 96, scratch).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
       assert(!v96.contains(30000000L))
       assert(v96(30000001L) === 6L)
     } finally {
       for (n <- Seq("v98", "manifest_v98", "v97", "manifest_v97", "v96", "manifest_v96", "v95", "manifest_v95")) {
-        val f = new java.io.File(s"${CowTable.dir(sf)}/$n")
+        val f = new java.io.File(s"$scratch/$n")
         if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
       }
     }
@@ -233,26 +236,19 @@ class CowTableSpec extends AnyFunSuite {
     assert(got === direct)
   }
 
-  // LAST on purpose: executes the vacuum (destroys expired v1 files),
-  // verifies retained snapshots survive and expired time travel dies,
-  // then rebuilds the fixture from scratch for whoever runs next.
+  // LAST on purpose: executes the vacuum (destroys the private table's
+  // expired v1 files), verifies retained snapshots survive and expired
+  // time travel dies.
   test("executed vacuum deletes only unreachable dirs; retained snapshots survive, expired ones die") {
-    CowTable.ensure(spark, sf)
-    val (orphans, all) = CowTable.vacuumPlan(spark, Seq(2, 3), CowTable.dir(sf))
+    val (orphans, all) = CowTable.vacuumPlan(spark, Seq(2, 3), scratch)
     assert(orphans.nonEmpty && orphans.size < all.size)
-    val v3Before = CowTable.read(spark, 3, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
-    try {
-      orphans.foreach(p => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
-      // retained snapshots: fully readable, identical content
-      val v3After = CowTable.read(spark, 3, CowTable.dir(sf)).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
-      assert(v3After === v3Before)
-      assert(CowTable.read(spark, 2, CowTable.dir(sf)).count() > 0)
-      // expired snapshot: its rewritten-away files are gone → read fails
-      intercept[Exception] { CowTable.read(spark, 1, CowTable.dir(sf)).count() }
-    } finally {
-      // rebuild the artifact so later suites/gates see the steady state
-      new java.io.File(s"${CowTable.dir(sf)}/src_key").delete()
-      CowTable.ensure(spark, sf)
-    }
+    val v3Before = CowTable.read(spark, 3, scratch).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+    orphans.foreach(p => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
+    // retained snapshots: fully readable, identical content
+    val v3After = CowTable.read(spark, 3, scratch).collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("cents")).toMap
+    assert(v3After === v3Before)
+    assert(CowTable.read(spark, 2, scratch).count() > 0)
+    // expired snapshot: its rewritten-away files are gone → read fails
+    intercept[Exception] { CowTable.read(spark, 1, scratch).count() }
   }
 }

@@ -30,6 +30,16 @@ class ZipScanSpec extends AnyFunSuite {
     assert(jdk === ours)
   }
 
+  test("fixture archives are reproducible: two builds more than 2 s apart are byte-identical") {
+    // DOS times tick every 2 s, so a wall-clock stamp would differ here
+    val first = (0L until 3L).map(ZipFixture.fileBytes)
+    Thread.sleep(2100)
+    val second = (0L until 3L).map(ZipFixture.fileBytes)
+    first.zip(second).zipWithIndex.foreach { case ((a, b), z) =>
+      assert(a.sameElements(b), s"zip $z differs between builds")
+    }
+  }
+
   test("x277 writer: from-scratch archives parse member-identically to the official-writer archives") {
     for (z <- 0L until 200L by 13L) {
       val official = ZipScan.parse(ZipFixture.fileBytes(z)).getOrElse(fail(s"official $z"))
