@@ -60,17 +60,20 @@ object SasLabels {
     * root: the oracle SQL strings name it. */
   val dimsDumpDir = s"${graft.sources.Fixture.root}/graft_dims"
 
-  /** Parse the labels file and write each dim under `outDir/<name>`. */
-  def dump(spark: SparkSession, labelsPath: String, outDir: String = dimsDumpDir): Unit = {
-    val dims = load(spark, labelsPath)
-    Seq(
-      "countries" -> dims.countries,
-      "ports" -> dims.ports,
-      "modes" -> dims.modes,
-      "states" -> dims.states,
-      "visas" -> dims.visas
-    ).foreach { case (n, df) => df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$n") }
-  }
+  /** Parse the labels file and write each dim under `outDir/<name>`, as a
+    * [[graft.sources.Fixture]] keyed by the labels file: rewritten only
+    * when that file changes, marker last, under the cross-JVM lock. */
+  def dump(spark: SparkSession, labelsPath: String, outDir: String = dimsDumpDir): Unit =
+    graft.sources.Fixture.at(outDir, graft.sources.Fingerprint.of(spark, labelsPath, "v1")) {
+      val dims = load(spark, labelsPath)
+      Seq(
+        "countries" -> dims.countries,
+        "ports" -> dims.ports,
+        "modes" -> dims.modes,
+        "states" -> dims.states,
+        "visas" -> dims.visas
+      ).foreach { case (n, df) => df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$n") }
+    }
 
   def load(spark: SparkSession, path: String): Dims = {
     val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")

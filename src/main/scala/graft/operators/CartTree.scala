@@ -97,33 +97,46 @@ object CartTree {
     * table (level, node, f, thr) and the input rows with their final
     * `node` assignment attached (labels ride — leaf censuses need no join).
     */
-  def train(wide: DataFrame, nF: Int, depth: Int): (DataFrame, DataFrame) = {
+  def train(wide: DataFrame, nF: Int, depth: Int): (DataFrame, DataFrame) =
+    levels(wide, nF, depth, "y", col("stot") > 0 && col("stot") < col("tot"),
+      "(CAST(sL AS DECIMAL(38,0)) * sL + CAST(nL - sL AS DECIMAL(38,0)) * (nL - sL)) * nR + " +
+        "(CAST(sR AS DECIMAL(38,0)) * sR + CAST(nR - sR AS DECIMAL(38,0)) * (nR - sR)) * nL")
+
+  /** Regression variant (x287): wide rows carry an integer residual `res`
+    * instead of a binary label; splits maximize the variance-reduction
+    * cross-product S = sumL²·nR + sumR²·nL (DECIMAL(38,0) — sum² ~ n²·1e12
+    * at e6 residual scale). No purity stop (a constant-residual node just
+    * ties deterministically); both sides non-empty.
+    */
+  def trainReg(wide: DataFrame, nF: Int, depth: Int): (DataFrame, DataFrame) =
+    levels(wide, nF, depth, "res", lit(true), "CAST(sL AS DECIMAL(38,0)) * sL * nR + CAST(sR AS DECIMAL(38,0)) * sR * nL")
+
+  /** The level-wise trainer both tree kinds share: census of `target` per
+    * (node, f, bin) → cumulative left-side windows (nL, sL; totals tot,
+    * stot; right side nR, sR) → candidates with both sides non-empty and
+    * `splittable` → `score` → per-node argmax → split table → route.
+    */
+  private def levels(wide: DataFrame, nF: Int, depth: Int, target: String, splittable: Column, score: String)
+      : (DataFrame, DataFrame) = {
     val spark = wide.sparkSession
     import spark.implicits._
     var cur = wide.withColumn("node", lit(1L))
     var splits = Seq.empty[(Long, Long, Long, Long)].toDF("level", "node", "f", "thr")
-    var t = 0
-    while (t < depth) {
+    for (t <- 0 until depth) {
       val census = cur
-        .select(col("node"), col("y"), stacked(nF))
+        .select(col("node"), col(target), stacked(nF))
         .groupBy("node", "f", "bin")
-        .agg(count(lit(1)).as("cnt"), sum("y").as("pos")) // bounded: ≤ nodes·F·B cells
+        .agg(count(lit(1)).as("cnt"), sum(target).as("sy")) // bounded: ≤ nodes·F·B cells
       val wNf = Window.partitionBy("node", "f").orderBy("bin")
       val cand = census
         .withColumn("nL", sum("cnt").over(wNf))
-        .withColumn("pL", sum("pos").over(wNf))
+        .withColumn("sL", sum("sy").over(wNf))
         .withColumn("tot", sum("cnt").over(Window.partitionBy("node", "f")))
-        .withColumn("tpos", sum("pos").over(Window.partitionBy("node", "f")))
-        .where(col("nL") > 0 && col("nL") < col("tot") && col("tpos") > 0 && col("tpos") < col("tot"))
+        .withColumn("stot", sum("sy").over(Window.partitionBy("node", "f")))
+        .where(col("nL") > 0 && col("nL") < col("tot") && splittable)
         .withColumn("nR", col("tot") - col("nL"))
-        .withColumn("pR", col("tpos") - col("pL"))
-        .withColumn(
-          "s",
-          expr(
-            "(CAST(pL AS DECIMAL(38,0)) * pL + CAST(nL - pL AS DECIMAL(38,0)) * (nL - pL)) * nR + " +
-              "(CAST(pR AS DECIMAL(38,0)) * pR + CAST(nR - pR AS DECIMAL(38,0)) * (nR - pR)) * nL"
-          )
-        )
+        .withColumn("sR", col("stot") - col("sL"))
+        .withColumn("s", expr(score))
       val best = cand
         .withColumn(
           "rn",
@@ -134,53 +147,6 @@ object CartTree {
         .localCheckpoint() // ≤ 2^level rows
       splits = splits.unionByName(best).localCheckpoint()
       cur = route(cur, best, nF)
-      t += 1
-    }
-    (splits, cur)
-  }
-
-  /** Regression variant (x287): wide rows carry an integer residual `res`
-    * instead of a binary label; splits maximize the variance-reduction
-    * cross-product S = sumL²·nR + sumR²·nL (DECIMAL(38,0) — sum² ~ n²·1e12
-    * at e6 residual scale). No purity stop (a constant-residual node just
-    * ties deterministically); both sides non-empty.
-    */
-  def trainReg(wide: DataFrame, nF: Int, depth: Int): (DataFrame, DataFrame) = {
-    val spark = wide.sparkSession
-    import spark.implicits._
-    var cur = wide.withColumn("node", lit(1L))
-    var splits = Seq.empty[(Long, Long, Long, Long)].toDF("level", "node", "f", "thr")
-    var t = 0
-    while (t < depth) {
-      val census = cur
-        .select(col("node"), col("res"), stacked(nF))
-        .groupBy("node", "f", "bin")
-        .agg(count(lit(1)).as("cnt"), sum("res").as("sres"))
-      val wNf = Window.partitionBy("node", "f").orderBy("bin")
-      val cand = census
-        .withColumn("nL", sum("cnt").over(wNf))
-        .withColumn("sL", sum("sres").over(wNf))
-        .withColumn("tot", sum("cnt").over(Window.partitionBy("node", "f")))
-        .withColumn("stot", sum("sres").over(Window.partitionBy("node", "f")))
-        .where(col("nL") > 0 && col("nL") < col("tot"))
-        .withColumn(
-          "s",
-          expr(
-            "CAST(sL AS DECIMAL(38,0)) * sL * (tot - nL) + " +
-              "CAST(stot - sL AS DECIMAL(38,0)) * (stot - sL) * nL"
-          )
-        )
-      val best = cand
-        .withColumn(
-          "rn",
-          row_number().over(Window.partitionBy("node").orderBy(col("s").desc, col("f").asc, col("bin").asc))
-        )
-        .where(col("rn") === 1)
-        .select(lit(t.toLong).as("level"), col("node"), col("f"), col("bin").as("thr"))
-        .localCheckpoint()
-      splits = splits.unionByName(best).localCheckpoint()
-      cur = route(cur, best, nF)
-      t += 1
     }
     (splits, cur)
   }
@@ -188,13 +154,8 @@ object CartTree {
   /** Route wide binned rows through a trained split table: the per-level
     * broadcast+CASE chain — zero shuffles. Returns the rows with `node`.
     */
-  def apply(wide: DataFrame, nF: Int, splits: DataFrame, depth: Int): DataFrame = {
-    var cur = wide.withColumn("node", lit(1L))
-    var t = 0
-    while (t < depth) {
-      cur = route(cur, splits.where(col("level") === t), nF)
-      t += 1
+  def apply(wide: DataFrame, nF: Int, splits: DataFrame, depth: Int): DataFrame =
+    (0 until depth).foldLeft(wide.withColumn("node", lit(1L))) { (cur, t) =>
+      route(cur, splits.where(col("level") === t), nF)
     }
-    cur
-  }
 }

@@ -94,13 +94,9 @@ object Dedup {
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .distinct()
       .localCheckpoint(true)
-    var labels = edges.select(col("src").as("v")).distinct().withColumn("lbl", col("v"))
-    // Dataset.unpersist is CacheManager-only and never frees checkpoint
-    // blocks — track the materialized RDD behind each round's checkpoint
-    // and unpersist it directly once the round has no more readers.
-    var prevBlocks: Option[org.apache.spark.rdd.RDD[_]] = None
-    var changed = true
-    while (changed) {
+    val init = edges.select(col("src").as("v")).distinct().withColumn("lbl", col("v"))
+    val cc = Iterate.untilStable(init) { prev =>
+      val labels = prev.select("v", "lbl")
       val nbrMin = edges
         .join(labels.select(col("v").as("dst"), col("lbl").as("dlbl")), "dst")
         .groupBy(col("src").as("v"))
@@ -109,27 +105,18 @@ object Dedup {
       // check is then a scan of the just-materialized blocks instead of a
       // third join+shuffle per round (measured as the per-round floor cost
       // on the sf fixtures, where the label data is tiny).
-      val next = labels
+      labels
         .join(nbrMin, Seq("v"), "left")
         .select(
           col("v"),
           least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"),
           col("lbl").as("old")
         )
-        .localCheckpoint(true)
-      changed = next.where(col("lbl") =!= col("old")).limit(1).count() > 0
-      // The convergence check above was the last reader of the previous
-      // round's checkpointed blocks — drop them so executor storage stays
-      // O(1) in graph diameter, not O(rounds). (No-op on round 1, where
-      // `labels` is a plain derived plan, not a checkpoint.)
-      prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = org.apache.spark.sql.graftbridge.Bridge.checkpointRdd(next)
-      labels = next.select("v", "lbl")
-    }
+    }(next => next.where(col("lbl") =!= col("old")).limit(1).count() > 0)
     // The returned labels are self-contained checkpoint blocks; the edge
     // blocks have no further readers.
-    org.apache.spark.sql.graftbridge.Bridge.checkpointRdd(edges).foreach(_.unpersist(blocking = false))
-    labels.select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
+    Iterate.release(edges)
+    cc.select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
   /** distinct char-4-gram hashes of whitespace-normalized text, via the

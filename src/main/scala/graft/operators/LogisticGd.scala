@@ -66,7 +66,6 @@ object LogisticGd {
     * join(e, doc_id) per round.
     */
   def trainSnapshots(feat: DataFrame, lab: DataFrame, snaps: Seq[Int]): Seq[(Int, DataFrame)] = {
-    val iters = snaps.max
     val trDoc = feat
       .join(lab, "doc_id")
       .groupBy("doc_id")
@@ -74,15 +73,13 @@ object LogisticGd {
       .localCheckpoint() // reused every round
     val nTrain = trDoc.count() // 1 driver constant
     require(nTrain > 0, "x228: empty training split")
-    var w = trDoc
+    val w0 = trDoc
       .select(explode(col("bs")).as("b"))
       .distinct()
       .withColumn("w", lit(0L))
       .localCheckpoint()
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, DataFrame)]
     val z = "aggregate(bs, 0L, (acc, x) -> acc + coalesce(element_at(wm, x), 0L))"
-    var t = 0
-    while (t < iters) {
+    def round(w: DataFrame): DataFrame = {
       val wm = w.agg(map_from_entries(collect_list(struct(col("b"), col("w")))).as("wm"))
       val g = trDoc
         .crossJoin(broadcast(wm))
@@ -90,14 +87,14 @@ object LogisticGd {
         .select(explode(col("bs")).as("b"), col("e"))
         .groupBy("b")
         .agg(sum("e").as("g"))
-      w = w
-        .join(g, "b")
-        .select(col("b"), expr(s"w + ${fdivSql("g", s"${nTrain}L")}").as("w"))
-        .localCheckpoint() // cut the per-round lineage
-      t += 1
-      if (snaps.contains(t)) out += (t -> w)
+      w.join(g, "b").select(col("b"), expr(s"w + ${fdivSql("g", s"${nTrain}L")}").as("w"))
     }
-    out.toSeq
+    // one Iterate segment per snapshot: every snapshot is a frame Iterate
+    // returns, so none is freed by the next segment
+    val ends = snaps.distinct.sorted
+    ends.zip(0 +: ends).scanLeft(0 -> w0) { case ((_, w), (end, start)) =>
+      end -> Iterate(w, start + 1 to end)((cur, _) => round(cur))
+    }.tail
   }
 
   /** Exact midrank ROC-AUC over (z, pos) — x159's Mann–Whitney form with

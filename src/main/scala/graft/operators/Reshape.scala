@@ -407,15 +407,8 @@ object Reshape {
       val path = verts
         .where(col("v") < 499 && col("v") + 1 < n)
         .select(col("v").as("a"), (col("v") + 1).as("b"))
-      var e = stripe.unionByName(path).distinct().localCheckpoint()
-      for (_ <- 1 to R) {
-        // r11 s3: one materialization per large+small PAIR, not per step —
-        // the fused two-step plan is still bounded (the convergence probe
-        // below always ran fused) and the checkpoint-job count halves;
-        // same 28 star steps, same edge tables, job-overhead-bound at
-        // fixture scale where each step's data is tiny.
-        e = starStep(starStep(e, large = true), large = false).localCheckpoint()
-      }
+      val e = Iterate(stripe.unionByName(path).distinct().localCheckpoint(), 1 to R)((g, _) =>
+        starStep(starStep(g, large = true), large = false))
       val post = starStep(starStep(e, large = true), large = false).localCheckpoint()
       val converged =
         post.except(e).limit(1).count() == 0 && e.except(post).limit(1).count() == 0
@@ -451,13 +444,12 @@ object Reshape {
         .union(alive.select(col("b").as("v")))
         .groupBy("v")
         .agg(count(lit(1)).as("dg"))
-      var nodes = edges
+      val init = edges
         .select(col("a").as("v"))
         .union(edges.select(col("b").as("v")))
         .distinct()
         .localCheckpoint()
-      for (_ <- 1 to Rounds)
-        nodes = degrees(induced(nodes)).where(col("dg") >= K).select("v").localCheckpoint()
+      val nodes = Iterate(init, 1 to Rounds)((nd, _) => degrees(induced(nd)).where(col("dg") >= K).select("v"))
       val aliveF = induced(nodes).localCheckpoint() // feeds edge count + final degrees
       val degF = degrees(aliveF).localCheckpoint() // feeds histogram + convergence agg
       val stats = degF
@@ -566,15 +558,13 @@ object Reshape {
         .select(col("a").as("u"), col("b").as("w"))
         .union(edges.select(col("b").as("u"), col("a").as("w")))
         .localCheckpoint()
-      var labels = de
+      val init = de
         .select(col("u").as("v"))
         .distinct()
         .withColumn("lbl", col("v"))
         .localCheckpoint()
       // argmax by (count, -label): max count wins, then min label — one
-      // agg instead of a max-count window + equality filter. r11 s3: one
-      // materialization per TWO rounds (labels feeds each round exactly
-      // once, so fusion duplicates nothing) — same 5 rounds.
+      // agg instead of a max-count window + equality filter
       def lpaRound(lb: DataFrame): DataFrame = de
         .join(lb.select(col("v").as("w"), col("lbl")), "w")
         .groupBy(col("u").as("v"), col("lbl"))
@@ -582,9 +572,7 @@ object Reshape {
         .groupBy("v")
         .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("v"), (-col("m.neg")).as("lbl"))
-      labels = lpaRound(lpaRound(labels)).localCheckpoint()
-      labels = lpaRound(lpaRound(labels)).localCheckpoint()
-      labels = lpaRound(labels).localCheckpoint()
+      val labels = Iterate(init, 1 to Rounds, every = 2)((lb, _) => lpaRound(lb))
       val comm = labels.groupBy("lbl").agg(count(lit(1)).as("size"))
       val stats = comm.agg(
         count(lit(1)).as("n_communities"),
@@ -606,7 +594,7 @@ object Reshape {
     // formulas) matches bit-for-bit. Scale shape per iteration: ONE shuffle
     // join of ranks against the (localCheckpointed once) edge table + one
     // hash agg on dst — Pregel's superstep on DataFrames; lineage is cut
-    // per round exactly like connectedComponents.
+    // by [[Iterate]], like connectedComponents.
     "q62_pagerank" -> ((s, d) => {
       val li = table(s, d, "lineitem")
         .select((col("l_suppkey") * 4 + 1).as("a"), (col("l_orderkey") * 4 + 2).as("b"))
@@ -626,24 +614,18 @@ object Reshape {
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       val edgesDeg = edges.join(deg, "src").localCheckpoint()
       val nodes = edges.select(col("src").as("node")).distinct().localCheckpoint()
-      var ranks = nodes.withColumn("r", lit(1000000L))
-      // r11 s3: (1) the graph is symmetric by construction (both directions
+      // r11 s3: the graph is symmetric by construction (both directions
       // unioned), so every node is the dst of ≥1 edge and the contribs
       // aggregation already yields one row per node — the old
       // nodes-left-join + coalesce(sc, 0) was inner-equivalent dead weight
-      // (one shuffle join per superstep gone; same ranks table). (2) one
-      // materialization per TWO supersteps — same 5 iterations, half the
-      // checkpoint jobs (job-overhead-bound at fixture scale).
+      // (one shuffle join per superstep gone; same ranks table).
       def step(rk: DataFrame): DataFrame = edgesDeg
         .join(rk.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), expr("r div deg").as("c"))
         .groupBy("node")
         .agg(sum("c").as("sc"))
         .select(col("node"), expr("150000 + (850 * sc) div 1000").as("r"))
-      ranks = step(step(ranks)).localCheckpoint()
-      ranks = step(step(ranks)).localCheckpoint()
-      ranks = step(ranks).localCheckpoint()
-      ranks
+      Iterate(nodes.withColumn("r", lit(1000000L)), 1 to 5, every = 2)((rk, _) => step(rk))
         .select(
           when(pmod(col("node"), lit(4L)) === 1L, "S")
             .when(pmod(col("node"), lit(4L)) === 2L, "O")
@@ -668,7 +650,7 @@ object Reshape {
     // Scale shape: the iterative q55/q62 discipline — edges deduped and
     // localCheckpointed ONCE (min-weight per pair folded into that same
     // shuffle), 4 rounds of equi-join + min-agg on 8-byte keys, dist
-    // checkpointed per round to cut lineage. Output is per-node-type
+    // checkpointed by [[Iterate]]. Output is per-node-type
     // aggregates with a Σ node·dist digest, which pins EVERY node's
     // final distance, not just the extremes.
     "x152_weighted_sssp" -> ((s, d) => {
@@ -692,18 +674,14 @@ object Reshape {
         .agg(min("w").as("w")) // parallel edges fold to min in the SAME dedup shuffle
         .localCheckpoint()
       import s.implicits._
-      var dist = Seq((5L, 0L)).toDF("node", "dist") // supplier 1 = 1·4+1
-      // r11 s3: one materialization per TWO relax rounds (the duplicated
-      // inner-round subtree dedupes via exchange reuse) — same 4 relaxes
       def relax(dd: DataFrame): DataFrame = {
         val relaxed = dd
           .join(edges, col("node") === col("src"))
           .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
         dd.unionByName(relaxed).groupBy("node").agg(min("dist").as("dist"))
       }
-      dist = relax(relax(dist)).localCheckpoint()
-      dist = relax(relax(dist)).localCheckpoint()
-      dist
+      val source = Seq((5L, 0L)).toDF("node", "dist") // supplier 1 = 1·4+1
+      Iterate(source, 1 to 4, every = 2)((dd, _) => relax(dd))
         .groupBy(pmod(col("node"), lit(4L)).as("ntype"))
         .agg(
           count(lit(1)).as("n_reached"),

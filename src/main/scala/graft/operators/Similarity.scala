@@ -955,21 +955,19 @@ object Similarity {
           expr("(cov_num - ((cov_num % n2 + n2) % n2)) div n2").as("cs")
         )
         .localCheckpoint() // 6 matvec refs + the Rayleigh fold
-      var v: DataFrame = cells
+      val v0 = cells
         .select(col("i").as("j"))
         .distinct()
         .select(col("j"), lit(1000L).as("vj"))
         .localCheckpoint()
-      for (_ <- 1 to 6) {
+      val v = Iterate(v0, 1 to 6) { (vk, _) =>
         val u = cells
-          .join(broadcast(v), Seq("j"))
+          .join(broadcast(vk), Seq("j"))
           .groupBy("i")
           .agg(sum(expr("cs * vj")).as("ui"))
         val den = u.agg(expr("(max(abs(ui)) div 1000) + 1").as("den"))
-        v = u
-          .crossJoin(broadcast(den))
+        u.crossJoin(broadcast(den))
           .select(col("i").as("j"), expr("(ui - ((ui % den + den) % den)) div den").as("vj"))
-          .localCheckpoint()
       }
       val rayleigh = cells
         .join(broadcast(v), Seq("j"))
@@ -1608,11 +1606,12 @@ object Similarity {
       .orderBy("vec_id")
       .limit(PqK)
       .withColumn("code", (row_number().over(Window.orderBy("vec_id")) - 1).cast("int"))
-    var cb = rl
+    val cb0 = rl
       .join(broadcast(seeds), "vec_id")
       .select(col("m"), col("code"), col("j"), col("rq").as("cq"))
       .localCheckpoint()
-    for (_ <- 1 to 2) {
+    // each codebook feeds the next assign twice
+    Iterate(cb0, 1 to 2) { (cb, _) =>
       val assign = rl
         .join(broadcast(cb), Seq("m", "j"))
         .groupBy("vec_id", "m", "code")
@@ -1620,14 +1619,11 @@ object Similarity {
         .groupBy("vec_id", "m")
         .agg(min(struct(col("dist"), col("code"))).as("b"))
         .select(col("vec_id"), col("m"), col("b.code").as("code"))
-      cb = rl
-        .join(assign, Seq("vec_id", "m"))
+      rl.join(assign, Seq("vec_id", "m"))
         .groupBy("m", "code", "j")
         .agg(sum("rq").as("sq"), count(lit(1)).as("n"))
         .select(col("m"), col("code"), col("j"), expr("(sq - pmod(sq, n)) div n").as("cq"))
-        .localCheckpoint() // each codebook feeds the next assign twice
     }
-    cb
   }
 
   /** Encode every corpus vector against the trained codebooks: nearest code

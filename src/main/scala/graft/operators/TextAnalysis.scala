@@ -323,14 +323,14 @@ object TextAnalysis {
     * via the (count desc, pair asc) tie-break. */
   private def bpeMerges(words: DataFrame, rounds: Int): Seq[(Long, String, String, String, Long)] = {
     val vocab = words.groupBy("w").agg(count(lit(1)).as("n"))
-    var seg = vocab
+    val seg0 = vocab
       .select(
         col("n"),
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms")
       )
       .localCheckpoint()
     val merges = Seq.newBuilder[(Long, String, String, String, Long)]
-    for (r <- 1 to rounds) {
+    Iterate(seg0, 1 to rounds) { (seg, r) =>
       val best = seg
         // single-symbol words have no pairs; without the guard
         // sequence(0, size-2) DESCENDS and indexes out of bounds (the
@@ -346,9 +346,7 @@ object TextAnalysis {
         .collect()(0) // 1-row argmax: bounded control flow, not a data pull
       val (a, b, c) = (best.getString(0), best.getString(1), best.getLong(2))
       merges += ((r.toLong, a, b, a + b, c))
-      seg = seg
-        .select(col("n"), mergeFold(a, b).as("syms"))
-        .localCheckpoint() // k rounds of lineage would otherwise nest k plans
+      seg.select(col("n"), mergeFold(a, b).as("syms"))
     }
     merges.result()
   }
@@ -863,7 +861,7 @@ object TextAnalysis {
         .select(explode(toks).as("w"))
         .where(length(col("w")) >= 1)
       val merges = bpeMerges(trainWords, rounds = 8)
-      var vseg = table(s, d, "documents")
+      val vseg0 = table(s, d, "documents")
         .select(explode(toks).as("w"))
         .where(length(col("w")) >= 1)
         .distinct()
@@ -872,8 +870,9 @@ object TextAnalysis {
           expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms")
         )
         .localCheckpoint()
-      for ((_, a, b, _, _) <- merges)
-        vseg = vseg.select(col("w"), mergeFold(a, b).as("syms")).localCheckpoint()
+      val vseg = Iterate(vseg0, merges) { case (vs, (_, a, b, _, _)) =>
+        vs.select(col("w"), mergeFold(a, b).as("syms"))
+      }
       val enc = vseg
         .select(
           col("w"),

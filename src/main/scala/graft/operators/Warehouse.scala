@@ -256,7 +256,7 @@ object Warehouse {
         )),
         ev.where(expr("ts >= TIMESTAMP_NTZ '2024-01-21 00:00:00'"))
       )
-      val dim = batches.foldLeft(dim0)((acc, b) => scd2Apply(acc, b).localCheckpoint())
+      val dim = Iterate(dim0, batches)(scd2Apply)
       dim.select(
         col("user_id"),
         col("event_type"),

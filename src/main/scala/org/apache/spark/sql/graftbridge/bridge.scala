@@ -15,9 +15,9 @@ object Bridge {
 
   /** The materialized RDD behind a `localCheckpoint`ed frame (or a narrow
     * projection of one). `Dataset.unpersist` only talks to the CacheManager
-    * and never frees checkpoint blocks — iterative algorithms
-    * ([[graft.operators.Dedup.connectedComponents]]) must unpersist the
-    * underlying RDD directly once a round's blocks have no more readers.
+    * and never frees checkpoint blocks — [[graft.operators.Iterate]]
+    * unpersists the underlying RDD directly once a round's blocks have no
+    * more readers.
     * Returns None for plans not backed by an RDD scan. */
   def checkpointRdd(df: org.apache.spark.sql.DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.logical.collectFirst {

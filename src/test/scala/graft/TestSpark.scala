@@ -11,19 +11,26 @@ object TestSpark {
   lazy val spark: SparkSession = Graft.session("graft-test", "4")
 
   /** Write small fixture tables as parquet so `(spark, dir) => DataFrame`
-    * queries can run against synthetic inputs. */
+    * queries can run against synthetic inputs. Every one lives under one
+    * per-JVM parent that is removed when the JVM exits. */
   def tempDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-test").toString
+    java.nio.file.Files.createTempDirectory(tempRoot, "graft-test").toString
+
+  private lazy val tempRoot: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft-suite")
+    sys.addShutdownHook(FileUtils.deleteQuietly(d.toFile))
+    d
+  }
 
   /** `file:line: text` of every line in the Scala sources under src/main
-    * and src/test, except in files named `except`, that contains `needle`:
-    * the guards that keep a literal spelt in one place. */
-  def spelledOutside(needle: String, except: String): Seq[String] = {
+    * and src/test, except in files named in `except`, that contains
+    * `needle`: the guards that keep a literal spelt in one place. */
+  def spelledOutside(needle: String, except: String*): Seq[String] = {
     def sources(top: String) =
       java.nio.file.Files.walk(java.nio.file.Paths.get(top)).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     for {
       file <- sources("src/main") ++ sources("src/test")
-      if file.getFileName.toString != except
+      if !except.contains(file.getFileName.toString)
       (line, i) <- java.nio.file.Files.readAllLines(file).asScala.zipWithIndex
       if line.contains(needle)
     } yield s"$file:${i + 1}: ${line.trim}"
