@@ -840,10 +840,9 @@ object Advanced {
     // depends only on the census (ties share the value), and a count
     // census is provably √-bounded (Σ t·v = N with t ≥ 1 ⇒ at most
     // 2√N distinct v: values > √N number < √N, the rest ≤ √N), so the
-    // 8192-wide bucket table is ≤ 2√N/8192 rows — 245 rows at a
-    // TRILLION-row profile — and its offsets come from a broadcast
-    // self-join; every window is bucket-partitioned. The profiler now
-    // survives exactly the distributions it diagnoses.
+    // 8192-wide bucket table `Prefix` runs its offsets over is
+    // ≤ 2√N/8192 rows — 245 rows at a TRILLION-row profile. The
+    // profiler now survives exactly the distributions it diagnoses.
     // Scale shape: each profile is ONE key census with map-side combine;
     // everything downstream operates on the counts table or its census.
     "x182_skew_profile" -> ((s, d) => {
@@ -861,24 +860,14 @@ object Advanced {
           .agg(count(lit(1)).as("t"))
           .withColumn("bk", expr("cnt div 8192L"))
           .localCheckpoint() // bucket offsets + positions
-        val offs = vc
-          .groupBy("bk")
-          .agg(sum("t").as("bt"))
-          .localCheckpoint() // self-joined (√-bounded, see above)
-        val offsCum = offs
-          .join(broadcast(offs.select(col("bk").as("bb"), col("bt").as("tb"))), col("bb") < col("bk"), "left")
-          .groupBy("bk")
-          .agg(coalesce(sum("tb"), lit(0L)).as("off"))
-        val wb = Window.partitionBy("bk").orderBy("cnt").rowsBetween(Window.unboundedPreceding, -1)
-        val pos = vc
-          .join(broadcast(offsCum), "bk")
-          .withColumn("cum", col("off") + coalesce(sum("t").over(wb), lit(0L)))
+        val pos = Prefix
+          .exclusive(vc, Nil, "bk", Seq(col("cnt")))(col("t") -> "cum")
           .localCheckpoint() // two rank probes below
         def pick(p: Int, name: String) =
           broadcast(
             pos
               .crossJoin(broadcast(tot2.select(col("n_keys").as("kk"))))
-              .where(expr(s"cum < ((kk - 1) * $p) div 100 + 1 AND ((kk - 1) * $p) div 100 + 1 <= cum + t"))
+              .where(Prefix.nearestRank("cum", "t", "kk", p))
               .select(col("cnt").as(name))
           )
         tot2

@@ -72,7 +72,6 @@ object Analytic {
       s: SparkSession,
       d: String
   ): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    def fdivE(a: String, dd: String) = s"(($a) - ((($a) % ($dd) + ($dd)) % ($dd))) div ($dd)"
     val wide = ordersWide(s, d)
     var trainW = wide
       .where(col("split") === 0)
@@ -88,7 +87,7 @@ object Analytic {
       val leafVals = nodes
         .groupBy("node")
         .agg(count(lit(1)).as("n"), sum("res").as("sres"))
-        .withColumn("value", expr(fdivE("sres", "n * 2")))
+        .withColumn("value", expr(Prefix.floorDiv("sres", "n * 2")))
         .localCheckpoint()
       trainW = nodes
         .join(broadcast(leafVals.select("node", "value")), "node")
@@ -147,25 +146,11 @@ object Analytic {
         * bucketed-census shape. */
       def median(of: DataFrame): DataFrame = {
         val census = of.groupBy("p", "v").agg(count(lit(1)).as("t")).withColumn("bk", expr("v div 8192L"))
-        val offs = census
-          .groupBy("p", "bk")
-          .agg(sum("t").as("bt"))
-          .withColumn(
-            "off",
-            coalesce(
-              sum("bt").over(Window.partitionBy("p").orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)),
-              lit(0L)
-            )
-          )
-          .select("p", "bk", "off")
-        val wb = Window.partitionBy("p", "bk").orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
         val sizes = of.groupBy("p").agg(count(lit(1)).as("na"))
-        census
-          .join(broadcast(offs), Seq("p", "bk"))
-          .withColumn("cum", col("off") + coalesce(sum("t").over(wb), lit(0L)))
+        Prefix
+          .exclusive(census, Seq("p"), "bk", Seq(col("v")))(col("t") -> "cum")
           .join(broadcast(sizes), "p")
-          .withColumn("tgt", expr("((na - 1) * 50) div 100 + 1"))
-          .where(col("cum") < col("tgt") && col("tgt") <= col("cum") + col("t"))
+          .where(Prefix.nearestRank("cum", "t", "na", 50))
           .select(col("p"), col("v").as("q"))
       }
 
@@ -363,9 +348,8 @@ object Analytic {
     // QTE(p) = q_treat(p) − q_control(p) at p25/50/75 is the standard
     // report. Arms by md5 parity of the order key; per-arm EXACT
     // quantiles via the x182 census rank-pick with arm-partitioned
-    // bucketed prefixes (the bucket table is price-domain-bounded —
-    // constant in corpus size — so its per-arm offsets come from one
-    // bounded self-join; every window (arm, bucket)-partitioned).
+    // `Prefix` running sums (the bucket table is price-domain-bounded —
+    // constant in corpus size).
     "x258_qte" -> ((s, d) => {
       val rows = table(s, d, "lineitem")
         .select(
@@ -377,25 +361,14 @@ object Analytic {
         .agg(count(lit(1)).as("t"))
         .withColumn("bk", expr("cents div 8192L"))
         .localCheckpoint() // offsets + positions + arm sizes
-      val offs = census.groupBy("arm", "bk").agg(sum("t").as("bt")).localCheckpoint()
-      val offsCum = offs
-        .join(
-          broadcast(offs.select(col("arm").as("a2"), col("bk").as("b2"), col("bt").as("t2"))),
-          col("a2") === col("arm") && col("b2") < col("bk"),
-          "left"
-        )
-        .groupBy("arm", "bk")
-        .agg(coalesce(sum("t2"), lit(0L)).as("off"))
-      val wb = Window.partitionBy("arm", "bk").orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
-      val pos = census
-        .join(broadcast(offsCum), Seq("arm", "bk"))
-        .withColumn("cum", col("off") + coalesce(sum("t").over(wb), lit(0L)))
+      val pos = Prefix
+        .exclusive(census, Seq("arm"), "bk", Seq(col("cents")))(col("t") -> "cum")
         .localCheckpoint() // three picks
       val narm = census.groupBy("arm").agg(sum("t").as("na"))
       def pick(p: Int): DataFrame =
         pos
           .join(broadcast(narm), "arm")
-          .where(expr(s"cum < ((na - 1) * $p) div 100 + 1 AND ((na - 1) * $p) div 100 + 1 <= cum + t"))
+          .where(Prefix.nearestRank("cum", "t", "na", p))
           .select(col("arm"), lit(p.toLong).as("pct"), col("cents").as("q"))
       val q = pick(25).unionByName(pick(50)).unionByName(pick(75)).localCheckpoint() // both arms
       q.where(col("arm") === 0)
@@ -418,7 +391,6 @@ object Analytic {
     // factor itself — rides as r1·c div vy with the two-floor
     // quantization documented rather than floated.
     "x257_cuped" -> ((s, d) => {
-      def fdiv(a: String, b: String) = s"(($a) - ((($a) % ($b) + ($b)) % ($b))) div ($b)"
       val o = table(s, d, "orders")
         .select(
           col("o_custkey").as("ck"),
@@ -456,16 +428,16 @@ object Analytic {
         .withColumn("c", expr("n * sxy - sx * sy"))
         .withColumn("vx", expr("n * sxx - sx * sx"))
         .withColumn("vy", expr("n * syy - sy * sy"))
-        .withColumn("theta_e6", expr(s"CAST(IF(vx = 0, 0, ${fdiv("c * 1000000", "vx")}) AS BIGINT)"))
-        .withColumn("raw_mean_e6", expr(s"CAST(${fdiv("sy_arm * 1000000", "n_arm")} AS BIGINT)"))
+        .withColumn("theta_e6", expr(s"CAST(IF(vx = 0, 0, ${Prefix.floorDiv("c * 1000000", "vx")}) AS BIGINT)"))
+        .withColumn("raw_mean_e6", expr(s"CAST(${Prefix.floorDiv("sy_arm * 1000000", "n_arm")} AS BIGINT)"))
         .withColumn(
           "adj_mean_e6",
-          expr(s"CAST(raw_mean_e6 - ${fdiv("theta_e6 * (n * sx_arm - CAST(n_arm AS DECIMAL(38,0)) * sx)", "CAST(n_arm AS DECIMAL(38,0)) * n")} AS BIGINT)")
+          expr(s"CAST(raw_mean_e6 - ${Prefix.floorDiv("theta_e6 * (n * sx_arm - CAST(n_arm AS DECIMAL(38,0)) * sx)", "CAST(n_arm AS DECIMAL(38,0)) * n")} AS BIGINT)")
         )
         .withColumn(
           "rho2_ppm",
           expr(
-            s"CAST(IF(vx = 0 OR vy = 0, 0, ${fdiv(s"(${fdiv("c * 1000", "vx")}) * c * 1000", "vy")}) AS BIGINT)"
+            s"CAST(IF(vx = 0 OR vy = 0, 0, ${Prefix.floorDiv(s"(${Prefix.floorDiv("c * 1000", "vx")}) * c * 1000", "vy")}) AS BIGINT)"
           )
         )
         .select("arm", "n_arm", "raw_mean_e6", "adj_mean_e6", "theta_e6", "rho2_ppm")
@@ -634,13 +606,13 @@ object Analytic {
     // (Hughes 1994): quintile-code every customer on Recency (days
     // since last order), Frequency (order count) and Monetary (lifetime
     // cents), emit the 5×5×5 segment census. Each quintile assignment
-    // is the x159 distributed NTILE — value census → cum-below via the
-    // x219 value-range bucketed prefix (posmod-floor bucket key: the
-    // monetary domain is near-unique and unbounded, recency/frequency
-    // domain-bounded — same machinery handles all three) → value-
-    // partitioned tie ranks → the closed-form tile. DecileNtileSpec's
-    // row-exactness proof covers the formula; the oracle uses DuckDB's
-    // own ntile(5). No unpartitioned window anywhere; cum tables join
+    // is the x159 distributed NTILE — value census → cum-below via
+    // `Prefix` (posmod-floor bucket key: the monetary domain is
+    // near-unique and unbounded, recency/frequency domain-bounded — same
+    // machinery handles all three) → value-partitioned tie ranks → the
+    // closed-form tile. DecileNtileSpec's row-exactness proof covers the
+    // formula; the oracle uses DuckDB's own ntile(5). No unpartitioned
+    // window outside the bucket tables; cum tables join
     // un-hinted (monetary's census is customer-sized — AQE decides, the
     // x66 lesson).
     "x243_rfm_segments" -> ((s, d) => {
@@ -662,17 +634,10 @@ object Analytic {
         val census = rfm
           .groupBy(col(v).as("vv"))
           .agg(count(lit(1)).as("t"))
-          .withColumn("bk", expr("(vv - ((vv % 8192 + 8192) % 8192)) div 8192"))
+          .withColumn("bk", expr(Prefix.floorDiv("vv", "8192")))
           .localCheckpoint() // offsets + positions
-        val offs = census.groupBy("bk").agg(sum("t").as("bt")).localCheckpoint() // self-joined
-        val offsCum = offs
-          .join(broadcast(offs.select(col("bk").as("b2"), col("bt").as("t2"))), col("b2") < col("bk"), "left")
-          .groupBy("bk")
-          .agg(coalesce(sum("t2"), lit(0L)).as("off"))
-        val wb = Window.partitionBy("bk").orderBy("vv").rowsBetween(Window.unboundedPreceding, -1)
-        val cum = census
-          .join(broadcast(offsCum), "bk")
-          .withColumn("cum", col("off") + coalesce(sum("t").over(wb), lit(0L)))
+        val cum = Prefix
+          .exclusive(census, Nil, "bk", Seq(col("vv")))(col("t") -> "cum")
           .select(col("vv").as(v), col("cum"))
         rfm
           .select(col("ck"), col(v))
@@ -1414,9 +1379,9 @@ object Analytic {
     // compares c_R(v)·n_N vs c_N(v)·n_R (DECIMAL(38,0) at corpus scale),
     // so no CDF fraction is ever floated; the argmax value rides the
     // output (min-v tiebreak). Cumulatives run over the VALUE census
-    // with the x87 bucketed prefix (both group counts in one pass —
-    // the x219 lesson applied from the start). One scan → census →
-    // bounded windows → one max fold.
+    // through `Prefix` (both group counts in one pass — the x219 lesson
+    // applied from the start). One scan → census → bounded windows →
+    // one max fold.
     "x220_ks_test" -> ((s, d) => {
       val census = table(s, d, "lineitem")
         .where(col("l_returnflag").isin("R", "N"))
@@ -1428,23 +1393,10 @@ object Analytic {
         )
         .withColumn("bk", expr("v div 8192"))
         .localCheckpoint() // two refs: bucket offsets + cumulatives
-      val offs = census
-        .groupBy("bk")
-        .agg(sum("tr").as("btr"), sum("tn").as("btn"))
-        .withColumn(
-          "offr",
-          coalesce(sum("btr").over(Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-        )
-        .withColumn(
-          "offn",
-          coalesce(sum("btn").over(Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-        )
-        .select("bk", "offr", "offn")
-      val wb = Window.partitionBy("bk").orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = census
-        .join(broadcast(offs), "bk")
-        .withColumn("cr", col("offr") + sum("tr").over(wb))
-        .withColumn("cn", col("offn") + sum("tn").over(wb))
+      val cum = Prefix
+        .exclusive(census, Nil, "bk", Seq(col("v")))(col("tr") -> "cr", col("tn") -> "cn")
+        .withColumn("cr", col("cr") + col("tr"))
+        .withColumn("cn", col("cn") + col("tn"))
         .localCheckpoint() // two refs: totals + argmax
       val tot = cum.agg(max("cr").as("n1"), max("cn").as("n2"))
       cum
@@ -1488,34 +1440,20 @@ object Analytic {
           expr("CAST(round(l_tax * 100) AS BIGINT)").as("tax")
         )
         .localCheckpoint() // four censuses + two pair streams
-      // census positions via the x87 DISTRIBUTED prefix sum — a planted
-      // near-unique variable (jit) makes the census stream-sized at 16×,
-      // and a plain global window put 10M rows in ONE task (53 s probe,
-      // caught before commit): value-range buckets (trunc-div by 2¹³ is
-      // monotone, so bucket order = value order) → bucket offsets over
-      // the ≤ ~1.4k-row bucket table → per-bucket bounded windows.
+      // census positions via `Prefix` — a planted near-unique variable
+      // (jit) makes the census stream-sized at 16×, and a plain global
+      // window put 10M rows in ONE task (53 s probe, caught before
+      // commit); trunc-div by 2¹³ is monotone, so bucket order = value
+      // order, over a ≤ ~1.4k-row bucket table.
       def twoMid(vCol: String): DataFrame = {
         val census = base
           .groupBy(col(vCol).as("v"))
           .agg(count(lit(1)).as("t"))
           .withColumn("bk", expr("v div 8192"))
           .localCheckpoint() // two refs: bucket offsets + positions
-        val offs = census
-          .groupBy("bk")
-          .agg(sum("t").as("bt"))
-          .withColumn(
-            "off",
-            coalesce(sum("bt").over(Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          )
-          .select("bk", "off")
-        val wb = Window.partitionBy("bk").orderBy("v")
-        census
-          .join(broadcast(offs), "bk")
-          .withColumn(
-            "pos",
-            col("off") + coalesce(sum("t").over(wb.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)) + 1L
-          )
-          .select(col("v").as(vCol), (lit(2L) * col("pos") + col("t") - 1L).as(s"r_$vCol"))
+        Prefix
+          .exclusive(census, Nil, "bk", Seq(col("v")))(col("t") -> "cum")
+          .select(col("v").as(vCol), (lit(2L) * col("cum") + col("t") + 1L).as(s"r_$vCol"))
       }
       // rank joins are NOT force-broadcast (the x66 lesson): censuses of
       // near-unique variables grow with the value domain; AQE broadcasts
@@ -1601,9 +1539,9 @@ object Analytic {
           col("l_returnflag").as("g"),
           expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("v")
         )
-      // census positions via the x87 bucketed prefix (review-found: the
-      // price census is near-unique, so a plain global window is the
-      // x219 single-task shape — same fix as x220's)
+      // census positions via `Prefix` (review-found: the price census is
+      // near-unique, so a plain global window is the x219 single-task
+      // shape — same fix as x220's)
       val census = pooled
         .groupBy("v")
         .agg(
@@ -1612,22 +1550,9 @@ object Analytic {
         )
         .withColumn("bk", expr("v div 8192"))
         .localCheckpoint() // two refs: bucket offsets + positions
-      val offs = census
-        .groupBy("bk")
-        .agg(sum("t").as("bt"))
-        .withColumn(
-          "off",
-          coalesce(sum("bt").over(Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-        )
-        .select("bk", "off")
-      val wb = Window.partitionBy("bk").orderBy("v")
-      val ranked = census
-        .join(broadcast(offs), "bk")
-        .withColumn(
-          "pos",
-          col("off") + coalesce(sum("t").over(wb.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)) + 1L
-        )
-        .withColumn("two_mid", lit(2L) * col("pos") + col("t") - 1L)
+      val ranked = Prefix
+        .exclusive(census, Nil, "bk", Seq(col("v")))(col("t") -> "cum")
+        .withColumn("two_mid", lit(2L) * col("cum") + col("t") + 1L)
       ranked
         .agg(
           sum("t_r").as("n1"),
@@ -1890,7 +1815,6 @@ object Analytic {
     * routing; then leaf censuses and the odd-half accuracy replay.
     */
   private def x284OracleSql: String = {
-    def fdiv(a: String, dd: String) = s"(($a) - ((($a) % ($dd) + ($dd)) % ($dd))) // ($dd)"
     def level(t: Int, prev: String, rows: String): String =
       s"""cen$t AS (SELECT n.node, b.f, b.bin, count(*) AS cnt, CAST(sum(b.y) AS BIGINT) AS pos
          |  FROM binned b JOIN $prev n USING (k) WHERE b.split = $rows GROUP BY 1, 2, 3),
@@ -1927,7 +1851,7 @@ object Analytic {
        |  SELECT k, y, split, CAST(3 AS BIGINT), v3 FROM base),
        |rng AS (SELECT f, min(v) AS mn, max(v) AS mx FROM lng WHERE split = 0 GROUP BY f),
        |binned AS (SELECT l.k, l.y, l.split, l.f,
-       |  least(greatest(${fdiv("(l.v - r.mn) * 16", "r.mx - r.mn + 1")}, 0), 15) AS bin
+       |  least(greatest(${Prefix.floorDivDuck("(l.v - r.mn) * 16", "r.mx - r.mn + 1")}, 0), 15) AS bin
        |  FROM lng l JOIN rng r USING (f)),
        |n0 AS (SELECT DISTINCT k, CAST(1 AS BIGINT) AS node FROM binned WHERE split = 0),
        |${level(0, "n0", "0")},
@@ -1961,7 +1885,6 @@ object Analytic {
     * then the 3-way vote and the accuracy quartet.
     */
   private def x285OracleSql: String = {
-    def fdiv(a: String, dd: String) = s"(($a) - ((($a) % ($dd) + ($dd)) % ($dd))) // ($dd)"
     def level(p: String, t: Int, prev: String, where: String): String =
       s"""${p}cen$t AS (SELECT n.node, b.f, b.bin, count(*) AS cnt, CAST(sum(b.y) AS BIGINT) AS pos
          |  FROM binned b JOIN $prev n USING (k) WHERE $where GROUP BY 1, 2, 3),
@@ -2014,7 +1937,7 @@ object Analytic {
        |  SELECT k, y, split, CAST(3 AS BIGINT), v3 FROM base),
        |rng AS (SELECT f, min(v) AS mn, max(v) AS mx FROM lng WHERE split = 0 GROUP BY f),
        |binned AS (SELECT l.k, l.y, l.split, l.f,
-       |  least(greatest(${fdiv("(l.v - r.mn) * 16", "r.mx - r.mn + 1")}, 0), 15) AS bin
+       |  least(greatest(${Prefix.floorDivDuck("(l.v - r.mn) * 16", "r.mx - r.mn + 1")}, 0), 15) AS bin
        |  FROM lng l JOIN rng r USING (f)),
        |${tree(0)},
        |${tree(1)},
@@ -2072,7 +1995,6 @@ object Analytic {
     * shared by the x287 gate and the x298 calibration instrument.
     */
   private def x287OracleSqlWithTail(tail: String): String = {
-    def fdiv(a: String, dd: String) = s"(($a) - ((($a) % ($dd) + ($dd)) % ($dd))) // ($dd)"
     def level(p: String, t: Int, prev: String, res: String): String =
       s"""${p}cen$t AS (SELECT n.node, b.f, b.bin, count(*) AS cnt, CAST(sum(t.res) AS BIGINT) AS sres
          |  FROM binned b JOIN $prev n USING (k) JOIN $res t USING (k) WHERE b.split = 0 GROUP BY 1, 2, 3),
@@ -2103,7 +2025,7 @@ object Analytic {
          |${level(p, 1, s"${p}n1", s"res$r")},
          |${route(p, 1, s"${p}n1", s"${p}n2")},
          |${p}lv AS (SELECT n.node, count(*) AS n, CAST(sum(t.res) AS BIGINT) AS sres,
-         |  CAST(${fdiv("CAST(sum(t.res) AS BIGINT)", "count(*) * 2")} AS BIGINT) AS value
+         |  CAST(${Prefix.floorDivDuck("CAST(sum(t.res) AS BIGINT)", "count(*) * 2")} AS BIGINT) AS value
          |  FROM ${p}n2 n JOIN res$r t USING (k) GROUP BY 1),
          |s${r + 1} AS (SELECT s.k, s.target, CAST(s.sc + lv.value AS BIGINT) AS sc
          |  FROM s$r s JOIN ${p}n2 nn USING (k) JOIN ${p}lv lv ON nn.node = lv.node),
@@ -2127,7 +2049,7 @@ object Analytic {
        |  SELECT k, y, split, CAST(3 AS BIGINT), v3 FROM base),
        |rng AS (SELECT f, min(v) AS mn, max(v) AS mx FROM lng WHERE split = 0 GROUP BY f),
        |binned AS (SELECT l.k, l.y, l.split, l.f,
-       |  least(greatest(${fdiv("(l.v - r.mn) * 16", "r.mx - r.mn + 1")}, 0), 15) AS bin
+       |  least(greatest(${Prefix.floorDivDuck("(l.v - r.mn) * 16", "r.mx - r.mn + 1")}, 0), 15) AS bin
        |  FROM lng l JOIN rng r USING (f)),
        |s0 AS (SELECT k, CAST(y * 1000000 AS BIGINT) AS target, CAST(0 AS BIGINT) AS sc
        |  FROM base WHERE split = 0),

@@ -44,10 +44,6 @@ object CartTree {
 
   val Bins = 16L
 
-  /** posmod-floor integer division (both engines' shared convention). */
-  private def fdiv(a: String, d: String): String =
-    s"(($a) - ((($a) % ($d) + ($d)) % ($d))) div ($d)"
-
   /** Bin wide rows carrying long feature columns v0..v{nF−1} against
     * per-feature min/max computed over the rows matching `trainPred`
     * (eval rows clamp into [0, B−1]): adds bin columns b0..b{nF−1}.
@@ -61,7 +57,7 @@ object CartTree {
       acc.withColumn(
         s"b$i",
         least(
-          greatest(expr(fdiv(s"(v$i - mn$i) * $Bins", s"mx$i - mn$i + 1")), lit(0L)),
+          greatest(expr(Prefix.floorDiv(s"(v$i - mn$i) * $Bins", s"mx$i - mn$i + 1")), lit(0L)),
           lit(Bins - 1)
         )
       )

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Graft.table
-import graft.sources.Fixture
+import graft.sources.{Fixture, Payloads}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -180,7 +180,6 @@ object Curation {
       table(s, d, "documents")
         .select(col("doc_id"), col("text"))
         .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
           it.map { r =>
             val id = r.getAs[Long]("doc_id")
             val clean = r.getAs[String]("text") + suffix
@@ -191,8 +190,7 @@ object Curation {
               case Some(fixed) => (true, fixed)
               case None => (false, dirty)
             }
-            md.reset()
-            val hex = md.digest(repaired.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+            val hex = Payloads.md5Hex(repaired.getBytes("UTF-8"))
             // codePointCount, not String.length: the oracle's length()
             // counts CODEPOINTS, and astral chars (which the repair
             // handles — 4-byte UTF-8) are 2 UTF-16 units (review-found)
@@ -341,13 +339,9 @@ object Curation {
       val enc = org.apache.spark.sql.Encoders.row(schema)
       base
         .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
           def nfc(x: String): String =
             java.text.Normalizer.normalize(x, java.text.Normalizer.Form.NFC)
-          def m(x: String): String = {
-            md.reset()
-            md.digest(x.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
-          }
+          def m(x: String): String = Payloads.md5Hex(x.getBytes("UTF-8"))
           it.map { r =>
             val b = r.getAs[String]("base")
             val na = nfc(r.getAs[String]("va"))
@@ -728,9 +722,8 @@ object Curation {
         // raw (nowrap) streams so graft's own raw-DEFLATE inflater can
         // decode the JDK encoder's output — the cross-implementation leg
         val d = new java.util.zip.Deflater(java.util.zip.Deflater.BEST_COMPRESSION, true)
-        val inf = new java.util.zip.Inflater(true)
         Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit] { _ => d.end(); inf.end() })
+          .foreach(_.addTaskCompletionListener[Unit] { _ => d.end() })
         val tmp = new Array[Byte](1 << 16)
         it.map { r =>
           val bytes = r.getString(1).getBytes("UTF-8")
@@ -739,13 +732,9 @@ object Curation {
           val bos = new java.io.ByteArrayOutputStream(bytes.length / 2 + 16)
           while (!d.finished()) bos.write(tmp, 0, d.deflate(tmp))
           val comp = bos.toByteArray
-          val jdkBack = {
-            inf.reset(); inf.setInput(comp)
-            val back = new Array[Byte](bytes.length + 1)
-            val m = inf.inflate(back)
-            m == bytes.length && inf.finished() &&
-            java.util.Arrays.equals(java.util.Arrays.copyOf(back, m), bytes)
-          }
+          val jdkBack = graft.sources.Inflate
+            .rawJdk(comp, 0, comp.length, bytes.length)
+            .exists(o => java.util.Arrays.equals(o.data, bytes))
           val ownBack = graft.sources.Inflate
             .raw(comp, 0, comp.length, math.max(bytes.length, 1))
             .exists(o => java.util.Arrays.equals(o.data, bytes))

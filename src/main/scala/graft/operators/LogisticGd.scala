@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
@@ -34,13 +33,9 @@ import org.apache.spark.sql.DataFrame
   */
 object LogisticGd {
 
-  /** posmod-floor integer division (both engines' shared convention) */
-  def fdivSql(a: String, d: String): String =
-    s"(($a) - ((($a) % ($d) + ($d)) % ($d))) div ($d)"
-
   /** fast sigmoid, e6-scaled: 500000 + ⌊z·500000 / (1e6 + |z|)⌋ */
   def sigSql(z: String): String =
-    s"500000L + ${fdivSql(s"($z) * 500000L", s"1000000L + abs($z)")}"
+    s"500000L + ${Prefix.floorDiv(s"($z) * 500000L", s"1000000L + abs($z)")}"
 
   /** Train `iters` full-batch GD rounds. `feat`: (doc_id, b) presence
     * rows (bias bucket included by the caller); `lab`: (doc_id, y∈{0,1}).
@@ -87,7 +82,7 @@ object LogisticGd {
         .select(explode(col("bs")).as("b"), col("e"))
         .groupBy("b")
         .agg(sum("e").as("g"))
-      w.join(g, "b").select(col("b"), expr(s"w + ${fdivSql("g", s"${nTrain}L")}").as("w"))
+      w.join(g, "b").select(col("b"), expr(s"w + ${Prefix.floorDiv("g", s"${nTrain}L")}").as("w"))
     }
     // one Iterate segment per snapshot: every snapshot is a frame Iterate
     // returns, so none is freed by the next segment
@@ -98,30 +93,18 @@ object LogisticGd {
   }
 
   /** Exact midrank ROC-AUC over (z, pos) — x159's Mann–Whitney form with
-    * the x219 value-range bucketed prefix sum (z is negative-capable, so
-    * the bucket key floor-divides to stay order-consistent); the only
-    * unpartitioned window runs over the 8192×-compressed bucket table
-    * (the documented x219 bounded class). Returns 1 row
+    * value-range `Prefix` sums (z is negative-capable, so the bucket key
+    * floor-divides to stay order-consistent). Returns 1 row
     * (npos, nneg, auc_e6), zero-guarded.
     */
   def auc(scored: DataFrame): DataFrame = {
     val census = scored
       .groupBy("z")
       .agg(count(lit(1)).as("cnt"), sum("pos").as("npos_g"))
-      .withColumn("bk", expr(fdivSql("z", "8192L")))
+      .withColumn("bk", expr(Prefix.floorDiv("z", "8192L")))
       .localCheckpoint() // two refs: bucket offsets + positions
-    val offs = census
-      .groupBy("bk")
-      .agg(sum("cnt").as("bt"))
-      .withColumn(
-        "off",
-        coalesce(sum("bt").over(Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-      )
-      .select("bk", "off")
-    val wb = Window.partitionBy("bk").orderBy("z").rowsBetween(Window.unboundedPreceding, -1)
-    census
-      .join(broadcast(offs), "bk")
-      .withColumn("cum", col("off") + coalesce(sum("cnt").over(wb), lit(0L)))
+    Prefix
+      .exclusive(census, Nil, "bk", Seq(col("z")))(col("cnt") -> "cum")
       .agg(
         sum("npos_g").as("npos"),
         (sum("cnt") - sum("npos_g")).as("nneg"),

@@ -223,12 +223,9 @@ object Sampling {
     //
     // Scale shape: a naive `Window.partitionBy(lang)` running sum puts an
     // ENTIRE language in one task — at corpus scale the dominant language
-    // serializes through a single straggler. The distributed prefix-sum
-    // decomposition used here keeps the math identical: hash-RANGE buckets
-    // (order-preserving integer division of the 2^60 hash space) → tiny
-    // per-(lang, bucket) totals → exclusive prefix over the ≤B bucket rows
-    // → local running sum within each bucket plus its offset. Parallelism
-    // is B tasks per language; only B-row windows are ever single-task.
+    // serializes through a single straggler. `Prefix` keeps the math
+    // identical over hash-RANGE buckets (order-preserving integer division
+    // of the 2^60 hash space): B tasks per language.
     "x26_token_budget_sample" -> ((s, d) => {
       val budget = 2500L
       val buckets = 32L
@@ -241,19 +238,9 @@ object Sampling {
           Hashing.md5Window15(col("doc_id").cast("string")).as("h")
         )
         .withColumn("bkt", expr(s"h div ${step}L")) // range bucket: preserves hash order
-      val wOff = Window.partitionBy("lang").orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = docs
-        .groupBy("lang", "bkt")
-        .agg(sum("doc_tokens").as("bt"))
-        .withColumn("offset", coalesce(sum("bt").over(wOff), lit(0L)))
-        .select("lang", "bkt", "offset")
-      val wLoc = Window
-        .partitionBy("lang", "bkt")
-        .orderBy(col("h"), col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      docs
-        .join(offsets, Seq("lang", "bkt"))
-        .withColumn("cum_tokens", col("offset") + sum("doc_tokens").over(wLoc))
+      Prefix
+        .exclusive(docs, Seq("lang"), "bkt", Seq(col("h"), col("doc_id")))(col("doc_tokens") -> "cum_tokens")
+        .withColumn("cum_tokens", col("cum_tokens") + col("doc_tokens"))
         .where(col("cum_tokens") <= budget)
         .select("lang", "doc_id", "doc_tokens", "cum_tokens")
         .orderBy("lang", "cum_tokens", "doc_id")
@@ -267,11 +254,9 @@ object Sampling {
     // sequence ids, and whether it was split — everything a loader needs to
     // materialize packed sequences without re-scanning the corpus.
     //
-    // Scale shape: the global running offset is the same distributed
-    // prefix-sum decomposition as x26 (hash-RANGE buckets → tiny per-bucket
-    // totals → exclusive prefix over ≤B rows → local window + offset) — a
-    // single global `Window.orderBy` would serialize the whole corpus
-    // through one task.
+    // Scale shape: the global running offset is a `Prefix` sum over
+    // hash-RANGE buckets, as in x26 — a single global `Window.orderBy`
+    // would serialize the whole corpus through one task.
     "x53_sequence_pack" -> ((s, d) => {
       val seqLen = 512L
       val buckets = 32L
@@ -283,16 +268,8 @@ object Sampling {
           Hashing.md5Window15(col("doc_id").cast("string")).as("h")
         )
         .withColumn("bkt", expr(s"h div ${step}L"))
-      val wOff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = docs
-        .groupBy("bkt")
-        .agg(sum("n_tokens").as("bt"))
-        .withColumn("boff", coalesce(sum("bt").over(wOff), lit(0L)))
-        .select("bkt", "boff")
-      val wLoc = Window.partitionBy("bkt").orderBy(col("h"), col("doc_id")).rowsBetween(Window.unboundedPreceding, -1)
-      docs
-        .join(offsets, Seq("bkt"))
-        .withColumn("offset", col("boff") + coalesce(sum("n_tokens").over(wLoc), lit(0L)))
+      Prefix
+        .exclusive(docs, Nil, "bkt", Seq(col("h"), col("doc_id")))(col("n_tokens") -> "offset")
         .withColumn("seq_first", expr(s"offset div ${seqLen}L"))
         .withColumn("seq_last", expr(s"(offset + n_tokens - 1) div ${seqLen}L"))
         .select(
@@ -1009,11 +986,9 @@ object Sampling {
     // x59's token-proportional counterpart: temperature mixing flattens
     // DOMAIN mass, PPS draws individual documents ∝ their token mass.
     //
-    // Scale shape: the global cumulative offset is the x26/x53
-    // distributed prefix-sum decomposition (hash-range buckets → tiny
-    // per-bucket totals → exclusive prefix over ≤B rows → local window +
-    // offset); W is a 1-row broadcast. No corpus join, no global sort —
-    // the output is ≤k rows.
+    // Scale shape: the global cumulative offset is a `Prefix` sum over
+    // hash-range buckets, as in x26/x53; W is a 1-row broadcast. No
+    // corpus join, no global sort — the output is ≤k rows.
     "x77_pps_sample" -> ((s, d) => {
       val k = 100L
       val buckets = 32L
@@ -1025,18 +1000,10 @@ object Sampling {
           Hashing.md5Window15(col("doc_id").cast("string")).as("h")
         )
         .withColumn("bkt", expr(s"h div ${step60}L"))
-      val wOff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = docs
-        .groupBy("bkt")
-        .agg(sum("w").as("bt"))
-        .withColumn("boff", coalesce(sum("bt").over(wOff), lit(0L)))
-        .select("bkt", "boff")
       val total = docs.agg(sum("w").as("tw"))
-      val wLoc = Window.partitionBy("bkt").orderBy(col("h"), col("doc_id")).rowsBetween(Window.unboundedPreceding, -1)
-      docs
-        .join(offsets, Seq("bkt"))
+      Prefix
+        .exclusive(docs, Nil, "bkt", Seq(col("h"), col("doc_id")))(col("w") -> "a")
         .crossJoin(broadcast(total))
-        .withColumn("a", col("boff") + coalesce(sum("w").over(wLoc), lit(0L)))
         .withColumn("step", expr(s"greatest(tw div ${k}L, 1L)"))
         .withColumn(
           "n_draws",
@@ -1082,18 +1049,16 @@ object Sampling {
     // ONE global permutation — a wrong offset anywhere shifts every later
     // shard and flips the hash).
     //
-    // Scale shape: the global rank is the x26/x53 distributed prefix-sum
-    // (hash-RANGE buckets → ≤B-row offset window → local rank + offset) —
-    // never a corpus-wide single-task Window.orderBy. The permutation is
-    // hash-order, so no global sort materializes either.
+    // Scale shape: the global rank is a `Prefix` count over hash-RANGE
+    // buckets — never a corpus-wide single-task Window.orderBy. The
+    // permutation is hash-order, so no global sort materializes either.
     // Delta/bit-pack EXECUTION (x192) — cashing x187's advisor the way
     // x78 cashed x45's compaction plan: the shipday column actually
     // encodes as frame-of-reference bit-packed blocks (sort → 1024-value
     // blocks → per-block min + bitlen(max−min)-bit packed words) and
-    // decodes back bit-exactly. Global block ranks come from the
-    // x87/x26 DISTRIBUTED PREFIX SUM (range buckets → bucket counts →
-    // cumulative offsets + per-bucket windows) — never a corpus-wide
-    // single-task sort; the bit twiddling runs per block in mapGroups
+    // decodes back bit-exactly. Global block ranks come from a `Prefix`
+    // count over value-range buckets — never a corpus-wide single-task
+    // sort; the bit twiddling runs per block in mapGroups
     // (block-bounded, the byte-codec class). Each block row carries the
     // geometry (n, min, width, packed bytes — the advisor's exact size
     // model now MEASURED), a positional checksum of the DECODED values,
@@ -1111,20 +1076,9 @@ object Sampling {
         )
         .withColumn("bkt", expr("v div 64"))
         .localCheckpoint() // offsets + ranked rows
-      val wOff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = vals
-        .groupBy("bkt")
-        .agg(count(lit(1)).as("bn"))
-        .withColumn("offset", coalesce(sum("bn").over(wOff), lit(0L)))
-        .select("bkt", "offset")
-      val wLoc = Window
-        .partitionBy("bkt")
-        .orderBy("v", "ok", "ln")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val ranked = vals
-        .join(broadcast(offsets), Seq("bkt"))
-        .withColumn("grank", col("offset") + count(lit(1)).over(wLoc))
-        .select(col("v"), expr(s"(grank - 1) div ${blockSize}L").as("block"), (expr(s"(grank - 1) % ${blockSize}L")).as("pos"))
+      val ranked = Prefix
+        .exclusive(vals, Nil, "bkt", Seq(col("v"), col("ok"), col("ln")))(lit(1L) -> "below")
+        .select(col("v"), expr(s"below div ${blockSize}L").as("block"), (expr(s"below % ${blockSize}L")).as("pos"))
       ranked
         .as[(Long, Long, Long)]
         .groupByKey(_._2)
@@ -1181,19 +1135,9 @@ object Sampling {
           Hashing.md5Bucket(col("doc_id").cast("string"), 1L << 40).as("dg")
         )
         .withColumn("bkt", expr(s"h div ${step}L"))
-      val wOff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = docs
-        .groupBy("bkt")
-        .agg(count(lit(1)).as("bn"))
-        .withColumn("offset", coalesce(sum("bn").over(wOff), lit(0L)))
-        .select("bkt", "offset")
-      val wLoc = Window
-        .partitionBy("bkt")
-        .orderBy(col("h"), col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      docs
-        .join(broadcast(offsets), Seq("bkt"))
-        .withColumn("rn", col("offset") + count(lit(1)).over(wLoc))
+      Prefix
+        .exclusive(docs, Nil, "bkt", Seq(col("h"), col("doc_id")))(lit(1L) -> "rn")
+        .withColumn("rn", col("rn") + 1L)
         .withColumn("shard", expr(s"(rn - 1) div ${shardSize}L"))
         .groupBy("shard")
         .agg(

@@ -202,21 +202,22 @@ object TextAnalysis {
       |  SELECT doc_id, ('0x' || substr(md5(term), 1, 15))::BIGINT % 256 AS b, count(*) AS cnt
       |  FROM tok GROUP BY 1, 2)""".stripMargin
 
+  /** DuckDB twin of `LogisticGd.sigSql`: the e6 fast sigmoid. */
+  private def sigDuck(z: String) = s"500000 + ${Prefix.floorDivDuck(s"($z) * 500000", s"1000000 + abs($z)")}"
+
   /** x262 oracle: the x228 5-round chain evaluated at the w1/w3/w5
     * prefixes — each snapshot gets the same odd-half midrank-AUC replay
     * plus its weight-mass fold. */
   private def x262OracleSql: String = {
-    def fdiv(a: String, dd: String) = s"(($a) - ((($a) % ($dd) + ($dd)) % ($dd))) // ($dd)"
-    def sig(z: String) = s"500000 + ${fdiv(s"($z) * 500000", s"1000000 + abs($z)")}"
     val iters = (1 to 5)
       .map { t =>
         val pw = if (t == 1) "w0" else s"w${t - 1}"
         s"""z$t AS (SELECT tr.doc_id, max(tr.y) AS y, CAST(sum($pw.w) AS BIGINT) AS z
            |  FROM tr JOIN $pw ON tr.b = $pw.b GROUP BY tr.doc_id),
-           |e$t AS (SELECT doc_id, y * 1000000 - (${sig("z")}) AS e FROM z$t),
+           |e$t AS (SELECT doc_id, y * 1000000 - (${sigDuck("z")}) AS e FROM z$t),
            |g$t AS (SELECT tr.b, CAST(sum(e$t.e) AS BIGINT) AS g
            |  FROM tr JOIN e$t ON tr.doc_id = e$t.doc_id GROUP BY tr.b),
-           |w$t AS (SELECT g$t.b, CAST($pw.w + ${fdiv("g", "ntr.n")} AS BIGINT) AS w
+           |w$t AS (SELECT g$t.b, CAST($pw.w + ${Prefix.floorDivDuck("g", "ntr.n")} AS BIGINT) AS w
            |  FROM g$t JOIN $pw ON g$t.b = $pw.b, ntr)""".stripMargin
       }
       .mkString(",\n")
@@ -258,17 +259,15 @@ object TextAnalysis {
     * per-bucket gradient → posmod-floor update per iteration), then the
     * odd-half midrank-AUC replay over the final weights. */
   private def x228OracleSql: String = {
-    def fdiv(a: String, dd: String) = s"(($a) - ((($a) % ($dd) + ($dd)) % ($dd))) // ($dd)"
-    def sig(z: String) = s"500000 + ${fdiv(s"($z) * 500000", s"1000000 + abs($z)")}"
     val iters = (1 to 5)
       .map { t =>
         val pw = if (t == 1) "w0" else s"w${t - 1}"
         s"""z$t AS (SELECT tr.doc_id, max(tr.y) AS y, CAST(sum($pw.w) AS BIGINT) AS z
            |  FROM tr JOIN $pw ON tr.b = $pw.b GROUP BY tr.doc_id),
-           |e$t AS (SELECT doc_id, y * 1000000 - (${sig("z")}) AS e FROM z$t),
+           |e$t AS (SELECT doc_id, y * 1000000 - (${sigDuck("z")}) AS e FROM z$t),
            |g$t AS (SELECT tr.b, CAST(sum(e$t.e) AS BIGINT) AS g
            |  FROM tr JOIN e$t ON tr.doc_id = e$t.doc_id GROUP BY tr.b),
-           |w$t AS (SELECT g$t.b, CAST($pw.w + ${fdiv("g", "ntr.n")} AS BIGINT) AS w
+           |w$t AS (SELECT g$t.b, CAST($pw.w + ${Prefix.floorDivDuck("g", "ntr.n")} AS BIGINT) AS w
            |  FROM g$t JOIN $pw ON g$t.b = $pw.b, ntr)""".stripMargin
       }
       .mkString(",\n")
@@ -577,13 +576,11 @@ object TextAnalysis {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Global dictionary encoding (x125): dense integer codes for every
     // distinct corpus token, assigned in LEXICOGRAPHIC order WITHOUT a
-    // global sort — the x87 prefix-sum discipline applied to vocabulary
-    // building (the categorical-encoding step every feature pipeline and
-    // tokenizer-id assignment needs at 100 TB): range-bucket by 2-char
-    // prefix (UTF-8 prefix order is consistent with full binary order in
-    // BOTH engines), per-bucket counts → bucket-count-sized offset
-    // window, local rank within each bucket's own sorted partition,
-    // code = offset + rank − 1. The encode join then maps the corpus
+    // global sort — a `Prefix` count applied to vocabulary building (the
+    // categorical-encoding step every feature pipeline and tokenizer-id
+    // assignment needs at 100 TB): range-bucket by 2-char prefix (UTF-8
+    // prefix order is consistent with full binary order in BOTH
+    // engines), code = words before it. The encode join then maps the corpus
     // stream through the dictionary (AQE broadcasts a small dict;
     // co-partitioned shuffle join at scale). The gate pins the WHOLE
     // dictionary (order-free pair digest + size) and the encoded
@@ -595,20 +592,7 @@ object TextAnalysis {
         .where(col("word") =!= "")
         .localCheckpoint() // two plan refs: vocab build, encode join
       val words = docs.select("word").distinct().withColumn("bkt", substring(col("word"), 1, 2))
-      val wOff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = words
-        .groupBy("bkt")
-        .agg(count(lit(1)).as("bn"))
-        .withColumn("offset", coalesce(sum("bn").over(wOff), lit(0L)))
-        .select("bkt", "offset")
-      val wLoc = Window
-        .partitionBy("bkt")
-        .orderBy("word")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val vocab = words
-        .join(broadcast(offsets), Seq("bkt"))
-        .withColumn("code", col("offset") + count(lit(1)).over(wLoc) - 1L)
-        .select("word", "code")
+      val vocab = Prefix.exclusive(words, Nil, "bkt", Seq(col("word")))(lit(1L) -> "code").select("word", "code")
       val dictDigest = vocab.agg(
         count(lit(1)).as("vocab_size"),
         sum(

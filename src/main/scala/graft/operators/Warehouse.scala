@@ -1480,9 +1480,8 @@ object Warehouse {
     // p50/p90 (no t-digest hand-waving): per-user first-signup and
     // first-purchase-after aggs, then the x182 rank-pick over the
     // delta-value census (the rank-r value depends only on the census;
-    // bucket offsets by broadcast self-join over the 8192×-compressed
-    // bucket table, positions bucket-partitioned — zero unpartitioned
-    // windows). One row: conversion rate + p50/p90/mean/max seconds.
+    // positions by `Prefix` over the 8192×-compressed bucket table).
+    // One row: conversion rate + p50/p90/mean/max seconds.
     "x245_time_to_convert" -> ((s, d) => {
       val ev = graft.Graft
         .events(s, d)
@@ -1506,21 +1505,14 @@ object Warehouse {
         .agg(count(lit(1)).as("t"))
         .withColumn("bk", expr("delta div 8192L"))
         .localCheckpoint() // offsets + positions
-      val offs = vc.groupBy("bk").agg(sum("t").as("bt")).localCheckpoint()
-      val offsCum = offs
-        .join(broadcast(offs.select(col("bk").as("b2"), col("bt").as("t2"))), col("b2") < col("bk"), "left")
-        .groupBy("bk")
-        .agg(coalesce(sum("t2"), lit(0L)).as("off"))
-      val wb = Window.partitionBy("bk").orderBy("delta").rowsBetween(Window.unboundedPreceding, -1)
-      val pos = vc
-        .join(broadcast(offsCum), "bk")
-        .withColumn("cum", col("off") + coalesce(sum("t").over(wb), lit(0L)))
+      val pos = Prefix
+        .exclusive(vc, Nil, "bk", Seq(col("delta")))(col("t") -> "cum")
         .localCheckpoint() // two picks
       def pick(p: Int, name: String) =
         broadcast(
           pos
             .crossJoin(broadcast(n.select(col("n_conv").as("nc"))))
-            .where(expr(s"cum < ((nc - 1) * $p) div 100 + 1 AND ((nc - 1) * $p) div 100 + 1 <= cum + t"))
+            .where(Prefix.nearestRank("cum", "t", "nc", p))
             .select(col("delta").as(name))
         )
       su.agg(count(lit(1)).as("n_signup"))

@@ -122,7 +122,6 @@ class CartTreeSpec extends AnyFunSuite {
   }
 
   test("boosting (x287 shape): regression rounds monotonically cut train MSE and solve a planted step") {
-    def fdivE(a: String, dd: String) = s"(($a) - ((($a) % ($dd) + ($dd)) % ($dd))) div ($dd)"
     // v0 = k exactly covers [0, 999], so the 16-bin grid puts the planted
     // boundary 500 ON a bin edge (a straddling bin would leave residual
     // the tree cannot separate — a binning artifact, not a trainer bug)
@@ -142,7 +141,7 @@ class CartTreeSpec extends AnyFunSuite {
       val lv = nodes
         .groupBy("node")
         .agg(count(lit(1)).as("n"), sum("res").as("sres"))
-        .withColumn("value", expr(fdivE("sres", "n * 2")))
+        .withColumn("value", expr(Prefix.floorDiv("sres", "n * 2")))
       scores = nodes
         .join(broadcast(lv.select("node", "value")), "node")
         .withColumn("sc", col("sc") + col("value"))
