@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory + table catalog for the graft engine.
@@ -11,8 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `spark.sql.shuffle.partitions` defaults to the local core count here;
   *     on a real cluster it is a deploy-time knob (AQE coalesces down anyway).
   *   - No `inferSchema` anywhere: schema inference is a full extra scan at
-  *     100 TB. Parquet carries its schema; CSV readers take explicit
-  *     `StructType`s (see [[graft.etl.Ingest]]).
+  *     100 TB. Parquet carries its schema, read from one footer on the
+  *     driver ([[parquet]]), so planning a read runs no job; CSV readers
+  *     take explicit `StructType`s (see [[graft.etl.Ingest]]).
   *   - The generated-class cache is sized to graft's working set
   *     ([[CodegenCacheEntries]]). Spark's default keeps 100 classes in one
   *     JVM-wide LRU, fewer than any repeated workload needs, so every pass
@@ -78,7 +86,70 @@ object Graft {
     * embeddings. Parquet scan → vectorized reader, pushdown + pruning free.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** A plain parquet read that plans without a Spark job: the schema comes
+    * from one footer read on the driver, then `spark.read.schema(s)`.
+    * `spark.read.parquet` infers the same schema in a one-task job per read.
+    *
+    * The footer is the one Spark's non-merging inference
+    * (`ParquetUtils.inferSchema`) reads: of the leaves listed with
+    * `InMemoryFileIndex`'s hidden-name rule, `_common_metadata`, else
+    * `_metadata`, else the first data file by full path. It is converted by
+    * the function and converter flags that inference task uses, so
+    * `nanosAsLong`, INT96, NTZ inference and Spark's own schema key in the
+    * footer behave the same. Partition columns still come from Spark's
+    * discovery. Spark infers the schema itself, job and all, when nothing
+    * can be read (its `UNABLE_TO_INFER_SCHEMA`) or a leaf sits under a
+    * directory that is not a `k=v` partition. A missing path fails with
+    * Spark's `PATH_NOT_FOUND`; globs expand as in any read.
+    *
+    * Reads with options (`mergeSchema`, `basePath`, a given schema) stay on
+    * `spark.read`; a session with `spark.sql.parquet.mergeSchema` on is
+    * refused, since one footer cannot stand for a merge. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    require(
+      !Bridge.sqlConf(spark).isParquetSchemaMergingEnabled,
+      "Graft.parquet reads one footer: spark.sql.parquet.mergeSchema must be off"
+    )
+    footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
+
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    val conf = Bridge.hadoopConf(spark)
+    // (leaf, whether a non-partition directory lies between it and its root)
+    def leaves(fs: FileSystem, dir: Path, plain: Boolean): Seq[(FileStatus, Boolean)] =
+      fs.listStatus(dir).toSeq.filterNot(st => Bridge.hiddenName(st.getPath.getName)).flatMap { st =>
+        if (st.isDirectory) leaves(fs, st.getPath, plain || !st.getPath.getName.contains("="))
+        else Seq(st -> plain)
+      }
+    val found = Bridge.readPaths(paths, conf).flatMap(root => leaves(root.getFileSystem(conf), root, plain = false))
+    if (found.exists(_._2)) return None
+    val sorted = found.map(_._1).sortBy(_.getPath.toString)
+    def named(name: String) = sorted.find(_.getPath.getName == name)
+    val summaries = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(sorted.find(f => !summaries(f.getPath.getName)))
+      .map { file =>
+        val sql = Bridge.sqlConf(spark)
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = sql.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+          nanosAsLong = sql.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation
+        )
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS
+        )
+        ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter)
+      }
+  }
 
   /** `events` with `ts` normalized to a microsecond TIMESTAMP_NTZ whatever
     * physical type the generator wrote it as. Seen in the wild across

@@ -1,12 +1,15 @@
 package graft.etl
 
+import graft.Graft
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Source/sink surface (SURVEY.md §2.1).
   *
   * Covers the reference's scan/sink operators S1-S5 with explicit schemas
-  * instead of inference. S6 (S3 object copy) is a path-scheme concern
+  * instead of inference: CSV and JSON readers take a `StructType`, and the
+  * parquet read takes the schema its footer carries ([[Graft.parquet]]),
+  * with no inference job. S6 (S3 object copy) is a path-scheme concern
   * (`s3a://` URIs work through the same readers); S3-the-SAS-binary-format
   * is deliberately replaced by Parquet as the canonical ingest format — the
   * reference itself ships the Spark-converted output (`sas_data/`, notebook
@@ -27,9 +30,10 @@ object Ingest {
   def demographics(spark: SparkSession, path: String): DataFrame =
     csv(spark, path, Schemas.demographics, sep = ";")
 
-  /** S5: Parquet scan (reference notebook cell 6 `spark.read.parquet("sas_data")`). */
+  /** S5: Parquet scan (reference notebook cell 6 reads `sas_data`), its
+    * schema read from one footer on the driver by [[Graft.parquet]]. */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Graft.parquet(spark, path)
 
   /** CSV sink (header on) — the reverse of S1 for interchange exports. */
   def writeCsv(df: DataFrame, path: String, sep: String = ","): Unit =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Graft
 import graft.Graft.table
 import graft.etl.ReferenceData
 import graft.sources.Fixture
@@ -1109,8 +1110,8 @@ object Advanced {
       import s.implicits._
       val root = graft.sources.SkewFixture.dir(d)
       def q = {
-        val fact = s.read.parquet(s"$root/skewfact.parquet")
-        val dim = s.read.parquet(s"$root/skewdim.parquet")
+        val fact = Graft.parquet(s, s"$root/skewfact.parquet")
+        val dim = Graft.parquet(s, s"$root/skewdim.parquet")
         fact
           .join(dim, fact("skey") === dim("skey"))
           .groupBy("sname")
@@ -1194,8 +1195,8 @@ object Advanced {
       import s.implicits._
       val root = graft.sources.SkewFixture.dir(d)
       def q = {
-        val fact = s.read.parquet(s"$root/skewfact.parquet")
-        val dim = s.read.parquet(s"$root/skewdim.parquet")
+        val fact = Graft.parquet(s, s"$root/skewfact.parquet")
+        val dim = Graft.parquet(s, s"$root/skewdim.parquet")
         fact
           .join(dim, fact("skey") === dim("skey"))
           .groupBy("sname")

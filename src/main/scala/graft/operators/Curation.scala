@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Graft
 import graft.Graft.table
 import graft.sources.{Fixture, Payloads}
 import org.apache.spark.sql.expressions.Window
@@ -227,8 +228,7 @@ object Curation {
         )
       )
       val enc = org.apache.spark.sql.Encoders.row(schema)
-      s.read
-        .parquet(graft.functions.IdnFixture.payloadPath)
+      Graft.parquet(s, graft.functions.IdnFixture.payloadPath)
         .mapPartitions { it =>
           it.map { r =>
             val id = r.getAs[Long]("host_id")
@@ -541,8 +541,7 @@ object Curation {
     // boilerplate/unique structure both engines read from parquet.
     "x41_line_dedup" -> ((s, _) => {
       LineFixture.ensure(s)
-      val lines = s.read
-        .parquet(LineFixture.docsPath)
+      val lines = Graft.parquet(s, LineFixture.docsPath)
         .select(col("doc_id"), posexplode(split(col("text"), "\n")).as(Seq("pos", "line")))
         .withColumn("lkey", lower(trim(col("line"))))
       val lineDf = lines.groupBy("lkey").agg(countDistinct("doc_id").as("line_df"))
@@ -600,8 +599,7 @@ object Curation {
     // the canonical key only.
     "x58_url_canonicalize" -> ((s, _) => {
       UrlFixture.ensure(s)
-      s.read
-        .parquet(UrlFixture.urlsPath)
+      Graft.parquet(s, UrlFixture.urlsPath)
         .select(
           col("url_id"),
           expr("parse_url(url, 'HOST')").as("host"),
@@ -638,7 +636,7 @@ object Curation {
     // 100 TB this is scan-bound map work, shuffling one row per document.
     "x60_c4_filter" -> ((s, _) => {
       C4Fixture.ensure(s)
-      val docs = s.read.parquet(C4Fixture.docsPath)
+      val docs = Graft.parquet(s, C4Fixture.docsPath)
       val lineKeep = col("line").rlike("[.!?\"]$") &&
         size(split(trim(col("line")), "\\s+")) >= 5 &&
         !lower(col("line")).contains("javascript")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Graft
 import graft.Graft.table
 import graft.sources.{Fixture, Payloads}
 import org.apache.spark.sql.functions._
@@ -1389,7 +1390,7 @@ object Multimodal {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$base/dim")
       val fact = s.read.format("graft-parquet").load(s"$base/fact")
-      val dim = s.read.parquet(s"$base/dim").where(col("grade") === "hot")
+      val dim = Graft.parquet(s, s"$base/dim").where(col("grade") === "hot")
       val joined = fact
         .join(broadcast(dim), "prio")
         .groupBy("prio")

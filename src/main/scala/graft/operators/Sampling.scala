@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Graft
 import graft.Graft.table
 import graft.functions.Hashing
 import graft.sources.Fixture
@@ -501,7 +502,7 @@ object Sampling {
     "x222_overlap_depth" -> ((s, d) => {
       val dir = graft.sources.DataSkipping.dir(d)
       graft.sources.DataSkipping.ensureLayout(s, d)
-      val mf = s.read.parquet(s"$dir/manifest").localCheckpoint() // two dims
+      val mf = Graft.parquet(s, s"$dir/manifest").localCheckpoint() // two dims
       def sweep(events: DataFrame): DataFrame = {
         // events: (layout, dim, v, delta); censuses are file-count-sized
         val w = Window.partitionBy("layout", "dim").orderBy("v")
@@ -1028,8 +1029,7 @@ object Sampling {
       import s.implicits._
       val dir = graft.sources.Compaction.ensure(s, d)
       val counts = graft.sources.Compaction.fileCounts(s, dir).toDF("lang", "n_files")
-      s.read
-        .parquet(dir)
+      Graft.parquet(s, dir)
         .groupBy("lang")
         .agg(
           count(lit(1)).as("n_docs"),

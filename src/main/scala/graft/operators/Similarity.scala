@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Graft
 import graft.Graft.table
 import graft.sources.Fixture
 import org.apache.spark.sql.expressions.Window
@@ -616,8 +617,8 @@ object Similarity {
     "x74_ivf_search" -> ((s, d) => {
       val dir = ivfEnsureGateIndex(s, d)
       val emb = table(s, d, "embeddings")
-      val centroids = s.read.parquet(s"$dir/centroids")
-      val lists = s.read.parquet(s"$dir/lists")
+      val centroids = Graft.parquet(s, s"$dir/centroids")
+      val lists = Graft.parquet(s, s"$dir/lists")
       val q = emb
         .join(broadcast(lowestIds(emb, 10)), "vec_id")
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -717,9 +718,9 @@ object Similarity {
     "x102_ivf_pq" -> ((s, d) => {
       val dir = ivfEnsureGateIndex(s, d)
       val emb = table(s, d, "embeddings")
-      val cent = s.read.parquet(s"$dir/centroids")
-      val cb = s.read.parquet(s"$dir/pq_codebooks")
-      val codes = s.read.parquet(s"$dir/pq_codes")
+      val cent = Graft.parquet(s, s"$dir/centroids")
+      val cb = Graft.parquet(s, s"$dir/pq_codebooks")
+      val codes = Graft.parquet(s, s"$dir/pq_codes")
       val q = emb
         .join(broadcast(lowestIds(emb, 10)), "vec_id")
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -1359,7 +1360,7 @@ object Similarity {
     * the ingest-side unit: reads the batch's lists + the tiny frozen
     * tables, writes one cid-partitioned code store, touches nothing else */
   private[graft] def incPqEncodeSegment(s: SparkSession, dir: String, seg: String): Unit = {
-    val emb = s.read.parquet(s"${incPqEmbSource(dir)}")
+    val emb = Graft.parquet(s, s"${incPqEmbSource(dir)}")
     val centF = s.read.schema(incIvfCentSchema).parquet(s"$dir/centroids")
     val cb = s.read.schema(incPqCbSchema).parquet(s"$dir/pq_codebooks")
     pqEncode(pqResiduals(emb, centF, incIvfSegListsDf(s, dir, seg)), cb)
@@ -1378,7 +1379,7 @@ object Similarity {
   /** train the frozen codebooks on the BASE segment's residuals (build-time
     * unit; also the spec's hook for assembling artifacts by hand) */
   private[graft] def pqTrainBaseForTest(s: SparkSession, dir: String): Unit = {
-    val emb = s.read.parquet(incPqEmbSource(dir))
+    val emb = Graft.parquet(s, incPqEmbSource(dir))
     val centF = s.read.schema(incIvfCentSchema).parquet(s"$dir/centroids")
     pqTrain(pqResiduals(emb, centF, incIvfSegListsDf(s, dir, "")))
       .coalesce(1)
@@ -1482,7 +1483,7 @@ object Similarity {
       val emb = table(s, d, "embeddings")
       val centroids = kmeansCentroids(s, emb, nlist, iters)
       centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-      assignLists(emb, s.read.parquet(s"$dir/centroids")).write.mode("overwrite").parquet(s"$dir/lists")
+      assignLists(emb, Graft.parquet(s, s"$dir/centroids")).write.mode("overwrite").parquet(s"$dir/lists")
     }
 
   /** IVF top-k search against a persisted index: probe the nprobe nearest
@@ -1496,8 +1497,8 @@ object Similarity {
       nQueries: Int,
       nprobe: Int
   ): DataFrame = {
-    val centroids = s.read.parquet(s"$indexDir/centroids")
-    val lists = s.read.parquet(s"$indexDir/lists")
+    val centroids = Graft.parquet(s, s"$indexDir/centroids")
+    val lists = Graft.parquet(s, s"$indexDir/lists")
     val q = emb
       .join(broadcast(lowestIds(emb, nQueries)), "vec_id")
       .select(
@@ -1541,18 +1542,17 @@ object Similarity {
   private[graft] def ivfEnsureGateIndex(s: SparkSession, d: String): String =
     Fixture("graft_ivf_gate", Some(d), s"gate-n8-i3|pq$PqM/$PqK/$PqGrid") { dir =>
       val src = ivfEnsureIndex(s, d, nlist = 8, iters = 3)
-      s.read
-        .parquet(s"$src/centroids")
+      Graft.parquet(s, s"$src/centroids")
         .select(col("cid"), transform(col("cvec"), x => x.cast("float")).as("cvec"))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-      s.read.parquet(s"$src/lists").coalesce(1).write.mode("overwrite").parquet(s"$dir/lists")
+      Graft.parquet(s, s"$src/lists").coalesce(1).write.mode("overwrite").parquet(s"$dir/lists")
       val emb = table(s, d, "embeddings")
-      val cent = s.read.parquet(s"$dir/centroids")
-      val lists = s.read.parquet(s"$dir/lists")
+      val cent = Graft.parquet(s, s"$dir/centroids")
+      val lists = Graft.parquet(s, s"$dir/lists")
       val rl = pqResiduals(emb, cent, lists).localCheckpoint() // feeds train + encode
       val cb = pqTrain(rl)
       cb.orderBy("m", "code", "j").coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_codebooks")
-      pqEncode(rl, s.read.parquet(s"$dir/pq_codebooks"))
+      pqEncode(rl, Graft.parquet(s, s"$dir/pq_codebooks"))
         .orderBy("vec_id")
         .coalesce(1)
         .write

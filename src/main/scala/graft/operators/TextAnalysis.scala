@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Graft
 import graft.Graft.table
 import graft.functions.Hashing
 import graft.sources.Fixture
@@ -148,11 +149,11 @@ object TextAnalysis {
     val segs = incIdxSegments(dir)
     if (segs.size <= 1) return
     val posts = segs
-      .map(seg => s.read.parquet(s"${incIdxSegRoot(dir, seg)}/postings").select("term", "doc_id", "tf", "bucket"))
+      .map(seg => Graft.parquet(s, s"${incIdxSegRoot(dir, seg)}/postings").select("term", "doc_id", "tf", "bucket"))
       .reduce(_.unionByName(_))
       .localCheckpoint() // materialize before the dirs below are replaced
     val n = segs
-      .map(seg => s.read.parquet(s"${incIdxSegRoot(dir, seg)}/totals"))
+      .map(seg => Graft.parquet(s, s"${incIdxSegRoot(dir, seg)}/totals"))
       .reduce(_.unionByName(_))
       .agg(sum("n").as("n"))
       .localCheckpoint()
@@ -1446,10 +1447,9 @@ object TextAnalysis {
       val dir = invIdxEnsure(s, d)
       val qterms = Seq("table", "spark", "window")
       val qbuckets = qterms.map(t => Hashing.md5BucketOf(t, 64L)).distinct
-      val postings = s.read
-        .parquet(s"$dir/postings")
+      val postings = Graft.parquet(s, s"$dir/postings")
         .where(col("bucket").isInCollection(qbuckets) && col("term").isInCollection(qterms))
-      val n = s.read.parquet(s"$dir/totals")
+      val n = Graft.parquet(s, s"$dir/totals")
       postings
         .crossJoin(broadcast(n))
         .withColumn("tscore", expr("(cast(tf as decimal(38,0)) * n * 1000000) div df"))

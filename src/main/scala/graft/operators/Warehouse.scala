@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Graft
 import graft.sources.Fixture
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1085,8 +1086,8 @@ object Warehouse {
     "x267_manifest_commit_census" -> ((s, d) => {
       val ct = graft.sources.CowTable
       ct.ensureClone(s, d)
-      val l1 = s.read.parquet(ct.manifestDir(1, ct.cloneDir(d))).select(col("g"), col("mpath").as("m1"))
-      val l2 = s.read.parquet(ct.manifestDir(2, ct.cloneDir(d))).select(col("g"), col("mpath").as("m2"))
+      val l1 = Graft.parquet(s, ct.manifestDir(1, ct.cloneDir(d))).select(col("g"), col("mpath").as("m1"))
+      val l2 = Graft.parquet(s, ct.manifestDir(2, ct.cloneDir(d))).select(col("g"), col("mpath").as("m2"))
       l1.join(l2, Seq("g"), "full_outer")
         .select(
           when(col("m1").isNull, lit("added"))
@@ -2163,7 +2164,7 @@ object Warehouse {
           )
         )
       val all = Seq(
-        leg("1_parquet", s.read.parquet(s"$root/parquet")),
+        leg("1_parquet", Graft.parquet(s, s"$root/parquet")),
         leg("2_orc", s.read.orc(s"$root/orc")),
         leg("3_csv", s.read.schema(schema).option("header", "true").csv(s"$root/csv")),
         leg("4_json", graft.etl.Ingest.jsonLines(s, s"$root/json", schema)),
@@ -2285,7 +2286,7 @@ object Warehouse {
       val lo = b0 * se.W1
       val hi = lo + se.W1 - 1
       val pruned = se.pruneEntries(s, d, 3, lo, hi)
-      val narrowRows = s.read.parquet(pruned.map(_.path): _*).where(col("k").between(lo, hi)).count()
+      val narrowRows = Graft.parquet(s, pruned.map(_.path): _*).where(col("k").between(lo, hi)).count()
       val stats = Seq((es.size.toLong, pruned.size.toLong, narrowRows, metaOnly))
         .toDF("n_files_total", "n_files_narrow", "narrow_rows", "evolve_meta_only")
       content

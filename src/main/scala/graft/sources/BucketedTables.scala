@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -56,7 +57,7 @@ object BucketedTables {
     }
     for ((tbl, t, key) <- tables if !s.catalog.tableExists(tbl))
       s.sql(
-        s"CREATE TABLE $tbl (${s.read.parquet(s"$dir/$t").schema.toDDL}) USING parquet " +
+        s"CREATE TABLE $tbl (${Graft.parquet(s, s"$dir/$t").schema.toDDL}) USING parquet " +
           s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS LOCATION '$dir/$t'"
       )
     (tables(0)._1, tables(1)._1)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -54,8 +55,7 @@ object CowSpecEvo {
   }
 
   def entriesOf(s: SparkSession, d: String, v: Int): Seq[E] =
-    s.read
-      .parquet(manifestPath(d, v))
+    Graft.parquet(s, manifestPath(d, v))
       .collect()
       .map(r =>
         E(
@@ -72,8 +72,7 @@ object CowSpecEvo {
   /** per-bucket stats of a freshly written `partitionBy("bucket")` dir —
     * one manifest entry per bucket dir (the file-count-sized pass). */
   private def statsOf(s: SparkSession, dataDir: String, specId: Int): Seq[E] =
-    s.read
-      .parquet(dataDir)
+    Graft.parquet(s, dataDir)
       // partition-column discovery infers INT for small bucket ids —
       // normalize before the Long-typed manifest
       .groupBy(col("bucket").cast("long").as("bucket"))
@@ -95,7 +94,7 @@ object CowSpecEvo {
     * columns only (bucket ids are layout, not content). */
   def read(s: SparkSession, d: String, v: Int): DataFrame = {
     val es = entriesOf(s, d, v)
-    s.read.parquet(es.map(_.path): _*).select("k", "cents")
+    Graft.parquet(s, es.map(_.path): _*).select("k", "cents")
   }
 
   /** spec-agnostic key-range pruning: tight per-entry min/max make the
@@ -139,7 +138,7 @@ object CowSpecEvo {
       .toSet
     val man2 = entriesOf(s, d, 2)
     val (touchedEs, carried) = man2.partition(e => touched.contains(e.bucket))
-    val cur = s.read.parquet(touchedEs.map(_.path): _*).select("k", "cents")
+    val cur = Graft.parquet(s, touchedEs.map(_.path): _*).select("k", "cents")
     val rewritten = cur
       .join(updates.select(col("k").as("uk"), col("cents").as("ucents")), col("k") === col("uk"), "left")
       .select(col("k"), coalesce(col("ucents"), col("cents")).as("cents"))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -211,7 +212,7 @@ object CowTable {
     Seq("g", "mpath", "min_bucket", "max_bucket", "min_key", "max_key", "n_files", "n_rows", "n_dv")
 
   /** the raw manifest LIST (one row per group) */
-  private def listDf(s: SparkSession, path: String): DataFrame = s.read.parquet(path)
+  private def listDf(s: SparkSession, path: String): DataFrame = Graft.parquet(s, path)
 
   /** legacy FLAT manifests (pre-tree artifacts) carry entry rows directly */
   private def isTree(l: DataFrame): Boolean = l.columns.contains("mpath")
@@ -301,9 +302,7 @@ object CowTable {
       else missing += ((g, mp, sig))
     }
     if (missing.nonEmpty) {
-      val rows = s
-        .read
-        .parquet(missing.map(_._2).sorted.toIndexedSeq: _*)
+      val rows = Graft.parquet(s, missing.map(_._2).sorted.toIndexedSeq: _*)
         .select(
           col("g").cast("long"),
           col("bucket").cast("long"), col("path"),
@@ -381,7 +380,7 @@ object CowTable {
       case Some(rows) =>
         if (rows.isEmpty) emptyEntriesDf(s)
         else if (rows.map(_.nFiles).sum > MaxCachedEntries)
-          normalizeEntries(s.read.parquet(rows.map(_.mpath).sorted.toIndexedSeq: _*))
+          normalizeEntries(Graft.parquet(s, rows.map(_.mpath).sorted.toIndexedSeq: _*))
         else {
           val m = groupEntriesOf(s, rows.map(r => r.g -> r.mpath))
           entryDf(s, rows.flatMap(r => m(r.g)))
@@ -521,7 +520,7 @@ object CowTable {
       val hit = metaCache.get(path)
       if (hit != null && hit._1 == sig) Some(hit._2)
       else {
-        val v = s.read.parquet(path).collect().head.getAs[Int]("schema_id")
+        val v = Graft.parquet(s, path).collect().head.getAs[Int]("schema_id")
         if (metaCache.size > 512) metaCache.clear()
         metaCache.put(path, (sig, v))
         Some(v)
@@ -535,8 +534,7 @@ object CowTable {
     val sig = dirSig(s, path)
     val hit = schemasCache.get(path)
     if (hit != null && hit._1 == sig) return hit._2
-    val v = s.read
-      .parquet(path)
+    val v = Graft.parquet(s, path)
       .collect()
       .map(r => (r.getAs[Int]("schema_id"), r.getAs[Int]("field_id"), r.getAs[String]("name"), r.getAs[String]("ftype")))
       .groupBy(_._1)
@@ -567,8 +565,7 @@ object CowTable {
           .map { case (sid, grp) =>
             val written = fields(sid).map(f => f._1 -> f._2).toMap
             maskedRead(s, grp, keyName) { g =>
-              s.read
-                .parquet(g.map(_.path).sorted.toIndexedSeq: _*)
+              Graft.parquet(s, g.map(_.path).sorted.toIndexedSeq: _*)
                 .select(curFields.map { case (fid, name, ftype) =>
                   written.get(fid) match {
                     case Some(w) => col(w).as(name)
@@ -585,7 +582,7 @@ object CowTable {
     * no schema mapping) with deletion vectors applied — the merge/probe
     * path, which runs pre-evolution by contract. */
   private def rawRead(s: SparkSession, es: Seq[Entry]): DataFrame =
-    maskedRead(s, es, "k")(g => s.read.parquet(g.map(_.path).sorted.toIndexedSeq: _*))
+    maskedRead(s, es, "k")(g => Graft.parquet(s, g.map(_.path).sorted.toIndexedSeq: _*))
 
   /** Read manifest entries with deletion vectors anti-masked PER DV
     * LINEAGE GROUP: a DV masks only the files of the entries that
@@ -606,8 +603,7 @@ object CowTable {
         val df = reader(grp)
         if (dvp.isEmpty) df
         else {
-          val deleted = s.read
-            .parquet(dvp)
+          val deleted = Graft.parquet(s, dvp)
             .where(col("bucket").isin(grp.map(e => Long.box(e.bucket)): _*))
             .select(col("bucket"), col("w"), explode(sequence(lit(0), lit(62))).as("i"), col("word"))
             .where(expr("(word >> i) & 1 = 1"))
@@ -673,7 +669,7 @@ object CowTable {
     * clone root, so shared source files are structurally out of its reach. */
   def cloneTable(s: SparkSession, srcVersion: Int, dstRoot: String, srcRoot: String): Unit = {
     if (pathExists(s"$srcRoot/schemas"))
-      s.read.parquet(s"$srcRoot/schemas").coalesce(1).write.mode("overwrite").parquet(s"$dstRoot/schemas")
+      Graft.parquet(s, s"$srcRoot/schemas").coalesce(1).write.mode("overwrite").parquet(s"$dstRoot/schemas")
     versionSchemaId(s, srcVersion, srcRoot).foreach(sid => writeVersionMeta(s, dstRoot, 1, sid))
     // metadata is zero-copy too: the clone's list shares the source's
     // immutable group files by reference — clone cost is one list write
@@ -1179,7 +1175,7 @@ object CowTable {
   }
 
   def readRefMeta(s: SparkSession, name: String, root: String): Ref = {
-    val r = s.read.parquet(refPath(root, name)).collect()(0)
+    val r = Graft.parquet(s, refPath(root, name)).collect()(0)
     Ref(
       r.getAs[String]("kind"),
       r.getAs[String]("manifest_path"),
@@ -1367,8 +1363,7 @@ object CowTable {
           val words =
             if (oldDv.isEmpty) bitsHere
             else
-              s.read
-                .parquet(oldDv)
+              Graft.parquet(s, oldDv)
                 .where(col("bucket").isin(grpBuckets.map(Long.box): _*))
                 .unionByName(bitsHere)
           words
@@ -1382,8 +1377,7 @@ object CowTable {
           // exact whether or not old and new deletes overlapped. (With
           // several entries of one bucket in one group the count is the
           // GROUP's masked total, an advisory upper bound per entry.)
-          val nd = s.read
-            .parquet(out)
+          val nd = Graft.parquet(s, out)
             .groupBy("bucket")
             .agg(sum(expr("bit_count(word)")).as("nd"))
             .collect()

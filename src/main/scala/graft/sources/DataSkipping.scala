@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -91,7 +92,7 @@ object DataSkipping {
       .repartitionByRange(NFiles, col("zkey"))
       .select("o_orderkey", "o_custkey", "days", "tag", "promo")
       .write.mode("overwrite").parquet(s"$dir/data")
-    val data = s.read.parquet(s"$dir/data")
+    val data = Graft.parquet(s, s"$dir/data")
     val stats = data
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(
@@ -156,7 +157,7 @@ object DataSkipping {
     * Driver-side by design — this is scan PLANNING over file-count-sized
     * metadata, the table-format shape, not a data pull. */
   def selectFiles(s: SparkSession, dir: String, r: Rect): (Seq[String], Int) = {
-    val mf = s.read.parquet(s"$dir/manifest").select("file", "c_lo", "c_hi", "d_lo", "d_hi").collect()
+    val mf = Graft.parquet(s, s"$dir/manifest").select("file", "c_lo", "c_hi", "d_lo", "d_hi").collect()
     val hit = mf.collect {
       case m
           if m.getLong(2) >= r.cLo && m.getLong(1) <= r.cHi &&
@@ -174,8 +175,8 @@ object DataSkipping {
   def prunedScan(s: SparkSession, dir: String, r: Rect): DataFrame = {
     val (files, _) = selectFiles(s, dir, r)
     val base =
-      if (files.isEmpty) s.read.parquet(s"$dir/data").limit(0)
-      else s.read.parquet(files: _*)
+      if (files.isEmpty) Graft.parquet(s, s"$dir/data").limit(0)
+      else Graft.parquet(s, files: _*)
     base.where(col("o_custkey").between(r.cLo, r.cHi) && col("days").between(r.dLo, r.dHi))
   }
 
@@ -191,7 +192,7 @@ object DataSkipping {
     * contribute — return (survivors, total). Driver-side manifest probe,
     * the [[selectFiles]] planning shape. */
   def selectFilesNotNull(s: SparkSession, dir: String): (Seq[String], Int) = {
-    val mf = s.read.parquet(s"$dir/manifest").select("file", "n_rows", "n_null_promo").collect()
+    val mf = Graft.parquet(s, s"$dir/manifest").select("file", "n_rows", "n_null_promo").collect()
     (mf.collect { case m if m.getLong(2) < m.getLong(1) => m.getString(0) }.toSeq, mf.length)
   }
 
@@ -203,8 +204,7 @@ object DataSkipping {
     * the file. dictHit ⊆ rangeHit by construction; ScaleDisciplineSpec
     * asserts the strict win on low-ndv file sets. */
   def selectFilesEq(s: SparkSession, dir: String, v: Long): (Seq[String], Seq[String], Int) = {
-    val mf = s.read
-      .parquet(s"$dir/manifest")
+    val mf = Graft.parquet(s, s"$dir/manifest")
       .select("file", "t_lo", "t_hi", "tag_sk")
       .collect()
     val h = md5w15(v.toString)
@@ -223,8 +223,8 @@ object DataSkipping {
   def prunedScanEq(s: SparkSession, dir: String, v: Long): DataFrame = {
     val (_, files, _) = selectFilesEq(s, dir, v)
     val base =
-      if (files.isEmpty) s.read.parquet(s"$dir/data").limit(0)
-      else s.read.parquet(files: _*)
+      if (files.isEmpty) Graft.parquet(s, s"$dir/data").limit(0)
+      else Graft.parquet(s, files: _*)
     base.where(col("tag") === v)
   }
 
@@ -236,7 +236,7 @@ object DataSkipping {
     * [[selectFiles]] planning shape. */
   def selectFilesPoint(s: SparkSession, dir: String, v: Long): (Seq[String], Int) = {
     val bits = (0 until BloomK).map(j => md5w15(s"fb$j:$v") % BloomBits)
-    val mf = s.read.parquet(s"$dir/manifest").select("file", "bloom").collect()
+    val mf = Graft.parquet(s, s"$dir/manifest").select("file", "bloom").collect()
     val hit = mf.collect {
       case m if {
             val words = m
@@ -254,8 +254,8 @@ object DataSkipping {
   def prunedScanPoint(s: SparkSession, dir: String, v: Long): DataFrame = {
     val (files, _) = selectFilesPoint(s, dir, v)
     val base =
-      if (files.isEmpty) s.read.parquet(s"$dir/data").limit(0)
-      else s.read.parquet(files: _*)
+      if (files.isEmpty) Graft.parquet(s, s"$dir/data").limit(0)
+      else Graft.parquet(s, files: _*)
     base.where(col("o_orderkey") === v)
   }
 
@@ -263,8 +263,8 @@ object DataSkipping {
   def prunedScanNotNull(s: SparkSession, dir: String): DataFrame = {
     val (files, _) = selectFilesNotNull(s, dir)
     val base =
-      if (files.isEmpty) s.read.parquet(s"$dir/data").limit(0)
-      else s.read.parquet(files: _*)
+      if (files.isEmpty) Graft.parquet(s, s"$dir/data").limit(0)
+      else Graft.parquet(s, files: _*)
     base.where(col("promo").isNotNull)
   }
 

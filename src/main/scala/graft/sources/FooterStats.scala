@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.SparkSession
 
 /** Metadata-only COUNT(*) from parquet footers (x116) — the query path
@@ -170,8 +171,7 @@ object FooterStats {
     val scanCount =
       if (boundaryFiles.isEmpty) 0L
       else
-        s.read
-          .parquet(boundaryFiles: _*)
+        Graft.parquet(s, boundaryFiles: _*)
           .where(org.apache.spark.sql.functions.col(column).between(lo, hi))
           .count()
     (

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,9 +30,9 @@ object IngestLedger {
   def ledger(s: SparkSession, root: String): DataFrame = {
     import s.implicits._
     // recovery: a crash between the swap's two renames leaves only .old
-    if (new java.io.File(ledgerPath(root)).exists()) s.read.parquet(ledgerPath(root))
+    if (new java.io.File(ledgerPath(root)).exists()) Graft.parquet(s, ledgerPath(root))
     else if (new java.io.File(ledgerPath(root) + ".old").exists())
-      s.read.parquet(ledgerPath(root) + ".old")
+      Graft.parquet(s, ledgerPath(root) + ".old")
     else
       Seq.empty[(Long, String, Int, Long, Long)].toDF("file_id", "fp", "round_ingested", "n_docs", "n_offered")
   }
@@ -61,7 +62,7 @@ object IngestLedger {
     // accepted data first, ledger row LAST: a crash between the two means
     // the file is re-offered and overwrites its own directory — idempotent
     val freshRows = fresh.map { case (id, path, fp) =>
-      val df = s.read.parquet(path)
+      val df = Graft.parquet(s, path)
       df.write.mode("overwrite").parquet(s"$root/corpus/file=$id")
       // count the SOURCE frame (parquet footer metadata), not a second
       // full read of the copy just written

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{GraftColStats, GraftTableStats, StatsJoinRule}
@@ -70,7 +71,7 @@ object JoinStats {
     val qs = (0 to Buckets).map(i => i.toDouble / Buckets)
     val sources: Seq[(String, org.apache.spark.sql.DataFrame, Seq[String])] =
       specs.map { case (t, cols) => (t, graft.Graft.table(s, d, t), cols) } ++
-        pathSpecs(s, d).map { case (t, p, cols) => (t, s.read.parquet(p), cols) }
+        pathSpecs(s, d).map { case (t, p, cols) => (t, Graft.parquet(s, p), cols) }
     val frames = sources.map { case (t, df, cols) =>
       // TWO passes by necessity, not style (16×-probe-found): countDistinct
       // plans through EXPAND, turning the partial aggregate's grouping into
@@ -110,7 +111,7 @@ object JoinStats {
 
   /** load the artifact at `dir` into the rule's provider map */
   def load(s: SparkSession, dir: String): Unit = {
-    val rows = s.read.parquet(s"$dir/stats").collect()
+    val rows = Graft.parquet(s, s"$dir/stats").collect()
     val byTable = rows.groupBy(_.getAs[String]("table")).map { case (t, rs) =>
       val cols = rs.map { r =>
         r.getAs[String]("column") -> GraftColStats(

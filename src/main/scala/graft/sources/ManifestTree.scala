@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -116,7 +117,7 @@ object ManifestTree {
     * files are never opened (spec-proven by corruption).
     */
   def planRange(s: SparkSession, lo: Long, hi: Long, root: String): Plan = {
-    val list = s.read.parquet(s"$root/manifest_list").localCheckpoint() // count + prune
+    val list = Graft.parquet(s, s"$root/manifest_list").localCheckpoint() // count + prune
     val nTotal = list.count()
     val mpaths = list
       .where(col("max_key") >= lo && col("min_key") <= hi)
@@ -127,8 +128,7 @@ object ManifestTree {
       .toSeq
     if (mpaths.isEmpty) Plan(nTotal, 0L, 0L, 0L, Nil)
     else {
-      val tasks = s.read
-        .parquet(mpaths: _*)
+      val tasks = Graft.parquet(s, mpaths: _*)
         .where(col("max_key") >= lo && col("min_key") <= hi)
         .select("path", "n_rows")
         .collect()
@@ -146,25 +146,23 @@ object ManifestTree {
     */
   def readTasks(s: SparkSession, plan: Plan, lo: Long, hi: Long): DataFrame = {
     require(plan.taskPaths.nonEmpty, "readTasks on an empty plan (guard at the call site)")
-    s.read.parquet(plan.taskPaths: _*).where(col("k") >= lo && col("k") <= hi)
+    Graft.parquet(s, plan.taskPaths: _*).where(col("k") >= lo && col("k") <= hi)
   }
 
   /** The NAIVE path (every manifest file opened, every entry listed) —
     * the spec's equality twin only; nothing in the query surface calls it.
     */
   def readRangeNaive(s: SparkSession, lo: Long, hi: Long, root: String): DataFrame = {
-    val all = s.read
-      .parquet(s"$root/manifest_list")
+    val all = Graft.parquet(s, s"$root/manifest_list")
       .select("mpath")
       .collect()
       .map(_.getString(0))
       .sorted
-    val paths = s.read
-      .parquet(all.toIndexedSeq: _*)
+    val paths = Graft.parquet(s, all.toIndexedSeq: _*)
       .select("path")
       .collect()
       .map(_.getString(0))
       .sorted
-    s.read.parquet(paths.toIndexedSeq: _*).where(col("k") >= lo && col("k") <= hi)
+    Graft.parquet(s, paths.toIndexedSeq: _*).where(col("k") >= lo && col("k") <= hi)
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -36,5 +37,5 @@ object MonthStore {
       .parquet(s"$dir/data")
   }
 
-  def read(s: SparkSession, d: String): DataFrame = s.read.parquet(s"${ensure(s, d)}/data")
+  def read(s: SparkSession, d: String): DataFrame = Graft.parquet(s, s"${ensure(s, d)}/data")
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 
@@ -24,7 +25,7 @@ object Payloads {
     rows.toDF(idCol, "payload").coalesce(1).write.mode("overwrite").parquet(path(dir))
   }
 
-  def read(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(path(dir))
+  def read(spark: SparkSession, dir: String): DataFrame = Graft.parquet(spark, path(dir))
 
   /** A corpus generated on the fly: `(id, gen(id))` for ids `0 until n`
     * over 8 partitions, for round trips whose input is a formula. */

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -24,8 +25,7 @@ object SkewFixture {
         expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents")
       )
     fact.write.mode("overwrite").parquet(s"$root/skewfact.parquet")
-    s.read
-      .parquet(s"$root/skewfact.parquet")
+    Graft.parquet(s, s"$root/skewfact.parquet")
       .select(col("skey"))
       .distinct()
       .select(col("skey"), concat(lit("s"), col("skey")).as("sname"))

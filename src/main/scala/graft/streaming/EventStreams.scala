@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -414,7 +415,7 @@ object EventStreams {
           else None
         val merged = sourcePath match {
           case Some(p) =>
-            val cur = batch.sparkSession.read.parquet(p)
+            val cur = Graft.parquet(batch.sparkSession, p)
             cur.join(latest.select(key), Seq(key), "left_anti").unionByName(latest)
           case None => latest
         }

@@ -133,4 +133,35 @@ object Bridge {
       .sessionState
       .functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  private def sessionState(spark: org.apache.spark.sql.SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+
+  /** The session's SQL conf ([[graft.Graft.parquet]] builds its schema
+    * converter from it, as Spark's inference task does). */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    sessionState(spark).conf
+
+  /** The Hadoop conf a file read of this session plans with. */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
+    sessionState(spark).newHadoopConf()
+
+  /** A file read's root paths as `DataFrameReader.load` resolves them:
+    * qualified, globbed, and `PATH_NOT_FOUND` for a missing one. */
+  def readPaths(
+      paths: Seq[String],
+      conf: org.apache.hadoop.conf.Configuration
+  ): Seq[org.apache.hadoop.fs.Path] =
+    org.apache.spark.sql.execution.datasources.DataSource.checkAndGlobPathIfNecessary(
+      paths,
+      conf,
+      checkEmptyGlobPath = true,
+      checkFilesExist = true,
+      enableGlobbing = true
+    )
+
+  /** `InMemoryFileIndex`'s listing rule: `_`/`.` names are hidden, except
+    * `=` partition directories and the two parquet summary files. */
+  def hiddenName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.graftbridge.JobCounter
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke of the driver contract at sf0.001: every declared query runs and
@@ -31,6 +32,15 @@ class SparkEntrySpec extends AnyFunSuite {
         .map(why => s"$name: $why")
     }
     assert(failures.isEmpty, s"${failures.size} queries failed:\n${failures.mkString("\n")}")
+  }
+
+  test("building q01 and q04 starts no job: their table reads plan from footers") {
+    // the benchmark's construct.jobs counts these jobs; an inferred
+    // parquet read would start one per table
+    Seq("q01_pricing_summary", "q04_join_shuffle").foreach { q =>
+      val (_, jobs) = JobCounter(spark)(SparkEntry.queries(q)(spark, d))
+      assert(jobs === 0, s"$q started $jobs jobs while being built")
+    }
   }
 
   test("spot values at sf0.001") {

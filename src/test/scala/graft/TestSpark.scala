@@ -22,18 +22,24 @@ object TestSpark {
     d
   }
 
-  /** `file:line: text` of every line in the Scala sources under src/main
-    * and src/test, except in files named in `except`, that contains
-    * `needle`: the guards that keep a literal spelt in one place. */
-  def spelledOutside(needle: String, except: String*): Seq[String] = {
+  /** `file:line: text` of every occurrence of `needle` in the Scala
+    * sources under src/main and src/test, except in files named in
+    * `except`: the guards that keep a literal spelt in one place. */
+  def spelledOutside(needle: String, except: String*): Seq[String] =
+    matchesOutside(Seq("src/main", "src/test"), java.util.regex.Pattern.quote(needle).r, except)
+
+  /** `file:line: text` of every match of `pattern` (which may span lines)
+    * in the Scala sources under `tops`, except in files named in `except`. */
+  def matchesOutside(tops: Seq[String], pattern: scala.util.matching.Regex, except: Seq[String]): Seq[String] = {
     def sources(top: String) =
       java.nio.file.Files.walk(java.nio.file.Paths.get(top)).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     for {
-      file <- sources("src/main") ++ sources("src/test")
+      file <- tops.flatMap(sources)
       if !except.contains(file.getFileName.toString)
-      (line, i) <- java.nio.file.Files.readAllLines(file).asScala.zipWithIndex
-      if line.contains(needle)
-    } yield s"$file:${i + 1}: ${line.trim}"
+      text = java.nio.file.Files.readString(file)
+      m <- pattern.findAllMatchIn(text)
+      line = text.substring(0, m.start).count(_ == '\n')
+    } yield s"$file:${line + 1}: ${text.linesIterator.drop(line).next().trim}"
   }
 
   def writeTable(dir: String, name: String, df: DataFrame): Unit =
